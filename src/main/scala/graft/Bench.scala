@@ -67,8 +67,10 @@ object Bench {
     val head = s"""{"metric":"total","value":$totalStr,"unit":"sec",""" +
       s""""sf":"$sfDir","compact":true,"lines":${slowestFirst.size},""" +
       s""""geomean_vs_local":$geoStr,"errors_n":$nErrors,"queries":{"""
-    val sb = new StringBuilder(head)
     val close = "}}"
+    require(head.length + close.length <= maxChars,
+      s"compact line header is ${head.length + close.length} chars, over $maxChars")
+    val sb = new StringBuilder(head)
     var first = true
     var room = true
     val it = slowestFirst.iterator
@@ -91,14 +93,39 @@ object Bench {
     * EMPTY history, replace a history for another sf, or replace a
     * base that is itself contaminated (or predates the flag — the
     * pre-r16 file IS the loaded r15 pass): self-labeled files only
-    * protect themselves via the literal `"contaminated":false`. */
+    * protect themselves via the literal `"contaminated":false`.
+    *
+    * History is kept per core count too: a pass with a known `cpus`
+    * never replaces a base that records a different one, clean or not
+    * (an 8-core pass once overwrote the 32-core history). A base that
+    * records no core count predates the field and stays replaceable. */
   private[graft] def shouldPersist(contaminated: Boolean,
                                    prevRaw: Option[String],
-                                   sfDir: String): Boolean =
-    !contaminated || !prevRaw.exists { raw =>
+                                   sfDir: String,
+                                   cpus: Option[Int] = None): Boolean = {
+    val otherCores = cpus.exists(c => prevRaw.flatMap(recordedCpus).exists(_ != c))
+    !otherCores && (!contaminated || !prevRaw.exists { raw =>
       raw.contains("\"sf\":\"" + sfDir + "\"") &&
         raw.contains("\"contaminated\":false")
-    }
+    })
+  }
+
+  /** The core count a history file or bench artifact records, if any
+    * (`"cpus":32` in a history file, `"cpus": 32` in an artifact). */
+  private[graft] def recordedCpus(raw: String): Option[Int] =
+    "\"cpus\":\\s*(\\d+)".r.findFirstMatchIn(raw).map(_.group(1).toInt)
+
+  /** Whether the local history file is a fair vs_prev base: same scale
+    * factor AND the same recorded core count. A file that records no
+    * core count could be either, so it is never compared. */
+  private[graft] def comparableHistory(raw: String, sfDir: String,
+                                       cpus: Int): Boolean =
+    "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(raw).exists(_.group(1) == sfDir) &&
+      recordedCpus(raw).contains(cpus)
+
+  /** Reports a failure the bench survives, so it never passes silently. */
+  private def warn(what: String, e: Throwable): Unit =
+    System.err.println(s"[bench] $what failed: ${e.getClass.getName}: ${e.getMessage}")
 
   /** Busy (non-idle, non-iowait) jiffies from the aggregate `cpu `
     * line of /proc/stat: user + nice + system + irq + softirq +
@@ -405,7 +432,7 @@ object Bench {
     // Once per JVM — a retried pass is already JIT-warm.
     queries.foreach { case (name, fn) =>
       try labeled(s"warmup: $name")(run(fn, "/root/testdata/sf0.001"))
-      catch { case _: Throwable => }
+      catch { case e: Throwable => warn(s"warm-up of $name", e) }
     }
     // median of 3 timed runs per query. Round 4 was an A/A control on
     // a byte-identical binary and min-of-2 still moved single queries
@@ -445,7 +472,7 @@ object Bench {
       val errors = collection.mutable.LinkedHashMap[String, String]()
       queries.foreach { case (name, fn) =>
         try labeled(s"prepass: $name")(run(fn, sfDir))
-        catch { case _: Throwable => }
+        catch { case e: Throwable => warn(s"pre-pass of $name", e) }
       }
       // Host-contention self-identification (VERDICT r13 perf note):
       // the r13 artifact's uniform +50-110% drift on untouched queries
@@ -610,7 +637,8 @@ object Bench {
     // half the per-query history every round. BENCH_LOCAL.json — the
     // complete medians map of the previous run, committed per round —
     // covers every line; the truncated artifact stays as fallback for
-    // a fresh checkout. Only a same-sf local file is comparable.
+    // a fresh checkout. Only a same-sf, same-cores local file is
+    // comparable, and only a same-cores artifact.
     val localHist = new java.io.File("/root/repo/BENCH_LOCAL.json")
     // the geomean escapes the vs_prev block so the compact final line
     // (see compactLine) can carry it inside the driver's tail window
@@ -620,8 +648,7 @@ object Bench {
         if (!localHist.exists()) None else {
           val raw = new String(java.nio.file.Files.readAllBytes(
             localHist.toPath), java.nio.charset.StandardCharsets.UTF_8)
-          val sfRe = "\"sf\":\"([^\"]*)\"".r
-          if (sfRe.findFirstMatchIn(raw).exists(_.group(1) == sfDir))
+          if (comparableHistory(raw, sfDir, cpus.toInt))
             Some(("\"source\":\"BENCH_LOCAL\"", parsePrevQueryTimes(raw)))
           else None
         }
@@ -630,11 +657,14 @@ object Bench {
         val repo = new java.io.File("/root/repo")
         val prevFiles = Option(repo.listFiles()).getOrElse(Array.empty)
           .flatMap { f => f.getName match {
-            case benchRe(n) => Some((n.toInt, f)); case _ => None } }
+            case benchRe(n) =>
+              val raw = new String(java.nio.file.Files.readAllBytes(
+                f.toPath), java.nio.charset.StandardCharsets.UTF_8)
+              if (recordedCpus(raw).contains(cpus.toInt)) Some((n.toInt, raw))
+              else None
+            case _ => None } }
         if (prevFiles.isEmpty) None else {
-          val (prevRound, prevFile) = prevFiles.maxBy(_._1)
-          val raw = new String(java.nio.file.Files.readAllBytes(
-            prevFile.toPath), java.nio.charset.StandardCharsets.UTF_8)
+          val (prevRound, raw) = prevFiles.maxBy(_._1)
           Some((s""""round":$prevRound""", parsePrevQueryTimes(raw)))
         }
       }
@@ -666,7 +696,7 @@ object Bench {
             s"""{$srcLabel,"lines":${ratios.size},"geomean":${r2(geo)},"shifted_n":${allShifted.size},"shifted_gt20pct":$shifted}"""
           }
       }
-    } catch { case _: Throwable => "null" }
+    } catch { case e: Throwable => warn("vs_prev", e); "null" }
     // Contamination self-labeling (VERDICT r15 #3 → r16 #1/#2 → r17
     // #1): the published pass carries its own three-channel label;
     // when a retry happened, BOTH attempts' labels ship (a clean
@@ -686,12 +716,13 @@ object Bench {
         if (!localHist.exists()) None
         else Some(new String(java.nio.file.Files.readAllBytes(
           localHist.toPath), java.nio.charset.StandardCharsets.UTF_8))
-      if (only.isEmpty && shouldPersist(pub.contaminated, prevRaw, sfDir)) {
-        val full = s"""{"sf":"$sfDir","loadavg":$loadJson,$selfLabel,"errors":$errJson,"queries":$qs}\n"""
+      if (only.isEmpty &&
+          shouldPersist(pub.contaminated, prevRaw, sfDir, Some(cpus.toInt))) {
+        val full = s"""{"sf":"$sfDir","cpus":$cpus,"loadavg":$loadJson,$selfLabel,"errors":$errJson,"queries":$qs}\n"""
         java.nio.file.Files.write(localHist.toPath,
           full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable => warn("history write", e) }
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","errors":$errJson,"queries":$qs}""")
     // vs_prev on its OWN line AFTER the main JSON (VERDICT r12 #1):
     // the driver's artifact keeps only the output's tail, so anything

@@ -10,13 +10,9 @@ object Verify {
     * fail-loud contract (a broken query leaves errors.json non-empty,
     * never a silent gap — the r9 breakage hid behind exactly that
     * silence) is itself regression-testable. */
-  /** `oracleSql` is BY-NAME and read only after the query loop: some
-    * oracle entries (embedding_pca / embedding_whiten) ship a model
-    * the query pass fits and caches — evaluating the map before the
-    * queries run would silently drop them back to rows-only. */
   def run(spark: SparkSession,
           queries: Map[String, (SparkSession, String) => DataFrame],
-          oracleSql: => Map[String, String], sfDir: String,
+          oracleSql: Map[String, String], sfDir: String,
           outDir: String): Map[String, String] = {
     new java.io.File(outDir).mkdirs()
     val errors = collection.mutable.LinkedHashMap[String, String]()
@@ -59,8 +55,8 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val errors = run(spark, SparkEntry.queries, SparkEntry.oracleSql,
-      sfDir, outDir)
+    val errors = run(spark, SparkEntry.queries,
+      SparkEntry.oracles(spark, sfDir), sfDir, outDir)
     spark.stop()
     if (errors.nonEmpty) {
       System.err.println(

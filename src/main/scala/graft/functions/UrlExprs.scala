@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * results, dramatically less generated code.
   *
   * Semantics (must stay equal to the DuckDB oracle restatement in
-  * SparkEntry.domainSqlFrom): exception rules prevail (registrable =
+  * registry.CrawlQueries.domainSqlFrom): exception rules prevail (registrable =
   * the exception itself); else the longest effective suffix wins — a
   * wildcard `*.base` names base+1 labels, requiring at least one
   * label beyond its base; registrable = suffix + one label, or the

@@ -38,7 +38,7 @@ object Logit {
   case class LogitModel(features: Seq[String], xScale: Double,
                         bias: Double, weights: Seq[Double])
 
-  /** Shortest round-trip double literal (see SparkEntry.dLit): the
+  /** Shortest round-trip double literal (see registry.Shared.dLit): the
     * minimal decimal that parses back to the same bits in any
     * correctly-rounded reader, so Spark and DuckDB compute with the
     * identical IEEE doubles. */

@@ -1,0 +1,504 @@
+package graft
+package registry
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import graft.core.Tables
+import graft.operators.{Dedup, Sampling, TextAnalysis}
+import Shared._
+
+/** URL normalization, domain graphs and the crawl pipeline. */
+object CrawlQueries {
+
+  val queries: Seq[Query] = Seq(
+    Query("graph_pagerank", (s, dir) => {
+      // source-quality prior from link structure: fixed-point integer
+      // PageRank over the undirected customer–supplier co-purchase
+      // graph (both edge directions), 5 iterations, top-20 nodes —
+      // exact BIGINT micro-units, engine- and partitioning-exact
+      val orders = Tables.table(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_custkey"))
+      val li = Tables.table(s, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_suppkey"))
+      // node ids stay LONG through every shuffle (customer 2k,
+      // supplier 2k+1 — the string labels "c<id>"/"s<id>" are derived
+      // ONLY for the final 20 rows): the edge distinct + the 2 joins
+      // and 1 agg per iteration all key on the node id, and long keys
+      // measured 2x the string-keyed plan on the 1.17M-edge frame.
+      // The graph is isomorphic, the recurrence pure integer, so
+      // every rank is bit-identical and the oracle is untouched
+      val cs = orders.join(li, col("o_orderkey") === col("l_orderkey"))
+        .select((col("o_custkey") * 2).as("src"),
+          (col("l_suppkey") * 2 + 1).as("dst"))
+      val edges = cs.unionByName(
+        cs.select(col("dst").as("src"), col("src").as("dst")))
+      // noSinks: the both-directions union makes every dst a src by
+      // construction, so the operator's sink semi-join is a no-op —
+      // skipping it drops one setup SMJ (identical rows, same oracle)
+      graft.operators.Graph.pagerank(edges, "src", "dst", iterations = 5,
+        noSinks = true)
+        .select(concat(
+            when(pmod(col("node"), lit(2)) === 0, "c").otherwise("s"),
+            expr("node div 2")).as("node"), col("rank"))
+        .orderBy(col("rank").desc, col("node").asc).limit(20)
+    }, pagerankOracleSql(5)),
+
+    Query("url_normalize", (s, dir) => {
+      // the crawl key, step 1: RFC 3986 §6 normalization + tracking-
+      // param strip over the synthesized adversarial url column (see
+      // withUrls). Pure map-side string expressions — zero shuffles,
+      // codegen'd end to end; at 100 TB this is scan-speed.
+      graft.operators.Url.normalize(withUrls(Tables.documents(s, dir)), "url")
+        .select(col("doc_id"), col("url"), col("url_norm"), col("host"))
+    },
+      s"""WITH $urlsSql,
+         |$urlNormSql
+         |SELECT doc_id, url, url_norm, host FROM normed""".stripMargin),
+
+    Query("domain_profile", (s, dir) => {
+      // the crawl key, step 2: registrable-domain extraction
+      // (publicsuffix.org longest-suffix rule, code-static when-chain)
+      // + the per-domain curation roll-up every crawl quality gate
+      // reads first — docs, distinct hosts, exact-dup count, token
+      // total, integer mean chars. ONE shuffle (the domain agg);
+      // output cardinality = registrable domains, always driver-safe.
+      graft.operators.Url.domainProfile(
+        withUrls(Tables.documents(s, dir)), "url", "text")
+    },
+      s"""WITH $urlsSql,
+         |$urlNormSql,
+         |$domainSql
+         |SELECT domain, count(*) AS n_docs,
+         |  count(DISTINCT host) AS n_hosts,
+         |  count(*) - count(DISTINCT md5(text)) AS n_dup,
+         |  CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT) AS tokens_total,
+         |  CAST(sum(length(text)) AS BIGINT) // count(*) AS chars_per_doc
+         |FROM dom GROUP BY 1""".stripMargin),
+
+    Query("url_dedup", (s, dir) => {
+      // the crawl's first gate: five differently-spelled fetches of
+      // every resource (see withRefetchUrls) collapse to one row per
+      // NORMALIZED url — keep the first fetch, count fetches and raw
+      // spellings. ONE keyed agg; duplicates exist only after
+      // normalization, so this gates the normalizer end-to-end.
+      graft.operators.Url.dedupFetches(
+        withRefetchUrls(Tables.documents(s, dir)), "url", "doc_id")
+    },
+      s"""WITH $refetchUrlsSql,
+         |$urlNormSql
+         |SELECT url_norm, min(doc_id) AS keep_id,
+         |  count(*) AS n_fetches,
+         |  count(DISTINCT url) AS n_variants
+         |FROM normed GROUP BY 1""".stripMargin),
+
+    Query("domain_pagerank", (s, dir) => {
+      // the crawl key under the source prior (VERDICT r18 #4): the
+      // link-structure domain ranking a curation pipeline reads
+      // instead of the co-purchase demo graph — synthesize a
+      // deterministic doc->doc link column (each doc links to docs
+      // (id*7+13)%N and (id*13+101)%N — the url-template convention),
+      // lift both endpoints to their REGISTRABLE DOMAIN via the
+      // row-159/160 machinery, symmetrize (the operator's undirected
+      // contract: every node must source its mass), and run the
+      // EXISTING integer pagerank; ranks join back to the
+      // domain_profile roll-up. Domain cardinality is tiny by
+      // construction (suffix grouping is the whole point), so every
+      // frame past the one doc-keyed link join is domain-sized.
+      val docs = withUrls(Tables.documents(s, dir))
+      val n = Tables.documents(s, dir).count() // one metadata-cheap job
+      val dom = docs.select(col("doc_id"),
+        graft.operators.Url.registrableDomain(
+          graft.operators.Url.hostCol(col("url"))).as("domain"))
+      val links = dom.select(col("doc_id"), explode(array(
+        pmod(col("doc_id") * 7 + 13, lit(n)),
+        pmod(col("doc_id") * 13 + 101, lit(n)))).as("tgt"))
+      val e0 = links
+        .join(dom, "doc_id")
+        .join(dom.select(col("doc_id").as("tgt"),
+          col("domain").as("dst_domain")), "tgt")
+        .select(col("domain").as("src"), col("dst_domain").as("dst"))
+      val edges = e0.unionByName(
+        e0.select(col("dst").as("src"), col("src").as("dst")))
+      val ranks = graft.operators.Graph
+        .pagerank(edges, "src", "dst", iterations = 5, noSinks = true)
+      val prof = graft.operators.Url.domainProfile(docs, "url", "text")
+        .select(col("domain"), col("n_docs"), col("n_hosts"))
+      ranks.join(prof, col("node") === col("domain"))
+        .select(col("domain"), col("rank"), col("n_docs"), col("n_hosts"))
+        .orderBy(col("rank").desc, col("domain")).limit(20)
+    }, domainPagerankOracleSql(5)),
+
+    Query("pipeline_crawl", (s, dir) => {
+      // the crawl key composed END-TO-END (VERDICT r18 #5), rows
+      // 161 -> 160 -> 45 -> 14 -> 52 chained: fetch-dedup -> domain
+      // gate -> quality funnel -> near-dup pair graph -> leakage-safe
+      // split. The crawl set plants both failure modes upstream
+      // stages exist to kill: every 5th resource is REFETCHED under
+      // a different spelling (same normal form — stage 1 collapses
+      // it) and every doc_id≡3 (mod 7) is MIRRORED on its own domain
+      // under a second path with identical text (+20000 preserves
+      // the template: 20000 div 20 ≡ 0 mod 10 — a distinct resource
+      // stage 1 must NOT collapse, which raises its domain's
+      // exact-dup rate until the stage-2 gate drops the domain).
+      val base = Tables.documents(s, dir)
+        .select(col("doc_id"), col("source"), col("lang"), col("text"))
+      val mirrors = base.filter(col("doc_id") % 7 === 3)
+        .select((col("doc_id") + 20000).as("doc_id"),
+          col("source"), col("lang"), col("text"))
+      val crawl = withUrls(base.unionByName(mirrors))
+      val fetches = crawl.select(col("doc_id"), col("url"), col("text"))
+        .unionByName(crawl.filter(col("doc_id") % 5 === 0)
+          .select((col("doc_id") + 50000).as("doc_id"),
+            concat(col("url"), lit("#refetch")).as("url"), col("text")))
+      // stage 1: canonical-url fetch dedup; keep_id is always the
+      // lowest-id spelling, so joining keep_id back onto the crawl
+      // frame recovers (text, url) of exactly the first fetches.
+      // (r19 measured the pretrainV3Stages materialize rule here —
+      // cutting kept/gated — and REJECTED it: 2.8 → 3.8 s at sf0.1.
+      // Unlike the v3 spine, this chain's consumers prune to
+      // different narrow column sets and share their exchanges, so
+      // eager materialization only added blocking writes.)
+      val kept = crawl.join(
+        graft.operators.Url.dedupFetches(fetches, "url", "doc_id")
+          .select(col("keep_id").as("doc_id")), "doc_id")
+      // stage 2: the domain gate — profile the kept fetches, drop
+      // domains with >= 25% exact-dup docs or short-form content
+      val prof = graft.operators.Url.domainProfile(kept, "url", "text")
+      val gated = kept.select(
+          graft.operators.Url.registrableDomain(
+            graft.operators.Url.hostCol(col("url"))).as("domain"),
+          col("doc_id"), col("text"))
+        // the gate dim is domain-cardinality by contract (thousands
+        // on a real crawl) — broadcast it explicitly rather than
+        // leaving the post-agg frame to a stats-blind SortMergeJoin
+        .join(broadcast(prof.filter(col("n_dup") * 4 < col("n_docs") &&
+            col("chars_per_doc") >= 150).select(col("domain"))),
+          "domain")
+      // stage 3: the quality funnel (row 45's thresholds)
+      val survivors = gated.join(
+        TextAnalysis.filterFunnel(gated.select(col("doc_id"), col("text")),
+            "text", minTokens = 20, maxTokens = 90,
+            keepLangs = Seq("en"), minStop = 0.02)
+          .filter(col("verdict") === "kept").select(col("doc_id")),
+        "doc_id").persist()
+      // stages 4+5: near-dup pair graph feeds the leakage-safe split
+      val pairs = Dedup.minhashPairs(
+        survivors.select(col("doc_id"), col("text")), "text", "doc_id",
+        numHashes = 16, bands = 4, shingleN = 3, threshold = 0.5)
+      Sampling.leakageSafeSplit(survivors.select(col("doc_id")), "doc_id",
+          pairs, evalFrac = 0.1, seed = "crawl0")
+        .join(survivors.select(col("doc_id"), col("domain")), Seq("doc_id"))
+        .select(col("doc_id"), col("domain"), col("split_key"), col("split"))
+    },
+      // the fetch-dedup, domain-gate, funnel, minhash-pair and
+      // split-safe oracle fragments chained, each stage reading the
+      // previous (the pipeline_curate convention)
+      s"""WITH RECURSIVE crawlsrc AS (
+         |  SELECT doc_id, source, lang, text FROM documents
+         |  UNION ALL
+         |  SELECT doc_id + 20000, source, lang, text FROM documents
+         |  WHERE doc_id % 7 = 3),
+         |${urlsSqlFrom("crawlsrc")},
+         |fet AS (
+         |  SELECT doc_id, url, text FROM urls
+         |  UNION ALL
+         |  SELECT doc_id + 50000, url || '#refetch', text FROM urls
+         |  WHERE doc_id % 5 = 0),
+         |${urlNormSqlFrom("fet")},
+         |keep AS (SELECT min(doc_id) AS doc_id FROM normed GROUP BY url_norm),
+         |kept AS (SELECT n.doc_id, n.text, n.host FROM normed n JOIN keep USING (doc_id)),
+         |${domainSqlFrom("kept")},
+         |prof AS (SELECT domain, count(*) AS n_docs,
+         |           count(*) - count(DISTINCT md5(text)) AS n_dup,
+         |           CAST(sum(length(text)) AS BIGINT) // count(*) AS cpd
+         |         FROM dom GROUP BY 1),
+         |gated AS (SELECT d.doc_id, d.text, d.domain
+         |          FROM dom d JOIN prof p USING (domain)
+         |          WHERE p.n_dup * 4 < p.n_docs AND p.cpd >= 150),
+         |fw AS (SELECT doc_id, string_split(text, ' ') AS w FROM gated),
+         |fg AS (SELECT doc_id, len(w) AS n,
+         |  len(list_filter(w, t -> list_contains(${LangSql.en}, t)))::DOUBLE / len(w) AS stop,
+         |  ${LangSql.scoreCols}
+         |FROM fw),
+         |fv AS (SELECT doc_id, n, stop,
+         |         CASE WHEN ${LangSql.best} = 0 THEN 'und' ${LangSql.caseChain} END AS lang_pred
+         |       FROM fg),
+         |kept2 AS (SELECT g.doc_id, g.text, g.domain FROM gated g JOIN fv USING (doc_id)
+         |          WHERE n IS NOT NULL AND n >= 20 AND n <= 90
+         |            AND lang_pred IN ('en') AND stop >= 0.02),
+         |${minhashPairChain("kept2")},
+         |edges AS (SELECT id_a AS src, id_b AS dst FROM mh_pairs
+         |          UNION ALL SELECT id_b AS src, id_a AS dst FROM mh_pairs),
+         |cnodes AS (SELECT DISTINCT src AS id FROM edges),
+         |reach AS (SELECT id, id AS r FROM cnodes
+         |          UNION
+         |          SELECT e.src AS id, reach.r FROM edges e JOIN reach ON reach.id = e.dst),
+         |lab AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+         |keyed AS (SELECT c.doc_id, c.domain,
+         |            CAST(coalesce(l.cluster_id, c.doc_id) AS BIGINT) AS split_key
+         |          FROM (SELECT doc_id, domain FROM kept2) c LEFT JOIN lab l ON l.id = c.doc_id)
+         |SELECT doc_id, domain, split_key,
+         |  CASE WHEN CAST('0x' || substr(md5('crawl0_' || CAST(split_key AS VARCHAR)), 1, 15) AS BIGINT)
+         |         % 1000000 < 0.1 * 1000000
+         |       THEN 'eval' ELSE 'train' END AS split
+         |FROM keyed""".stripMargin)
+  )
+
+  /** Deterministic URL column over the documents fixtures (the corpus
+    * has no url column — VERDICT r17 next-round #2 asks for the crawl
+    * key over the graded fixtures, so the url is synthesized from
+    * (doc_id, source, lang) and the oracle RESTATES the synthesis,
+    * the similarity_join_cap_binding convention). The eight templates
+    * are chosen adversarially for the normalizer: mixed-case scheme
+    * and host, default ports (:443/:80) vs a kept non-default :8443,
+    * fragments, utm/gclid/fbclid/ref tracking params mixed with
+    * kept params, an empty path before '?', trailing-slash paths, and
+    * multi-label public suffixes (co.uk / com.au / ac.uk / github.io).
+    * Rows 8-9 (VERDICT r18 #1) exercise the FULL-PSL upgrade: com.pl
+    * is a real 2-label rule the r18 ~80-rule subset lacked (every
+    * .com.pl site collapsed into ONE "com.pl" domain row), and .ck
+    * is a wildcard rule (`*.ck`: the suffix is `<source>.ck`, so the
+    * registrable domain keeps THREE labels). */
+  private def withUrls(docs: DataFrame): DataFrame = {
+    val d = col("doc_id").cast("string")
+    // (div 20) decorrelates the template index from the fixture's
+    // source assignment (source = doc_id % 20): every source then
+    // spans all ten templates (~200 domains), instead of each source
+    // collapsing onto one template — which made the r18 domain graph
+    // 20 near-identical nodes and every pagerank mass equal
+    val t = expr("doc_id div 20") % 10
+    docs.withColumn("url",
+      when(t === 0, concat(lit("https://WWW."), col("source"),
+        lit(".CO.UK:443/articles/"), d, lit("?utm_source=feed&id="), d,
+        lit("#frag")))
+      .when(t === 1, concat(lit("HTTP://blog."), col("source"),
+        lit(".com:80/post/"), d, lit("/?ref=tw&x=1")))
+      .when(t === 2, concat(lit("https://"), col("source"),
+        lit(".github.io/p/"), d, lit("?utm_campaign=a&utm_medium=b")))
+      .when(t === 3, concat(lit("http://news."), col("source"),
+        lit(".com.au/"), d, lit("#section-2")))
+      .when(t === 4, concat(lit("https://cdn."), col("source"),
+        lit(".net:8443/asset/"), d))
+      .when(t === 5, concat(lit("https://"), col("source"),
+        lit(".org?gclid=abc&q="), col("lang")))
+      .when(t === 6, concat(lit("HTTPS://M."), col("source"),
+        lit(".de/"), col("lang"), lit("/"), d,
+        lit("?fbclid=zz&keep=1&utm_x=9")))
+      .when(t === 7, concat(lit("http://"), col("source"),
+        lit(".ac.uk/dept/"), d, lit("/index.html?a=1&b=2")))
+      .when(t === 8, concat(lit("https://shop."), col("source"),
+        lit(".com.pl/p/"), d, lit("?utm_id="), d))
+      .otherwise(concat(lit("http://www."), col("source"),
+        lit(".ck/w/"), d, lit("#x"))))
+  }
+
+  /** The SQL twin of [[withUrls]] — string-identical templates —
+    * over any source CTE/table with (doc_id, source, lang, text). */
+  private def urlsSqlFrom(src: String): String =
+    s"""urls AS (
+      |  SELECT doc_id, text,
+      |    CASE CAST((doc_id // 20) % 10 AS INT)
+      |      WHEN 0 THEN 'https://WWW.' || source || '.CO.UK:443/articles/' ||
+      |        CAST(doc_id AS VARCHAR) || '?utm_source=feed&id=' || CAST(doc_id AS VARCHAR) || '#frag'
+      |      WHEN 1 THEN 'HTTP://blog.' || source || '.com:80/post/' ||
+      |        CAST(doc_id AS VARCHAR) || '/?ref=tw&x=1'
+      |      WHEN 2 THEN 'https://' || source || '.github.io/p/' ||
+      |        CAST(doc_id AS VARCHAR) || '?utm_campaign=a&utm_medium=b'
+      |      WHEN 3 THEN 'http://news.' || source || '.com.au/' ||
+      |        CAST(doc_id AS VARCHAR) || '#section-2'
+      |      WHEN 4 THEN 'https://cdn.' || source || '.net:8443/asset/' || CAST(doc_id AS VARCHAR)
+      |      WHEN 5 THEN 'https://' || source || '.org?gclid=abc&q=' || lang
+      |      WHEN 6 THEN 'HTTPS://M.' || source || '.de/' || lang || '/' ||
+      |        CAST(doc_id AS VARCHAR) || '?fbclid=zz&keep=1&utm_x=9'
+      |      WHEN 7 THEN 'http://' || source || '.ac.uk/dept/' ||
+      |        CAST(doc_id AS VARCHAR) || '/index.html?a=1&b=2'
+      |      WHEN 8 THEN 'https://shop.' || source || '.com.pl/p/' ||
+      |        CAST(doc_id AS VARCHAR) || '?utm_id=' || CAST(doc_id AS VARCHAR)
+      |      ELSE 'http://www.' || source || '.ck/w/' ||
+      |        CAST(doc_id AS VARCHAR) || '#x'
+      |    END AS url
+      |  FROM $src)""".stripMargin
+
+  private val urlsSql = urlsSqlFrom("documents")
+
+  /** Refetch synthesis for url_dedup: five fetches of every resource
+    * (doc_ids ≡ r mod 20 inside one 100-block share source AND
+    * gid = doc_id div 100), each spelled differently — case, default
+    * port, fragment, tracking params — so the duplicates exist ONLY
+    * after normalization. 500 docs → 100 resources × 5 fetches. */
+  private def withRefetchUrls(docs: DataFrame): DataFrame = {
+    val d = col("doc_id").cast("string")
+    val gid = expr("doc_id div 100").cast("string")
+    val v = expr("(doc_id div 20) % 5")
+    val stem = concat(col("source"), lit(".com/item/"), gid)
+    docs.withColumn("url",
+      when(v === 0, concat(lit("https://WWW."), col("source"),
+        lit(".com:443/item/"), gid, lit("?utm_source=crawl&utm_id="), d))
+      .when(v === 1, concat(lit("https://www."), stem, lit("#offset-"), d))
+      .when(v === 2, concat(lit("HTTPS://www."), col("source"),
+        lit(".COM/item/"), gid, lit("?gclid=g"), d))
+      .when(v === 3, concat(lit("https://www."), col("source"),
+        lit(".com:443/item/"), gid, lit("?ref="), d, lit("&utm_b=x")))
+      .otherwise(concat(lit("https://www."), stem)))
+  }
+
+  /** SQL twin of [[withRefetchUrls]] — string-identical templates. */
+  private val refetchUrlsSql =
+    """urls AS (
+      |  SELECT doc_id, text,
+      |    CASE CAST((doc_id // 20) % 5 AS INT)
+      |      WHEN 0 THEN 'https://WWW.' || source || '.com:443/item/' ||
+      |        CAST(doc_id // 100 AS VARCHAR) || '?utm_source=crawl&utm_id=' || CAST(doc_id AS VARCHAR)
+      |      WHEN 1 THEN 'https://www.' || source || '.com/item/' ||
+      |        CAST(doc_id // 100 AS VARCHAR) || '#offset-' || CAST(doc_id AS VARCHAR)
+      |      WHEN 2 THEN 'HTTPS://www.' || source || '.COM/item/' ||
+      |        CAST(doc_id // 100 AS VARCHAR) || '?gclid=g' || CAST(doc_id AS VARCHAR)
+      |      WHEN 3 THEN 'https://www.' || source || '.com:443/item/' ||
+      |        CAST(doc_id // 100 AS VARCHAR) || '?ref=' || CAST(doc_id AS VARCHAR) || '&utm_b=x'
+      |      ELSE 'https://www.' || source || '.com/item/' || CAST(doc_id // 100 AS VARCHAR)
+      |    END AS url
+      |  FROM documents)""".stripMargin
+
+  /** SQL twin of [[graft.operators.Url.normalizeCol]]/hostCol over a
+    * (doc_id, text, url) CTE: emits `normed(doc_id, text, url, host,
+    * url_norm)`. */
+  private def urlNormSqlFrom(src: String): String =
+    s"""comp AS (
+      |  SELECT doc_id, text, url,
+      |    lower(regexp_extract(nf, '^([^:/?#]+)://', 1)) AS scheme,
+      |    regexp_extract(nf, '^[^:/?#]+://([^/?#]*)', 1) AS hp,
+      |    regexp_extract(nf, '^[^:/?#]+://[^/?#]*(.*)${"$"}', 1) AS pathq
+      |  FROM (SELECT *, regexp_replace(url, '#.*${"$"}', '') AS nf FROM $src)),
+      |comp2 AS (
+      |  SELECT *, lower(regexp_replace(hp, ':[0-9]+${"$"}', '')) AS host,
+      |    regexp_extract(hp, ':([0-9]+)${"$"}', 1) AS port,
+      |    regexp_extract(pathq, '^([^?]*)', 1) AS rawpath,
+      |    regexp_extract(pathq, '\\?(.*)${"$"}', 1) AS rawq
+      |  FROM comp),
+      |normed AS (
+      |  SELECT doc_id, text, url, host,
+      |    CASE WHEN host = '' THEN url ELSE
+      |    scheme || '://' || host ||
+      |    CASE WHEN port <> '' AND NOT ((scheme = 'http' AND port = '80')
+      |                               OR (scheme = 'https' AND port = '443'))
+      |         THEN ':' || port ELSE '' END ||
+      |    CASE WHEN rawpath = '' THEN '/' ELSE rawpath END ||
+      |    CASE WHEN qs <> '' THEN '?' || qs ELSE '' END END AS url_norm
+      |  FROM (SELECT *, array_to_string(list_filter(string_split(rawq, '&'),
+      |          p -> p <> '' AND NOT regexp_matches(p,
+      |            '^(utm_[^=&]*|gclid|fbclid|msclkid|ref)(=.*)?${"$"}')), '&') AS qs
+      |        FROM comp2))""".stripMargin
+
+  private val urlNormSql = urlNormSqlFrom("urls")
+
+  /** The FULL public-suffix rule table as SQL VALUES — generated
+    * from the SAME parsed resource the Spark operator compiles its
+    * `InSet` probes from, so the two engines cannot drift. ~9.5k
+    * rows (kind r|w|x, suffix, label count); rules contain no quote
+    * characters, so no escaping is needed. */
+  private def pslValuesSql: String =
+    graft.operators.Url.pslRows
+      .map { case (k, s, n) => s"('$k','$s',$n)" }.mkString(", ")
+
+  /** Registrable-domain extraction relationally, over the `normed`
+    * CTE: LEFT JOIN the host against the full PSL VALUES table, pick
+    * the prevailing rule per doc by the publicsuffix.org priority —
+    * exceptions first, then effective suffix length (a wildcard's is
+    * its base + 1) descending, (kind, s) as a deterministic tiebreak
+    * for the wildcard-vs-rule same-length tie whose candidates are
+    * equal anyway — then cut the registrable domain per kind:
+    * exception -> the exception itself; wildcard base n -> last n+2
+    * labels (or the host when the host IS the n+1-label suffix);
+    * rule n -> last n+1 labels (host when bare); no match -> the
+    * implicit `*` rule. Emits `dom(doc_id, text, host, domain)` over
+    * any source CTE with (doc_id, text, host). */
+  private def domainSqlFrom(src: String): String =
+    s"""sfx(kind, s, n) AS (SELECT * FROM (VALUES $pslValuesSql) t(kind, s, n)),
+       |m AS (
+       |  SELECT h.doc_id, h.text, h.host, f.kind, f.s, f.n,
+       |    row_number() OVER (PARTITION BY h.doc_id
+       |                       ORDER BY (f.kind = 'x') DESC,
+       |                         (f.n + CASE WHEN f.kind = 'w' THEN 1 ELSE 0 END) DESC,
+       |                         f.kind DESC, f.s) AS rn
+       |  FROM $src h LEFT JOIN sfx f
+       |    ON (h.host = f.s AND f.kind <> 'w') OR ends_with(h.host, '.' || f.s)),
+       |dom AS (
+       |  SELECT doc_id, text, host,
+       |    CASE
+       |      WHEN s IS NULL THEN
+       |        CASE WHEN len(l) >= 2
+       |             THEN array_to_string(l[len(l)-1:len(l)], '.')
+       |             ELSE host END
+       |      WHEN kind = 'x' THEN array_to_string(l[len(l)-n+1:len(l)], '.')
+       |      WHEN kind = 'w' THEN
+       |        CASE WHEN len(l) >= n + 2
+       |             THEN array_to_string(l[len(l)-n-1:len(l)], '.')
+       |             ELSE host END
+       |      ELSE
+       |        CASE WHEN len(l) >= n + 1
+       |             THEN array_to_string(l[len(l)-n:len(l)], '.')
+       |             ELSE host END
+       |    END AS domain
+       |  FROM (SELECT *, string_split(host, '.') AS l FROM m WHERE rn = 1))""".stripMargin
+
+  private def domainSql: String = domainSqlFrom("normed")
+
+  /** deg/n/r0 plus the unrolled r1..rI fixed-point CTEs over an edge
+    * CTE `e(src, dst)` — the integer PageRank recurrence, a pure
+    * function of the edge CTE, shared verbatim by the graph_pagerank
+    * and domain_pagerank oracles. Every operation is integer (floor
+    * division, integer sums), so each r_i matches the Spark frame
+    * exactly and the final ranks hash-match as BIGINTs. */
+  private def pagerankCtesSql(iters: Int): String = {
+    val S = "1000000000000"
+    val chain = (1 to iters).map { i =>
+      s"""r$i AS (SELECT d.node,
+         |    ((15 * ($S // n.cnt)) // 100
+         |     + (85 * coalesce(s$i.sm, 0)) // 100) AS r
+         |  FROM deg d CROSS JOIN n
+         |  LEFT JOIN (SELECT e.dst AS nd, sum(p.r // dg.deg) AS sm
+         |             FROM r${i - 1} p JOIN e ON e.src = p.node
+         |             JOIN deg dg ON dg.node = p.node
+         |             GROUP BY e.dst) s$i ON s$i.nd = d.node)""".stripMargin
+    }.mkString(",\n")
+    s"""deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY 1),
+       |n AS (SELECT count(*) AS cnt FROM deg),
+       |r0 AS (SELECT node, ($S // n.cnt) AS r FROM deg, n),
+       |$chain""".stripMargin
+  }
+
+  /** graph_pagerank oracle: the shared recurrence over the
+    * co-purchase edge set. */
+  private def pagerankOracleSql(iters: Int): String =
+    s"""WITH eb AS (SELECT DISTINCT 'c' || o_custkey AS src, 's' || l_suppkey AS dst
+       |            FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+       |e AS (SELECT src, dst FROM eb UNION SELECT dst AS src, src AS dst FROM eb),
+       |${pagerankCtesSql(iters)}
+       |SELECT node, CAST(r AS BIGINT) AS rank FROM r$iters
+       |ORDER BY r DESC, node LIMIT 20""".stripMargin
+
+  /** domain_pagerank oracle: the url/domain CTEs lift the synthesized
+    * doc->doc links to registrable-domain edges, then the SAME
+    * recurrence runs and the ranks join the profile roll-up. */
+  private def domainPagerankOracleSql(iters: Int): String =
+    s"""WITH $urlsSql,
+       |$urlNormSql,
+       |$domainSql,
+       |nn AS (SELECT count(*) AS n FROM documents),
+       |links AS (
+       |  SELECT d.doc_id, (d.doc_id * 7 + 13) % nn.n AS tgt FROM dom d, nn
+       |  UNION ALL
+       |  SELECT d.doc_id, (d.doc_id * 13 + 101) % nn.n AS tgt FROM dom d, nn),
+       |eb AS (SELECT sd.domain AS src, td.domain AS dst
+       |       FROM links l JOIN dom sd ON sd.doc_id = l.doc_id
+       |                    JOIN dom td ON td.doc_id = l.tgt),
+       |e AS (SELECT DISTINCT src, dst FROM
+       |       (SELECT src, dst FROM eb UNION ALL SELECT dst AS src, src AS dst FROM eb)),
+       |${pagerankCtesSql(iters)},
+       |prof AS (SELECT domain, count(*) AS n_docs,
+       |         count(DISTINCT host) AS n_hosts FROM dom GROUP BY 1)
+       |SELECT r.node AS domain, CAST(r.r AS BIGINT) AS rank,
+       |  p.n_docs, p.n_hosts
+       |FROM r$iters r JOIN prof p ON p.domain = r.node
+       |ORDER BY rank DESC, domain LIMIT 20""".stripMargin
+}

@@ -26,7 +26,7 @@ object DumpSubset {
       s"unknown queries: ${unknown.mkString(", ")}")
     val errors = graft.Verify.run(spark,
       graft.SparkEntry.queries.filter(kv => names.contains(kv._1)),
-      graft.SparkEntry.oracleSql.filter(kv => names.contains(kv._1)),
+      graft.SparkEntry.oracles(spark, dir, names),
       dir, out)
     if (errors.nonEmpty) { println(s"[dumpsubset] ERRORS: $errors"); sys.exit(1) }
     println(s"[dumpsubset] dumped ${names.length} queries to $out")

@@ -34,7 +34,7 @@ object Micro {
 
     // the REAL declared corpus builder (kept in sync by construction),
     // plus a no-repartition variant rebuilt inline for the comparison
-    def corpus = graft.SparkEntry.dedupCorpus(spark, dir)
+    def corpus = graft.registry.Shared.dedupCorpus(spark, dir)
     val docs = graft.core.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val copies = docs.filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 100000).as("doc_id"), col("text"))

@@ -135,6 +135,45 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.shouldPersist(contaminated = true, Some(legacy), sf))
   }
 
+  test("history is kept per core count: a pass never replaces or " +
+      "compares with a base of another core count") {
+    val sf = "/root/testdata/sf0.1"
+    val c32 = s"""{"sf":"$sf","cpus":32,"contaminated":false,"queries":{"q1_agg":0.5}}"""
+    val c32dirty = c32.replace("\"contaminated\":false", "\"contaminated\":true")
+    val legacy = s"""{"sf":"$sf","contaminated":false,"queries":{"q1_agg":0.5}}"""
+    // another core count: never replaced, clean pass or dirty base
+    assert(!Bench.shouldPersist(contaminated = false, Some(c32), sf, Some(8)))
+    assert(!Bench.shouldPersist(contaminated = false, Some(c32dirty), sf, Some(8)))
+    assert(!Bench.shouldPersist(contaminated = false,
+      Some(c32.replace("sf0.1", "sf0.01")), sf, Some(8)))
+    // the same core count: the sf/contamination table applies
+    assert(Bench.shouldPersist(contaminated = false, Some(c32), sf, Some(32)))
+    assert(!Bench.shouldPersist(contaminated = true, Some(c32), sf, Some(32)))
+    assert(Bench.shouldPersist(contaminated = true, Some(c32dirty), sf, Some(32)))
+    // a base that records no core count predates the field
+    assert(Bench.shouldPersist(contaminated = false, Some(legacy), sf, Some(8)))
+    assert(Bench.shouldPersist(contaminated = true, None, sf, Some(8)))
+    // comparison needs the same sf AND a recorded, equal core count
+    assert(Bench.comparableHistory(c32, sf, 32))
+    assert(!Bench.comparableHistory(c32, sf, 8))
+    assert(!Bench.comparableHistory(c32, "/root/testdata/sf0.01", 32))
+    assert(!Bench.comparableHistory(legacy, sf, 32))
+    // the artifact wrapper spells it with a space
+    assert(Bench.recordedCpus("""{"n": 20, "cpus": 8, "tail": "x"}""").contains(8))
+    // and the recorded count never parses as a query time
+    assert(Bench.parsePrevQueryTimes(c32) == Map("q1_agg" -> 0.5))
+  }
+
+  test("the compact line refuses a header that cannot fit") {
+    val longSf = "/data/" + "nested/" * 300 + "sf0.1"
+    val e = intercept[IllegalArgumentException](
+      Bench.compactLine("1.000", longSf, Seq(("q1_agg", 1.0)), None, 0))
+    assert(e.getMessage.contains("header"))
+    // a header that fits still yields a complete line
+    assert(Bench.compactLine("1.000", "/x", Seq(("q1_agg", 1.0)), None, 0)
+      .endsWith("}}"))
+  }
+
   test("the self-label fields never parse as query times") {
     val artifact =
       """{"sf":"/root/testdata/sf0.1","loadavg":[6.20,5.45,3.57],"ext_cores":1.23,"ext_max":2.51,"io_cores":0.43,"noisy_lines":4,"contaminated":true,"errors":{},"queries":{"q1_agg":0.5}}"""

@@ -1,14 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SaveMode
+import graft.registry.Fixtures
 
-/** The model caches' content keying (VERDICT r16 #3): a long-lived
+/** The fixtures' content keying (VERDICT r16 #3): a long-lived
   * session that mutates the corpus under the SAME path — exactly what
   * upsert_crud/compact model — must re-train, not serve a stale model
-  * forever. The caches key on `dir@tableToken` where the token folds
-  * the parquet directory's (name, length, mtime) listing, re-derived
-  * on every access (one FS listing, no Spark job — the Dedup
-  * `_config` sidecar convention). */
+  * forever. A directory's fixture set carries the tableToken of its
+  * source tables, each folding the parquet directory's (name, length,
+  * mtime) listing, re-derived on every lookup (one FS listing, no
+  * Spark job — the Dedup `_config` sidecar convention). */
 class ModelCacheSpec extends SparkSpec {
 
   private def writeDocs(dir: String, rows: Seq[(Long, String)]): Unit = {
@@ -20,15 +21,15 @@ class ModelCacheSpec extends SparkSpec {
   test("token is stable on identical content, shifts on rewrite") {
     val dir = java.nio.file.Files.createTempDirectory("graft-tok").toString
     // missing table: a well-defined (empty-listing) token, no throw
-    val absent = SparkEntry.tableToken(spark, dir, "documents")
+    val absent = Fixtures.tableToken(spark, dir, "documents")
     writeDocs(dir, Seq((1L, "hello world")))
-    val t1 = SparkEntry.tableToken(spark, dir, "documents")
+    val t1 = Fixtures.tableToken(spark, dir, "documents")
     assert(t1 != absent)
     // re-derived, not memoized: same content, same token
-    assert(SparkEntry.tableToken(spark, dir, "documents") == t1)
+    assert(Fixtures.tableToken(spark, dir, "documents") == t1)
     // a rewrite (fresh part files) is a new snapshot
     writeDocs(dir, Seq((1L, "hello world")))
-    assert(SparkEntry.tableToken(spark, dir, "documents") != t1)
+    assert(Fixtures.tableToken(spark, dir, "documents") != t1)
   }
 
   test("a corpus mutated under one path re-trains the gate " +
@@ -39,14 +40,29 @@ class ModelCacheSpec extends SparkSpec {
     val bad = "qq ww"
     writeDocs(dir, (1L to 40L).map(i =>
       (i, if (i % 2 == 0) good else bad)))
-    val m1 = SparkEntry.boostModel(spark, dir)
-    // unchanged corpus: the memo serves the SAME instance (no re-train)
-    assert(SparkEntry.boostModel(spark, dir) eq m1)
+    val m1 = Fixtures.of(spark, dir).boost
+    // unchanged corpus: the set serves the SAME instance (no re-train)
+    assert(Fixtures.of(spark, dir).boost eq m1)
     // mutate under the same path: the gate must re-train
     writeDocs(dir, (1L to 40L).map(i =>
       (i, if (i % 2 == 0) bad else good)))
-    val m2 = SparkEntry.boostModel(spark, dir)
+    val m2 = Fixtures.of(spark, dir).boost
     assert(!(m2 eq m1), "stale model served after a corpus rewrite")
+  }
+
+  test("a rewritten corpus replaces its fixture set and reclaims the " +
+      "old set's index files") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fx").toString
+    writeDocs(dir, Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta")))
+    val f1 = Fixtures.of(spark, dir)
+    val idx = new java.io.File(f1.bm25Index)
+    assert(idx.exists())
+    assert(Fixtures.of(spark, dir) eq f1)
+    writeDocs(dir, Seq((1L, "alpha beta gamma")))
+    val f2 = Fixtures.of(spark, dir)
+    assert(!(f2 eq f1))
+    assert(!idx.exists(), s"superseded index left on disk: $idx")
+    assert(new java.io.File(f2.bm25Index).exists())
   }
 
   test("token sees a rewrite INSIDE a partition subdir " +
@@ -58,43 +74,16 @@ class ModelCacheSpec extends SparkSpec {
         .write.mode(SaveMode.Overwrite).partitionBy("lang")
         .parquet(s"$dir/documents.parquet")
     writePartitioned("hello world")
-    val t1 = SparkEntry.tableToken(spark, dir, "documents")
+    val t1 = Fixtures.tableToken(spark, dir, "documents")
     // same content, re-derived: stable
-    assert(SparkEntry.tableToken(spark, dir, "documents") == t1)
+    assert(Fixtures.tableToken(spark, dir, "documents") == t1)
     // rewrite ONE partition subdir in place: the lang=en subdir keeps
     // its name (and often its mtime at coarse granularity) — a flat
     // listing missed this; the recursive fold must not
     Seq((1L, "changed body", "en")).toDF("doc_id", "text", "lang")
       .write.mode(SaveMode.Overwrite)
       .parquet(s"$dir/documents.parquet/lang=en")
-    assert(SparkEntry.tableToken(spark, dir, "documents") != t1,
+    assert(Fixtures.tableToken(spark, dir, "documents") != t1,
       "partition-subdir rewrite produced the same token")
-  }
-
-  test("memo maps are LRU-bounded and reclaim superseded entries " +
-      "(VERDICT r17 what's-wrong #4 + ADVICE #3)") {
-    val replaced = collection.mutable.ArrayBuffer[(String, String)]()
-    val m = new SparkEntry.MemoMap[String](2, (k, v) => replaced += (k -> v))
-    m.put("a", "t1", "va"); m.put("b", "t1", "vb")
-    assert(m.get("a").contains(("t1", "va")))
-    // access-ordered: touching "a" makes "b" the eldest. LRU
-    // eviction frees the HEAP entry only — it must NOT fire the
-    // replace callback ("b" is still the current build for its
-    // snapshot; deleting its on-disk resource would yank files from
-    // under an in-flight plan — review r18)
-    m.put("c", "t1", "vc")
-    assert(replaced.isEmpty, s"LRU eviction fired the callback: $replaced")
-    assert(m.get("b").isEmpty && m.get("a").nonEmpty && m.get("c").nonEmpty)
-    // token-change REPLACE fires it — that value IS superseded (the
-    // index-dir reclaim path); same-token put does not
-    m.put("a", "t2", "va2")
-    assert(replaced.toList == List("a" -> "va"))
-    m.put("a", "t2", "va2")
-    assert(replaced.size == 1, "same-token replace must not fire")
-    // a throwing callback never breaks the put
-    val hostile = new SparkEntry.MemoMap[String](1,
-      (_, _) => throw new RuntimeException("boom"))
-    hostile.put("x", "t1", "v1"); hostile.put("x", "t2", "v2")
-    assert(hostile.get("x").contains(("t2", "v2")))
   }
 }

@@ -1007,7 +1007,7 @@ class StreamingSpec extends SparkSpec {
     // stream side: the same corpus arrives in three arbitrary
     // micro-batches; the gate is the TRAINED kernel (bit-identical to
     // the distributed classifier the batch query runs — its own pin)
-    val corpus = SparkEntry.kbCorpus(spark, sf0001)
+    val corpus = registry.Shared.kbCorpus(spark, sf0001)
       .as[(Long, String)].collect().sortBy(_._1)
     val train = graft.core.Tables.documents(spark, sf0001)
       .filter(col("doc_id") % 5 =!= 0)
