@@ -2,6 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 import graft.functions.Quantization
 import graft.operators.{AnnLsh, Crud, Knn}
 import graft.query.FilterCompiler
@@ -49,8 +51,29 @@ final case class SearchResults(results: DataFrame, percentSearched: Double)
 /** An embeddable vector collection over a parquet-backed versioned
   * log — the Spark-native re-expression of the reference's
   * `Collection` (collection.go): same operations, but every mutation
-  * is an appended batch and every read is a declarative plan over
+  * is an appended batch, and every read is a plan over a snapshot of
   * "latest version per id, minus tombstones".
+  *
+  * The snapshot ([[current]]) is that view materialized once per
+  * observable log state and reused by every read until the state
+  * changes — the reference likewise probes records it already holds
+  * (collection.go:569-712) instead of replaying its log per search.
+  *  - Key: the live log directory plus the name, length and
+  *    modification time of each of its parquet files. Any write on
+  *    the path changes it — this instance's, another `Collection`'s
+  *    on the same path, a compaction, a file rewritten in place — so
+  *    the next read lists the log, sees a new key and rebuilds. The
+  *    listing takes the write lock, so a batch this instance appends
+  *    is seen whole or not at all.
+  *  - Build: exactly the key's files, the fixed log schema, the
+  *    current-view window, then `localCheckpoint` to DISK_ONLY. The
+  *    heap holds none of the view's rows; one build per key, and its
+  *    row count is memoized, so counts and stats run no job.
+  *  - Release: a superseded snapshot is never unpersisted explicitly.
+  *    Spark's ContextCleaner frees its blocks once nothing references
+  *    it, so a plan a caller still holds keeps reading across any
+  *    number of writes and compactions. Do not `persist` or
+  *    `unpersist` what [[current]] returns.
   *
   * Storage layout (`path/`): parquet files with columns
   * (id long, vector array<double>, metadata string-json,
@@ -59,15 +82,7 @@ final case class SearchResults(results: DataFrame, percentSearched: Double)
   * current-view window then shuffles only new deltas.
   */
 final class Collection(spark: SparkSession, val options: CollectionOptions, path: String) {
-
-  private def emptyBatch(): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("id", LongType), StructField("vector", ArrayType(DoubleType)),
-        StructField("metadata", StringType), StructField("version", LongType),
-        StructField("deleted", BooleanType))))
-  }
+  import Collection.{LogSchema, LogState}
 
   // resolve the filesystem FROM the collection path, not the default
   // scheme: a collection on s3a://... must list/delete on that store,
@@ -99,33 +114,43 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
   private def dataPath(): String =
     completeGens().maxOption.map(n => s"$path.gen$n").getOrElse(path)
 
-  private def log(): DataFrame = {
-    val p = dataPath()
-    // "log absent" is only a missing path; corruption must surface,
-    // not silently read as an empty collection
-    try spark.read.parquet(p)
-    catch { case _: org.apache.spark.sql.AnalysisException =>
-      emptyBatch()
-    }
+  /** The log's observable state: the directory [[dataPath]] resolves
+    * to, and the name, length and modification time of each parquet
+    * file in it. A write by any `Collection` on this path — an append,
+    * a compaction, a file rewritten in place — changes it. */
+  private def logState(): LogState = {
+    val dir = dataPath()
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val f = fs()
+    val files =
+      if (!f.exists(p)) Nil
+      else f.listStatus(p).toSeq.map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
+        .filter { case (n, _, _) => n.endsWith(".parquet") && !n.startsWith("_") }
+        .sorted
+    LogState(dir, files)
   }
+
+  /** Exactly the files of `state`, under the fixed log schema (no
+    * inference, and a file appended after the listing is not read). */
+  private def read(state: LogState): DataFrame =
+    if (state.files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        LogSchema)
+    else spark.read.schema(LogSchema).parquet(state.paths.map(_.toString): _*)
 
   /** Max version from parquet FOOTER statistics — O(files) metadata
     * reads, zero row data: the scale answer to a monotonic version
     * counter without a coordination service (every appended batch
     * carries one constant version, so file-level min/max stats are
-    * exact). Falls back to a full aggregate only if a footer lacks
-    * stats for the column. */
+    * exact). Falls back to a full aggregate, reported on stderr, only
+    * if a footer cannot be read or lacks stats for the column. */
   private def nextVersion(): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(dataPath())
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return 0L
-    val files = fs.listStatus(dir).map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
-    if (files.isEmpty) return 0L
+    val state = logState()
+    if (state.files.isEmpty) return 0L
     try {
       var mx = -1L
-      files.foreach { p =>
+      state.paths.foreach { p =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try {
@@ -143,8 +168,10 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
       }
       mx + 1
     } catch {
-      case _: Exception =>
-        log().agg(coalesce(max(col("version")), lit(-1L))).head().getLong(0) + 1
+      case e: Exception =>
+        System.err.println(s"Collection.nextVersion: footer read of ${state.dir} failed " +
+          s"(${e.getClass.getName}: ${e.getMessage}); aggregating the log instead")
+        read(state).agg(coalesce(max(col("version")), lit(-1L))).head().getLong(0) + 1
     }
   }
 
@@ -153,17 +180,15 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
     * discipline). Every write is read-version-then-append: two
     * unserialized writers could mint the SAME version for different
     * batches and make "latest version per id" ambiguous, so the
-    * critical section spans both steps. Reads stay LOCK-FREE (the
-    * reference's RWMutex blocks them): committed parquet files become
-    * visible atomically, so a concurrent reader sees a consistent
-    * prefix of the mutation log. [[compact]] keeps the previous
-    * generation on disk (its retention window, default 1), so a
-    * reader holding a plan over the OLD generation across one
-    * concurrent compaction still executes it; only back-to-back
-    * compactions outrunning the window can invalidate a live plan.
-    * On a multi-writer cluster this lock would be a
-    * transaction-log protocol instead (single-JVM serving façade
-    * contract). */
+    * critical section spans both steps. A batch lands as several
+    * parquet files, renamed into place one by one, so a reader lists
+    * the log under this lock too (see [[snapshot]]) and sees an
+    * in-process batch whole or not at all. [[compact]] keeps the
+    * previous generation on disk (its retention window, default 1),
+    * so a snapshot being built from the OLD generation across one
+    * concurrent compaction still reads it. On a multi-writer cluster
+    * this lock would be a transaction-log protocol instead
+    * (single-JVM serving façade contract). */
   private val writeLock = new Object
 
   private def append(batch: DataFrame): Unit =
@@ -202,12 +227,33 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
         lit(true).as("deleted")))
   }
 
-  /** Latest-version view minus tombstones. */
-  def current(): DataFrame =
-    Crud.currentView(log(), "id", "version", "deleted")
+  /** The current view of one log state — latest version per id, minus
+    * tombstones — materialized once, on local disk. */
+  private final class Snapshot(val state: LogState) {
+    val view: DataFrame = Crud.currentView(read(state), "id", "version", "deleted")
       .select(col("id"), col("vector"), col("metadata"))
+      .localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
+    lazy val count: Long = view.count()
+  }
 
-  def documentCount(): Long = current().count()
+  private val buildLock = new Object
+  private var latest: Snapshot = null // guarded by buildLock
+
+  /** The snapshot of the log as it is now: the log is listed under
+    * [[writeLock]] and, if its state changed, one new snapshot is
+    * built; concurrent readers of that state wait for the one build. */
+  private def snapshot(): Snapshot = {
+    val state = writeLock.synchronized(logState())
+    buildLock.synchronized {
+      if (latest == null || latest.state != state) latest = new Snapshot(state)
+      latest
+    }
+  }
+
+  /** Latest-version view minus tombstones: the current [[snapshot]]. */
+  def current(): DataFrame = snapshot().view
+
+  def documentCount(): Long = snapshot().count
 
   /** Driver-sized BY CONTRACT: mirrors the reference API
     * (collection.go:326 returns `[]uint64` in memory). At scale use the
@@ -218,12 +264,16 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
 
   /** The reference's single search endpoint (collection.go:569):
     * dispatches on (k, radius, precision) exactly like the Go code. */
-  def search(args: SearchArgs): DataFrame = {
-    val base = current()
-    val filtered = args.filter match {
-      case Some(f) => base.filter(FilterCompiler.compileJson(f, col("metadata")))
-      case None => base
+  def search(args: SearchArgs): DataFrame = search(snapshot(), args)
+
+  private def filteredView(snap: Snapshot, args: SearchArgs): DataFrame =
+    args.filter match {
+      case Some(f) => snap.view.filter(FilterCompiler.compileJson(f, col("metadata")))
+      case None => snap.view
     }
+
+  private def search(snap: Snapshot, args: SearchArgs): DataFrame = {
+    val filtered = filteredView(snap, args)
     (args.vector, args.k, args.radius) match {
       case (None, _, _) | (_, 0, 0.0) =>
         // exhaustive listing with pagination, stable id order; no
@@ -273,13 +323,11 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
     * LSH bucket, and the fraction is that bucket's share of the
     * corpus. */
   def searchWithStats(args: SearchArgs): SearchResults = {
-    val results = search(args)
+    // results and percentage from one snapshot
+    val snap = snapshot()
+    val results = search(snap, args)
     def probedPct(q: Seq[Double], multiprobe: Boolean): Double = {
-      val base = current()
-      val filtered = args.filter match {
-        case Some(f) => base.filter(FilterCompiler.compileJson(f, col("metadata")))
-        case None => base
-      }
+      val filtered = filteredView(snap, args)
       val qdf = spark.createDataFrame(Seq(Tuple1(q))).toDF("qvec")
       if (options.lshTables > 1)
         AnnLsh.percentSearchedForest(filtered, "vector", qdf,
@@ -294,7 +342,7 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
         probedPct(q, multiprobe = false)
       case (Some(q), _, r) if r > 0.0 && args.precision != "exact" =>
         probedPct(q, multiprobe = true) // radius probes Hamming-1 too
-      case _ => if (documentCount() == 0L) 0.0 else 100.0
+      case _ => if (snap.count == 0L) 0.0 else 100.0
     }
     SearchResults(results, pct)
   }
@@ -431,6 +479,19 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
 
 object Collection {
 
+  /** The fixed five-column schema of every log file. */
+  private val LogSchema = StructType(Seq(
+    StructField("id", LongType), StructField("vector", ArrayType(DoubleType)),
+    StructField("metadata", StringType), StructField("version", LongType),
+    StructField("deleted", BooleanType)))
+
+  /** See [[Collection#logState]]: `files` holds (name, length,
+    * modification time), name-sorted. */
+  private final case class LogState(dir: String, files: Seq[(String, Long, Long)]) {
+    def paths: Seq[org.apache.hadoop.fs.Path] =
+      files.map { case (n, _, _) => new org.apache.hadoop.fs.Path(dir, n) }
+  }
+
   private def metaPath(path: String) = s"$path.options.json"
 
   /** NewCollection (collection.go:224): persists the options next to
@@ -559,8 +620,12 @@ object Collection {
     * whole Spark json job for a one-object file). Older collections
     * predate lshTables/lshProbes; absent -> single-table,
     * single-probe (the parser's defaults). */
-  def open(spark: SparkSession, path: String): Collection = {
-    val mp = new org.apache.hadoop.fs.Path(metaPath(path))
+  def open(spark: SparkSession, path: String): Collection =
+    new Collection(spark, readOptions(spark, new org.apache.hadoop.fs.Path(metaPath(path))), path)
+
+  /** Driver-side read of an `.options.json` sidecar on its own
+    * filesystem, through [[parseOptionsJson]]. */
+  private def readOptions(spark: SparkSession, mp: org.apache.hadoop.fs.Path): CollectionOptions = {
     val hfs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = hfs.open(mp)
     val json = try {
@@ -570,7 +635,7 @@ object Collection {
       while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
       new String(bos.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
     } finally in.close()
-    new Collection(spark, parseOptionsJson(json), path)
+    parseOptionsJson(json)
   }
 
   private def q(s: String): String =
@@ -580,7 +645,8 @@ object Collection {
   // directory, rest.go:67 handleCollections / :176 DELETE) ----
 
   /** All collections under `rootDir`, by their persisted options
-    * files. Returns (name, path) pairs, name-sorted. */
+    * files (read like [[open]] reads them, no Spark job). Returns
+    * (name, path) pairs, name-sorted. */
   def list(spark: SparkSession, rootDir: String): Seq[(String, String)] = {
     val root = new org.apache.hadoop.fs.Path(rootDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -589,10 +655,7 @@ object Collection {
       .map(_.getPath)
       .filter(_.getName.endsWith(".options.json"))
       .map { p =>
-        val dataPath = p.toString.stripSuffix(".options.json")
-        val name = spark.read.option("multiLine", "true").json(p.toString)
-          .collect().head.getAs[String]("name")
-        (name, dataPath)
+        (readOptions(spark, p).name, p.toString.stripSuffix(".options.json"))
       }
       .sortBy(_._1)
   }

@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.core.{Collection, CollectionOptions, SearchArgs}
 import graft.operators.Knn
@@ -22,6 +24,33 @@ class CollectionSpec extends SparkSpec {
     (2L, Seq(1.0, 0.0, 0.0, 0.0), """{"tag": "b"}"""),
     (3L, Seq(0.0, 5.0, 0.0, 0.0), """{"tag": "a"}""")
   ).toDF("id", "vector", "metadata")
+
+  /** The stage names of each job `body` runs on this thread. A fence
+    * job run after `body` bounds the listener events to wait for. */
+  private def jobsOf(body: => Unit): Seq[Seq[String]] = {
+    val sc = spark.sparkContext
+    val group = "jobsOf-" + java.util.UUID.randomUUID()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add((Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull,
+          e.stageInfos.map(_.name)))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobsOf")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.asScala.exists(_._1 == group + "-fence") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.collect { case (g, stages) if g == group => stages }.toSeq
+  }
+
+  private def builds(jobs: Seq[Seq[String]]): Int =
+    jobs.count(_.exists(_.startsWith("localCheckpoint")))
 
   test("add / count / ids / remove round-trip (reference CRUD surface)") {
     val c = newCollection()
@@ -275,6 +304,177 @@ class CollectionSpec extends SparkSpec {
       "reader plan over the pre-compact generation must survive one compact")
     // new reads resolve to the compacted generation and agree
     assert(c.getAllIds() == Seq(1L, 3L))
+  }
+
+  test("snapshot: reads with no write between them build the view once") {
+    val c = newCollection()
+    c.addDocuments(docs3)
+    val first = jobsOf(assert(c.getAllIds() == Seq(1L, 2L, 3L)))
+    val second = jobsOf(assert(c.getAllIds() == Seq(1L, 2L, 3L)))
+    assert(builds(first) >= 1, s"first read built no view: $first")
+    assert(builds(second) == 0, s"second read rebuilt the view: $second")
+    assert(second.size < first.size)
+    // the row count is memoized on the snapshot
+    jobsOf(assert(c.documentCount() == 3))
+    assert(jobsOf(assert(c.documentCount() == 3)).isEmpty)
+    assert(jobsOf(assert(c.stats()._1 == 3)).isEmpty)
+    // an exact search runs its own jobs only: no build, no count
+    val q = SearchArgs(vector = Some(Seq(0.0, 0.0, 0.0, 0.0)), k = 2, precision = "exact")
+    val exact = jobsOf(assert(c.searchWithStats(q).percentSearched == 100.0))
+    assert(exact.isEmpty, s"percentSearched ran jobs: $exact")
+  }
+
+  test("snapshot: every kind of write is visible to the next read") {
+    val dir = Files.createTempDirectory("graft-coll-inval").toFile
+    dir.delete()
+    val path = dir.getAbsolutePath
+    val c = Collection.create(spark,
+      CollectionOptions("inval", dimensionCount = 4, distanceMethod = Knn.Euclidean), path)
+    assert(c.documentCount() == 0 && c.getAllIds().isEmpty)
+    c.addDocuments(docs3)
+    assert(c.documentCount() == 3 && c.getAllIds() == Seq(1L, 2L, 3L))
+    c.removeDocuments(Seq(2L))
+    assert(c.documentCount() == 2 && c.getAllIds() == Seq(1L, 3L))
+    c.updateMetadata(3L, """{"tag": "m"}""")
+    assert(c.getDocument(3L).map(_._2).contains("""{"tag": "m"}"""))
+    c.compact()
+    assert(c.getAllIds() == Seq(1L, 3L))
+    c.addDocuments(Seq((4L, Seq(1.0, 1.0, 1.0, 1.0), "{}")).toDF("id", "vector", "metadata"))
+    assert(c.getAllIds() == Seq(1L, 3L, 4L))
+    // a second instance on the same path writes; the first one sees it
+    Collection.open(spark, path)
+      .addDocuments(Seq((5L, Seq(2.0, 2.0, 2.0, 2.0), "{}")).toDF("id", "vector", "metadata"))
+    assert(c.documentCount() == 4 && c.getAllIds() == Seq(1L, 3L, 4L, 5L))
+    val hits = c.search(SearchArgs(vector = Some(Seq(2.0, 2.0, 2.0, 2.0)), k = 1,
+      precision = "exact")).select("id").as[Long].collect().toSeq
+    assert(hits == Seq(5L))
+  }
+
+  test("snapshot: a log file rewritten under the same name is re-read") {
+    val tmp = Files.createTempDirectory("graft-coll-files").toFile
+    val path = tmp.getAbsolutePath + "/coll"
+    val c = Collection.create(spark,
+      CollectionOptions("files", dimensionCount = 4, distanceMethod = Knn.Euclidean), path)
+    // the bytes of a one-row log file with the given metadata
+    def logFile(meta: String): Array[Byte] = {
+      val out = new java.io.File(tmp, s"src-${meta.hashCode}")
+      Seq((1L, Seq(0.0, 0.0, 0.0, 0.0), meta, 0L, false))
+        .toDF("id", "vector", "metadata", "version", "deleted")
+        .coalesce(1).write.parquet(out.getPath)
+      Files.readAllBytes(out.listFiles().filter(_.getName.endsWith(".parquet")).head.toPath)
+    }
+    val a = logFile("""{"tag": "a"}""")
+    val b = logFile("""{"tag": "b"}""")
+    val longer = logFile("""{"tag": "ccc"}""")
+    assert(a.length == b.length && a.length != longer.length)
+    new java.io.File(path).mkdirs()
+    val f = new java.io.File(path, "part-00000-inplace.parquet")
+    def put(bytes: Array[Byte], mtime: Long): Unit = {
+      Files.write(f.toPath, bytes)
+      assert(f.setLastModified(mtime))
+    }
+    def meta = c.getDocument(1L).map(_._2)
+    val t = 1500000000000L
+    put(a, t)
+    assert(meta.contains("""{"tag": "a"}"""))
+    put(b, t + 60000) // same length, new modification time
+    assert(meta.contains("""{"tag": "b"}"""))
+    put(longer, t + 60000) // new length, same modification time
+    assert(meta.contains("""{"tag": "ccc"}"""))
+  }
+
+  test("snapshot: superseded snapshots are reclaimed without unpersist") {
+    val c = newCollection()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    (0 until 20).foreach { i =>
+      c.addDocuments(Seq((i.toLong, Seq(i.toDouble, 0.0, 0.0, 0.0), "{}"))
+        .toDF("id", "vector", "metadata"))
+      assert(c.documentCount() == i + 1)
+    }
+    def held = sc.getPersistentRDDs.keySet.diff(before).size
+    assert(held > 0)
+    val deadline = System.nanoTime() + 60000000000L
+    while (held > 2 && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    assert(held <= 2, s"$held snapshots still persisted after 20 writes")
+    assert(c.getAllIds() == (0L until 20L))
+  }
+
+  test("concurrent writers and readers: every read sees whole batches") {
+    val c = newCollection()
+    val initial = (0L until 20L).toSet
+    def batch(w: Int, b: Int): Seq[Long] = (0 until 10).map(i => 1000L + 100 * w + 10 * b + i)
+    // four partitions, so four files per batch; partition p finishes
+    // 40*p ms late, so they do not land at one instant
+    def frame(ids: Seq[Long]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(
+          ids.map(i => (i, Seq(i.toDouble, 1.0, 0.0, 0.0), "{}")), 4)
+        .mapPartitionsWithIndex { (p, rows) => Thread.sleep(40L * p); rows })
+        .toDF("id", "vector", "metadata")
+    c.addDocuments(frame(initial.toSeq))
+    val batches = for (w <- 0 until 2; b <- 0 until 8) yield batch(w, b).toSet
+    val problems = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def check(what: String, ids: Set[Long]): Unit = {
+      val rest = ids -- initial
+      val whole = batches.filter(_.subsetOf(rest))
+      if (!initial.subsetOf(ids) || whole.flatten.toSet != rest)
+        problems.add(s"$what saw ${ids.size} ids, not the initial ones plus whole batches")
+    }
+    @volatile var writing = true
+    val writers = (0 until 2).map { w =>
+      new Thread(() => (0 until 8).foreach(b => c.addDocuments(frame(batch(w, b)))))
+    }
+    val readers = (0 until 4).map { r =>
+      new Thread(() => {
+        var rounds = 0
+        try while (writing || rounds == 0) {
+          val n = c.documentCount()
+          if ((n - initial.size) % 10 != 0) problems.add(s"documentCount $n")
+          check("getAllIds", c.getAllIds().toSet)
+          val view = c.current()
+          val ids = view.select("id").as[Long].collect().toSet
+          check("current", ids)
+          if (view.count() != ids.size) problems.add(s"count != ids of one snapshot")
+          check("search", c.search(SearchArgs(vector = Some(Seq(0.0, 0.0, 0.0, 0.0)),
+            k = 1000, precision = "exact")).select("id").as[Long].collect().toSet)
+          rounds += 1
+        } catch { case e: Exception => problems.add(s"reader $r failed: $e") }
+      })
+    }
+    // the v2 committer moves each task's file into place as the task
+    // commits, so a batch's files land over the whole write job
+    withSQLConf("mapreduce.fileoutputcommitter.algorithm.version" -> "2") {
+      (writers ++ readers).foreach(_.start())
+      writers.foreach(_.join())
+      writing = false
+      readers.foreach(_.join())
+    }
+    assert(problems.isEmpty, problems.asScala.take(5).mkString("; "))
+    val all = initial ++ batches.flatten
+    assert(c.getAllIds().toSet == all && c.documentCount() == all.size)
+  }
+
+  test("nextVersion falls back to an aggregate, reported on stderr, without footer stats") {
+    val dir = Files.createTempDirectory("graft-coll-nostats").toFile
+    dir.delete()
+    val path = dir.getAbsolutePath
+    val c = Collection.create(spark,
+      CollectionOptions("nostats", dimensionCount = 4, distanceMethod = Knn.Euclidean), path)
+    withSQLConf("parquet.column.statistics.enabled" -> "false") {
+      Seq((1L, Seq(0.0, 0.0, 0.0, 0.0), """{"v": 1}""", 5L, false))
+        .toDF("id", "vector", "metadata", "version", "deleted").write.parquet(path)
+    }
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try c.updateMetadata(1L, """{"v": 2}""") finally System.setErr(stderr)
+    // the update must be minted above version 5 to win
+    assert(c.getDocument(1L).map(_._2).contains("""{"v": 2}"""))
+    val report = err.toString("UTF-8")
+    assert(report.contains(path) && report.contains("IllegalStateException"), report)
   }
 
   test("lossy quantization stores dequantized grid values (ref quantization.go)") {
