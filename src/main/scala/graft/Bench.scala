@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.Run
 object Bench {
 
   /** Parse a previous BENCH_r{N}.json artifact into its per-query
@@ -17,7 +17,7 @@ object Bench {
     val meta = Set("value", "sf", "total", "round", "geomean",
       "n", "rc", "cpus", "lines", "ext_cores",
       "io_cores", "ext_max", "io_max", "dq_depth", "dq_max",
-      "noisy_lines", "geomean_vs_local", "errors_n", "shifted_n")
+      "noisy_lines", "geomean_vs_local", "errors_n", "shifted_n", "warnings_n")
     // A pair whose match runs to the very end of the text was cut
     // mid-token by the driver's tail window (e.g. 1.25 cut to "1.2"
     // would parse as 1.2 and fabricate a vs_prev shift — ADVICE r14);
@@ -122,10 +122,6 @@ object Bench {
                                        cpus: Int): Boolean =
     "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(raw).exists(_.group(1) == sfDir) &&
       recordedCpus(raw).contains(cpus)
-
-  /** Reports a failure the bench survives, so it never passes silently. */
-  private def warn(what: String, e: Throwable): Unit =
-    System.err.println(s"[bench] $what failed: ${e.getClass.getName}: ${e.getMessage}")
 
   /** Busy (non-idle, non-iowait) jiffies from the aggregate `cpu `
     * line of /proc/stat: user + nice + system + irq + softirq +
@@ -359,20 +355,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Execute the query's OWN physical plan (toRdd), not count() on
-    // top of it: count() lets the optimizer drop every projection, so
-    // map-heavy queries (regex scrubbing, hashing) would clock as a
-    // bare parquet row-count.
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-            dir: String): Unit =
-      fn(spark, dir).queryExecution.toRdd.count()
+    val cpus = Run.cpus
+    val spark = Run.session()
+    def run(fn: Run.Builder, dir: String): Unit = Run.execute(fn(spark, dir))
+    // Failures the bench survives never pass silently: each prints to
+    // stderr and reaches the vs_prev line as "<stage> <query>: <class>".
+    val warnings = collection.mutable.ArrayBuffer[String]()
+    def warn(what: String, e: Throwable): Unit = {
+      warnings += s"$what: ${e.getClass.getSimpleName}"
+      System.err.println(s"[bench] $what failed: ${e.getClass.getName}: ${e.getMessage}")
+    }
     // label every query's jobs (guide §1.5) so a listener / event log
     // can attribute stages; a thread-local string, free in the timing
     def labeled(name: String)(body: => Unit): Unit = {
@@ -402,15 +394,10 @@ object Bench {
     // just the named lines — for adjudicating a single shifted query
     // against history without a 10-minute full pass. A filtered run
     // NEVER persists (its partial map would erase the full history).
+    // A typo'd name fails loud: an adjudication run that silently
+    // times NOTHING reads as a 0-second pass, not as the mistake it is.
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // fail loud on a typo'd name: an adjudication run that silently
-    // times NOTHING reads as a 0-second pass, not as the mistake it is
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.mkString(", ")}")
-    }
+      .map(Run.select(SparkEntry.queries, _).toSet)
     val queries = SparkEntry.queries.filter { case (k, _) =>
       only.forall(_.contains(k)) }
     // caps read ONCE — shared by every pass's self-label and the
@@ -432,7 +419,7 @@ object Bench {
     // Once per JVM — a retried pass is already JIT-warm.
     queries.foreach { case (name, fn) =>
       try labeled(s"warmup: $name")(run(fn, "/root/testdata/sf0.001"))
-      catch { case e: Throwable => warn(s"warm-up of $name", e) }
+      catch { case e: Throwable => warn(s"warm-up $name", e) }
     }
     // median of 3 timed runs per query. Round 4 was an A/A control on
     // a byte-identical binary and min-of-2 still moved single queries
@@ -472,7 +459,7 @@ object Bench {
       val errors = collection.mutable.LinkedHashMap[String, String]()
       queries.foreach { case (name, fn) =>
         try labeled(s"prepass: $name")(run(fn, sfDir))
-        catch { case e: Throwable => warn(s"pre-pass of $name", e) }
+        catch { case e: Throwable => warn(s"pre-pass $name", e) }
       }
       // Host-contention self-identification (VERDICT r13 perf note):
       // the r13 artifact's uniform +50-110% drift on untouched queries
@@ -648,7 +635,7 @@ object Bench {
         if (!localHist.exists()) None else {
           val raw = new String(java.nio.file.Files.readAllBytes(
             localHist.toPath), java.nio.charset.StandardCharsets.UTF_8)
-          if (comparableHistory(raw, sfDir, cpus.toInt))
+          if (comparableHistory(raw, sfDir, cpus))
             Some(("\"source\":\"BENCH_LOCAL\"", parsePrevQueryTimes(raw)))
           else None
         }
@@ -660,7 +647,7 @@ object Bench {
             case benchRe(n) =>
               val raw = new String(java.nio.file.Files.readAllBytes(
                 f.toPath), java.nio.charset.StandardCharsets.UTF_8)
-              if (recordedCpus(raw).contains(cpus.toInt)) Some((n.toInt, raw))
+              if (recordedCpus(raw).contains(cpus)) Some((n.toInt, raw))
               else None
             case _ => None } }
         if (prevFiles.isEmpty) None else {
@@ -717,19 +704,20 @@ object Bench {
         else Some(new String(java.nio.file.Files.readAllBytes(
           localHist.toPath), java.nio.charset.StandardCharsets.UTF_8))
       if (only.isEmpty &&
-          shouldPersist(pub.contaminated, prevRaw, sfDir, Some(cpus.toInt))) {
+          shouldPersist(pub.contaminated, prevRaw, sfDir, Some(cpus))) {
         val full = s"""{"sf":"$sfDir","cpus":$cpus,"loadavg":$loadJson,$selfLabel,"errors":$errJson,"queries":$qs}\n"""
         java.nio.file.Files.write(localHist.toPath,
           full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
-    } catch { case e: Throwable => warn("history write", e) }
+    } catch { case e: Throwable => warn("history-write", e) }
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","errors":$errJson,"queries":$qs}""")
     // vs_prev on its OWN line AFTER the main JSON (VERDICT r12 #1):
     // the driver's artifact keeps only the output's tail, so anything
     // that must survive capture has to come after the queries map —
     // r12 computed the era comparison but embedded it before the map,
     // and the tail window truncated it away.
-    println(s"""{"metric":"vs_prev","value":$vsPrev,"loadavg":$loadJson,$selfLabel}""")
+    println(s"""{"metric":"vs_prev","value":$vsPrev,"loadavg":$loadJson,$selfLabel,""" +
+      s""""warnings_n":${warnings.size},"warnings":${warnings.take(10).map(jstr).mkString("[", ",", "]")}}""")
     // the COMPACT line prints LAST (VERDICT r19 #1): the only line
     // guaranteed to sit whole inside the driver's 2000-char tail, so
     // the driver's per-query parse and the c8/c32 scaling comparison

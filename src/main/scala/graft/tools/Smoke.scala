@@ -1,15 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Mirrors the driver's t1 smoke: SparkEntry.entry rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Run.session()
     val n = graft.SparkEntry.entry(spark).count()
     println(s"[smoke] entry rows=$n")
     assert(n > 0, "entry must return rows")

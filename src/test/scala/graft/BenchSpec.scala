@@ -180,6 +180,14 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parsePrevQueryTimes(artifact) == Map("q1_agg" -> 0.5))
   }
 
+  test("the vs_prev warnings fields never parse as query times") {
+    // the tail window can start inside the vs_prev line, past its
+    // "vs_prev" token, so the cut that drops its ratios never fires
+    val artifact =
+      """{"n": 21, "rc": 0, "tail": "ted\":false,\"warnings_n\":2,\"warnings\":[\"warm-up q1_agg: IOException\",\"history-write: AccessDeniedException\"]}\n{\"metric\":\"total\",\"value\":1.500,\"unit\":\"sec\",\"sf\":\"/data/sf0.1\",\"compact\":true,\"lines\":1,\"geomean_vs_local\":null,\"errors_n\":0,\"queries\":{\"q1_agg\":1.500}}\n"}"""
+    assert(Bench.parsePrevQueryTimes(artifact) == Map("q1_agg" -> 1.5))
+  }
+
   test("iowait jiffies come from field 5 of the aggregate cpu line") {
     //           user nice sys idle iowait irq softirq steal
     assert(Bench.iowaitJiffies("cpu  100 2 30 5000 70 4 5 6 0 0") == 70L)
