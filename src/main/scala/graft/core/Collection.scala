@@ -4,18 +4,19 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
-import graft.functions.Quantization
+import graft.functions.{LshForestHit, Quantization}
 import graft.operators.{AnnLsh, Crud, Knn}
 import graft.query.FilterCompiler
 
 /** Options mirroring the reference's CollectionOptions
-  * (collection.go:30-52). `lshTables` > 1 switches precision="medium"
-  * searches to the LSH forest (the analogue of the reference's
-  * `numTrees` forest, lshtree.go:88): L independent `lshPlanes`-plane
-  * tables, candidates from the union of the query's L buckets —
-  * recall compounds with L while each table's probe stays narrow.
-  * `lshProbes` > 1 adds query-directed multiprobe (Lv et al. 2007):
-  * each table also probes its lowest-|margin| bit flips — the
+  * (collection.go:30-52). precision="medium" searches probe an LSH
+  * forest (the analogue of the reference's `numTrees` forest,
+  * lshtree.go:88): `lshTables` independent `lshPlanes`-plane tables,
+  * candidates from the union of the query's buckets — recall
+  * compounds with the table count while each table's probe stays
+  * narrow. The default single table is the one-table forest.
+  * `lshProbes` > 1 adds query-directed multiprobe (Lv et al. 2007) to
+  * k-NN: each table also probes its lowest-|margin| bit flips — the
   * analogue of the reference's boundary backtracking
   * (lshtree.go:283-336). Same recall/mass frontier with ~probes-x
   * fewer tables, so a persisted forest index shrinks accordingly. */
@@ -196,14 +197,21 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
 
   /** AddDocument upsert (collection.go:427): vectors are stored
     * quantized per options (lossy below 32 bits, like the
-    * reference). */
+    * reference). A null vector, or one whose length is not
+    * `dimensionCount`, fails the append and stores nothing (the
+    * reference panics, collection.go:431-433); the check runs inside
+    * the append's own projection, so it adds no job. */
   def addDocuments(docs: DataFrame): Unit = writeLock.synchronized {
     val v = nextVersion()
+    val dim = options.dimensionCount
+    val checked = when(col("vector").isNull || size(col("vector")) =!= dim,
+      raise_error(concat(lit("record "), col("id").cast("string"),
+        lit(s": vector must have $dim dimensions"))))
+      .otherwise(col("vector"))
     val vec = options.quantization match {
-      case 32 => col("vector").cast("array<float>").cast("array<double>")
-      case 64 => col("vector").cast("array<double>")
-      case bits => Quantization.dequantize(
-        Quantization.quantize(col("vector"), bits), bits)
+      case 32 => checked.cast("array<float>").cast("array<double>")
+      case 64 => checked.cast("array<double>")
+      case bits => Quantization.dequantize(Quantization.quantize(checked, bits), bits)
     }
     append(docs.select(col("id").cast("long"), vec.as("vector"),
       col("metadata").cast("string"), lit(v).as("version"), lit(false).as("deleted")))
@@ -263,8 +271,12 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
     current().select(col("id")).orderBy(col("id")).collect().map(_.getLong(0)).toSeq
 
   /** The reference's single search endpoint (collection.go:569):
-    * dispatches on (k, radius, precision) exactly like the Go code. */
-  def search(args: SearchArgs): DataFrame = search(snapshot(), args)
+    * dispatches on (k, radius, precision) exactly like the Go code.
+    * A k-NN or radius search is exact over the filtered rows; at
+    * precision="medium" it is the same search over the rows the LSH
+    * probe keeps ([[probe]]). */
+  def search(args: SearchArgs): DataFrame =
+    search(filteredView(snapshot(), args), args, probe(args))
 
   private def filteredView(snap: Snapshot, args: SearchArgs): DataFrame =
     args.filter match {
@@ -272,8 +284,26 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
       case None => snap.view
     }
 
-  private def search(snap: Snapshot, args: SearchArgs): DataFrame = {
-    val filtered = filteredView(snap, args)
+  /** The probe of a precision="medium" k-NN or radius search: the
+    * rows in any of the query's forest buckets, with the keys computed
+    * once, locally, from the request vector. k-NN probes `lshProbes` keys per table; a
+    * one-table radius search probes the bucket and its Hamming-1
+    * neighbors, like the reference's index.search with a radius
+    * (collection.go:690). None for exact searches and listings. */
+  private def probe(args: SearchArgs): Option[Column] = args.vector match {
+    case Some(q) if args.precision != "exact" && (args.k != 0 || args.radius != 0.0) =>
+      import options._
+      val (keys, perTable) =
+        if (args.radius != 0.0 && lshTables == 1)
+          (AnnLsh.hammingProbeKeysLocal(q.toArray, lshPlanes, dimensionCount), lshPlanes + 1)
+        else
+          (AnnLsh.forestProbeKeysLocal(q.toArray, lshTables, lshPlanes, dimensionCount,
+            lshProbes), lshProbes)
+      Some(LshForestHit.hit(col("vector"), keys, lshPlanes, dimensionCount, perTable))
+    case _ => None
+  }
+
+  private def search(filtered: DataFrame, args: SearchArgs, hit: Option[Column]): DataFrame =
     (args.vector, args.k, args.radius) match {
       case (None, _, _) | (_, 0, 0.0) =>
         // exhaustive listing with pagination, stable id order; no
@@ -290,58 +320,27 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
           filtered.join(broadcast(head), Seq("id"), "left_anti")
             .orderBy(col("id").asc)
         } else filtered.orderBy(col("id").asc)
-      case (Some(q), k, 0.0) =>
+      case (Some(q), k, r) =>
         val qdf = spark.createDataFrame(Seq(Tuple1(q))).toDF("qvec")
-        if (args.precision == "exact")
-          Knn.knn(filtered, "vector", qdf, k, options.distanceMethod, "id")
-        else if (options.lshTables > 1)
-          AnnLsh.knnForest(filtered, "vector", qdf, k, options.lshTables,
-            options.lshPlanes, options.dimensionCount, options.distanceMethod, "id",
-            options.lshProbes)
-        else
-          AnnLsh.knn(filtered, "vector", qdf, k, options.lshPlanes,
-            options.dimensionCount, options.distanceMethod, "id")
-      case (Some(q), _, r) =>
-        val qdf = spark.createDataFrame(Seq(Tuple1(q))).toDF("qvec")
-        if (args.precision == "exact")
-          Knn.radius(filtered, "vector", qdf, r, options.distanceMethod)
-        else if (options.lshTables > 1)
-          AnnLsh.radiusForest(filtered, "vector", qdf, r, options.lshTables,
-            options.lshPlanes, options.dimensionCount, options.distanceMethod,
-            options.lshProbes)
-        else
-          // medium: radius through the LSH probe, like the reference's
-          // index.search with a radius (collection.go:690)
-          AnnLsh.radius(filtered, "vector", qdf, r, options.lshPlanes,
-            options.dimensionCount, options.distanceMethod)
+        val rows = hit.fold(filtered)(filtered.filter)
+        if (r == 0.0) Knn.knn(rows, "vector", qdf, k, options.distanceMethod, "id")
+        else Knn.radius(rows, "vector", qdf, r, options.distanceMethod)
     }
-  }
 
   /** As [[search]], also reporting PercentSearched
     * (collection.go:569-712): exhaustive modes touch the whole filtered
-    * corpus (100%); precision="medium" k-NN touches only the query's
-    * LSH bucket, and the fraction is that bucket's share of the
-    * corpus. */
+    * corpus (100%); a precision="medium" k-NN or radius search touches
+    * only the rows its [[probe]] keeps, and the fraction is their share
+    * of the filtered corpus. */
   def searchWithStats(args: SearchArgs): SearchResults = {
-    // results and percentage from one snapshot
+    // results and percentage from one snapshot and one probe
     val snap = snapshot()
-    val results = search(snap, args)
-    def probedPct(q: Seq[Double], multiprobe: Boolean): Double = {
-      val filtered = filteredView(snap, args)
-      val qdf = spark.createDataFrame(Seq(Tuple1(q))).toDF("qvec")
-      if (options.lshTables > 1)
-        AnnLsh.percentSearchedForest(filtered, "vector", qdf,
-          options.lshTables, options.lshPlanes, options.dimensionCount,
-          options.lshProbes)
-      else
-        AnnLsh.percentSearched(filtered, "vector", qdf,
-          options.lshPlanes, options.dimensionCount, multiprobe)
-    }
-    val pct = (args.vector, args.k, args.radius) match {
-      case (Some(q), k, 0.0) if k > 0 && args.precision != "exact" =>
-        probedPct(q, multiprobe = false)
-      case (Some(q), _, r) if r > 0.0 && args.precision != "exact" =>
-        probedPct(q, multiprobe = true) // radius probes Hamming-1 too
+    val filtered = filteredView(snap, args)
+    val hit = probe(args)
+    val results = search(filtered, args, hit)
+    val pct = hit match {
+      case Some(h) if args.radius > 0.0 || (args.radius == 0.0 && args.k > 0) =>
+        AnnLsh.percentProbed(filtered, h)
       case _ => if (snap.count == 0L) 0.0 else 100.0
     }
     SearchResults(results, pct)

@@ -4,20 +4,23 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.Vectors
+import graft.functions.{LshForestHit, MultiLshBuckets, TopKAgg}
 
-/** Approximate nearest neighbors via random-hyperplane LSH.
+/** Approximate nearest neighbors via random-hyperplane LSH forests.
   *
   * The reference's ANN index (lshtree.go) is an adaptive in-memory
   * forest of hyperplane splits — a pointer structure that cannot scan.
-  * The Spark-native re-expression: every vector gets a *bucket id*
-  * column (one sign bit per hyperplane), the table is grouped /
-  * partitioned by bucket, and a query probes only its own bucket
-  * (plus optional multiprobe neighbors). At 100 TB the bucket id is a
-  * parquet partition column, so a probe is a partition-pruned scan
-  * that never touches the rest of the corpus.
+  * The Spark-native re-expression: L independent plane sets
+  * ("tables"), each hashing every row to one bucket (one sign bit per
+  * hyperplane), keyed `(table << bits) | bucket`
+  * ([[graft.functions.MultiLshBuckets]]). A query probes its own
+  * bucket in every table, plus optional multiprobe neighbors, and an
+  * approximate search is the exact search ([[Knn]]) over the rows the
+  * probe keeps ([[graft.functions.LshForestHit]]). A single-table
+  * index is the one-table forest. At 100 TB the keys are parquet
+  * partition columns ([[writeForestIndex]]), so a probe is a
+  * partition-pruned scan that never touches the rest of the corpus.
   *
   * Hyperplanes are *derived from md5*, not an RNG: plane h, dim d is
   * `(hash64(h + "_" + d) mod 1000) / 1000 - 0.5`. Deterministic across
@@ -39,75 +42,21 @@ object AnnLsh {
     Array.tabulate(numPlanes, dim)((h, d) =>
       (hash64Local(s"${h}_${d}") % 1000) / 1000.0 - 0.5)
 
-  /** Bucket id column: bit h set when dot(vec, plane_h) > 0. */
-  def bucketCol(vecCol: Column, numPlanes: Int, dim: Int): Column = {
-    val ps = planes(numPlanes, dim)
-    (0 until numPlanes).map { h =>
-      when(Vectors.dot(vecCol, typedlit(ps(h).toSeq)) > 0.0,
-        lit(1L << h)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
+  /** Bucket id column: bit h set when dot(vec, plane_h) > 0 — the key
+    * of the one-table forest, a blocking key for bucketed joins. */
+  def bucketCol(vecCol: Column, numPlanes: Int, dim: Int): Column =
+    MultiLshBuckets.keys(vecCol, 1, numPlanes, dim).getItem(0)
 
-  /** Assign every row its LSH bucket. At scale, persist this with
-    * `.write.partitionBy("bucket")` so probes prune partitions. */
-  def index(df: DataFrame, vecCol: String, numPlanes: Int, dim: Int): DataFrame =
-    df.withColumn("bucket", bucketCol(col(vecCol), numPlanes, dim))
-
-  /** Approximate top-k: probe only the query's bucket, exact distance
-    * inside it. `query` is a 1-row frame with column qvec. */
-  def knn(df: DataFrame, vecCol: String, query: DataFrame, k: Int,
-          numPlanes: Int, dim: Int, metric: Knn.Metric, idCol: String): DataFrame = {
-    val indexed = index(df, vecCol, numPlanes, dim)
-    val q = query.withColumn("qbucket", bucketCol(col("qvec"), numPlanes, dim))
-    indexed.join(broadcast(q), col("bucket") === col("qbucket"))
-      .withColumn("dist", Knn.distCol(metric, col(vecCol), col("qvec")))
-      .orderBy(col("dist").asc, col(idCol).asc)
-      .limit(k)
-      .drop("qvec", "qbucket")
-  }
-
-  /** Persist an LSH-indexed table partitioned by bucket — the 100 TB
-    * layout: each bucket is a parquet partition directory, so a probe
-    * is a partition-pruned scan that reads bucketCount-th of the
-    * corpus (check PartitionFilters in the probe plan). */
-  def writeIndexed(df: DataFrame, vecCol: String, numPlanes: Int, dim: Int,
-                   path: String): Unit = {
-    index(df, vecCol, numPlanes, dim)
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    Dedup.writeIndexConfig(df.sparkSession, path,
-      Seq("num_planes" -> numPlanes.toLong, "dim" -> dim.toLong))
-  }
-
-  /** Approximate top-k against a [[writeIndexed]] table: the bucket
-    * predicate prunes partitions at planning time. */
-  def knnIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
-                 vecCol: String, query: DataFrame, k: Int, numPlanes: Int,
-                 dim: Int, metric: Knn.Metric, idCol: String): DataFrame = {
-    Dedup.validateIndexConfig(spark, path,
-      Seq("num_planes" -> numPlanes.toLong, "dim" -> dim.toLong))
-    val q = query.withColumn("qbucket", bucketCol(col("qvec"), numPlanes, dim))
-    val Array(qrow) = q.collect()
-    val qbucket = qrow.getLong(qrow.fieldIndex("qbucket"))
-    spark.read.parquet(path)
-      .filter(col("bucket") === qbucket)
-      .crossJoin(broadcast(query))
-      .withColumn("dist", Knn.distCol(metric, col(vecCol), col("qvec")))
-      .orderBy(col("dist").asc, col(idCol).asc)
-      .limit(k)
-      .drop("qvec")
-  }
-
-  /** Batch approximate top-k — the many-query twin of [[knn]], and the
-    * scale path for query fan-in: queries bucket themselves with the
-    * same hyperplanes, broadcast, and equi-join the indexed corpus on
-    * bucket, so each query only ever meets its own bucket's rows (the
+  /** Batch approximate top-k over the one-table forest, the scale path
+    * for query fan-in: queries bucket themselves with the same
+    * hyperplanes, broadcast, and equi-join the corpus on bucket, so
+    * each query only ever meets its own bucket's rows (the
     * brute-force [[Knn.knnBatch]] meets ALL rows). The per-query top-k
     * is a bounded TopKAgg — the shuffle moves O(buckets-hit x k)
     * rows, not candidates. `queries` carries (qid, qvec). */
   def knnBatch(df: DataFrame, vecCol: String, queries: DataFrame, k: Int,
                numPlanes: Int, dim: Int, metric: Knn.Metric, idCol: String): DataFrame = {
-    import graft.functions.TopKAgg
-    val indexed = index(df, vecCol, numPlanes, dim)
+    val indexed = df.withColumn("bucket", bucketCol(col(vecCol), numPlanes, dim))
     val qs = queries.select(col("qid"), col("qvec"),
       bucketCol(col("qvec"), numPlanes, dim).as("bucket"))
     val d = Knn.distCol(metric, col(vecCol), col("qvec"))
@@ -120,103 +69,26 @@ object AnnLsh {
         (col("_pos") + 1).as("rank"), col("_t.dist").as("dist"))
   }
 
-  /** Multiprobe approximate top-k: probe the query's bucket plus all
-    * buckets at Hamming distance 1 (one sign bit flipped) — the
-    * standard recall/latency knob for hyperplane LSH: numPlanes+1
-    * partition-pruned probes instead of one, no index change. */
-  def knnMultiprobe(df: DataFrame, vecCol: String, query: DataFrame, k: Int,
-                    numPlanes: Int, dim: Int, metric: Knn.Metric, idCol: String): DataFrame = {
-    val pow = typedlit((0 until numPlanes).map(h => 1L << h))
-    val indexed = index(df, vecCol, numPlanes, dim)
-    val probes = query
-      .withColumn("qbucket", bucketCol(col("qvec"), numPlanes, dim))
-      .select(col("qvec"), explode(concat(
-        array(col("qbucket")),
-        transform(sequence(lit(0), lit(numPlanes - 1)),
-          h => col("qbucket").bitwiseXOR(get(pow, h))))).as("probe"))
-    indexed.join(broadcast(probes), col("bucket") === col("probe"))
-      .withColumn("dist", Knn.distCol(metric, col(vecCol), col("qvec")))
-      .orderBy(col("dist").asc, col(idCol).asc)
-      .limit(k)
-      .drop("qvec", "probe")
-  }
-
-  /** Bucket-probed radius search — the reference's radius mode under
-    * precision "medium" (collection.go:690 index.search with radius):
-    * candidates come from the query's bucket plus its Hamming-1
-    * neighbors, exact distance filter within. Returns a subset of the
-    * exact radius result (bucketing can miss), touching only the
-    * probed fraction of the corpus. */
-  def radius(df: DataFrame, vecCol: String, query: DataFrame, r: Double,
-             numPlanes: Int, dim: Int, metric: Knn.Metric): DataFrame = {
-    val pow = typedlit((0 until numPlanes).map(h => 1L << h))
-    val indexed = index(df, vecCol, numPlanes, dim)
-    val probes = query
-      .withColumn("qbucket", bucketCol(col("qvec"), numPlanes, dim))
-      .select(col("qvec"), explode(concat(
-        array(col("qbucket")),
-        transform(sequence(lit(0), lit(numPlanes - 1)),
-          h => col("qbucket").bitwiseXOR(get(pow, h))))).as("probe"))
-    indexed.join(broadcast(probes), col("bucket") === col("probe"))
-      .withColumn("dist", Knn.distCol(metric, col(vecCol), col("qvec")))
-      .filter(col("dist") <= r)
-      .drop("qvec", "probe", "bucket")
-  }
-
-  /** The probe-bucket list for a query: its own bucket, plus all
-    * Hamming-distance-1 neighbors when `multiprobe`. */
-  def probeBuckets(query: DataFrame, numPlanes: Int, dim: Int,
-                   multiprobe: Boolean): Seq[Long] = {
-    val q = query.withColumn("qbucket", bucketCol(col("qvec"), numPlanes, dim))
-    val Array(qrow) = q.select(col("qbucket")).collect()
-    val qbucket = qrow.getLong(0)
-    if (multiprobe) qbucket +: (0 until numPlanes).map(h => qbucket ^ (1L << h))
-    else Seq(qbucket)
-  }
-
-  /** PercentSearched for an LSH probe — the reference's
-    * `SearchResults.PercentSearched` contract (collection.go:133,704):
-    * pointsSearched / numRecords * 100, where pointsSearched is the
-    * mass of the probed buckets. One small aggregate job (count +
-    * conditional count in a single pass); 0 on an empty corpus like
-    * the reference's NaN guard (collection.go:707). */
-  def percentSearched(df: DataFrame, vecCol: String, query: DataFrame,
-                      numPlanes: Int, dim: Int, multiprobe: Boolean = false): Double = {
-    val probes = probeBuckets(query, numPlanes, dim, multiprobe)
-    val row = index(df, vecCol, numPlanes, dim)
-      .agg(count(lit(1)).as("total"),
-        sum(when(col("bucket").isin(probes: _*), 1L).otherwise(0L)).as("probed"))
-      .head()
-    val total = row.getLong(0)
-    if (total == 0L) 0.0 else row.getLong(1).toDouble / total * 100.0
-  }
-
-  // ---- LSH forest: L independent tables ----
+  // ---- the forest: L independent tables ----
   //
-  // The single-table probe above reads 1/2^planes of the corpus but
-  // misses any neighbor that crosses one of the 4 planes — on
-  // cluster-free data that floors recall near 0.35. The reference
-  // solves this with a forest of `numTrees` adaptive trees and
-  // answers from the union of per-tree candidates (lshtree.go:88,
-  // :283-336 priority-queue descent). The scan-native analogue: L
-  // independent plane sets ("tables"), each hashing every row to a
-  // `(table << bits) | bucket` key; a query probes the union of its L
-  // buckets. Recall compounds as 1-(1-p^bits)^L while the probed mass
-  // stays ~L/2^bits, so bits trades precision and L buys recall.
+  // One table reads 1/2^bits of the corpus but misses any neighbor
+  // that crosses one of its planes — on cluster-free data that floors
+  // 4-plane recall near 0.35. The reference answers from the union of
+  // `numTrees` adaptive trees (lshtree.go:88, :283-336 priority-queue
+  // descent); here a query probes the union of its L buckets. Recall
+  // compounds as 1-(1-p^bits)^L while the probed mass stays
+  // ~L/2^bits, so bits trades precision and L buys recall.
 
   /** Assign every row its L forest keys (one codegen'd pass over the
     * plane matrix — see [[graft.functions.MultiLshBuckets]]). */
   def indexForest(df: DataFrame, vecCol: String, numTables: Int,
                   bitsPerTable: Int, dim: Int): DataFrame =
-    df.withColumn("fkeys",
-      graft.functions.MultiLshBuckets.keys(col(vecCol), numTables, bitsPerTable, dim))
+    df.withColumn("fkeys", MultiLshBuckets.keys(col(vecCol), numTables, bitsPerTable, dim))
 
-  /** The query's L forest keys (driver-side; one 1-row job — the same
-    * shape as [[probeBuckets]]). */
+  /** The query's L forest keys, collected (one 1-row job). */
   def forestKeys(query: DataFrame, numTables: Int, bitsPerTable: Int,
                  dim: Int): Seq[Long] = {
-    val Array(row) = query.select(graft.functions.MultiLshBuckets
-      .keys(col("qvec"), numTables, bitsPerTable, dim).as("k")).collect()
+    val Array(row) = query.select(MultiLshBuckets.keys(col("qvec"), numTables, bitsPerTable, dim).as("k")).collect()
     row.getSeq[Long](0)
   }
 
@@ -295,6 +167,15 @@ object AnnLsh {
     out.result()
   }
 
+  /** The radius probe of a one-table index: the query's bucket, then
+    * every bucket at Hamming distance 1 (one sign bit flipped) —
+    * `bitsPerTable + 1` keys for one table, in [[LshForestHit]]'s
+    * layout. */
+  def hammingProbeKeysLocal(qv: Array[Double], bitsPerTable: Int, dim: Int): Seq[Long] = {
+    val bucket = forestProbeKeysLocal(qv, 1, bitsPerTable, dim, 1).head
+    bucket +: (0 until bitsPerTable).map(h => bucket ^ (1L << h))
+  }
+
   /** [[forestProbeKeysLocal]] over a 1-row (qvec) frame. */
   def forestProbeKeys(query: DataFrame, numTables: Int, bitsPerTable: Int,
                       dim: Int, probes: Int): Seq[Long] = {
@@ -303,10 +184,10 @@ object AnnLsh {
       numTables, bitsPerTable, dim, probes)
   }
 
-  /** Forest approximate top-k: candidates are the union of the
-    * query's L buckets (any-table agreement), exact distance within.
-    * The probe predicate is a single early-exit expression on the
-    * scan — no join, no signature column to duplicate. `probes` > 1
+  /** Forest approximate top-k: the exact [[Knn.knn]] over the rows in
+    * any of the query's L buckets (any-table agreement). The probe
+    * predicate is a single early-exit expression on the scan — no
+    * join, no signature column to duplicate. `probes` > 1
     * adds query-directed multiprobe: each table also probes the
     * `probes-1` lowest-|margin| bit flips, buying recall at
     * ~probes/2^bits extra mass per table — the sweep-measured frontier
@@ -315,28 +196,20 @@ object AnnLsh {
                 numTables: Int, bitsPerTable: Int, dim: Int,
                 metric: Knn.Metric, idCol: String, probes: Int = 1): DataFrame = {
     val keys = forestProbeKeys(query, numTables, bitsPerTable, dim, probes)
-    df.filter(graft.functions.LshForestHit.hit(col(vecCol), keys, bitsPerTable, dim, probes))
-      .crossJoin(broadcast(query))
-      .withColumn("dist", Knn.distCol(metric, col(vecCol), col("qvec")))
-      .orderBy(col("dist").asc, col(idCol).asc)
-      .limit(k)
-      .drop("qvec")
+    Knn.knn(df.filter(LshForestHit.hit(col(vecCol), keys, bitsPerTable, dim, probes)),
+      vecCol, query, k, metric, idCol)
   }
 
-  /** Forest radius search: union-of-buckets candidates, exact
-    * distance filter within — the forest twin of [[radius]], used by
-    * Collection's precision="medium" radius mode when lshTables > 1.
-    * Returns a subset of the exact radius result (bucketing can
-    * miss), touching only the probed fraction of the corpus. */
+  /** Forest radius search: the exact [[Knn.radius]] over the rows in
+    * any of the query's L buckets. Returns a subset of the exact
+    * radius result (bucketing can miss), touching only the probed
+    * fraction of the corpus. */
   def radiusForest(df: DataFrame, vecCol: String, query: DataFrame, r: Double,
                    numTables: Int, bitsPerTable: Int, dim: Int,
                    metric: Knn.Metric, probes: Int = 1): DataFrame = {
     val keys = forestProbeKeys(query, numTables, bitsPerTable, dim, probes)
-    df.filter(graft.functions.LshForestHit.hit(col(vecCol), keys, bitsPerTable, dim, probes))
-      .crossJoin(broadcast(query))
-      .withColumn("dist", Knn.distCol(metric, col(vecCol), col("qvec")))
-      .filter(col("dist") <= r)
-      .drop("qvec")
+    Knn.radius(df.filter(LshForestHit.hit(col(vecCol), keys, bitsPerTable, dim, probes)),
+      vecCol, query, r, metric)
   }
 
   /** Persist the forest as an ID index: one (id, fkey) row per table
@@ -418,7 +291,6 @@ object AnnLsh {
   def knnForestBatch(df: DataFrame, vecCol: String, queries: DataFrame, k: Int,
                      numTables: Int, bitsPerTable: Int, dim: Int,
                      metric: Knn.Metric, idCol: String): DataFrame = {
-    import graft.functions.{MultiLshBuckets, TopKAgg}
     val corpusKeys = indexForest(df, vecCol, numTables, bitsPerTable, dim)
       .select(col(idCol), explode(col("fkeys")).as("fkey"))
     val queryKeys = queries.select(col("qid"),
@@ -438,7 +310,6 @@ object AnnLsh {
                             queries: DataFrame, k: Int, numTables: Int,
                             bitsPerTable: Int, dim: Int, metric: Knn.Metric,
                             idCol: String, probes: Int = 1): DataFrame = {
-    import graft.functions.MultiLshBuckets
     Dedup.validateIndexConfig(spark, indexPath, forestConfig(
       numTables, bitsPerTable, dim))
     val queryKeys =
@@ -605,7 +476,6 @@ object AnnLsh {
                    numTables: Int, bitsPerTable: Int, dim: Int,
                    metric: Knn.Metric, dPos: Double, dNegMin: Double,
                    dNegMax: Double, bucketCap: Option[Int] = None): DataFrame = {
-    import graft.functions.TopKAgg
     require(dPos > 0 && dPos <= dNegMin && dNegMin < dNegMax,
       s"need 0 < dPos <= dNegMin < dNegMax, got ($dPos, $dNegMin, $dNegMax)")
     val base = df.select(col(idCol), col(vecCol))
@@ -715,7 +585,6 @@ object AnnLsh {
                            metric: Knn.Metric,
                            band: Option[(Double, Double)],
                            bucketCap: Option[Int] = None): DataFrame = {
-    import graft.functions.TopKAgg
     // the band is applied as a NULL-gate INSIDE the distance
     // projection, never as a Filter node: a filter on the dist
     // attribute gets pushed below the projection and into the join
@@ -792,7 +661,6 @@ object AnnLsh {
   private def scoreCandidates(cand: DataFrame, df: DataFrame, vecCol: String,
                               queries: DataFrame, k: Int, metric: Knn.Metric,
                               idCol: String): DataFrame = {
-    import graft.functions.TopKAgg
     val scored = cand
       .join(df.select(col(idCol), col(vecCol)), Seq(idCol))
       .join(broadcast(queries), Seq("qid"))
@@ -806,25 +674,22 @@ object AnnLsh {
   }
 
   /** PercentSearched for a forest probe: union-candidate mass over
-    * corpus size, one aggregate pass. */
+    * corpus size. */
   def percentSearchedForest(df: DataFrame, vecCol: String, query: DataFrame,
                             numTables: Int, bitsPerTable: Int, dim: Int,
                             probes: Int = 1): Double = {
     val keys = forestProbeKeys(query, numTables, bitsPerTable, dim, probes)
-    val hit = graft.functions.LshForestHit.hit(col(vecCol), keys, bitsPerTable, dim, probes)
-    val row = df.agg(count(lit(1)).as("total"),
-      sum(when(hit, 1L).otherwise(0L)).as("probed")).head()
-    val total = row.getLong(0)
-    if (total == 0L) 0.0 else row.getLong(1).toDouble / total * 100.0
+    percentProbed(df, LshForestHit.hit(col(vecCol), keys, bitsPerTable, dim, probes))
   }
 
-  /** Recall@k of the approximate result vs exact brute force. */
-  def recallAtK(df: DataFrame, vecCol: String, query: DataFrame, k: Int,
-                numPlanes: Int, dim: Int, metric: Knn.Metric, idCol: String): Double = {
-    val approx = knn(df, vecCol, query, k, numPlanes, dim, metric, idCol)
-      .select(col(idCol)).collect().map(_.get(0)).toSet
-    val exact = Knn.knn(df, vecCol, query, k, metric, idCol)
-      .select(col(idCol)).collect().map(_.get(0)).toSet
-    if (exact.isEmpty) 1.0 else approx.intersect(exact).size.toDouble / exact.size
+  /** PercentSearched of a probe — the reference's
+    * `SearchResults.PercentSearched` contract (collection.go:133,704):
+    * the rows `hit` keeps / all rows * 100. One aggregate job (count
+    * and conditional count in one pass); 0 on an empty corpus like
+    * the reference's NaN guard (collection.go:707). */
+  def percentProbed(df: DataFrame, hit: Column): Double = {
+    val row = df.agg(count(lit(1)), sum(when(hit, 1L).otherwise(0L))).head()
+    val total = row.getLong(0)
+    if (total == 0L) 0.0 else row.getLong(1).toDouble / total * 100.0
   }
 }

@@ -132,7 +132,7 @@ object Search {
   }
 
   /** Persist the BM25 inverted index — the text twin of the ANN
-    * index pattern ([[AnnLsh.writeIndexed]]/[[AnnPq.writeIvfPqIndex]]):
+    * index pattern ([[AnnLsh.writeForestIndex]]/[[AnnPq.writeIvfPqIndex]]):
     * one corpus scan produces postings `(term, doc, tf, dl)` stored
     * as parquet PARTITIONED by `term_bucket = hash64(term) mod
     * numBuckets`, plus a one-row stats table (N, Σdl). A query then

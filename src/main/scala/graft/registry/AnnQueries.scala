@@ -192,8 +192,8 @@ object AnnQueries {
 
     Query("ann_lsh", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      AnnLsh.knn(emb, "embedding", queryVec(s, dir), 10,
-          numPlanes = 4, dim = 64, Knn.Cosine, "vec_id")
+      AnnLsh.knnForest(emb, "embedding", queryVec(s, dir), 10,
+          numTables = 1, bitsPerTable = 4, dim = 64, Knn.Cosine, "vec_id")
         .select(col("vec_id"), col("label"), round(col("dist"), 5).as("dist"))
     },
       s"""WITH planes AS (

@@ -29,8 +29,7 @@ object Serve {
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.shuffle.partitions", graft.tools.Run.cpus.toString)
       .config("spark.ui.enabled", "false")
       .appName("graft-serve")
       .getOrCreate()

@@ -143,28 +143,6 @@ object Ingest {
           .as("value"))
   }
 
-  /** Continuous ANN index build: a record stream (id, vector, ...)
-    * gets its LSH bucket assigned in-flight and lands in
-    * bucket-partitioned parquet — the SAME layout AnnLsh.writeIndexed
-    * produces, so AnnLsh.knnIndexed probes a live, growing index with
-    * partition pruning. Bucketing is a stateless projection: no state
-    * store, no shuffle, every micro-batch appends its own files.
-    * Returns the started query (caller owns lifecycle). */
-  def indexStream(records: DataFrame, vecCol: String, numPlanes: Int, dim: Int,
-                  path: String, checkpoint: String)
-                 : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.AnnLsh
-    records
-      .withColumn("bucket", AnnLsh.bucketCol(col(vecCol), numPlanes, dim))
-      .writeStream
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy("bucket")
-      .outputMode(OutputMode.Append())
-      .start()
-  }
-
   /** Continuous BM25 inverted-index build — the streaming twin of
     * [[graft.operators.Search.writeTextIndex]]: each arriving
     * document fans out to its (id, term, tf, dl) posting rows

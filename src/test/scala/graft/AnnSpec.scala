@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.functions.LshForestHit
 import graft.operators.{AnnIvf, AnnLsh, Eval, Knn}
 
 class AnnSpec extends SparkSpec {
@@ -10,6 +11,9 @@ class AnnSpec extends SparkSpec {
   private lazy val emb = Tables.embeddings(spark, sf0001)
   private lazy val q = emb.filter(col("vec_id") === 1)
     .select(col("embedding").as("qvec"))
+
+  private def queryVector(query: org.apache.spark.sql.DataFrame): Array[Double] =
+    query.select(col("qvec").cast("array<double>")).as[Seq[Double]].head().toArray
 
   test("lsh planes are deterministic and engine-stable") {
     val p1 = AnnLsh.planes(4, 8)
@@ -21,44 +25,11 @@ class AnnSpec extends SparkSpec {
   }
 
   test("lsh knn returns k rows from the query's bucket, distances ascending") {
-    val res = AnnLsh.knn(emb, "embedding", q, 5, 4, 64, Knn.Cosine, "vec_id")
+    val res = AnnLsh.knnForest(emb, "embedding", q, 5, 1, 4, 64, Knn.Cosine, "vec_id")
       .select("dist").as[Double].collect().toSeq
     assert(res.size == 5 && res == res.sorted)
     // the query vector itself is in its own bucket at distance ~0
     assert(res.head < 1e-6)
-  }
-
-  test("multiprobe recall >= single-bucket recall") {
-    val k = 20
-    val exact = Knn.knn(emb, "embedding", q, k, Knn.Cosine, "vec_id")
-      .select("vec_id").as[Long].collect().toSet
-    val single = AnnLsh.knn(emb, "embedding", q, k, 4, 64, Knn.Cosine, "vec_id")
-      .select("vec_id").as[Long].collect().toSet
-    val multi = AnnLsh.knnMultiprobe(emb, "embedding", q, k, 4, 64, Knn.Cosine, "vec_id")
-      .select("vec_id").as[Long].collect().toSet
-    val rs = single.intersect(exact).size.toDouble / k
-    val rm = multi.intersect(exact).size.toDouble / k
-    assert(rm >= rs)
-    // uniform random embeddings are LSH's worst case (no cluster
-    // structure); 5/16 buckets probed should still beat 1/4 recall
-    assert(rm > 0.25, s"multiprobe recall too low: $rm")
-  }
-
-  test("bucket-partitioned index probe prunes partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lsh").toFile
-    dir.delete()
-    AnnLsh.writeIndexed(emb, "embedding", 4, 64, dir.getAbsolutePath)
-    val res = AnnLsh.knnIndexed(spark, dir.getAbsolutePath, "embedding",
-      q, 5, 4, 64, Knn.Cosine, "vec_id")
-    val plan = res.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(bucket"),
-      s"expected partition pruning in:\n$plan")
-    assert(res.count() == 5)
-    // pruned probe returns the same rows as the in-memory bucket path
-    val mem = AnnLsh.knn(emb, "embedding", q, 5, 4, 64, Knn.Cosine, "vec_id")
-      .select("vec_id").as[Long].collect().toSeq
-    val disk = res.select("vec_id").as[Long].collect().toSeq
-    assert(mem == disk)
   }
 
   test("batch ANN matches per-query single-bucket knn") {
@@ -68,9 +39,9 @@ class AnnSpec extends SparkSpec {
       .select("qid", "vec_id", "rank").as[(Long, Long, Int)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(_._3).map(_._2).toSeq).toMap
     (0L until 3L).foreach { qid =>
-      val single = AnnLsh.knn(emb, "embedding",
+      val single = AnnLsh.knnForest(emb, "embedding",
           emb.filter(col("vec_id") === qid).select(col("embedding").as("qvec")),
-          5, 4, 64, Knn.Cosine, "vec_id")
+          5, 1, 4, 64, Knn.Cosine, "vec_id")
         .select("vec_id").as[Long].collect().toSeq
       assert(batch(qid) == single, s"qid=$qid")
     }
@@ -82,21 +53,23 @@ class AnnSpec extends SparkSpec {
 
   test("percentSearched equals probed-bucket mass / corpus (collection.go:704)") {
     val numPlanes = 4
-    val indexed = AnnLsh.index(emb, "embedding", numPlanes, 64)
+    val indexed = emb.withColumn("bucket", AnnLsh.bucketCol(col("embedding"), numPlanes, 64))
     val total = indexed.count().toDouble
     def mass(probes: Seq[Long]): Double =
       indexed.filter(col("bucket").isin(probes: _*)).count().toDouble
-    val single = AnnLsh.probeBuckets(q, numPlanes, 64, multiprobe = false)
-    val multi = AnnLsh.probeBuckets(q, numPlanes, 64, multiprobe = true)
-    val pctS = AnnLsh.percentSearched(emb, "embedding", q, numPlanes, 64)
-    val pctM = AnnLsh.percentSearched(emb, "embedding", q, numPlanes, 64, multiprobe = true)
+    val single = AnnLsh.forestKeys(q, 1, numPlanes, 64)
+    val multi = AnnLsh.hammingProbeKeysLocal(queryVector(q), numPlanes, 64)
+    val pctS = AnnLsh.percentSearchedForest(emb, "embedding", q, 1, numPlanes, 64)
+    val pctM = AnnLsh.percentProbed(emb,
+      LshForestHit.hit(col("embedding"), multi, numPlanes, 64, numPlanes + 1))
     assert(math.abs(pctS - mass(single) / total * 100.0) < 1e-9)
     assert(math.abs(pctM - mass(multi) / total * 100.0) < 1e-9)
     // a medium-precision probe must touch a strict subset of the corpus
     assert(pctS > 0.0 && pctS < 100.0)
     assert(pctM >= pctS)
     // empty corpus reports 0, not NaN (collection.go:707)
-    assert(AnnLsh.percentSearched(emb.filter(lit(false)), "embedding", q, numPlanes, 64) == 0.0)
+    assert(AnnLsh.percentSearchedForest(emb.filter(lit(false)), "embedding", q, 1,
+      numPlanes, 64) == 0.0)
   }
 
   test("recall@10 floors at sf0.01: lsh multiprobe and ivf nprobe=2") {
@@ -107,7 +80,10 @@ class AnnSpec extends SparkSpec {
       val qv = e.filter(col("vec_id") === qid).select(col("embedding").as("qvec"))
       val exact = Knn.knn(e, "embedding", qv, k, Knn.Cosine, "vec_id")
         .select("vec_id").as[Long].collect().toSet
-      val lsh = AnnLsh.knnMultiprobe(e, "embedding", qv, k, 4, 64, Knn.Cosine, "vec_id")
+      // one table, probing the query's bucket and its 4 Hamming-1 neighbors
+      val probed = e.filter(LshForestHit.hit(col("embedding"),
+        AnnLsh.hammingProbeKeysLocal(queryVector(qv), 4, 64), 4, 64, 5))
+      val lsh = Knn.knn(probed, "embedding", qv, k, Knn.Cosine, "vec_id")
         .select("vec_id").as[Long].collect().toSet
       val ivf = AnnIvf.knn(e, "embedding", qv, k, cent, 2, Knn.Cosine, "vec_id")
         .select("vec_id").as[Long].collect().toSet
@@ -252,11 +228,6 @@ class AnnSpec extends SparkSpec {
       assert((key >> 8) == t, s"table bits wrong for $key at $t")
       assert((key & 255L) >= 0L)
     }
-    // first table of the forest uses planes 0..bits-1 — the same
-    // planes as the single-table index, so its bucket matches
-    val single = AnnLsh.probeBuckets(q, 4, 64, multiprobe = false).head
-    val forest4 = AnnLsh.forestKeys(q, 1, 4, 64).head
-    assert((forest4 & 15L) == single)
   }
 
   test("indexed batch forest multiprobe preserves non-Long qids and skips null qvecs") {

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.core.{Collection, CollectionOptions, SearchArgs}
-import graft.operators.Knn
+import graft.operators.{AnnLsh, Knn}
 
 class CollectionSpec extends SparkSpec {
   import spark.implicits._
@@ -163,6 +163,80 @@ class CollectionSpec extends SparkSpec {
       s"medium search should touch a strict subset, got ${medium.percentSearched}%")
     val listing = c.searchWithStats(SearchArgs(limit = 5))
     assert(listing.percentSearched == 100.0)
+  }
+
+  test("addDocuments rejects a null vector or one of the wrong length, storing nothing") {
+    val c = newCollection()
+    c.addDocuments(docs3)
+    val ok = (4L, Seq(1.0, 2.0, 3.0, 4.0), "{}")
+    Seq[Seq[Double]](Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0, 3.0, 4.0, 5.0), null).foreach { v =>
+      val e = intercept[Exception](
+        c.addDocuments(Seq(ok, (5L, v, "{}")).toDF("id", "vector", "metadata")))
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(messages.contains("record 5: vector must have 4 dimensions"), messages)
+      // the whole batch failed: not even the valid record was stored
+      assert(c.documentCount() == 3)
+      assert(c.getAllIds() == Seq(1L, 2L, 3L))
+    }
+  }
+
+  test("one-table medium search is exact search over locally computed reference buckets") {
+    // the reference buckets and distances are plain loops over
+    // AnnLsh.planes, independent of any bucketing expression
+    val (dim, numPlanes, k) = (8, 4, 5)
+    val planes = AnnLsh.planes(numPlanes, dim)
+    def dot(a: Seq[Double], b: Seq[Double]): Double = {
+      var acc = 0.0
+      var i = 0
+      while (i < dim) { acc += a(i) * b(i); i += 1 }
+      acc
+    }
+    def refBucket(v: Seq[Double]): Long =
+      (0 until numPlanes).map(h => if (dot(v, planes(h).toSeq) > 0.0) 1L << h else 0L).sum
+    def dist(a: Seq[Double], b: Seq[Double]): Double = {
+      val d = a.zip(b).map { case (x, y) => x - y }
+      math.sqrt(dot(d, d))
+    }
+    val rng = new scala.util.Random(7)
+    def gaussian(): Seq[Double] = Seq.fill(dim)(rng.nextGaussian())
+    val records = (0L until 300L).map(i => i -> gaussian())
+    val queries = Seq.fill(20)(gaussian())
+    val bucket = records.map { case (i, v) => i -> refBucket(v) }.toMap
+    val n = records.size.toDouble
+
+    val dir = Files.createTempDirectory("graft-coll-onetable").toFile
+    dir.delete()
+    val c = Collection.create(spark, CollectionOptions("one", dimensionCount = dim,
+      distanceMethod = Knn.Euclidean, lshPlanes = numPlanes), dir.getAbsolutePath)
+    c.addDocuments(records.map { case (i, v) => (i, v, "{}") }.toDF("id", "vector", "metadata"))
+
+    assert(c.current().select(col("id"), AnnLsh.bucketCol(col("vector"), numPlanes, dim))
+      .as[(Long, Long)].collect().toMap == bucket)
+    assert(queries.toDF("qvec").select(AnnLsh.bucketCol(col("qvec"), numPlanes, dim))
+      .as[Long].collect().toSeq == queries.map(refBucket))
+
+    queries.zipWithIndex.foreach { case (q, qi) =>
+      val b = refBucket(q)
+      // k-NN: exact top-k inside the query's bucket, ties by id
+      val inBucket = records.filter { case (i, _) => bucket(i) == b }
+      val want = inBucket.map { case (i, v) => (dist(q, v), i) }.sorted.take(k)
+      val knn = c.searchWithStats(SearchArgs(vector = Some(q), k = k))
+      val got = knn.results.select("id", "dist").as[(Long, Double)].collect().toSeq
+      assert(got.map(_._1) == want.map(_._2), s"query $qi")
+      got.zip(want).foreach { case ((_, d), (e, _)) => assert(math.abs(d - e) < 1e-9, s"query $qi") }
+      assert(math.abs(knn.percentSearched - inBucket.size / n * 100.0) < 1e-9, s"query $qi")
+      // radius: the bucket and its Hamming-1 neighbors, distance <= r;
+      // r sits between two corpus distances, never on one
+      val probed = (b +: (0 until numPlanes).map(h => b ^ (1L << h))).toSet
+      val candidates = records.filter { case (i, _) => probed(bucket(i)) }
+      val ds = records.map { case (_, v) => dist(q, v) }.sorted
+      val r = (ds(30) + ds(31)) / 2
+      val radius = c.searchWithStats(SearchArgs(vector = Some(q), radius = r))
+      assert(radius.results.select("id").as[Long].collect().toSet ==
+        candidates.collect { case (i, v) if dist(q, v) <= r => i }.toSet, s"query $qi")
+      assert(math.abs(radius.percentSearched - candidates.size / n * 100.0) < 1e-9, s"query $qi")
+    }
   }
 
   test("registry: list finds created collections, drop removes them (rest.go:67)") {

@@ -464,36 +464,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("indexStream builds a bucket-partitioned ANN index a probe can prune") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{AnnLsh, Knn}
-    val dir = java.nio.file.Files.createTempDirectory("graft-sidx").toFile.getAbsolutePath
-    val mem = MemoryStream[(Long, Seq[Double])]
-    val emb = graft.core.Tables.embeddings(spark, sf0001)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-    val rows = emb.as[(Long, Seq[Double])].collect().toSeq
-    val q = Ingest.indexStream(mem.toDF().toDF("vec_id", "embedding"),
-      "embedding", numPlanes = 4, dim = 64, s"$dir/data", s"$dir/ckpt")
-    try {
-      mem.addData(rows.take(100): _*)
-      q.processAllAvailable()
-      mem.addData(rows.drop(100): _*) // a second micro-batch appends
-      q.processAllAvailable()
-    } finally q.stop()
-    // the layout is AnnLsh.writeIndexed's: bucket= partition dirs
-    val dirs = new java.io.File(s"$dir/data").listFiles()
-      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("bucket="))
-    assert(dirs.length > 1, s"expected multiple bucket partitions, got ${dirs.toSeq}")
-    // a probe over the streamed index matches the in-memory bucket path
-    val qdf = emb.filter(col("vec_id") === 1).select(col("embedding").as("qvec"))
-    val streamed = AnnLsh.knnIndexed(spark, s"$dir/data", "embedding", qdf,
-        5, 4, 64, Knn.Cosine, "vec_id")
-      .select("vec_id").as[Long].collect().toSeq
-    val direct = AnnLsh.knn(emb, "embedding", qdf, 5, 4, 64, Knn.Cosine, "vec_id")
-      .select("vec_id").as[Long].collect().toSeq
-    assert(streamed == direct)
-  }
-
   test("forestIndexStream builds an fkey-partitioned forest index a probe can prune") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.{AnnLsh, Knn}
