@@ -139,57 +139,87 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
         LogSchema)
     else spark.read.schema(LogSchema).parquet(state.paths.map(_.toString): _*)
 
-  /** Max version from parquet FOOTER statistics — O(files) metadata
-    * reads, zero row data: the scale answer to a monotonic version
-    * counter without a coordination service (every appended batch
-    * carries one constant version, so file-level min/max stats are
-    * exact). Falls back to a full aggregate, reported on stderr, only
-    * if a footer cannot be read or lacks stats for the column. */
-  private def nextVersion(): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val state = logState()
-    if (state.files.isEmpty) return 0L
+  /** Max version of each log file whose footer [[nextVersion]] has
+    * read, keyed by (dir, name, length, modification time): the file
+    * identity [[LogState]] uses, so a file rewritten in place gets a
+    * new key and is read again. Guarded by [[writeLock]]. Each
+    * successful [[nextVersion]] replaces it with the entries of the
+    * state it listed, so it never holds more than the live log's
+    * files, and a compaction's new directory starts it afresh. */
+  private var footerMax = Map.empty[(String, String, Long, Long), Long]
+
+  /** Max version of one log file from its parquet FOOTER statistics:
+    * zero row data (every appended batch carries one constant
+    * version, so file-level min/max stats are exact). -1 for a file
+    * with no rows; throws if a row group lacks stats for the column. */
+  private def footerMaxVersion(p: org.apache.hadoop.fs.Path): Long = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p,
+      spark.sparkContext.hadoopConfiguration)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    var mx = -1L
     try {
-      var mx = -1L
-      state.paths.foreach { p =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          reader.getFooter.getBlocks.forEach { b =>
-            b.getColumns.forEach { c =>
-              if (c.getPath.toDotString == "version") {
-                val st = c.getStatistics
-                if (st == null || !st.hasNonNullValue)
-                  throw new IllegalStateException(s"no version stats in $p")
-                mx = math.max(mx, st.genericGetMax.asInstanceOf[java.lang.Long].longValue)
-              }
-            }
+      reader.getFooter.getBlocks.forEach { b =>
+        b.getColumns.forEach { c =>
+          if (c.getPath.toDotString == "version") {
+            val st = c.getStatistics
+            if (st == null || !st.hasNonNullValue)
+              throw new IllegalStateException(s"no version stats in $p")
+            mx = math.max(mx, st.genericGetMax.asInstanceOf[java.lang.Long].longValue)
           }
-        } finally reader.close()
+        }
       }
-      mx + 1
+    } finally reader.close()
+    mx
+  }
+
+  /** One above the max version of `state`, from footer statistics:
+    * the scale answer to a monotonic version counter without a
+    * coordination service. Footer reads are O(files not yet seen):
+    * a file already in [[footerMax]] under the same key is not
+    * opened again, so a write's cost does not grow with the log.
+    * Falls back to a full aggregate, reported on stderr and not
+    * cached, only if a footer cannot be read or lacks stats. */
+  private def nextVersion(state: LogState): Long =
+    try {
+      val maxes = state.files.map { case (n, len, mtime) =>
+        val key = (state.dir, n, len, mtime)
+        key -> footerMax.getOrElse(key,
+          footerMaxVersion(new org.apache.hadoop.fs.Path(state.dir, n)))
+      }
+      footerMax = maxes.toMap
+      maxes.map(_._2).maxOption.getOrElse(-1L) + 1
     } catch {
       case e: Exception =>
         System.err.println(s"Collection.nextVersion: footer read of ${state.dir} failed " +
           s"(${e.getClass.getName}: ${e.getMessage}); aggregating the log instead")
         read(state).agg(coalesce(max(col("version")), lit(-1L))).head().getLong(0) + 1
     }
-  }
+
+  /** How many files' maxima [[footerMax]] holds: never more than the
+    * live log's files. */
+  private[graft] def footersCached: Int = writeLock.synchronized(footerMax.size)
 
   /** Mutations serialize on this per-collection lock — the analogue of
     * the reference's per-collection mutex (collection.go lock
     * discipline). Every write is read-version-then-append: two
     * unserialized writers could mint the SAME version for different
     * batches and make "latest version per id" ambiguous, so the
-    * critical section spans both steps. A batch lands as several
-    * parquet files, renamed into place one by one, so a reader lists
-    * the log under this lock too (see [[snapshot]]) and sees an
-    * in-process batch whole or not at all. [[compact]] keeps the
-    * previous generation on disk (its retention window, default 1),
-    * so a snapshot being built from the OLD generation across one
-    * concurrent compaction still reads it. On a multi-writer cluster
-    * this lock would be a transaction-log protocol instead
-    * (single-JVM serving façade contract). */
+    * critical section spans both steps.
+    *  - A write whose rows are already on the driver — a `Seq` of
+    *    tombstone ids, the one row of [[updateMetadata]], a
+    *    [[addDocuments]] frame whose optimized plan is a
+    *    `LocalRelation` — lands as exactly one parquet file, so the
+    *    log (and each later listing, footer pass and snapshot scan)
+    *    grows by one file per such write, not by one per core.
+    *  - A distributed frame keeps its partitioning and lands as
+    *    several files, renamed into place one by one, so a reader
+    *    lists the log under this lock too (see [[snapshot]]) and sees
+    *    an in-process batch whole or not at all.
+    * [[compact]] keeps the previous generation on disk (its retention
+    * window, default 1), so a snapshot being built from the OLD
+    * generation across one concurrent compaction still reads it. On
+    * a multi-writer cluster this lock would be a transaction-log
+    * protocol instead (single-JVM serving façade contract). */
   private val writeLock = new Object
 
   private def append(batch: DataFrame): Unit =
@@ -200,39 +230,66 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
     * reference). A null vector, or one whose length is not
     * `dimensionCount`, fails the append and stores nothing (the
     * reference panics, collection.go:431-433); the check runs inside
-    * the append's own projection, so it adds no job. */
+    * the append's own projection, so it adds no job.
+    *
+    * If `docs`' optimized plan is a `LocalRelation` (its rows are
+    * held by the driver, as for every `createDataFrame(Seq)` batch),
+    * the batch lands as one parquet file, and an empty one appends
+    * nothing and mints no version. Any other frame keeps its
+    * partitioning: one file per non-empty partition. */
   def addDocuments(docs: DataFrame): Unit = writeLock.synchronized {
-    val v = nextVersion()
-    val dim = options.dimensionCount
-    val checked = when(col("vector").isNull || size(col("vector")) =!= dim,
-      raise_error(concat(lit("record "), col("id").cast("string"),
-        lit(s": vector must have $dim dimensions"))))
-      .otherwise(col("vector"))
-    val vec = options.quantization match {
-      case 32 => checked.cast("array<float>").cast("array<double>")
-      case 64 => checked.cast("array<double>")
-      case bits => Quantization.dequantize(Quantization.quantize(checked, bits), bits)
+    val held = docs.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => Some(l.data)
+      case _ => None
     }
-    append(docs.select(col("id").cast("long"), vec.as("vector"),
-      col("metadata").cast("string"), lit(v).as("version"), lit(false).as("deleted")))
+    if (!held.exists(_.isEmpty)) {
+      val v = nextVersion(logState())
+      val dim = options.dimensionCount
+      val checked = when(col("vector").isNull || size(col("vector")) =!= dim,
+        raise_error(concat(lit("record "), col("id").cast("string"),
+          lit(s": vector must have $dim dimensions"))))
+        .otherwise(col("vector"))
+      val vec = options.quantization match {
+        case 32 => checked.cast("array<float>").cast("array<double>")
+        case 64 => checked.cast("array<double>")
+        case bits => Quantization.dequantize(Quantization.quantize(checked, bits), bits)
+      }
+      val batch = docs.select(col("id").cast("long"), vec.as("vector"),
+        col("metadata").cast("string"), lit(v).as("version"), lit(false).as("deleted"))
+      append(if (held.isDefined) batch.coalesce(1) else batch)
+    }
   }
 
   /** UpdateDocument metadata (collection.go:490): rewrite metadata,
-    * keep the stored vector. */
+    * keep the stored vector. The at most one row lands as one file;
+    * an absent id leaves the log as it was. */
   def updateMetadata(id: Long, metadata: String): Unit = writeLock.synchronized {
-    val v = nextVersion()
+    val state = logState()
+    val v = nextVersion(state)
     append(current().filter(col("id") === id)
       .select(col("id"), col("vector"), lit(metadata).as("metadata"),
-        lit(v).as("version"), lit(false).as("deleted")))
+        lit(v).as("version"), lit(false).as("deleted"))
+      .coalesce(1))
+    // Spark writes partition 0's file even when it holds no rows, so
+    // an absent id wrote one empty file: delete it, and the log state
+    // (and with it the snapshot) is what it was before this call. A
+    // footer that throws has a row group, so that file stays.
+    logState().paths.filterNot(state.paths.contains)
+      .filter(p => scala.util.Try(footerMaxVersion(p)).toOption.contains(-1L))
+      .foreach(fs().delete(_, false))
   }
 
-  /** RemoveDocument (collection.go:511): tombstone append. */
+  /** RemoveDocument (collection.go:511): tombstone append, as one
+    * file; no ids append nothing. */
   def removeDocuments(ids: Seq[Long]): Unit = writeLock.synchronized {
-    val v = nextVersion()
-    append(spark.createDataFrame(ids.map(i => Tuple1(i))).toDF("id")
-      .select(col("id").cast("long"), lit(null).cast("array<double>").as("vector"),
-        lit(null).cast("string").as("metadata"), lit(v).as("version"),
-        lit(true).as("deleted")))
+    if (ids.nonEmpty) {
+      val v = nextVersion(logState())
+      append(spark.createDataFrame(ids.map(i => Tuple1(i))).toDF("id")
+        .select(col("id").cast("long"), lit(null).cast("array<double>").as("vector"),
+          lit(null).cast("string").as("metadata"), lit(v).as("version"),
+          lit(true).as("deleted"))
+        .coalesce(1))
+    }
   }
 
   /** The current view of one log state — latest version per id, minus
@@ -241,7 +298,9 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
     val view: DataFrame = Crud.currentView(read(state), "id", "version", "deleted")
       .select(col("id"), col("vector"), col("metadata"))
       .localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
-    lazy val count: Long = view.count()
+    // the checkpoint's rows, counted in one job (`view.count()` is an
+    // aggregate with an exchange: two jobs under AQE)
+    lazy val count: Long = view.queryExecution.toRdd.count()
   }
 
   private val buildLock = new Object

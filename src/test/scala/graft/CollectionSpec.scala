@@ -52,6 +52,21 @@ class CollectionSpec extends SparkSpec {
   private def builds(jobs: Seq[Seq[String]]): Int =
     jobs.count(_.exists(_.startsWith("localCheckpoint")))
 
+  /** A collection at a path the test can list. */
+  private def newCollectionAt(name: String): (Collection, String) = {
+    val dir = Files.createTempDirectory(s"graft-coll-$name").toFile
+    dir.delete()
+    val path = dir.getAbsolutePath
+    (Collection.create(spark,
+      CollectionOptions(name, dimensionCount = 4, distanceMethod = Knn.Euclidean), path), path)
+  }
+
+  /** (name, length, modification time) of each parquet file in `dir`. */
+  private def parquetFiles(dir: String): Set[(String, Long, Long)] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => (f.getName, f.length, f.lastModified)).toSet
+
   test("add / count / ids / remove round-trip (reference CRUD surface)") {
     val c = newCollection()
     c.addDocuments(docs3)
@@ -549,6 +564,116 @@ class CollectionSpec extends SparkSpec {
     assert(c.getDocument(1L).map(_._2).contains("""{"v": 2}"""))
     val report = err.toString("UTF-8")
     assert(report.contains(path) && report.contains("IllegalStateException"), report)
+  }
+
+  test("snapshot: the first count after a write runs one job besides the build") {
+    val c = newCollection()
+    def add(id: Long) =
+      c.addDocuments(Seq((id, Seq(id.toDouble, 0.0, 0.0, 0.0), "{}")).toDF("id", "vector", "metadata"))
+    add(1L)
+    val build = jobsOf(c.current())
+    assert(builds(build) >= 1, s"current() built no view: $build")
+    val count = jobsOf(assert(c.documentCount() == 1))
+    assert(count.size == 1, s"counting a built view ran ${count.size} jobs: $count")
+    // a build of the same shape, then the count
+    add(2L)
+    val both = jobsOf(assert(c.documentCount() == 2))
+    assert(both.size == build.size + 1, s"build: $build; build and count: $both")
+  }
+
+  test("empty writes append nothing and keep the snapshot") {
+    val (c, path) = newCollectionAt("empty")
+    c.addDocuments(docs3)
+    assert(c.getAllIds() == Seq(1L, 2L, 3L))
+    val files = parquetFiles(path)
+    val empties = Seq[(String, () => Unit)](
+      "removeDocuments(Nil)" -> (() => c.removeDocuments(Nil)),
+      "addDocuments of no local rows" -> (() => c.addDocuments(
+        Seq.empty[(Long, Seq[Double], String)].toDF("id", "vector", "metadata"))),
+      "updateMetadata of an absent id" -> (() => c.updateMetadata(99L, """{"tag": "z"}""")))
+    empties.foreach { case (what, write) =>
+      write()
+      assert(parquetFiles(path) == files, s"$what changed the log")
+      val read = jobsOf(assert(c.getAllIds() == Seq(1L, 2L, 3L)))
+      assert(builds(read) == 0, s"the read after $what rebuilt the view: $read")
+    }
+    // the next write mints version 1, right after the first batch's 0
+    c.removeDocuments(Seq(2L))
+    assert(spark.read.parquet(path).agg(max("version")).head().getLong(0) == 1L)
+    assert(c.getAllIds() == Seq(1L, 3L))
+    // without footer stats, an absent id still appends nothing and a
+    // present one still lands
+    val now = parquetFiles(path)
+    withSQLConf("parquet.column.statistics.enabled" -> "false") {
+      c.updateMetadata(99L, "{}")
+      assert(parquetFiles(path) == now)
+      c.updateMetadata(1L, """{"tag": "no stats"}""")
+    }
+    assert(c.getDocument(1L).map(_._2).contains("""{"tag": "no stats"}"""))
+  }
+
+  test("a driver-held write lands as one parquet file; a distributed frame keeps its partitions") {
+    val (c, path) = newCollectionAt("onefile")
+    def rows(from: Int) =
+      (from until from + 10).map(i => (i.toLong, Seq(i.toDouble, 0.0, 0.0, 0.0), "{}"))
+    def added(write: => Unit): Int = {
+      val before = parquetFiles(path).size
+      write
+      parquetFiles(path).size - before
+    }
+    assert(added(c.addDocuments(rows(0).toDF("id", "vector", "metadata"))) == 1)
+    assert(added(c.removeDocuments(Seq(3L))) == 1)
+    assert(added(c.removeDocuments(Seq(5L, 6L, 7L))) == 1)
+    assert(added(c.updateMetadata(4L, """{"tag": "u"}""")) == 1)
+    assert(added(c.addDocuments(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows(10), 4)).toDF("id", "vector", "metadata"))) == 4)
+    assert(c.getAllIds() == (0L until 20L).filterNot(Set(3L, 5L, 6L, 7L)))
+    assert(c.getDocument(4L).map(_._2).contains("""{"tag": "u"}"""))
+  }
+
+  test("nextVersion: the next write wins after every change to the log's files") {
+    val tmp = Files.createTempDirectory("graft-coll-versions").toFile
+    val path = tmp.getAbsolutePath + "/coll"
+    val c = Collection.create(spark,
+      CollectionOptions("versions", dimensionCount = 4, distanceMethod = Knn.Euclidean), path)
+    def meta(id: Long) = c.getDocument(id).map(_._2)
+    def liveDir = c.generations.lastOption.fold(path)(g => s"$path.gen$g")
+    c.addDocuments(docs3)
+    c.updateMetadata(1L, """{"v": 1}""")
+    // an append through a second instance on the same path
+    Collection.open(spark, path).updateMetadata(1L, """{"v": "other"}""")
+    c.updateMetadata(1L, """{"v": 3}""")
+    assert(meta(1L).contains("""{"v": 3}"""))
+    assert(c.footersCached <= parquetFiles(liveDir).size)
+    // a compaction: the new generation restarts at version 0
+    c.compact()
+    c.updateMetadata(2L, """{"v": "compacted"}""")
+    assert(meta(2L).contains("""{"v": "compacted"}"""))
+    assert(spark.read.parquet(liveDir).select("version").as[Long].distinct().collect()
+      .toSet == Set(0L, 1L))
+    assert(c.footersCached <= parquetFiles(liveDir).size)
+    // a log file rewritten in place: same name and length, a higher
+    // version and a new modification time
+    def logFile(meta: String, version: Long): Array[Byte] = {
+      val out = new java.io.File(tmp, s"src-$version")
+      Seq((3L, Seq(0.0, 5.0, 0.0, 0.0), meta, version, false))
+        .toDF("id", "vector", "metadata", "version", "deleted")
+        .coalesce(1).write.parquet(out.getPath)
+      Files.readAllBytes(out.listFiles().filter(_.getName.endsWith(".parquet")).head.toPath)
+    }
+    val low = logFile("""{"v": "a"}""", 0L)
+    val high = logFile("""{"v": "b"}""", 7L)
+    assert(low.length == high.length)
+    val f = new java.io.File(liveDir, "part-00000-inplace.parquet")
+    val t = 1500000000000L
+    Files.write(f.toPath, low)
+    assert(f.setLastModified(t))
+    c.updateMetadata(2L, """{"v": "reads the footer"}""")
+    Files.write(f.toPath, high)
+    assert(f.setLastModified(t + 60000))
+    assert(meta(3L).contains("""{"v": "b"}"""))
+    c.updateMetadata(3L, """{"v": "c"}""")
+    assert(meta(3L).contains("""{"v": "c"}"""))
   }
 
   test("lossy quantization stores dequantized grid values (ref quantization.go)") {
