@@ -295,9 +295,17 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
   /** The current view of one log state — latest version per id, minus
     * tombstones — materialized once, on local disk. */
   private final class Snapshot(val state: LogState) {
-    val view: DataFrame = Crud.currentView(read(state), "id", "version", "deleted")
-      .select(col("id"), col("vector"), col("metadata"))
-      .localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
+    val view: DataFrame = {
+      // names every stage of the build, AQE's shuffle-map job too: that
+      // job runs on another thread, which inherits this call site
+      val sc = spark.sparkContext
+      val callerSite = sc.getLocalProperty("callSite.short")
+      sc.setCallSite("localCheckpoint at Collection.Snapshot")
+      try Crud.currentView(read(state), "id", "version", "deleted")
+        .select(col("id"), col("vector"), col("metadata"))
+        .localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
+      finally sc.setLocalProperty("callSite.short", callerSite)
+    }
     // the checkpoint's rows, counted in one job (`view.count()` is an
     // aggregate with an exchange: two jobs under AQE)
     lazy val count: Long = view.queryExecution.toRdd.count()

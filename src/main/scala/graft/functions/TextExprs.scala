@@ -50,18 +50,17 @@ case class CharEntropy(child: Expression, alphabet: String)
     copy(child = newChild)
 }
 
-/** The deterministic hash-ngram embedder fused into ONE expression:
-  * token → 60-bit md5 hash → bucket (mod dim) → counts → L2-normalized
-  * weights, per row — exactly [[graft.operators.Embed.embedDense]]'s
-  * math (spec-pinned equal) without its two corpus-wide shuffles
-  * (explode → (id, bucket) agg → per-id map assembly). The win shows
-  * where embeddings are computed per CHUNK: maxsim over sf0.1 chunks
-  * measured 2.5 s with the shuffle embedder; the fused expression
-  * rides the scan. The norm is Σc² of integer counts — exact in any
-  * order — so weights are bit-identical to the aggregate version. */
+/** The deterministic hash-ngram embedder as ONE expression, the only
+  * embedding code in graft (see [[graft.operators.Embed]]): token →
+  * 60-bit md5 hash → bucket (mod dim) → counts → L2-normalized
+  * weights, per row, riding the scan with no shuffle. The norm is Σc²
+  * of integer counts — exact in any order — so the weights are the
+  * same doubles however the words are ordered. */
 case class HashEmbed(child: Expression, dim: Int) extends UnaryExpression {
 
   require(dim >= 1, s"dim must be >= 1, got $dim")
+
+  override def prettyName: String = "graft_hash_embed"
 
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = false)
@@ -233,10 +232,11 @@ object TextExprs {
     (v << 4) | ((h(7) & 0xFF) >>> 4)
   }
 
-  /** One-pass hash embedding both the interpreted and generated code
-    * call: bucket counts over the words, then weight = c / √(Σc²) in
-    * bucket order. Null array elements count as the empty string
-    * (split never produces nulls; defensive). */
+  /** One-pass hash embedding that the interpreted and generated code
+    * and [[graft.operators.Embed.embedText]] call: bucket counts over
+    * the words, then weight = c / √(Σc²) in bucket order; no words
+    * give the zero vector. Null array elements count as the empty
+    * string (split never produces nulls; defensive). */
   def hashEmbed(words: org.apache.spark.sql.catalyst.util.ArrayData,
                 dim: Int): Array[Double] = {
     val counts = new Array[Long](dim)

@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.TextExprs
 
 /** Deterministic text embedding.
   *
@@ -12,41 +15,41 @@ import org.apache.spark.sql.functions._
   * exercises the same downstream plumbing (vector columns, kNN,
   * near-dup search) as a real model would.
   *
-  * Scale posture: one explode + one groupBy per corpus — linear work,
-  * single shuffle keyed by (id, bucket), no driver involvement.
-  */
+  * One kernel computes every embedding: [[TextExprs.hashEmbed]] over
+  * the words `Dedup.words` splits (single spaces, empty words kept).
+  * On a column it is the `graft_hash_embed` expression, one map-side
+  * pass per row with no shuffle; on a driver string ([[embedText]])
+  * it is the same function called directly, so REST and query strings
+  * embed without a Spark job. */
 object Embed {
 
-  /** Sparse representation: (idCol, bucket, weight) with L2-normalized
-    * weights per document. */
-  def embedSparse(df: DataFrame, textCol: String, idCol: String, dim: Int): DataFrame = {
-    val bucketed = df
-      .select(col(idCol), explode(Dedup.words(col(textCol))).as("t"))
-      .groupBy(col(idCol), (Dedup.hash64(col("t")) % dim).as("bucket"))
-      .agg(count(lit(1)).as("c"))
-    val norms = bucketed.groupBy(col(idCol))
-      .agg(sqrt(sum(col("c") * col("c"))).as("nrm"))
-    bucketed.join(norms, idCol)
-      .select(col(idCol), col("bucket"), (col("c") / col("nrm")).as("weight"))
-  }
+  /** Sparse representation: (idCol, bucket, weight), each embedded
+    * row's nonzero weights. `_outer` stops the optimizer inferring a
+    * size filter that would call the kernel a second time per row. */
+  def embedSparse(df: DataFrame, textCol: String, idCol: String, dim: Int): DataFrame =
+    embedDense(df, textCol, idCol, dim)
+      .select(col(idCol), posexplode_outer(col("embedding")).as(Seq("bucket", "weight")))
+      .filter(col("weight") =!= 0.0)
+      .select(col(idCol), col("bucket").cast("long"), col("weight"))
 
-  /** Dense representation: (idCol, embedding array<double>[dim]).
-    * The element_at-on-map inside the lambda costs O(dim) per lookup
-    * (map probes are linear entry scans, and CollapseProject can
-    * inline the map build into the lambda) — acceptable ONLY because
-    * the per-doc map is bounded by `dim` (≤ a few hundred), so the
-    * whole assembly is O(dim²) per doc regardless of corpus size.
-    * Corpus-sized or mBits-sized constants must use the dense-array
-    * shape instead (see decontaminateBloom / dsirWeights — §4 HOF
-    * trap). */
+  /** Dense representation: (idCol, embedding array<double>[dim]), one
+    * row per input row with non-null text (a repeated id keeps each
+    * of its rows). */
   def embedDense(df: DataFrame, textCol: String, idCol: String, dim: Int): DataFrame =
-    embedSparse(df, textCol, idCol, dim)
-      .groupBy(col(idCol))
-      .agg(map_from_entries(
-        collect_list(struct(col("bucket"), col("weight")))).as("bwm"))
-      .select(col(idCol),
-        transform(sequence(lit(0), lit(dim - 1)), i =>
-          coalesce(element_at(col("bwm"), i.cast("long")), lit(0.0))).as("embedding"))
+    df.filter(col(textCol).isNotNull)
+      .select(col(idCol), embedCol(col(textCol), dim).as("embedding"))
+
+  /** The embedding of a text column, null for null text. */
+  def embedCol(text: Column, dim: Int): Column =
+    TextExprs.hashEmbedCol(Dedup.words(text), dim)
+
+  /** The embedding of one driver-held string: the kernel over the
+    * words Spark's `split(text, " ")` yields (limit -1, so leading,
+    * trailing and repeated spaces give empty words), bit-identical to
+    * [[embedDense]] on the same text. Runs no Spark job. */
+  def embedText(text: String, dim: Int): Array[Double] =
+    TextExprs.hashEmbed(
+      new GenericArrayData(text.split(" ", -1).map(w => UTF8String.fromString(w): Any)), dim)
 
   /** Embedding cache — the scale twin of the reference's in-process
     * LRU (embedding_cache.go): a parquet table keyed by md5(text)
@@ -81,16 +84,16 @@ object Embed {
       .select(col(idCol), col("embedding"), lit(true).as("cached"))
     val misses = joined.filter(col("embedding").isNull)
       .select(col(idCol), col(textCol), col("_tkey"))
-    val computed = embedDense(misses, textCol, idCol, dim)
-      .join(misses.select(col(idCol), col("_tkey")), Seq(idCol))
     // one text can appear under many ids; the cache stores each key once
-    computed.select(col("_tkey").as("tkey"), col("embedding")).distinct()
+    misses.filter(col(textCol).isNotNull)
+      .select(col("_tkey").as("tkey"), embedCol(col(textCol), dim).as("embedding"))
+      .distinct()
       .write.mode("append").parquet(cachePath)
     // serve the misses from the rows the append just wrote: the
     // embedder ran exactly once (inside the write job); returning
-    // `computed` directly would re-run the whole embed plan when the
-    // caller consumes the result — doubling the one stage this
-    // operator exists to avoid. `cache` above holds the pre-append
+    // the embedded misses directly would re-run the whole embed plan
+    // when the caller consumes the result — doubling the one stage
+    // this operator exists to avoid. `cache` above holds the pre-append
     // file listing, so the miss/hit split stays consistent.
     val served = spark.read.parquet(cachePath)
       .select(col("tkey").as("_tkey"), col("embedding"))

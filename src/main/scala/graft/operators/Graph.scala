@@ -33,6 +33,17 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
+  /** Most ranks per shuffle partition for which [[pagerank]] hash-joins
+    * its rank frame. A hash join's build map cannot spill; at ~100
+    * bytes per rank row the bound caps it near 50 MB, under a task's
+    * share of a default 1 GB, 4-core executor. */
+  val MaxHashJoinNodesPerPartition: Long = 500000L
+
+  /** Whether [[pagerank]] hash-joins `nodes` ranks spread over
+    * `partitions` shuffle partitions; above the bound it sort-merges. */
+  def hashJoinRanks(nodes: Long, partitions: Int): Boolean =
+    nodes / math.max(1, partitions) < MaxHashJoinNodesPerPartition
+
   /** Fixed-point PageRank over a directed edge list. Every node must
     * appear as a source (feed an undirected graph as both directions —
     * the bipartite co-purchase case); nodes reachable only as `dst`
@@ -65,8 +76,7 @@ object Graph {
                iterations: Int, scale: Long = 1000000000000L,
                damp: Int = 85, checkpointEvery: Int = 5,
                checkpointDir: Option[String] = None,
-               noSinks: Boolean = false,
-               hashJoinRanks: Boolean = true): DataFrame = {
+               noSinks: Boolean = false): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damp >= 0 && damp <= 100, s"damp must be in [0,100], got $damp")
     require(checkpointEvery >= 1,
@@ -151,6 +161,8 @@ object Graph {
       (edC, degC, degC.count())
     }
     require(n > 0, "pagerank needs at least one source node")
+    val hashJoin = hashJoinRanks(n,
+      edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
     val base = lit(((100 - damp) * (scale / n)) / 100)
     var ranks = deg.select(col("node"), lit(scale / n).as("rank"))
     for (i <- 1 to iterations) {
@@ -170,12 +182,8 @@ object Graph {
       // loop cost; the exchange itself is AQE-reused). Join strategy
       // never changes the joined rows, and the dst aggregation is an
       // order-independent integer sum, so ranks are bit-identical.
-      // `hashJoinRanks = false` is the escape hatch for callers whose
-      // per-partition rank slice cannot be assumed to fit in task
-      // memory (a ShuffledHashJoin build map does not spill — the
-      // OOM-vs-spill trade of guide §3.1): billions of nodes on few,
-      // small partitions should keep the sort-merge default.
-      ranks = (if (hashJoinRanks) ranks.hint("shuffle_hash") else ranks)
+      // Past [[MaxHashJoinNodesPerPartition]] the join sort-merges.
+      ranks = (if (hashJoin) ranks.hint("shuffle_hash") else ranks)
         .join(ed, col("node") === col("src"))
         .select(col("dst"), expr("rank div deg").as("_c"))
         .unionByName(deg.select(col("node").as("dst"), lit(0L).as("_c")))

@@ -335,22 +335,13 @@ object Search {
                    dim: Int = 16): DataFrame = {
     require(queryTokens.nonEmpty && queryTokens.distinct == queryTokens,
       "query tokens must be non-empty and distinct")
-    val sp = df.sparkSession
-    import sp.implicits._
-    // chunk embeddings ride the scan: the fused one-pass
-    // HashEmbed expression (spec-pinned == embedDense) replaces the
-    // aggregate embedder's two corpus-wide shuffles — measured
-    // 2.5 s -> map speed on sf0.1 chunks
+    // chunk embeddings ride the scan (one map-side expression per
+    // chunk); the query tokens embed on the driver with the same kernel
     val base = TextAnalysis.chunkDocs(
         df.select(col(idCol), coalesce(col(textCol), lit("")).as(textCol)),
         textCol, idCol, chunkTokens, strideTokens)
-      .select(col(idCol),
-        graft.functions.TextExprs.hashEmbedCol(
-          Dedup.words(col("chunk_text")), dim).as("embedding"))
-    val qdf = queryTokens.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("_qid", "_t")
-    val qvecs: Seq[Seq[Double]] = Embed.embedDense(qdf, "_t", "_qid", dim)
-      .orderBy(col("_qid")).collect().map(_.getSeq[Double](1)).toSeq
+      .select(col(idCol), Embed.embedCol(col("chunk_text"), dim).as("embedding"))
+    val qvecs: Seq[Seq[Double]] = queryTokens.map(t => Embed.embedText(t, dim).toSeq)
     val withSims = qvecs.zipWithIndex.foldLeft(base) { case (acc, (qv, i)) =>
       acc.withColumn(s"_sim$i",
         graft.functions.Vectors.dot(col("embedding"), typedlit(qv)))
@@ -378,24 +369,22 @@ object Search {
     *
     * The semantic arm embeds the corpus with the deterministic
     * hash-ngram embedder ([[Embed.embedDense]] — the documented stand
-    * -in for a model endpoint) and scores cosine distance against the
-    * embedded `queryText`; swap in a real embedding column and the
-    * plan shape is unchanged. Both arms end in bounded TopKAgg pools
-    * of `poolK` rows, so the fusion itself touches ≤ 2·poolK rows —
-    * driver-safe at any corpus size. */
+    * -in for a model endpoint) and scores cosine distance against
+    * `queryText`, embedded on the driver ([[Embed.embedText]]); swap
+    * in a real embedding column and the plan shape is unchanged. Both
+    * arms end in bounded TopKAgg pools of `poolK` rows, so the fusion
+    * itself touches ≤ 2·poolK rows — driver-safe at any corpus size. */
   def hybridSearch(df: DataFrame, textCol: String, idCol: String,
                    terms: Seq[String], queryText: String, k: Int,
                    dim: Int = 16, poolK: Int = 20, fusionK: Int = 60): DataFrame = {
     val sp = df.sparkSession
     import sp.implicits._
     // NULL text scores like '' in BOTH arms: bm25Scored coalesces
-    // internally, but the embedder explodes words(text) and would
-    // silently DROP null-text rows from the vector pool
+    // internally, but the embedder drops null-text rows and would
+    // silently shrink the vector pool
     val docs = df.select(col(idCol), coalesce(col(textCol), lit("")).as(textCol))
-    // embed the one-row query with the SAME embedder/dim as the corpus
-    val qdf = Seq((0L, queryText)).toDF(idCol, textCol)
-    val qvec = Embed.embedDense(qdf, textCol, idCol, dim)
-      .select(col("embedding")).head().getSeq[Double](0)
+    // embed the query on the driver with the SAME kernel/dim as the corpus
+    val qvec = Embed.embedText(queryText, dim)
     // BOTH arms end in bounded TopKAgg pools of ≤ poolK rows, so
     // everything downstream of them is model-sized (the AnnIvf.train
     // collect contract). Collect the two pools in ONE union job — the

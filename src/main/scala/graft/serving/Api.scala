@@ -23,10 +23,11 @@ final case class ApiResponse(status: Int, body: String)
   *  - the collection registry opens what's on disk, like the Go
   *    server's startup scan, and DELETE of an absent collection is a
   *    200 "did not exist" (rest.go:192-199);
-  *  - text records embed through the library's deterministic
-  *    [[graft.operators.Embed]] stub in ONE batch per request
-  *    (rest.go:251-272 batches its embedText call the same way) —
-  *    the reference's Ollama client is unreachable offline;
+  *  - text records and search strings embed on the driver through
+  *    the library's deterministic [[graft.operators.Embed.embedText]]
+  *    stub, with no Spark job (rest.go:251-272 calls its embedText
+  *    per request) — the reference's Ollama client is unreachable
+  *    offline;
   *  - searches run through [[Collection.searchWithStats]], so the
   *    response carries the same percent_searched / search_time /
   *    embedding_time telemetry (rest.go:455-476).
@@ -239,18 +240,10 @@ final class Api(spark: SparkSession, rootDir: String) {
           if (specs.exists(s => s._2.isEmpty && s._3.isEmpty))
             err(400, "Either vector or text must be provided")
           else {
-            // embed every text-only record in ONE batch (rest.go:251)
-            val toEmbed = specs.zipWithIndex.collect {
-              case ((_, None, Some(t), _), i) => (i.toLong, t)
-            }
-            val embedded: Map[Long, Seq[Double]] =
-              if (toEmbed.isEmpty) Map.empty
-              else Embed.embedDense(
-                  spark.createDataFrame(toEmbed).toDF("eid", "text"),
-                  "text", "eid", c.options.dimensionCount)
-                .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-            val rows = specs.zipWithIndex.map { case ((id, vec, _, meta), i) =>
-              (id, vec.map(_.toSeq).getOrElse(embedded(i.toLong)), meta)
+            // text-only records embed on the driver (rest.go:251)
+            val rows = specs.map { case (id, vec, text, meta) =>
+              (id, vec.map(_.toSeq).getOrElse(
+                Embed.embedText(text.get, c.options.dimensionCount).toSeq), meta)
             }
             // the reference log.Panicf's on a dimension mismatch
             // (collection.go:431-433); that panic maps to a clean 400
@@ -354,12 +347,8 @@ final class Api(spark: SparkSession, rootDir: String) {
           if (!filterOk) err(400, "Invalid filter query")
           else {
             val t0 = System.nanoTime()
-            val textVec = str(j \ "text").filter(_.nonEmpty).map { t =>
-              Embed.embedDense(
-                  spark.createDataFrame(Seq((0L, t))).toDF("eid", "text"),
-                  "text", "eid", c.options.dimensionCount)
-                .collect().head.getSeq[Double](1)
-            }
+            val textVec = str(j \ "text").filter(_.nonEmpty)
+              .map(t => Embed.embedText(t, c.options.dimensionCount).toList)
             val embedMs = (System.nanoTime() - t0) / 1000000L
             // non-empty text wins over an explicit vector: rest.go:441-449
             // embeds the text and OVERWRITES searchArgs.Vector with it

@@ -18,20 +18,14 @@ object Sources {
     StructField("text", StringType),
     StructField("metadata", StringType)))
 
-  private def canonical(df: DataFrame, embedDim: Int): DataFrame = {
-    // records without an explicit vector get the deterministic text
-    // embedding (the reference calls Ollama here; see Embed scaladoc)
-    val withVec = df.withColumn("_needs_embed",
-      col("vector").isNull && col("text").isNotNull)
-    val direct = withVec.filter(!col("_needs_embed"))
-      .select(col("id"), col("vector"), col("metadata"))
-    val embedded = graft.operators.Embed.embedDense(
-        withVec.filter(col("_needs_embed")), "text", "id", embedDim)
-      .withColumnRenamed("embedding", "vector")
-      .join(withVec.select(col("id"), col("metadata")), "id")
-      .select(col("id"), col("vector"), col("metadata"))
-    direct.unionByName(embedded)
-  }
+  /** One output row per input row: records without an explicit vector
+    * get the deterministic text embedding of their own row (the
+    * reference calls Ollama here; see Embed scaladoc). */
+  private def canonical(df: DataFrame, embedDim: Int): DataFrame =
+    df.select(col("id"),
+      coalesce(col("vector"), graft.operators.Embed.embedCol(col("text"), embedDim))
+        .as("vector"),
+      col("metadata"))
 
   /** JSON-lines records (the REST insert payload shape, one per line). */
   def jsonRecords(spark: SparkSession, path: String, embedDim: Int = 16): DataFrame =

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Collection
 import graft.serving.{Api, ApiResponse}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -264,6 +265,40 @@ class ApiSpec extends SparkSpec {
     assert(results.map(res => num(res \ "id")) == List(Some(1.0)))
     assert(num(results.head \ "distance").exists(_ < 1e-9))
     assert(num(json(s) \ "embedding_time").isDefined)
+  }
+
+  test("text embeds on the driver: stored bits equal the reference, no embedding job") {
+    val root = java.nio.file.Files.createTempDirectory("graft-api-emb").toString
+    val api = new Api(spark, root)
+    val r = api.handle("POST", "/api/v1/collections",
+      """{"name": "emb", "vector_size": 16, "distance_function": "euclidean"}""")
+    assert(r.status == 201, r.body)
+    val text = "the quick brown fox the"
+    val ref = HashEmbedRef.embed(text, 16)
+    def post(path: String, body: String): ApiResponse = {
+      val resp = api.handle("POST", s"/api/v1/collections/emb/$path", body)
+      assert(resp.status < 300, resp.body)
+      resp
+    }
+    def vec(v: Seq[Double]) = v.mkString("[", ",", "]")
+    post("records", s"""[{"id": 0, "vector": ${vec(HashEmbedRef.embed("warm up", 16))}, "metadata": {}}]""")
+    // a text-only insert runs the jobs an insert of its vector runs
+    val textInsert = jobsOf(post("records", s"""[{"id": 1, "text": "$text", "metadata": {}}]"""))
+    val vecInsert = jobsOf(post("records",
+      s"""[{"id": 2, "vector": ${vec(HashEmbedRef.embed("other words", 16))}, "metadata": {}}]"""))
+    assert(textInsert.size == vecInsert.size, s"text: $textInsert; vector: $vecInsert")
+    assert(Collection.open(spark, s"$root/emb").getDocument(1L).map(_._1).contains(ref))
+    // and a text search the jobs of a search by its vector
+    post("search", s"""{"vector": ${vec(ref)}, "k": 1, "precision": "exact"}""")
+    var hit: ApiResponse = null
+    val textSearch = jobsOf {
+      hit = post("search", s"""{"text": "$text", "k": 1, "precision": "exact"}""")
+    }
+    val vecSearch = jobsOf(post("search", s"""{"vector": ${vec(ref)}, "k": 1, "precision": "exact"}"""))
+    assert(textSearch.size == vecSearch.size, s"text: $textSearch; vector: $vecSearch")
+    val results = (json(hit) \ "results").asInstanceOf[JArray].arr
+    assert(results.map(res => num(res \ "id")) == List(Some(1.0)))
+    assert(num(results.head \ "distance").contains(0.0))
   }
 
   test("compact endpoint: retention window controllable, generations in stats") {

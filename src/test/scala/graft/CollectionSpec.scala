@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.core.{Collection, CollectionOptions, SearchArgs}
 import graft.operators.{AnnLsh, Knn}
@@ -24,30 +23,6 @@ class CollectionSpec extends SparkSpec {
     (2L, Seq(1.0, 0.0, 0.0, 0.0), """{"tag": "b"}"""),
     (3L, Seq(0.0, 5.0, 0.0, 0.0), """{"tag": "a"}""")
   ).toDF("id", "vector", "metadata")
-
-  /** The stage names of each job `body` runs on this thread. A fence
-    * job run after `body` bounds the listener events to wait for. */
-  private def jobsOf(body: => Unit): Seq[Seq[String]] = {
-    val sc = spark.sparkContext
-    val group = "jobsOf-" + java.util.UUID.randomUUID()
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add((Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull,
-          e.stageInfos.map(_.name)))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "jobsOf")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(group + "-fence", "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.asScala.exists(_._1 == group + "-fence") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-    } finally sc.removeSparkListener(listener)
-    seen.asScala.collect { case (g, stages) if g == group => stages }.toSeq
-  }
 
   private def builds(jobs: Seq[Seq[String]]): Int =
     jobs.count(_.exists(_.startsWith("localCheckpoint")))
@@ -579,6 +554,24 @@ class CollectionSpec extends SparkSpec {
     add(2L)
     val both = jobsOf(assert(c.documentCount() == 2))
     assert(both.size == build.size + 1, s"build: $build; build and count: $both")
+  }
+
+  test("a snapshot build names all its jobs' stages and restores the caller's call site") {
+    val c = newCollection()
+    c.addDocuments(docs3)
+    val read = jobsOf(assert(c.documentCount() == 3))
+    // AQE's shuffle-map job runs on another thread; unlabelled, its
+    // stage is named after that thread's frame
+    assert(!read.flatten.exists(_.contains("withThreadLocalCaptured")), s"$read")
+    // every job but the count is the build's
+    assert(builds(read) == read.size - 1, s"$read")
+    c.removeDocuments(Seq(3L))
+    val sc = spark.sparkContext
+    sc.setCallSite("caller site")
+    try {
+      assert(c.documentCount() == 2)
+      assert(sc.getLocalProperty("callSite.short") == "caller site")
+    } finally sc.clearCallSite()
   }
 
   test("empty writes append nothing and keep the snapshot") {

@@ -358,12 +358,17 @@ class DedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ecache1").toFile.getAbsolutePath
     val batch = Seq((1L, "alpha beta gamma"), (2L, "delta epsilon")).toDF("doc_id", "text")
     val res = Embed.embedWithCache(spark, batch, "text", "doc_id", 8, s"$dir/cache")
-    // the embedder plan contains a Generate (explode over words); the
-    // RETURNED plan must not — misses are joined back from the parquet
-    // rows the append wrote, so consuming the result cannot re-run the
-    // expensive embed stage (the operator's whole reason to exist)
+    // the embedder is the graft_hash_embed expression; the RETURNED
+    // plan must not contain it — misses are joined back from the
+    // parquet rows the append wrote, so consuming the result cannot
+    // re-run the expensive embed stage (the operator's whole reason
+    // to exist). The analyzed plan is searched: the optimizer folds
+    // the expression over a local batch into a LocalRelation.
+    def analyzed(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed.toString
+    assert(!analyzed(res).contains("graft_hash_embed"),
+      s"embedder re-runs on the serve path:\n${analyzed(res)}")
+    assert(analyzed(Embed.embedDense(batch, "text", "doc_id", 8)).contains("graft_hash_embed"))
     val plan = res.queryExecution.optimizedPlan.toString
-    assert(!plan.contains("Generate"), s"embedder re-runs on the serve path:\n$plan")
     assert(plan.toLowerCase.contains("parquet"), s"serve path does not read the cache:\n$plan")
     // and the served values are still bit-identical to a fresh embed
     val got = res.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap

@@ -121,6 +121,17 @@ class GraphSpec extends SparkSpec {
     assert(fast == localPagerank(sym, 5))
   }
 
+  test("the rank join is a hash join below the per-partition node bound, sort-merge above") {
+    val b = Graph.MaxHashJoinNodesPerPartition
+    assert(Graph.hashJoinRanks(b * 4 - 1, 4))
+    assert(!Graph.hashJoinRanks(b * 4, 4))
+    assert(Graph.hashJoinRanks(b - 1, 1) && !Graph.hashJoinRanks(b, 1))
+    // the small test graph takes the hash join
+    val plan = Graph.pagerank(rawEdges.toDF("src", "dst"), "src", "dst", 2)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("ShuffledHashJoin") && !plan.contains("SortMergeJoin"), plan)
+  }
+
   test("total mass stays within the floor-division leak bound") {
     val edges = rawEdges.toDF("src", "dst")
     val scale = 1000000000000L

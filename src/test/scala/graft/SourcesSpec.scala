@@ -23,6 +23,22 @@ class SourcesSpec extends SparkSpec {
     assert(v2.size == 2 && math.abs(math.sqrt(v2.map(x => x * x).sum) - 1.0) < 1e-9)
   }
 
+  test("jsonRecords emits one row per input row when a vector and a text record share an id") {
+    val dir = Files.createTempDirectory("graft-src-dup")
+    Files.writeString(dir.resolve("records.json"),
+      """{"id": 7, "vector": [0.1, 0.2], "metadata": "{\"k\":1}"}
+        |{"id": 7, "text": "hello world", "metadata": "{\"k\":2}"}
+        |{"id": 8, "metadata": "{\"k\":3}"}
+        |""".stripMargin)
+    val got = Sources.jsonRecords(spark, dir.toString, embedDim = 4)
+      .as[(Long, Option[Seq[Double]], String)].collect()
+    assert(got.length == 3, got.toSeq)
+    assert(got.toSet == Set(
+      (7L, Some(Seq(0.1, 0.2)), """{"k":1}"""),
+      (7L, Some(HashEmbedRef.embed("hello world", 4)), """{"k":2}"""),
+      (8L, None, """{"k":3}""")))
+  }
+
   test("collection round-trip: ingest -> search -> dump") {
     val src = Files.createTempDirectory("graft-src2")
     Files.writeString(src.resolve("r.json"),

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -20,6 +22,30 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** The stage names of each job `body` runs on this thread. A fence
+    * job run after `body` bounds the listener events to wait for. */
+  def jobsOf(body: => Unit): Seq[Seq[String]] = {
+    val sc = spark.sparkContext
+    val group = "jobsOf-" + java.util.UUID.randomUUID()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add((Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull,
+          e.stageInfos.map(_.name)))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobsOf")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.asScala.exists(_._1 == group + "-fence") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.collect { case (g, stages) if g == group => stages }.toSeq
   }
 }
 

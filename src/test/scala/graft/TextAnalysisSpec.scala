@@ -118,22 +118,47 @@ class TextAnalysisSpec extends SparkSpec {
     assert(top(1) == (("b c a", 1L, 1L)))
   }
 
-  test("HashEmbed expression is bit-identical to the aggregate embedDense") {
-    val docs = Seq(
-      (1L, "the quick brown fox the quick"),
-      (2L, "vector stream filter join merge scan"),
-      (3L, ""),
-      (4L, "solo")
-    ).toDF("doc_id", "text")
-    val agg = graft.operators.Embed.embedDense(docs, "text", "doc_id", 16)
-      .select("doc_id", "embedding").as[(Long, Seq[Double])].collect().toMap
+  /** Texts whose splitting is easy to get wrong: empty, leading,
+    * trailing and doubled spaces, a repeated word, a non-ASCII word. */
+  private val embedTexts = Seq(
+    "the quick brown fox the quick", "vector stream filter join merge scan",
+    "", "solo", " a", "a ", "a  b", "naïve café 東京 naïve")
+
+  test("HashEmbed expression is bit-identical to the test reference embedder") {
+    val docs = embedTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
     val fused = docs.select(col("doc_id"),
         graft.functions.TextExprs.hashEmbedCol(
           graft.operators.Dedup.words(col("text")), 16).as("e"))
       .as[(Long, Seq[Double])].collect().toMap
+    val ref = embedTexts.zipWithIndex.map { case (t, i) => i.toLong -> HashEmbedRef.embed(t, 16) }
+      .toMap
     // exact equality, not tolerance: same counts, same integer Σc²,
     // same divisions
-    assert(fused == agg, s"fused $fused vs aggregate $agg")
+    assert(fused == ref, s"fused $fused vs reference $ref")
+  }
+
+  test("Embed.embedText equals embedDense bit for bit, one row per input row") {
+    import graft.operators.Embed
+    val uniq = embedTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val docs = (uniq :+ uniq.head).toDF("doc_id", "text")
+    val dense = Embed.embedDense(docs, "text", "doc_id", 16)
+      .as[(Long, Seq[Double])].collect()
+    // a repeated id keeps each of its rows
+    assert(dense.length == embedTexts.size + 1)
+    dense.foreach { case (id, v) =>
+      val t = embedTexts(id.toInt)
+      assert(Embed.embedText(t, 16).toSeq == v, s"'$t'")
+      assert(v == HashEmbedRef.embed(t, 16), s"'$t'")
+    }
+    // embed_text's sparse form is the dense form's nonzero entries
+    val sparse = Embed.embedSparse(uniq.toDF("doc_id", "text"), "text", "doc_id", 16)
+      .as[(Long, Long, Double)].collect().toSet
+    val expected = embedTexts.indices.flatMap { i =>
+      HashEmbedRef.embed(embedTexts(i), 16).zipWithIndex
+        .collect { case (w, b) if w != 0.0 => (i.toLong, b.toLong, w) }
+    }.toSet
+    assert(sparse == expected)
   }
 
   test("charEntropy: uniform chars score 0, ln(2) for a 50/50 mix, NULL keeps row") {
