@@ -1,6 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -14,20 +16,14 @@ import graft.query.FilterCompiler
   * lshtree.go:88): `lshTables` independent `lshPlanes`-plane tables,
   * candidates from the union of the query's buckets — recall
   * compounds with the table count while each table's probe stays
-  * narrow. The default single table is the one-table forest.
-  * `lshProbes` > 1 adds query-directed multiprobe (Lv et al. 2007) to
-  * k-NN: each table also probes its lowest-|margin| bit flips — the
-  * analogue of the reference's boundary backtracking
-  * (lshtree.go:283-336). Same recall/mass frontier with ~probes-x
-  * fewer tables, so a persisted forest index shrinks accordingly. */
+  * narrow. The default single table is the one-table forest. */
 final case class CollectionOptions(
     name: String,
     dimensionCount: Int,
     distanceMethod: Knn.Metric = Knn.Cosine,
     quantization: Int = 64,
     lshPlanes: Int = 4,
-    lshTables: Int = 1,
-    lshProbes: Int = 1)
+    lshTables: Int = 1)
 
 /** Search arguments mirroring the reference's SearchArgs
   * (collection.go:160-183): k-NN, radius, exhaustive listing with
@@ -55,175 +51,168 @@ final case class SearchResults(results: DataFrame, percentSearched: Double)
   * is an appended batch, and every read is a plan over a snapshot of
   * "latest version per id, minus tombstones".
   *
+  * Which parquet files are live and which version comes next are
+  * recorded in one place, as the reference's one span file records
+  * them (spanfile.go): an append-only commit log beside the data, one
+  * file `path._log/<v>.json` per write, as in the Delta Lake
+  * transaction log (Armbrust et al., VLDB 2020). A write mints `v` =
+  * latest commit + 1, writes its batch (with `version` = `v`) into a
+  * directory of its own and [[publish]]es commit `v` naming its files;
+  * a read takes exactly the files the commits name, from the newest
+  * base commit ([[compact]]) on. So a reader sees a batch whole or not
+  * at all, and a parquet file no commit names is never read.
+  *
   * The snapshot ([[current]]) is that view materialized once per
-  * observable log state and reused by every read until the state
-  * changes — the reference likewise probes records it already holds
-  * (collection.go:569-712) instead of replaying its log per search.
-  *  - Key: the live log directory plus the name, length and
-  *    modification time of each of its parquet files. Any write on
-  *    the path changes it — this instance's, another `Collection`'s
-  *    on the same path, a compaction, a file rewritten in place — so
-  *    the next read lists the log, sees a new key and rebuilds. The
-  *    listing takes the write lock, so a batch this instance appends
-  *    is seen whole or not at all.
-  *  - Build: exactly the key's files, the fixed log schema, the
+  * commit and reused by every read until the next one — the reference
+  * likewise probes records it already holds (collection.go:569-712)
+  * instead of replaying its log per search.
+  *  - Key: the latest commit number. Commits are immutable, so each
+  *    is parsed once, in any call order.
+  *  - Build: exactly the commits' files, the fixed log schema, the
   *    current-view window, then `localCheckpoint` to DISK_ONLY. The
-  *    heap holds none of the view's rows; one build per key, and its
-  *    row count is memoized, so counts and stats run no job.
+  *    heap holds none of the view's rows; one build per commit, and
+  *    its row count is memoized, so counts and stats run no job.
   *  - Release: a superseded snapshot is never unpersisted explicitly.
   *    Spark's ContextCleaner frees its blocks once nothing references
   *    it, so a plan a caller still holds keeps reading across any
   *    number of writes and compactions. Do not `persist` or
   *    `unpersist` what [[current]] returns.
   *
-  * Storage layout (`path/`): parquet files with columns
-  * (id long, vector array<double>, metadata string-json,
-  * version long, deleted boolean). At 100 TB the log would be
-  * partitioned/bucketed by id range and compacted periodically; the
-  * current-view window then shuffles only new deltas.
+  * Storage layout: parquet files with columns (id long, vector
+  * array<double>, metadata string-json, version long, deleted
+  * boolean), one directory per batch inside `path/` before the first
+  * compaction and inside `path.genN/` after it. At 100 TB the log
+  * would be partitioned/bucketed by id range and compacted
+  * periodically; the current-view window then shuffles only new
+  * deltas.
   */
 final class Collection(spark: SparkSession, val options: CollectionOptions, path: String) {
-  import Collection.{LogSchema, LogState}
+  import Collection.{Commit, LogSchema, generationDirs, generationName, readText}
 
   // resolve the filesystem FROM the collection path, not the default
   // scheme: a collection on s3a://... must list/delete on that store,
   // not on whatever fs.defaultFS points at
-  private def fs() = new org.apache.hadoop.fs.Path(path)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fs() = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Generation dirs produced by [[compact]]: `path.genN`. A
-    * generation is only real once its `_SUCCESS` marker exists (the
-    * last file Spark's committer writes), so "which data is current"
-    * flips atomically with that marker — a crash at ANY point of a
-    * compaction leaves the previous generation fully readable. */
-  private def completeGens(): Seq[Int] = {
+  private val name = new Path(path).getName
+
+  /** The commit log: beside the data, since compaction retires `path`. */
+  private val logDir = new Path(s"$path._log")
+
+  private def commitPath(v: Long) = new Path(logDir, s"$v.json")
+
+  /** A file or directory as commits name it: relative to the directory
+    * holding `path`, so the collection moves as a whole. */
+  private def resolve(rel: String) = new Path(new Path(path).getParent, rel)
+
+  /** The parquet files directly in directory `rel`, named like a
+    * commit names them. */
+  private def parquetIn(rel: String): Seq[String] =
+    fs().listStatus(resolve(rel)).toSeq.map(_.getPath.getName)
+      .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
+      .sorted.map(n => s"$rel/$n")
+
+  /** The commit numbers in the log, ascending. */
+  private def listCommits(): Seq[Long] =
+    try fs().listStatus(logDir).toSeq.map(_.getPath.getName).filter(_.endsWith(".json"))
+      .flatMap(_.stripSuffix(".json").toLongOption).sorted
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** A log written before the commit log existed (parquet files in
+    * `path` or `path.genN`, no commit) is adopted once, on first
+    * access: one commit names the files of the directory that layout
+    * served — the highest generation with a `_SUCCESS` marker, else
+    * `path` — numbered from one aggregate of their max version. */
+  private lazy val adopted: Unit = if (listCommits().isEmpty) {
     val f = fs()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val parent = p.getParent
-    if (parent == null || !f.exists(parent)) return Seq.empty
-    val prefix = p.getName + ".gen"
-    f.listStatus(parent).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith(prefix))
-      .flatMap(g => g.getName.stripPrefix(prefix).toIntOption.map(n => (n, g)))
-      .filter { case (_, g) =>
-        f.exists(new org.apache.hadoop.fs.Path(g, "_SUCCESS")) }
-      .map(_._1)
-  }
-
-  /** Where the live log lives: the highest COMPLETE generation, or the
-    * original `path` before any compaction. */
-  private def dataPath(): String =
-    completeGens().maxOption.map(n => s"$path.gen$n").getOrElse(path)
-
-  /** The log's observable state: the directory [[dataPath]] resolves
-    * to, and the name, length and modification time of each parquet
-    * file in it. A write by any `Collection` on this path — an append,
-    * a compaction, a file rewritten in place — changes it. */
-  private def logState(): LogState = {
-    val dir = dataPath()
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val f = fs()
-    val files =
-      if (!f.exists(p)) Nil
-      else f.listStatus(p).toSeq.map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
-        .filter { case (n, _, _) => n.endsWith(".parquet") && !n.startsWith("_") }
-        .sorted
-    LogState(dir, files)
-  }
-
-  /** Exactly the files of `state`, under the fixed log schema (no
-    * inference, and a file appended after the listing is not read). */
-  private def read(state: LogState): DataFrame =
-    if (state.files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        LogSchema)
-    else spark.read.schema(LogSchema).parquet(state.paths.map(_.toString): _*)
-
-  /** Max version of each log file whose footer [[nextVersion]] has
-    * read, keyed by (dir, name, length, modification time): the file
-    * identity [[LogState]] uses, so a file rewritten in place gets a
-    * new key and is read again. Guarded by [[writeLock]]. Each
-    * successful [[nextVersion]] replaces it with the entries of the
-    * state it listed, so it never holds more than the live log's
-    * files, and a compaction's new directory starts it afresh. */
-  private var footerMax = Map.empty[(String, String, Long, Long), Long]
-
-  /** Max version of one log file from its parquet FOOTER statistics:
-    * zero row data (every appended batch carries one constant
-    * version, so file-level min/max stats are exact). -1 for a file
-    * with no rows; throws if a row group lacks stats for the column. */
-  private def footerMaxVersion(p: org.apache.hadoop.fs.Path): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p,
-      spark.sparkContext.hadoopConfiguration)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    var mx = -1L
-    try {
-      reader.getFooter.getBlocks.forEach { b =>
-        b.getColumns.forEach { c =>
-          if (c.getPath.toDotString == "version") {
-            val st = c.getStatistics
-            if (st == null || !st.hasNonNullValue)
-              throw new IllegalStateException(s"no version stats in $p")
-            mx = math.max(mx, st.genericGetMax.asInstanceOf[java.lang.Long].longValue)
-          }
+    generationDirs(f, path)
+      .filter { case (n, d) => n == 0 || f.exists(new Path(d, "_SUCCESS")) }
+      .lastOption.foreach { case (n, _) =>
+        val files = parquetIn(generationName(name, n))
+        if (files.nonEmpty) {
+          val top = read(files).agg(max(col("version"))).head()
+          publish(Commit(if (top.isNullAt(0)) 0L else math.max(0L, top.getLong(0)),
+            Some(n).filter(_ > 0), files))
         }
       }
-    } finally reader.close()
-    mx
   }
 
-  /** One above the max version of `state`, from footer statistics:
-    * the scale answer to a monotonic version counter without a
-    * coordination service. Footer reads are O(files not yet seen):
-    * a file already in [[footerMax]] under the same key is not
-    * opened again, so a write's cost does not grow with the log.
-    * Falls back to a full aggregate, reported on stderr and not
-    * cached, only if a footer cannot be read or lacks stats. */
-  private def nextVersion(state: LogState): Long =
+  /** The log's commits, after adopting a log of the older layout. */
+  private def commits(): Seq[Long] = { adopted; listCommits() }
+
+  /** Each commit read so far, by number. Commits are immutable, so an
+    * entry is never stale; entries below the oldest listed commit
+    * (retired by [[compact]]) are dropped. */
+  private val parsed = new java.util.concurrent.ConcurrentHashMap[Long, Commit]()
+
+  private def commitAt(v: Long): Commit =
+    parsed.computeIfAbsent(v, _ => Commit.parse(readText(fs(), commitPath(v))))
+
+  /** Publishes `c` as commit `c.version`, atomically and never over an
+    * existing commit: a reader sees it whole or not at all, and of two
+    * writers publishing one number exactly one wins. The commit is
+    * written in full to a temp file, then linked into place; a hard
+    * link fails if the name exists, while `create(overwrite = false)`
+    * checks and then opens, so two writers could both pass its check.
+    * Off the local filesystem `rename` is the step, which HDFS refuses
+    * over an existing file. False if the number was taken. */
+  private[graft] def publish(c: Commit): Boolean = {
+    val f = fs()
+    val dst = commitPath(c.version)
+    val tmp = new Path(logDir, s".${c.version}.${java.util.UUID.randomUUID()}.tmp")
+    val out = f.create(tmp, false)
+    try out.write(c.json.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
     try {
-      val maxes = state.files.map { case (n, len, mtime) =>
-        val key = (state.dir, n, len, mtime)
-        key -> footerMax.getOrElse(key,
-          footerMaxVersion(new org.apache.hadoop.fs.Path(state.dir, n)))
-      }
-      footerMax = maxes.toMap
-      maxes.map(_._2).maxOption.getOrElse(-1L) + 1
-    } catch {
-      case e: Exception =>
-        System.err.println(s"Collection.nextVersion: footer read of ${state.dir} failed " +
-          s"(${e.getClass.getName}: ${e.getMessage}); aggregating the log instead")
-        read(state).agg(coalesce(max(col("version")), lit(-1L))).head().getLong(0) + 1
-    }
+      if (f.getScheme == "file") {
+        def local(p: Path) = java.nio.file.Paths.get(f.makeQualified(p).toUri)
+        try { java.nio.file.Files.createLink(local(dst), local(tmp)); true }
+        catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      } else f.rename(tmp, dst)
+    } finally f.delete(tmp, false)
+  }
 
-  /** How many files' maxima [[footerMax]] holds: never more than the
-    * live log's files. */
-  private[graft] def footersCached: Int = writeLock.synchronized(footerMax.size)
+  /** Exactly `files`, under the fixed log schema (no inference). */
+  private def read(files: Seq[String]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], LogSchema)
+    else spark.read.schema(LogSchema).parquet(files.map(resolve(_).toString): _*)
 
-  /** Mutations serialize on this per-collection lock — the analogue of
-    * the reference's per-collection mutex (collection.go lock
-    * discipline). Every write is read-version-then-append: two
-    * unserialized writers could mint the SAME version for different
-    * batches and make "latest version per id" ambiguous, so the
-    * critical section spans both steps.
-    *  - A write whose rows are already on the driver — a `Seq` of
-    *    tombstone ids, the one row of [[updateMetadata]], a
-    *    [[addDocuments]] frame whose optimized plan is a
-    *    `LocalRelation` — lands as exactly one parquet file, so the
-    *    log (and each later listing, footer pass and snapshot scan)
-    *    grows by one file per such write, not by one per core.
-    *  - A distributed frame keeps its partitioning and lands as
-    *    several files, renamed into place one by one, so a reader
-    *    lists the log under this lock too (see [[snapshot]]) and sees
-    *    an in-process batch whole or not at all.
-    * [[compact]] keeps the previous generation on disk (its retention
-    * window, default 1), so a snapshot being built from the OLD
-    * generation across one concurrent compaction still reads it. On
-    * a multi-writer cluster this lock would be a transaction-log
-    * protocol instead (single-JVM serving façade contract). */
+  /** Serializes this instance's writers, so they do not race each
+    * other for a commit number — the analogue of the reference's
+    * per-collection mutex (collection.go lock discipline). Writers of
+    * other instances, in this JVM or another, race at [[publish]]
+    * instead, and the loser retries. Readers never take it.
+    * A write whose rows are already on the driver — a `Seq` of
+    * tombstone ids, the one row of [[updateMetadata]], a
+    * [[addDocuments]] frame whose optimized plan is a `LocalRelation`
+    * — lands as exactly one parquet file, so each snapshot scan grows
+    * by one file per such write, not by one per core. */
   private val writeLock = new Object
 
-  private def append(batch: DataFrame): Unit =
-    batch.write.mode("append").parquet(dataPath())
+  /** Appends one batch: mints `v` = latest commit + 1, writes
+    * `batch(snapshot, v)` into a directory of its own inside the live
+    * generation and publishes commit `v` naming its files. If another
+    * writer took `v`, the directory is deleted and the batch made again
+    * at the next version, so a batch's `version` always equals its
+    * commit number. `None` appends nothing; true if a commit landed. */
+  private def append(batch: (Snapshot, Long) => Option[DataFrame]): Boolean =
+    writeLock.synchronized(attempt(batch))
+
+  @annotation.tailrec
+  private def attempt(batch: (Snapshot, Long) => Option[DataFrame]): Boolean = {
+    val snap = snapshot()
+    val v = snap.head + 1
+    batch(snap, v) match {
+      case None => false
+      case Some(df) =>
+        // named like a partition, so the generation directory stays one
+        // parquet dataset that other readers can list
+        val dir = s"${generationName(name, snap.generation)}/batch=v$v-${java.util.UUID.randomUUID()}"
+        df.write.parquet(resolve(dir).toString)
+        if (publish(Commit(v, None, parquetIn(dir)))) true
+        else { fs().delete(resolve(dir), true); attempt(batch) }
+    }
+  }
 
   /** AddDocument upsert (collection.go:427): vectors are stored
     * quantized per options (lossy below 32 bits, like the
@@ -234,16 +223,15 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
     *
     * If `docs`' optimized plan is a `LocalRelation` (its rows are
     * held by the driver, as for every `createDataFrame(Seq)` batch),
-    * the batch lands as one parquet file, and an empty one appends
-    * nothing and mints no version. Any other frame keeps its
-    * partitioning: one file per non-empty partition. */
-  def addDocuments(docs: DataFrame): Unit = writeLock.synchronized {
+    * the batch lands as one parquet file, and an empty one commits
+    * nothing. Any other frame keeps its partitioning: one file per
+    * non-empty partition. */
+  def addDocuments(docs: DataFrame): Unit = {
     val held = docs.queryExecution.optimizedPlan match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => Some(l.data)
       case _ => None
     }
-    if (!held.exists(_.isEmpty)) {
-      val v = nextVersion(logState())
+    if (!held.exists(_.isEmpty)) append { (_, v) =>
       val dim = options.dimensionCount
       val checked = when(col("vector").isNull || size(col("vector")) =!= dim,
         raise_error(concat(lit("record "), col("id").cast("string"),
@@ -256,52 +244,42 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
       }
       val batch = docs.select(col("id").cast("long"), vec.as("vector"),
         col("metadata").cast("string"), lit(v).as("version"), lit(false).as("deleted"))
-      append(if (held.isDefined) batch.coalesce(1) else batch)
+      Some(if (held.isDefined) batch.coalesce(1) else batch)
     }
   }
 
   /** UpdateDocument metadata (collection.go:490): rewrite metadata,
-    * keep the stored vector. The at most one row lands as one file;
-    * an absent id leaves the log as it was. */
-  def updateMetadata(id: Long, metadata: String): Unit = writeLock.synchronized {
-    val state = logState()
-    val v = nextVersion(state)
-    append(current().filter(col("id") === id)
-      .select(col("id"), col("vector"), lit(metadata).as("metadata"),
-        lit(v).as("version"), lit(false).as("deleted"))
-      .coalesce(1))
-    // Spark writes partition 0's file even when it holds no rows, so
-    // an absent id wrote one empty file: delete it, and the log state
-    // (and with it the snapshot) is what it was before this call. A
-    // footer that throws has a row group, so that file stays.
-    logState().paths.filterNot(state.paths.contains)
-      .filter(p => scala.util.Try(footerMaxVersion(p)).toOption.contains(-1L))
-      .foreach(fs().delete(_, false))
+    * keep the stored vector. The id's row is read from the snapshot
+    * the write is minted from, under the write lock; if it is absent,
+    * nothing is committed and the result is false. Otherwise the one
+    * row lands as one file and the result is true. */
+  def updateMetadata(id: Long, metadata: String): Boolean = append { (snap, v) =>
+    snap.view.filter(col("id") === id).select(col("vector")).collect().headOption.map(r =>
+      spark.createDataFrame(java.util.List.of(Row(id, r.getSeq[Double](0), metadata, v, false)),
+        LogSchema))
   }
 
   /** RemoveDocument (collection.go:511): tombstone append, as one
-    * file; no ids append nothing. */
-  def removeDocuments(ids: Seq[Long]): Unit = writeLock.synchronized {
-    if (ids.nonEmpty) {
-      val v = nextVersion(logState())
-      append(spark.createDataFrame(ids.map(i => Tuple1(i))).toDF("id")
-        .select(col("id").cast("long"), lit(null).cast("array<double>").as("vector"),
-          lit(null).cast("string").as("metadata"), lit(v).as("version"),
-          lit(true).as("deleted"))
+    * file; no ids commit nothing. */
+  def removeDocuments(ids: Seq[Long]): Unit =
+    if (ids.nonEmpty) append { (_, v) =>
+      Some(spark.createDataFrame(ids.map(i => Row(i, null, null, v, true)).asJava, LogSchema)
         .coalesce(1))
     }
-  }
 
-  /** The current view of one log state — latest version per id, minus
-    * tombstones — materialized once, on local disk. */
-  private final class Snapshot(val state: LogState) {
-    val view: DataFrame = {
+  /** The log at commit `head`: `files` are those of its newest base
+    * commit (in `generation`'s directory; 0 is `path`) and of every
+    * commit after it. The current view — latest version per id, minus
+    * tombstones — is materialized on first use, once, on local disk;
+    * concurrent readers wait for the one build. */
+  private final class Snapshot(val head: Long, val generation: Int, files: Seq[String]) {
+    lazy val view: DataFrame = {
       // names every stage of the build, AQE's shuffle-map job too: that
       // job runs on another thread, which inherits this call site
       val sc = spark.sparkContext
       val callerSite = sc.getLocalProperty("callSite.short")
       sc.setCallSite("localCheckpoint at Collection.Snapshot")
-      try Crud.currentView(read(state), "id", "version", "deleted")
+      try Crud.currentView(read(files), "id", "version", "deleted")
         .select(col("id"), col("vector"), col("metadata"))
         .localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
       finally sc.setLocalProperty("callSite.short", callerSite)
@@ -314,13 +292,22 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
   private val buildLock = new Object
   private var latest: Snapshot = null // guarded by buildLock
 
-  /** The snapshot of the log as it is now: the log is listed under
-    * [[writeLock]] and, if its state changed, one new snapshot is
-    * built; concurrent readers of that state wait for the one build. */
+  /** The snapshot at the latest commit: the log is listed, and if its
+    * latest commit number moved, the commits from the newest base on
+    * name the new snapshot's files. A listing older than the snapshot
+    * already held returns the held one. */
   private def snapshot(): Snapshot = {
-    val state = writeLock.synchronized(logState())
+    val log = commits()
+    val head = log.lastOption.getOrElse(-1L)
     buildLock.synchronized {
-      if (latest == null || latest.state != state) latest = new Snapshot(state)
+      if (latest == null || latest.head < head) {
+        log.headOption.foreach(first => parsed.keySet.removeIf(_ < first))
+        val (after, rest) = log.reverseIterator.map(commitAt).span(_.generation.isEmpty)
+        val chain = after.toList.reverse // consumed before `rest`, as `span` requires
+        val base = rest.nextOption()
+        latest = new Snapshot(head, base.flatMap(_.generation).getOrElse(0),
+          (base.toList ++ chain).flatMap(_.files))
+      }
       latest
     }
   }
@@ -353,8 +340,8 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
 
   /** The probe of a precision="medium" k-NN or radius search: the
     * rows in any of the query's forest buckets, with the keys computed
-    * once, locally, from the request vector. k-NN probes `lshProbes` keys per table; a
-    * one-table radius search probes the bucket and its Hamming-1
+    * once, locally, from the request vector. k-NN probes one key per
+    * table; a one-table radius search probes the bucket and its Hamming-1
     * neighbors, like the reference's index.search with a radius
     * (collection.go:690). None for exact searches and listings. */
   private def probe(args: SearchArgs): Option[Column] = args.vector match {
@@ -364,8 +351,7 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
         if (args.radius != 0.0 && lshTables == 1)
           (AnnLsh.hammingProbeKeysLocal(q.toArray, lshPlanes, dimensionCount), lshPlanes + 1)
         else
-          (AnnLsh.forestProbeKeysLocal(q.toArray, lshTables, lshPlanes, dimensionCount,
-            lshProbes), lshProbes)
+          (AnnLsh.forestProbeKeysLocal(q.toArray, lshTables, lshPlanes, dimensionCount, 1), 1)
       Some(LshForestHit.hit(col("vector"), keys, lshPlanes, dimensionCount, perTable))
     case _ => None
   }
@@ -424,7 +410,6 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
     * distance over a deterministic sample (the `sampleIds` lowest ids
     * — engine-reproducible, unlike the reference's RNG sampling). */
   def averageDistance(sampleIds: Int): Double = {
-    import graft.functions.Vectors
     val sample = current().orderBy(col("id")).limit(sampleIds)
       .select(col("id"), col("vector"))
     val a = sample.select(col("id").as("i"), col("vector").as("va"))
@@ -458,16 +443,13 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
     * [[dump]] byte for byte. [[Collection.importDumpFile]] is the
     * inverse (ImportJSON, dump.go:138). */
   def dumpFile(outFile: String): Unit = {
-    val mp = new org.apache.hadoop.fs.Path(outFile)
+    val mp = new Path(outFile)
     val hfs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // write-then-rename: creating the destination directly would
-    // truncate the PREVIOUS backup before the dump query produced a
-    // row, so a mid-dump failure (executor loss, disk full) would
-    // destroy the only good copy along with the new one (review r19)
-    val tmp = new org.apache.hadoop.fs.Path(outFile + ".tmp")
-    // a plain Writer, NOT PrintWriter: PrintWriter swallows IO errors
-    // into an internal flag, so a disk-full mid-dump would return
-    // normally and leave a silently truncated backup (review r19)
+    // write-then-rename: a mid-dump failure must not destroy the
+    // previous backup along with the new one
+    val tmp = new Path(outFile + ".tmp")
+    // a plain Writer, not a PrintWriter, which swallows IO errors and
+    // would leave a silently truncated backup on a full disk
     val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
       hfs.create(tmp, true), java.nio.charset.StandardCharsets.UTF_8))
     var ok = false
@@ -487,26 +469,24 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
     }
   }
 
-  /** The COMPLETE generation numbers currently on disk, oldest first
-    * — the observable face of [[compact]]'s retention window (the
+  /** The generation numbers whose base commits are in the log, oldest
+    * first — the observable face of [[compact]]'s retention window (the
     * serving façade surfaces it in stats so an operator can see how
     * many superseded generations a reader's pre-compact plan can
     * still resolve). Empty before the first compaction. */
-  def generations: Seq[Int] = completeGens().sorted
+  def generations: Seq[Int] = commits().flatMap(commitAt(_).generation)
 
-  /** Compact the versioned log: collapse to the current view at
-    * version 0 and drop superseded rows and tombstones. The log's
-    * read cost is O(total mutations) until compacted; run this
-    * periodically like any LSM/merge-on-read store.
+  /** Compact the versioned log: collapse to the current view and drop
+    * superseded rows and tombstones. The log's read cost is O(total
+    * mutations) until compacted; run this periodically like any
+    * LSM/merge-on-read store.
     *
-    * Crash-safe by construction (single writer): the compacted view
-    * is written to a NEW generation dir `path.genN+1`; it only
-    * becomes current when its `_SUCCESS` marker lands (the last write
-    * of the job), and superseded data is deleted strictly after.
-    * A crash at any step leaves the previous generation complete and
-    * served — there is no delete-before-rename window (the old
-    * implementation destroyed the only copy if it died between
-    * `delete(dst)` and `rename(tmp, dst)`).
+    * The compacted view is written to a NEW generation dir `path.genN`
+    * and becomes current only when its base commit is published, so a
+    * crash at any step leaves the previous generation current.
+    * Superseded data is deleted strictly after the commit. Two
+    * instances compacting one path at once are not guarded against:
+    * both would write the same `path.genN`.
     *
     * `retainGenerations` keeps the newest N superseded generations on
     * disk (default 1): a reader whose plan resolved to the PREVIOUS
@@ -515,31 +495,37 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
     * the reference serve reads across a rewrite (collection.go;
     * VERDICT r12 #8). Older generations — including, eventually, the
     * original bare-path log, which counts as the oldest generation —
-    * fall out of the window on subsequent compactions. Pass 0 to
-    * reclaim everything immediately (no concurrent readers). */
+    * fall out of the window on subsequent compactions, and the
+    * commits older than the oldest retained base go with them. Pass 0
+    * to reclaim everything immediately (no concurrent readers). */
   def compact(retainGenerations: Int = 1): Unit = writeLock.synchronized {
     require(retainGenerations >= 0,
       s"retainGenerations must be >= 0, got $retainGenerations")
+    val gen = compacted()
     val f = fs()
-    val next = completeGens().maxOption.getOrElse(0) + 1
+    val older = generationDirs(f, path).filter(_._1 < gen)
+    val (retired, kept) = older.splitAt(older.size - retainGenerations)
+    retired.foreach { case (_, d) => f.delete(d, true) }
+    val oldest = kept.headOption.fold(gen)(_._1)
+    val log = commits()
+    if (oldest > 0) log.find(commitAt(_).generation.contains(oldest)).foreach(base =>
+      log.takeWhile(_ < base).foreach(v => f.delete(commitPath(v), false)))
+  }
+
+  /** Writes the current view as the next generation and publishes its
+    * base commit; if another writer took the number, the next attempt
+    * compacts again (and overwrites the directory). Returns the
+    * generation. */
+  @annotation.tailrec
+  private def compacted(): Int = {
+    val snap = snapshot()
+    val (v, gen) = (snap.head + 1, snap.generation + 1)
+    val dir = generationName(name, gen)
     // mode=overwrite clears any partial dir a crashed attempt left
-    current()
-      .select(col("id"), col("vector"), col("metadata"),
-        lit(0L).as("version"), lit(false).as("deleted"))
-      .write.mode("overwrite").parquet(s"$path.gen$next")
-    // the new generation is complete (readers already resolve to it);
-    // now — and only now — retire generations beyond the retention
-    // window, oldest first. The bare `path` log participates so it is
-    // never orphaned: a compaction that crashed after its _SUCCESS
-    // but before these deletes merely leaves one extra window entry
-    // for the next compact to collect.
-    val older = completeGens().filter(_ < next).sorted.map(n => s"$path.gen$n")
-    val retired =
-      (if (f.exists(new org.apache.hadoop.fs.Path(path))) Seq(path) else Nil) ++
-        older
-    retired.dropRight(retainGenerations).foreach { p =>
-      f.delete(new org.apache.hadoop.fs.Path(p), true)
-    }
+    snap.view.select(col("id"), col("vector"), col("metadata"),
+        lit(v).as("version"), lit(false).as("deleted"))
+      .write.mode("overwrite").parquet(resolve(dir).toString)
+    if (publish(Commit(v, Some(gen), parquetIn(dir)))) gen else compacted()
   }
 }
 
@@ -551,18 +537,44 @@ object Collection {
     StructField("metadata", StringType), StructField("version", LongType),
     StructField("deleted", BooleanType)))
 
-  /** See [[Collection#logState]]: `files` holds (name, length,
-    * modification time), name-sorted. */
-  private final case class LogState(dir: String, files: Seq[(String, Long, Long)]) {
-    def paths: Seq[org.apache.hadoop.fs.Path] =
-      files.map { case (n, _, _) => new org.apache.hadoop.fs.Path(dir, n) }
+  /** One commit of the log: the parquet files a write added, relative
+    * to the directory holding the collection's path. A base commit
+    * ([[Collection#compact]], or the adoption of an older log) names a
+    * whole generation: `generation` is set, and readers start from the
+    * newest one. */
+  private[graft] final case class Commit(version: Long, generation: Option[Int],
+                                         files: Seq[String]) {
+    def json: String =
+      s"""{"version": $version${generation.fold("")(g => s""", "generation": $g""")}, """ +
+        s""""files": [${files.map(q).mkString(", ")}]}"""
+  }
+
+  private[graft] object Commit {
+    def parse(json: String): Commit = {
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+      Commit(node.get("version").asLong, Option(node.get("generation")).map(_.asInt),
+        node.get("files").elements().asScala.map(_.asText).toSeq)
+    }
+  }
+
+  /** The data directory of generation `n`: `path` itself for 0. */
+  private def generationName(name: String, n: Int) = if (n == 0) name else s"$name.gen$n"
+
+  /** The generation directories of `path` on disk, oldest first:
+    * (0, `path`) if it exists, then each `path.genN`. */
+  private def generationDirs(fs: FileSystem, path: String): Seq[(Int, Path)] = {
+    val p = new Path(path)
+    val prefix = p.getName + ".gen"
+    if (p.getParent == null || !fs.exists(p.getParent)) Nil
+    else fs.listStatus(p.getParent).toSeq.map(_.getPath).flatMap { d =>
+      (if (d.getName == p.getName) Some(0)
+       else Some(d.getName).filter(_.startsWith(prefix)).flatMap(_.stripPrefix(prefix).toIntOption))
+        .map(_ -> d)
+    }.sortBy(_._1)
   }
 
   private def metaPath(path: String) = s"$path.options.json"
 
-  /** NewCollection (collection.go:224): persists the options next to
-    * the log (the reference stores them in the spanfile header) so a
-    * later [[open]] needs only the path. */
   /** The persisted options JSON — shared by [[create]]'s sidecar and
     * [[Collection#dumpFile]]'s header line, so a dump's first line
     * always round-trips through the same reader as a sidecar.
@@ -573,12 +585,15 @@ object Collection {
        | "distanceMethod": ${q(options.distanceMethod match {
            case Knn.Cosine => "cosine"; case Knn.Euclidean => "euclidean" })},
        | "quantization": ${options.quantization}, "lshPlanes": ${options.lshPlanes},
-       | "lshTables": ${options.lshTables}, "lshProbes": ${options.lshProbes}}"""
+       | "lshTables": ${options.lshTables}}"""
       .stripMargin.replace("\n", "")
 
+  /** NewCollection (collection.go:224): persists the options next to
+    * the log (the reference stores them in the spanfile header) so a
+    * later [[open]] needs only the path. */
   def create(spark: SparkSession, options: CollectionOptions, path: String): Collection = {
     val json = optionsJson(options)
-    val mp = new org.apache.hadoop.fs.Path(metaPath(path))
+    val mp = new Path(metaPath(path))
     val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(mp, true)
     out.write(json.getBytes("UTF-8"))
@@ -605,7 +620,7 @@ object Collection {
     * fields share no column names). */
   def importDumpFile(spark: SparkSession, path: String,
                      dumpFile: String): Collection = {
-    val mp = new org.apache.hadoop.fs.Path(dumpFile)
+    val mp = new Path(dumpFile)
     val hfs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(
       hfs.open(mp), java.nio.charset.StandardCharsets.UTF_8))
@@ -617,30 +632,18 @@ object Collection {
       } finally in.close()
     require(header != null && header.contains("dimensionCount"),
       s"$dumpFile does not start with a collection-options line")
-    // the header is parsed DRIVER-SIDE through the SAME parser as
-    // the .options.json sidecar — the first cut round-tripped it
-    // through a temp file + spark.read.json, which resolved the temp
-    // path against the session-DEFAULT filesystem while writing it on
-    // the dump's filesystem (cross-FS imports read a missing — or
-    // worse, a stale — header), and hand-rolled a second, stricter
-    // parser that rejected pre-lshTables headers open() accepts
-    // (review r19)
+    // the header is parsed on the driver, by the sidecar's parser,
+    // from the dump's own filesystem (not the session default)
     val c = create(spark, parseOptionsJson(header), path)
     if (hasRecordLines) {
       val recs = spark.read.json(dumpFile)
-      // record lines exist, so a missing `id` column means the lines
-      // are corrupt (encoding damage, foreign format) — fail loudly
-      // instead of "successfully" restoring an empty collection; only
-      // a header-ONLY dump (an empty collection is a legal dump)
-      // skips the load (review r19)
+      // record lines exist, so a missing `id` column means they are
+      // corrupt: fail instead of restoring an empty collection (only a
+      // header-only dump, of an empty collection, skips the load)
       require(recs.columns.contains("id"),
         s"$dumpFile has record lines but no 'id' field — corrupt dump?")
-      c.addDocuments(recs
-        .filter(org.apache.spark.sql.functions.col("id").isNotNull)
-        .select(org.apache.spark.sql.functions.col("id").cast("long"),
-          org.apache.spark.sql.functions.col("vector")
-            .cast("array<double>"),
-          org.apache.spark.sql.functions.col("metadata").cast("string")))
+      c.addDocuments(recs.filter(col("id").isNotNull).select(col("id").cast("long"),
+        col("vector").cast("array<double>"), col("metadata").cast("string")))
     }
     c
   }
@@ -651,7 +654,8 @@ object Collection {
     * independent parsers had different tolerances). Required fields
     * fail with a named error (never a bare NPE); numeric fields must
     * BE numbers (Jackson's asInt would coerce garbage to 0);
-    * lshTables/lshProbes default to 1 for pre-forest-era files. */
+    * lshTables defaults to 1 for pre-forest-era files, and an
+    * `lshProbes` other than 1 (a removed option) fails. */
   private[core] def parseOptionsJson(json: String): CollectionOptions = {
     val node = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(json)
@@ -670,12 +674,15 @@ object Collection {
           s"options json field '$f' is not a number")
         node.get(f).asInt
       }
+    // multiprobe k-NN is no longer an option: a file that asks for it
+    // fails by name instead of silently searching differently
+    require(num("lshProbes", Some(1)) == 1,
+      "options json field 'lshProbes' must be 1: multiprobe search is not supported")
     CollectionOptions(
       str("name"), num("dimensionCount"),
       if (str("distanceMethod") == "euclidean") Knn.Euclidean
       else Knn.Cosine,
-      num("quantization"), num("lshPlanes"),
-      num("lshTables", Some(1)), num("lshProbes", Some(1)))
+      num("quantization"), num("lshPlanes"), num("lshTables", Some(1)))
   }
 
   /** Reopen an existing collection from its persisted options —
@@ -684,24 +691,20 @@ object Collection {
     * multi-line sidecars as readily as the single-line form, and a
     * driver-side read of the sidecar's OWN filesystem replaces a
     * whole Spark json job for a one-object file). Older collections
-    * predate lshTables/lshProbes; absent -> single-table,
-    * single-probe (the parser's defaults). */
+    * predate lshTables; absent -> single-table (the parser's
+    * default). */
   def open(spark: SparkSession, path: String): Collection =
-    new Collection(spark, readOptions(spark, new org.apache.hadoop.fs.Path(metaPath(path))), path)
+    new Collection(spark, readOptions(spark, new Path(metaPath(path))), path)
 
   /** Driver-side read of an `.options.json` sidecar on its own
     * filesystem, through [[parseOptionsJson]]. */
-  private def readOptions(spark: SparkSession, mp: org.apache.hadoop.fs.Path): CollectionOptions = {
-    val hfs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = hfs.open(mp)
-    val json = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      new String(bos.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
-    parseOptionsJson(json)
+  private def readOptions(spark: SparkSession, mp: Path): CollectionOptions =
+    parseOptionsJson(readText(mp.getFileSystem(spark.sparkContext.hadoopConfiguration), mp))
+
+  /** A small file's whole content, as UTF-8. */
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8) finally in.close()
   }
 
   private def q(s: String): String =
@@ -714,7 +717,7 @@ object Collection {
     * files (read like [[open]] reads them, no Spark job). Returns
     * (name, path) pairs, name-sorted. */
   def list(spark: SparkSession, rootDir: String): Seq[(String, String)] = {
-    val root = new org.apache.hadoop.fs.Path(rootDir)
+    val root = new Path(rootDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Seq.empty
     fs.listStatus(root).toSeq
@@ -726,19 +729,12 @@ object Collection {
       .sortBy(_._1)
   }
 
-  /** Drop a collection: delete its log (all generations) and options
-    * file (rest.go:176 DELETE /api/v1/collections/{name}). */
+  /** Drop a collection: delete its data (all generations), its
+    * commit log and its options file (rest.go:176 DELETE
+    * /api/v1/collections/{name}). */
   def drop(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens =
-      if (p.getParent != null && fs.exists(p.getParent))
-        fs.listStatus(p.getParent).toSeq.map(_.getPath)
-          .filter(_.getName.startsWith(p.getName + ".gen"))
-      else Seq.empty
-    val genDeleted = gens.map(g => fs.delete(g, true)).exists(identity)
-    val data = fs.delete(p, true)
-    val meta = fs.delete(new org.apache.hadoop.fs.Path(metaPath(path)), false)
-    data || meta || genDeleted
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (generationDirs(fs, path).map(_._2) ++ Seq(new Path(s"$path._log"), new Path(metaPath(path))))
+      .map(fs.delete(_, true)).exists(identity)
   }
 }

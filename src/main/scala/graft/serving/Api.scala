@@ -272,14 +272,13 @@ final class Api(spark: SparkSession, rootDir: String) {
       case None => err(400, "Invalid record ID")
       case Some(id) => withCollection(name) { c =>
         parsed(body).map(j => j \ "metadata") match {
+          // the existence check is the write's own read of the id's
+          // row, under the collection's write lock
           case Some(meta: JObject) =>
-            if (c.getDocument(id).isEmpty) err(404, "Record not found")
-            else {
-              c.updateMetadata(id, js(meta))
-              ok(JObject(
-                "message" -> JString("Metadata updated successfully."),
-                "id" -> JLong(id)))
-            }
+            if (!c.updateMetadata(id, js(meta))) err(404, "Record not found")
+            else ok(JObject(
+              "message" -> JString("Metadata updated successfully."),
+              "id" -> JLong(id)))
           case _ => err(400, "Invalid request body")
         }
       }

@@ -152,6 +152,28 @@ class ApiSpec extends SparkSpec {
       """{"metadata": {}}""").status == 404)
   }
 
+  test("PUT metadata after a write runs at most 4 jobs; a 404 commits nothing") {
+    val root = java.nio.file.Files.createTempDirectory("graft-api-meta").toString
+    val api = new Api(spark, root)
+    mkCollection(api)
+    def put(id: Long, status: Int): Unit = {
+      val r = api.handle("PUT", s"/api/v1/collections/test_collection/records/$id/metadata",
+        """{"metadata": {"k": 2}}""")
+      assert(r.status == status, r.body)
+    }
+    insert(api, "test_collection", 1L, Seq(0.1, 0.2, 0.3, 0.4, 0.5), """{"k": 1}""")
+    val found = jobsOf(put(1L, 200))
+    assert(found.size <= 4, s"$found")
+    assert(Collection.open(spark, s"$root/test_collection").getDocument(1L).map(_._2)
+      .contains("""{"k":2}"""))
+    insert(api, "test_collection", 2L, Seq(0.5, 0.4, 0.3, 0.2, 0.1), "{}")
+    def commits = new java.io.File(s"$root/test_collection._log").list().toSet
+    val before = commits
+    val missing = jobsOf(put(99L, 404))
+    assert(missing.size <= 4, s"$missing")
+    assert(commits == before)
+  }
+
   test("delete record tombstones it; missing record 404s (rest_test.go:452)") {
     val api = newApi()
     mkCollection(api)

@@ -36,11 +36,26 @@ class CollectionSpec extends SparkSpec {
       CollectionOptions(name, dimensionCount = 4, distanceMethod = Knn.Euclidean), path), path)
   }
 
-  /** (name, length, modification time) of each parquet file in `dir`. */
+  /** (path, length, modification time) of each parquet file under `dir`. */
   private def parquetFiles(dir: String): Set[(String, Long, Long)] =
-    Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet"))
-      .map(f => (f.getName, f.length, f.lastModified)).toSet
+    if (!new java.io.File(dir).exists) Set.empty
+    else scala.util.Using.resource(Files.walk(new java.io.File(dir).toPath))(
+      _.iterator().asScala.map(_.toFile).filter(_.getName.endsWith(".parquet"))
+        .map(f => (f.getPath, f.length, f.lastModified)).toSet)
+
+  /** The commit numbers in the log of the collection at `path`. */
+  private def commitsAt(path: String): Seq[Long] =
+    Option(new java.io.File(s"$path._log").list()).toSeq.flatten
+      .filter(_.endsWith(".json")).flatMap(_.stripSuffix(".json").toLongOption).sorted
+
+  private def commitAt(path: String, v: Long): Collection.Commit =
+    Collection.Commit.parse(new String(
+      Files.readAllBytes(new java.io.File(s"$path._log/$v.json").toPath), "UTF-8"))
+
+  /** The `version` values in the files commit `v` names. */
+  private def versionsOf(path: String, v: Long): Set[Long] =
+    spark.read.parquet(commitAt(path, v).files.map(f => s"${new java.io.File(path).getParent}/$f"): _*)
+      .select("version").as[Long].collect().toSet
 
   test("add / count / ids / remove round-trip (reference CRUD surface)") {
     val c = newCollection()
@@ -255,6 +270,20 @@ class CollectionSpec extends SparkSpec {
         k = 1, precision = "exact"))
       .select("id").as[Long].head()
     assert(hit == 2L)
+    // a sidecar written while multiprobe was an option: 1 opens as
+    // before, any other value fails by name
+    val sidecar = new java.io.File(dir.getAbsolutePath + ".options.json").toPath
+    val json = new String(Files.readAllBytes(sidecar), "UTF-8")
+    def withProbes(n: Int) = {
+      Files.write(sidecar, json.replace("}", s""", "lshProbes": $n}""").getBytes("UTF-8"))
+      // the checksum Hadoop wrote beside it no longer matches
+      Files.deleteIfExists(sidecar.resolveSibling(s".${sidecar.getFileName}.crc"))
+    }
+    withProbes(1)
+    assert(Collection.open(spark, dir.getAbsolutePath).options == c.options)
+    withProbes(2)
+    val e = intercept[IllegalArgumentException](Collection.open(spark, dir.getAbsolutePath))
+    assert(e.getMessage.contains("lshProbes"), e.getMessage)
   }
 
   test("compact collapses the log and preserves the current view") {
@@ -414,37 +443,26 @@ class CollectionSpec extends SparkSpec {
     assert(hits == Seq(5L))
   }
 
-  test("snapshot: a log file rewritten under the same name is re-read") {
-    val tmp = Files.createTempDirectory("graft-coll-files").toFile
-    val path = tmp.getAbsolutePath + "/coll"
-    val c = Collection.create(spark,
-      CollectionOptions("files", dimensionCount = 4, distanceMethod = Knn.Euclidean), path)
-    // the bytes of a one-row log file with the given metadata
-    def logFile(meta: String): Array[Byte] = {
-      val out = new java.io.File(tmp, s"src-${meta.hashCode}")
-      Seq((1L, Seq(0.0, 0.0, 0.0, 0.0), meta, 0L, false))
-        .toDF("id", "vector", "metadata", "version", "deleted")
-        .coalesce(1).write.parquet(out.getPath)
-      Files.readAllBytes(out.listFiles().filter(_.getName.endsWith(".parquet")).head.toPath)
-    }
-    val a = logFile("""{"tag": "a"}""")
-    val b = logFile("""{"tag": "b"}""")
-    val longer = logFile("""{"tag": "ccc"}""")
-    assert(a.length == b.length && a.length != longer.length)
-    new java.io.File(path).mkdirs()
-    val f = new java.io.File(path, "part-00000-inplace.parquet")
-    def put(bytes: Array[Byte], mtime: Long): Unit = {
-      Files.write(f.toPath, bytes)
-      assert(f.setLastModified(mtime))
-    }
-    def meta = c.getDocument(1L).map(_._2)
-    val t = 1500000000000L
-    put(a, t)
-    assert(meta.contains("""{"tag": "a"}"""))
-    put(b, t + 60000) // same length, new modification time
-    assert(meta.contains("""{"tag": "b"}"""))
-    put(longer, t + 60000) // new length, same modification time
-    assert(meta.contains("""{"tag": "ccc"}"""))
+  test("a parquet file that no commit names is never read") {
+    val (c, path) = newCollectionAt("unnamed")
+    c.addDocuments(docs3)
+    // a file in the data directory that no commit names, as a writer
+    // that died before its commit leaves it, with a version above
+    // every commit: a newer row for id 1 and a new id 7
+    val src = Files.createTempDirectory("graft-coll-stray").toFile.getPath + "/out"
+    Seq((1L, Seq(9.0, 9.0, 9.0, 9.0), """{"tag": "stray"}""", 99L, false),
+        (7L, Seq(7.0, 7.0, 7.0, 7.0), """{"tag": "stray"}""", 99L, false))
+      .toDF("id", "vector", "metadata", "version", "deleted").coalesce(1).write.parquet(src)
+    val file = new java.io.File(src).listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.copy(file.toPath, new java.io.File(path, "part-stray.parquet").toPath)
+    assert(c.getAllIds() == Seq(1L, 2L, 3L))
+    assert(c.getDocument(1L).map(_._2).contains("""{"tag": "a"}"""))
+    // nor by an instance opened after it landed, nor after a write
+    val other = Collection.open(spark, path)
+    assert(other.getAllIds() == Seq(1L, 2L, 3L))
+    assert(other.updateMetadata(2L, """{"tag": "w"}"""))
+    assert(c.getAllIds() == Seq(1L, 2L, 3L))
+    assert(c.getDocument(2L).map(_._2).contains("""{"tag": "w"}"""))
   }
 
   test("snapshot: superseded snapshots are reclaimed without unpersist") {
@@ -467,8 +485,12 @@ class CollectionSpec extends SparkSpec {
     assert(c.getAllIds() == (0L until 20L))
   }
 
-  test("concurrent writers and readers: every read sees whole batches") {
-    val c = newCollection()
+  /** Two writers and four readers on `instances` of one collection
+    * (writer w and reader r use instance w and r modulo their count).
+    * Every read must see the initial ids plus whole batches. Returns
+    * the initial ids and the batches. */
+  private def writersAndReaders(instances: Seq[Collection]): (Set[Long], Seq[Set[Long]]) = {
+    def on(i: Int) = instances(i % instances.size)
     val initial = (0L until 20L).toSet
     def batch(w: Int, b: Int): Seq[Long] = (0 until 10).map(i => 1000L + 100 * w + 10 * b + i)
     // four partitions, so four files per batch; partition p finishes
@@ -478,7 +500,7 @@ class CollectionSpec extends SparkSpec {
           ids.map(i => (i, Seq(i.toDouble, 1.0, 0.0, 0.0), "{}")), 4)
         .mapPartitionsWithIndex { (p, rows) => Thread.sleep(40L * p); rows })
         .toDF("id", "vector", "metadata")
-    c.addDocuments(frame(initial.toSeq))
+    on(0).addDocuments(frame(initial.toSeq))
     val batches = for (w <- 0 until 2; b <- 0 until 8) yield batch(w, b).toSet
     val problems = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def check(what: String, ids: Set[Long]): Unit = {
@@ -489,9 +511,10 @@ class CollectionSpec extends SparkSpec {
     }
     @volatile var writing = true
     val writers = (0 until 2).map { w =>
-      new Thread(() => (0 until 8).foreach(b => c.addDocuments(frame(batch(w, b)))))
+      new Thread(() => (0 until 8).foreach(b => on(w).addDocuments(frame(batch(w, b)))))
     }
     val readers = (0 until 4).map { r =>
+      val c = on(r)
       new Thread(() => {
         var rounds = 0
         try while (writing || rounds == 0) {
@@ -518,27 +541,81 @@ class CollectionSpec extends SparkSpec {
     }
     assert(problems.isEmpty, problems.asScala.take(5).mkString("; "))
     val all = initial ++ batches.flatten
-    assert(c.getAllIds().toSet == all && c.documentCount() == all.size)
+    instances.foreach(c => assert(c.getAllIds().toSet == all && c.documentCount() == all.size))
+    (initial, batches)
   }
 
-  test("nextVersion falls back to an aggregate, reported on stderr, without footer stats") {
-    val dir = Files.createTempDirectory("graft-coll-nostats").toFile
-    dir.delete()
-    val path = dir.getAbsolutePath
-    val c = Collection.create(spark,
-      CollectionOptions("nostats", dimensionCount = 4, distanceMethod = Knn.Euclidean), path)
-    withSQLConf("parquet.column.statistics.enabled" -> "false") {
-      Seq((1L, Seq(0.0, 0.0, 0.0, 0.0), """{"v": 1}""", 5L, false))
-        .toDF("id", "vector", "metadata", "version", "deleted").write.parquet(path)
+  test("concurrent writers and readers: every read sees whole batches") {
+    writersAndReaders(Seq(newCollection()))
+  }
+
+  test("two instances on one path: whole batches, distinct versions") {
+    val (c, path) = newCollectionAt("two")
+    val (initial, batches) = writersAndReaders(Seq(c, Collection.open(spark, path)))
+    // every batch landed once, at a version no other batch has
+    val byVersion = spark.read.parquet(parquetFiles(path).map(_._1).toSeq: _*)
+      .groupBy("version").agg(collect_set("id")).as[(Long, Seq[Long])].collect()
+    assert(byVersion.map(_._2.toSet).toSet == batches.toSet + initial, byVersion.toSeq)
+    assert(byVersion.length == batches.size + 1)
+  }
+
+  test("publishing one commit number: exactly one writer wins") {
+    val (c, path) = newCollectionAt("publish")
+    (0L until 200L).foreach { v =>
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      val won = new Array[Boolean](2)
+      val writers = (0 until 2).map(w => new Thread(() => {
+        start.await()
+        won(w) = c.publish(Collection.Commit(v, None, Seq(s"writer-$w")))
+      }))
+      writers.foreach(_.start())
+      writers.foreach(_.join())
+      assert(won.count(identity) == 1, s"commit $v: ${won.toSeq}")
+      // the commit is the winner's, whole
+      assert(commitAt(path, v).files == Seq(s"writer-${won.indexOf(true)}"))
     }
-    val err = new java.io.ByteArrayOutputStream()
-    val stderr = System.err
-    System.setErr(new java.io.PrintStream(err, true))
-    try c.updateMetadata(1L, """{"v": 2}""") finally System.setErr(stderr)
-    // the update must be minted above version 5 to win
-    assert(c.getDocument(1L).map(_._2).contains("""{"v": 2}"""))
-    val report = err.toString("UTF-8")
-    assert(report.contains(path) && report.contains("IllegalStateException"), report)
+  }
+
+  test("a log without commits is adopted once; the next write wins") {
+    val tmp = Files.createTempDirectory("graft-coll-adopt").toFile
+    val path = tmp.getAbsolutePath + "/coll"
+    Collection.create(spark,
+      CollectionOptions("adopt", dimensionCount = 4, distanceMethod = Knn.Euclidean), path)
+    def rows(rs: (Long, String, Long, Boolean)*) =
+      rs.map { case (i, m, v, d) => (i, Seq(i.toDouble, 0.0, 0.0, 0.0), m, v, d) }
+        .toDF("id", "vector", "metadata", "version", "deleted")
+    // the layout written before the commit log: appends into one
+    // directory per generation, the live one the highest with a
+    // _SUCCESS marker; footer statistics off, so only an aggregate
+    // can tell the max version
+    withSQLConf("parquet.column.statistics.enabled" -> "false") {
+      rows((1L, "bare", 0L, false), (8L, "bare", 0L, false)).write.parquet(path)
+      rows((1L, """{"v": 0}""", 0L, false), (2L, "{}", 0L, false), (3L, "{}", 0L, false))
+        .write.parquet(s"$path.gen1")
+      rows((1L, """{"v": 5}""", 5L, false), (3L, null, 5L, true))
+        .write.mode("append").parquet(s"$path.gen1")
+      // a compaction that died before its marker
+      rows((9L, "partial", 0L, false)).write.parquet(s"$path.gen2")
+      assert(new java.io.File(s"$path.gen2/_SUCCESS").delete())
+    }
+    val c = Collection.open(spark, path)
+    assert(c.getAllIds() == Seq(1L, 2L))
+    assert(c.getDocument(1L).map(_._2).contains("""{"v": 5}"""))
+    // one commit, numbered from the max version, names .gen1's files
+    assert(commitsAt(path) == Seq(5L))
+    assert(commitAt(path, 5L).generation.contains(1))
+    assert(commitAt(path, 5L).files.size == parquetFiles(s"$path.gen1").size)
+    assert(c.generations == Seq(1))
+    // the next write wins, and an instance opened later does not adopt again
+    assert(c.updateMetadata(1L, """{"v": 6}"""))
+    val other = Collection.open(spark, path)
+    assert(other.getDocument(1L).map(_._2).contains("""{"v": 6}"""))
+    assert(commitsAt(path) == Seq(5L, 6L) && versionsOf(path, 6L) == Set(6L))
+    // compaction goes on from the adopted generation: .gen2 replaces
+    // the partial directory, and the bare log leaves the window
+    c.compact()
+    assert(c.generations == Seq(1, 2) && other.getAllIds() == Seq(1L, 2L))
+    assert(!new java.io.File(path).exists())
   }
 
   test("snapshot: the first count after a write runs one job besides the build") {
@@ -583,36 +660,31 @@ class CollectionSpec extends SparkSpec {
       "removeDocuments(Nil)" -> (() => c.removeDocuments(Nil)),
       "addDocuments of no local rows" -> (() => c.addDocuments(
         Seq.empty[(Long, Seq[Double], String)].toDF("id", "vector", "metadata"))),
-      "updateMetadata of an absent id" -> (() => c.updateMetadata(99L, """{"tag": "z"}""")))
+      "updateMetadata of an absent id" -> (() => assert(!c.updateMetadata(99L, """{"tag": "z"}"""))))
     empties.foreach { case (what, write) =>
       write()
-      assert(parquetFiles(path) == files, s"$what changed the log")
+      assert(commitsAt(path) == Seq(0L), s"$what committed")
+      assert(parquetFiles(path) == files, s"$what wrote a file")
       val read = jobsOf(assert(c.getAllIds() == Seq(1L, 2L, 3L)))
       assert(builds(read) == 0, s"the read after $what rebuilt the view: $read")
     }
-    // the next write mints version 1, right after the first batch's 0
+    // the next write is commit 1, right after the first batch's 0
     c.removeDocuments(Seq(2L))
-    assert(spark.read.parquet(path).agg(max("version")).head().getLong(0) == 1L)
+    assert(commitsAt(path) == Seq(0L, 1L) && versionsOf(path, 1L) == Set(1L))
     assert(c.getAllIds() == Seq(1L, 3L))
-    // without footer stats, an absent id still appends nothing and a
-    // present one still lands
-    val now = parquetFiles(path)
-    withSQLConf("parquet.column.statistics.enabled" -> "false") {
-      c.updateMetadata(99L, "{}")
-      assert(parquetFiles(path) == now)
-      c.updateMetadata(1L, """{"tag": "no stats"}""")
-    }
-    assert(c.getDocument(1L).map(_._2).contains("""{"tag": "no stats"}"""))
   }
 
   test("a driver-held write lands as one parquet file; a distributed frame keeps its partitions") {
     val (c, path) = newCollectionAt("onefile")
     def rows(from: Int) =
       (from until from + 10).map(i => (i.toLong, Seq(i.toDouble, 0.0, 0.0, 0.0), "{}"))
+    /** The files of the one commit `write` adds. */
     def added(write: => Unit): Int = {
-      val before = parquetFiles(path).size
+      val before = commitsAt(path)
       write
-      parquetFiles(path).size - before
+      val now = commitsAt(path)
+      assert(now.init == before)
+      commitAt(path, now.last).files.size
     }
     assert(added(c.addDocuments(rows(0).toDF("id", "vector", "metadata"))) == 1)
     assert(added(c.removeDocuments(Seq(3L))) == 1)
@@ -624,49 +696,22 @@ class CollectionSpec extends SparkSpec {
     assert(c.getDocument(4L).map(_._2).contains("""{"tag": "u"}"""))
   }
 
-  test("nextVersion: the next write wins after every change to the log's files") {
-    val tmp = Files.createTempDirectory("graft-coll-versions").toFile
-    val path = tmp.getAbsolutePath + "/coll"
-    val c = Collection.create(spark,
-      CollectionOptions("versions", dimensionCount = 4, distanceMethod = Knn.Euclidean), path)
+  test("the next write wins after a second instance and a compaction") {
+    val (c, path) = newCollectionAt("versions")
     def meta(id: Long) = c.getDocument(id).map(_._2)
-    def liveDir = c.generations.lastOption.fold(path)(g => s"$path.gen$g")
     c.addDocuments(docs3)
     c.updateMetadata(1L, """{"v": 1}""")
     // an append through a second instance on the same path
     Collection.open(spark, path).updateMetadata(1L, """{"v": "other"}""")
     c.updateMetadata(1L, """{"v": 3}""")
     assert(meta(1L).contains("""{"v": 3}"""))
-    assert(c.footersCached <= parquetFiles(liveDir).size)
-    // a compaction: the new generation restarts at version 0
+    // a compaction: its base commit, then the next write
     c.compact()
     c.updateMetadata(2L, """{"v": "compacted"}""")
     assert(meta(2L).contains("""{"v": "compacted"}"""))
-    assert(spark.read.parquet(liveDir).select("version").as[Long].distinct().collect()
-      .toSet == Set(0L, 1L))
-    assert(c.footersCached <= parquetFiles(liveDir).size)
-    // a log file rewritten in place: same name and length, a higher
-    // version and a new modification time
-    def logFile(meta: String, version: Long): Array[Byte] = {
-      val out = new java.io.File(tmp, s"src-$version")
-      Seq((3L, Seq(0.0, 5.0, 0.0, 0.0), meta, version, false))
-        .toDF("id", "vector", "metadata", "version", "deleted")
-        .coalesce(1).write.parquet(out.getPath)
-      Files.readAllBytes(out.listFiles().filter(_.getName.endsWith(".parquet")).head.toPath)
-    }
-    val low = logFile("""{"v": "a"}""", 0L)
-    val high = logFile("""{"v": "b"}""", 7L)
-    assert(low.length == high.length)
-    val f = new java.io.File(liveDir, "part-00000-inplace.parquet")
-    val t = 1500000000000L
-    Files.write(f.toPath, low)
-    assert(f.setLastModified(t))
-    c.updateMetadata(2L, """{"v": "reads the footer"}""")
-    Files.write(f.toPath, high)
-    assert(f.setLastModified(t + 60000))
-    assert(meta(3L).contains("""{"v": "b"}"""))
-    c.updateMetadata(3L, """{"v": "c"}""")
-    assert(meta(3L).contains("""{"v": "c"}"""))
+    // every batch's version is its commit number
+    assert(commitsAt(path) == (0L to 5L) && commitAt(path, 4L).generation.contains(1))
+    commitsAt(path).foreach(v => assert(versionsOf(path, v) == Set(v), s"commit $v"))
   }
 
   test("lossy quantization stores dequantized grid values (ref quantization.go)") {
