@@ -62,21 +62,36 @@ final case class SearchResults(results: DataFrame, percentSearched: Double)
   * base commit ([[compact]]) on. So a reader sees a batch whole or not
   * at all, and a parquet file no commit names is never read.
   *
-  * The snapshot ([[current]]) is that view materialized once per
-  * commit and reused by every read until the next one — the reference
-  * likewise probes records it already holds (collection.go:569-712)
-  * instead of replaying its log per search.
+  * The snapshot is that view materialized once per commit and reused
+  * by every read until the next one — the reference likewise probes
+  * records it already holds (collection.go:569-712) instead of
+  * replaying its log per search.
   *  - Key: the latest commit number. Commits are immutable, so each
   *    is parsed once, in any call order.
   *  - Build: exactly the commits' files, the fixed log schema, the
-  *    current-view window, then `localCheckpoint` to DISK_ONLY. The
-  *    heap holds none of the view's rows; one build per commit, and
-  *    its row count is memoized, so counts and stats run no job.
-  *  - Release: a superseded snapshot is never unpersisted explicitly.
-  *    Spark's ContextCleaner frees its blocks once nothing references
-  *    it, so a plan a caller still holds keeps reading across any
-  *    number of writes and compactions. Do not `persist` or
-  *    `unpersist` what [[current]] returns.
+  *    current-view window; one build per commit, run by two Spark jobs
+  *    (AQE's shuffle-map job and the result job), named by their job
+  *    description `Collection.snapshot <name>`.
+  *  - Held on the driver, below [[Collection.HeldBytes]] (the summed
+  *    length of the parquet files the snapshot's commits name, read
+  *    from file status, so checking it runs no job): the build
+  *    collects the view once into a [[HeldView]], its rows on the
+  *    driver heap in id order, and every read of that commit — exact
+  *    and medium k-NN, radius, filtered search, listing,
+  *    [[getDocument]], [[getAllIds]], [[documentCount]],
+  *    percentSearched — is answered from it on the driver with no
+  *    Spark job, by the same Catalyst expressions the Spark plan
+  *    evaluates. Results are `LocalRelation`s, so collecting them runs
+  *    no job either. The GC reclaims a superseded held view once
+  *    nothing references it.
+  *  - Checkpointed, at or above the bound: the view is
+  *    `localCheckpoint`ed to DISK_ONLY and reads are Spark plans over
+  *    it; its row count is memoized. A superseded checkpoint is never
+  *    unpersisted explicitly: Spark's ContextCleaner frees its blocks
+  *    once nothing references it.
+  *  - Either way a plan a caller holds ([[current]], a search result)
+  *    keeps reading across any number of writes and compactions. Do
+  *    not `persist` or `unpersist` what [[current]] returns.
   *
   * Storage layout: parquet files with columns (id long, vector
   * array<double>, metadata string-json, version long, deleted
@@ -86,8 +101,12 @@ final case class SearchResults(results: DataFrame, percentSearched: Double)
   * periodically; the current-view window then shuffles only new
   * deltas.
   */
-final class Collection(spark: SparkSession, val options: CollectionOptions, path: String) {
+final class Collection private[graft] (spark: SparkSession, val options: CollectionOptions,
+                                      path: String, heldBytes: Long) {
   import Collection.{Commit, LogSchema, generationDirs, generationName, readText}
+
+  def this(spark: SparkSession, options: CollectionOptions, path: String) =
+    this(spark, options, path, Collection.HeldBytes)
 
   // resolve the filesystem FROM the collection path, not the default
   // scheme: a collection on s3a://... must list/delete on that store,
@@ -95,6 +114,10 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
   private def fs() = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private val name = new Path(path).getName
+
+  /** Runs `body` with its Spark jobs described as `Collection.<what> <name>`. */
+  private def described[T](what: String)(body: => T): T =
+    JobDescription.around(spark.sparkContext, s"Collection.$what $name")(body)
 
   /** The commit log: beside the data, since compaction retires `path`. */
   private val logDir = new Path(s"$path._log")
@@ -130,7 +153,7 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
       .lastOption.foreach { case (n, _) =>
         val files = parquetIn(generationName(name, n))
         if (files.nonEmpty) {
-          val top = read(files).agg(max(col("version"))).head()
+          val top = described("adopt")(read(files).agg(max(col("version"))).head())
           publish(Commit(if (top.isNullAt(0)) 0L else math.max(0L, top.getLong(0)),
             Some(n).filter(_ > 0), files))
         }
@@ -196,7 +219,7 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
     * at the next version, so a batch's `version` always equals its
     * commit number. `None` appends nothing; true if a commit landed. */
   private def append(batch: (Snapshot, Long) => Option[DataFrame]): Boolean =
-    writeLock.synchronized(attempt(batch))
+    writeLock.synchronized(described("write")(attempt(batch)))
 
   @annotation.tailrec
   private def attempt(batch: (Snapshot, Long) => Option[DataFrame]): Boolean = {
@@ -250,13 +273,14 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
 
   /** UpdateDocument metadata (collection.go:490): rewrite metadata,
     * keep the stored vector. The id's row is read from the snapshot
-    * the write is minted from, under the write lock; if it is absent,
-    * nothing is committed and the result is false. Otherwise the one
-    * row lands as one file and the result is true. */
+    * the write is minted from, under the write lock (below the bound,
+    * by binary search over the held rows); if it is absent, nothing
+    * is committed and the result is false. Otherwise the one row
+    * lands as one file and the result is true. */
   def updateMetadata(id: Long, metadata: String): Boolean = append { (snap, v) =>
-    snap.view.filter(col("id") === id).select(col("vector")).collect().headOption.map(r =>
-      spark.createDataFrame(java.util.List.of(Row(id, r.getSeq[Double](0), metadata, v, false)),
-        LogSchema))
+    document(snap, id).map { case (vector, _) =>
+      spark.createDataFrame(java.util.List.of(Row(id, vector, metadata, v, false)), LogSchema)
+    }
   }
 
   /** RemoveDocument (collection.go:511): tombstone append, as one
@@ -270,23 +294,37 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
   /** The log at commit `head`: `files` are those of its newest base
     * commit (in `generation`'s directory; 0 is `path`) and of every
     * commit after it. The current view — latest version per id, minus
-    * tombstones — is materialized on first use, once, on local disk;
-    * concurrent readers wait for the one build. */
+    * tombstones — is materialized on first use, once: held on the
+    * driver if the files' summed length is below `heldBytes`, else
+    * checkpointed on local disk. Concurrent readers wait for the one
+    * build. */
   private final class Snapshot(val head: Long, val generation: Int, files: Seq[String]) {
-    lazy val view: DataFrame = {
-      // names every stage of the build, AQE's shuffle-map job too: that
-      // job runs on another thread, which inherits this call site
+    lazy val isHeld: Boolean = {
+      val f = fs()
+      // parquet dictionary-encodes a vector quantized to `q` bits to
+      // about q/64 of its held size: scale the files up to match
+      files.iterator.map(r => f.getFileStatus(resolve(r)).getLen).sum <
+        heldBytes / (64 / options.quantization)
+    }
+    private def plan = Crud.currentView(read(files), "id", "version", "deleted")
+      .select(col("id"), col("vector"), col("metadata"))
+    /** Below the bound: the view's rows, held on the driver. */
+    lazy val held: HeldView = build("executeCollect")(HeldView.collect(plan))
+    /** At or above the bound: the view, checkpointed. */
+    lazy val view: DataFrame =
+      build("localCheckpoint")(plan.localCheckpoint(eager = true, StorageLevel.DISK_ONLY))
+    /** Names every stage of the build, AQE's shuffle-map job too: that
+      * job runs on another thread, which inherits this call site. */
+    private def build[T](how: String)(body: => T): T = described("snapshot") {
       val sc = spark.sparkContext
       val callerSite = sc.getLocalProperty("callSite.short")
-      sc.setCallSite("localCheckpoint at Collection.Snapshot")
-      try Crud.currentView(read(files), "id", "version", "deleted")
-        .select(col("id"), col("vector"), col("metadata"))
-        .localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
-      finally sc.setLocalProperty("callSite.short", callerSite)
+      sc.setCallSite(s"$how at Collection.Snapshot")
+      try body finally sc.setLocalProperty("callSite.short", callerSite)
     }
     // the checkpoint's rows, counted in one job (`view.count()` is an
     // aggregate with an exchange: two jobs under AQE)
-    lazy val count: Long = view.queryExecution.toRdd.count()
+    lazy val count: Long =
+      if (isHeld) held.size else { val v = view; described("count")(v.queryExecution.toRdd.count()) }
   }
 
   private val buildLock = new Object
@@ -312,8 +350,13 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
     }
   }
 
-  /** Latest-version view minus tombstones: the current [[snapshot]]. */
-  def current(): DataFrame = snapshot().view
+  /** Latest-version view minus tombstones: the current [[snapshot]].
+    * Below the bound, a `LocalRelation` over the held rows, made on
+    * each call; the snapshot does not keep it. */
+  def current(): DataFrame = {
+    val snap = snapshot()
+    if (snap.isHeld) snap.held.frame(spark) else snap.view
+  }
 
   def documentCount(): Long = snapshot().count
 
@@ -321,22 +364,28 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
     * (collection.go:326 returns `[]uint64` in memory). At scale use the
     * DataFrame surface instead — `current().select("id")` — which never
     * collects. */
-  def getAllIds(): Seq[Long] =
-    current().select(col("id")).orderBy(col("id")).collect().map(_.getLong(0)).toSeq
+  def getAllIds(): Seq[Long] = {
+    val snap = snapshot()
+    if (snap.isHeld) snap.held.allIds
+    else snap.view.select(col("id")).orderBy(col("id")).collect().map(_.getLong(0)).toSeq
+  }
 
   /** The reference's single search endpoint (collection.go:569):
     * dispatches on (k, radius, precision) exactly like the Go code.
     * A k-NN or radius search is exact over the filtered rows; at
     * precision="medium" it is the same search over the rows the LSH
     * probe keeps ([[probe]]). */
-  def search(args: SearchArgs): DataFrame =
-    search(filteredView(snapshot(), args), args, probe(args))
+  def search(args: SearchArgs): DataFrame = {
+    val snap = snapshot()
+    if (snap.isHeld) heldSearch(snap, args, probe(args))._1
+    else search(filteredView(snap, args), args, probe(args))
+  }
+
+  private def filter(args: SearchArgs): Option[Column] =
+    args.filter.map(FilterCompiler.compileJson(_, col("metadata")))
 
   private def filteredView(snap: Snapshot, args: SearchArgs): DataFrame =
-    args.filter match {
-      case Some(f) => snap.view.filter(FilterCompiler.compileJson(f, col("metadata")))
-      case None => snap.view
-    }
+    filter(args).fold(snap.view)(snap.view.filter)
 
   /** The probe of a precision="medium" k-NN or radius search: the
     * rows in any of the query's forest buckets, with the keys computed
@@ -380,6 +429,18 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
         else Knn.radius(rows, "vector", qdf, r, options.distanceMethod)
     }
 
+  /** [[search]] over the held rows, dispatched as the Spark plan is;
+    * also returns the filtered and the probed row counts. */
+  private def heldSearch(snap: Snapshot, args: SearchArgs,
+                         hit: Option[Column]): (DataFrame, Long, Long) = {
+    def dist(q: Seq[Double]) = Knn.distCol(options.distanceMethod, col("vector"), typedlit(q))
+    snap.held.search(spark, filter(args), hit, (args.vector, args.k, args.radius) match {
+      case (None, _, _) | (_, 0, 0.0) => HeldView.Listing(args.limit, args.offset)
+      case (Some(q), k, r) =>
+        if (r == 0.0) HeldView.Nearest(dist(q), k) else HeldView.Within(dist(q), r)
+    })
+  }
+
   /** As [[search]], also reporting PercentSearched
     * (collection.go:569-712): exhaustive modes touch the whole filtered
     * corpus (100%); a precision="medium" k-NN or radius search touches
@@ -388,20 +449,27 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
   def searchWithStats(args: SearchArgs): SearchResults = {
     // results and percentage from one snapshot and one probe
     val snap = snapshot()
-    val filtered = filteredView(snap, args)
     val hit = probe(args)
-    val results = search(filtered, args, hit)
-    val pct = hit match {
-      case Some(h) if args.radius > 0.0 || (args.radius == 0.0 && args.k > 0) =>
-        AnnLsh.percentProbed(filtered, h)
-      case _ => if (snap.count == 0L) 0.0 else 100.0
+    val probed = hit.isDefined && (args.radius > 0.0 || (args.radius == 0.0 && args.k > 0))
+    def whole = if (snap.count == 0L) 0.0 else 100.0
+    if (snap.isHeld) {
+      val (results, filtered, kept) = heldSearch(snap, args, hit)
+      SearchResults(results, if (probed) AnnLsh.percent(filtered, kept) else whole)
+    } else {
+      val filtered = filteredView(snap, args)
+      val results = search(filtered, args, hit)
+      SearchResults(results,
+        if (probed) described("search")(AnnLsh.percentProbed(filtered, hit.get)) else whole)
     }
-    SearchResults(results, pct)
   }
 
   /** GetDocument (collection.go:463). */
-  def getDocument(id: Long): Option[(Seq[Double], String)] =
-    current().filter(col("id") === id)
+  def getDocument(id: Long): Option[(Seq[Double], String)] = document(snapshot(), id)
+
+  /** The vector and metadata of `id` in `snap`. */
+  private def document(snap: Snapshot, id: Long): Option[(Seq[Double], String)] =
+    if (snap.isHeld) snap.held.get(id)
+    else snap.view.filter(col("id") === id)
       .select(col("vector"), col("metadata"))
       .collect().headOption
       .map(r => (r.getSeq[Double](0), r.getString(1)))
@@ -409,8 +477,10 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
   /** computeAverageDistance (collection.go:348): mean pairwise
     * distance over a deterministic sample (the `sampleIds` lowest ids
     * — engine-reproducible, unlike the reference's RNG sampling). */
-  def averageDistance(sampleIds: Int): Double = {
-    val sample = current().orderBy(col("id")).limit(sampleIds)
+  def averageDistance(sampleIds: Int): Double = described("averageDistance") {
+    val snap = snapshot()
+    val sample = (if (snap.isHeld) snap.held.frame(spark, sampleIds)
+                  else snap.view.orderBy(col("id")).limit(sampleIds))
       .select(col("id"), col("vector"))
     val a = sample.select(col("id").as("i"), col("vector").as("va"))
     val b = sample.select(col("id").as("j"), col("vector").as("vb"))
@@ -498,7 +568,7 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
     * fall out of the window on subsequent compactions, and the
     * commits older than the oldest retained base go with them. Pass 0
     * to reclaim everything immediately (no concurrent readers). */
-  def compact(retainGenerations: Int = 1): Unit = writeLock.synchronized {
+  def compact(retainGenerations: Int = 1): Unit = writeLock.synchronized(described("compact") {
     require(retainGenerations >= 0,
       s"retainGenerations must be >= 0, got $retainGenerations")
     val gen = compacted()
@@ -510,19 +580,20 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
     val log = commits()
     if (oldest > 0) log.find(commitAt(_).generation.contains(oldest)).foreach(base =>
       log.takeWhile(_ < base).foreach(v => f.delete(commitPath(v), false)))
-  }
+  })
 
   /** Writes the current view as the next generation and publishes its
     * base commit; if another writer took the number, the next attempt
-    * compacts again (and overwrites the directory). Returns the
-    * generation. */
+    * compacts again (and overwrites the directory). A held view lands
+    * as one file, as a driver-held write does. Returns the generation. */
   @annotation.tailrec
   private def compacted(): Int = {
     val snap = snapshot()
     val (v, gen) = (snap.head + 1, snap.generation + 1)
     val dir = generationName(name, gen)
+    val view = if (snap.isHeld) snap.held.frame(spark).coalesce(1) else snap.view
     // mode=overwrite clears any partial dir a crashed attempt left
-    snap.view.select(col("id"), col("vector"), col("metadata"),
+    view.select(col("id"), col("vector"), col("metadata"),
         lit(v).as("version"), lit(false).as("deleted"))
       .write.mode("overwrite").parquet(resolve(dir).toString)
     if (publish(Commit(v, Some(gen), parquetIn(dir)))) gen else compacted()
@@ -530,6 +601,30 @@ final class Collection(spark: SparkSession, val options: CollectionOptions, path
 }
 
 object Collection {
+
+  /** The bound, in bytes, below which a snapshot's view is held on
+    * the driver ([[HeldView]]) instead of checkpointed. It is compared
+    * with the summed length of the parquet files the snapshot's
+    * commits name, times 64 / quantization: parquet stores a float64
+    * vector about as large as the driver holds it, and dictionary-
+    * encodes a vector quantized to q < 32 bits in about q/64 of that
+    * (a 32-bit vector, stored as plain doubles, is over-counted, which
+    * errs toward checkpointing). A file length is read from file
+    * status, so checking the bound runs no job.
+    *
+    * 32 MiB is where the held path stops winning every kind of read.
+    * Measured with 64-d angular records (4-core VM, local[4], 3 GB
+    * heap; read p50 held vs checkpointed): at 55k records (27.6 MB of
+    * float64 parquet, 36 MB held on the heap) a filtered k-NN, whose
+    * JSON predicate the driver evaluates on one thread, took 166 vs
+    * 179 ms and every other read won by 2-10x; at 110k (55 MB, 72 MB
+    * held) it took 382 vs 240 ms, while exact k-NN (214 vs 270),
+    * medium k-NN (111 vs 424), a listing (25 vs 457) and `getDocument`
+    * (0.3 vs 118) still won. 110k records quantized to 8 bits wrote
+    * 8.2 MB of parquet and held the same 71 MB, hence the scaling. The
+    * held rows cost about 1.3 times their float64 parquet bytes of
+    * heap (the 20k-record serving collection: 10 MB of parquet). */
+  private[graft] val HeldBytes: Long = 32L << 20
 
   /** The fixed five-column schema of every log file. */
   private val LogSchema = StructType(Seq(
@@ -591,14 +686,19 @@ object Collection {
   /** NewCollection (collection.go:224): persists the options next to
     * the log (the reference stores them in the spanfile header) so a
     * later [[open]] needs only the path. */
-  def create(spark: SparkSession, options: CollectionOptions, path: String): Collection = {
+  def create(spark: SparkSession, options: CollectionOptions, path: String): Collection =
+    create(spark, options, path, HeldBytes)
+
+  /** [[create]] with the held-snapshot bound `heldBytes`. */
+  private[graft] def create(spark: SparkSession, options: CollectionOptions, path: String,
+                            heldBytes: Long): Collection = {
     val json = optionsJson(options)
     val mp = new Path(metaPath(path))
     val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(mp, true)
     out.write(json.getBytes("UTF-8"))
     out.close()
-    new Collection(spark, options, path)
+    new Collection(spark, options, path, heldBytes)
   }
 
   /** Recreate a collection from a [[Collection#dump]] backup — the
@@ -693,8 +793,11 @@ object Collection {
     * whole Spark json job for a one-object file). Older collections
     * predate lshTables; absent -> single-table (the parser's
     * default). */
-  def open(spark: SparkSession, path: String): Collection =
-    new Collection(spark, readOptions(spark, new Path(metaPath(path))), path)
+  def open(spark: SparkSession, path: String): Collection = open(spark, path, HeldBytes)
+
+  /** [[open]] with the held-snapshot bound `heldBytes`. */
+  private[graft] def open(spark: SparkSession, path: String, heldBytes: Long): Collection =
+    new Collection(spark, readOptions(spark, new Path(metaPath(path))), path, heldBytes)
 
   /** Driver-side read of an `.options.json` sidecar on its own
     * filesystem, through [[parseOptionsJson]]. */

@@ -689,7 +689,11 @@ object AnnLsh {
     * the reference's NaN guard (collection.go:707). */
   def percentProbed(df: DataFrame, hit: Column): Double = {
     val row = df.agg(count(lit(1)), sum(when(hit, 1L).otherwise(0L))).head()
-    val total = row.getLong(0)
-    if (total == 0L) 0.0 else row.getLong(1).toDouble / total * 100.0
+    // the sum is null over no rows
+    percent(row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
   }
+
+  /** `hits` as a percentage of `total` rows; 0 when `total` is 0. */
+  def percent(total: Long, hits: Long): Double =
+    if (total == 0L) 0.0 else hits.toDouble / total * 100.0
 }

@@ -48,7 +48,9 @@ final case class ApiResponse(status: Int, body: String)
   *    (main.go:39-49, e.g. PUT …/search reaching handleCollection's
   *    switch and returning an empty 200) are not reproduced.
   */
-final class Api(spark: SparkSession, rootDir: String) {
+final class Api private[graft] (spark: SparkSession, rootDir: String, heldBytes: Long) {
+
+  def this(spark: SparkSession, rootDir: String) = this(spark, rootDir, Collection.HeldBytes)
 
   /** Registry guard mirroring the reference's `s.mutex` (rest.go:104-119,
     * 127-133, 210-214): every registry read/mutation synchronizes here,
@@ -58,7 +60,7 @@ final class Api(spark: SparkSession, rootDir: String) {
   private val collections =
     scala.collection.mutable.Map[String, Collection]() ++
       Collection.list(spark, rootDir)
-        .map { case (name, path) => name -> Collection.open(spark, path) }
+        .map { case (name, path) => name -> Collection.open(spark, path, heldBytes) }
 
   private def pathFor(name: String): String =
     s"$rootDir/${java.net.URLEncoder.encode(name, "UTF-8")}"
@@ -141,7 +143,7 @@ final class Api(spark: SparkSession, rootDir: String) {
                     Knn.Euclidean else Knn.Cosine
                 collections(name) = Collection.create(spark,
                   CollectionOptions(name, dim.toInt, metric, quant),
-                  pathFor(name))
+                  pathFor(name), heldBytes)
                 ok(JObject(
                   "message" -> JString("Collection created successfully."),
                   "collection_name" -> JString(name)), 201)
@@ -284,7 +286,9 @@ final class Api(spark: SparkSession, rootDir: String) {
       }
     }
 
-  // -- DELETE …/records/{id} (rest.go:341-370) --
+  // -- DELETE …/records/{id} (rest.go:341-370): below the held bound
+  // the existence check is a binary search over the snapshot's held
+  // rows, so it runs no job of its own --
   private def deleteRecord(name: String, idStr: String): ApiResponse =
     idStr.toLongOption match {
       case None => err(400, "Invalid record ID")

@@ -12,8 +12,8 @@ import org.json4s.jackson.JsonMethods
   */
 class ApiSpec extends SparkSpec {
 
-  private def newApi(): Api =
-    new Api(spark, java.nio.file.Files.createTempDirectory("graft-api").toString)
+  private def newApi(heldBytes: Long = Collection.HeldBytes): Api =
+    new Api(spark, tempDir("api").toString, heldBytes)
 
   private def json(r: ApiResponse): JValue = JsonMethods.parse(r.body)
   private def mkCollection(api: Api, name: String = "test_collection",
@@ -152,26 +152,96 @@ class ApiSpec extends SparkSpec {
       """{"metadata": {}}""").status == 404)
   }
 
-  test("PUT metadata after a write runs at most 4 jobs; a 404 commits nothing") {
-    val root = java.nio.file.Files.createTempDirectory("graft-api-meta").toString
-    val api = new Api(spark, root)
-    mkCollection(api)
-    def put(id: Long, status: Int): Unit = {
-      val r = api.handle("PUT", s"/api/v1/collections/test_collection/records/$id/metadata",
-        """{"metadata": {"k": 2}}""")
-      assert(r.status == status, r.body)
+  // below the held bound the existence check reads the held rows; at a
+  // bound of 0 it reads the checkpointed view in a job of its own
+  for ((side, heldBytes, most) <- Seq(("", Collection.HeldBytes, 3), (" (checkpointed)", 0L, 4)))
+    test(s"PUT metadata after a write runs at most 4 jobs; a 404 commits nothing$side") {
+      val root = tempDir("api-meta").toString
+      val api = new Api(spark, root, heldBytes)
+      mkCollection(api)
+      def put(id: Long, status: Int): Unit = {
+        val r = api.handle("PUT", s"/api/v1/collections/test_collection/records/$id/metadata",
+          """{"metadata": {"k": 2}}""")
+        assert(r.status == status, r.body)
+      }
+      insert(api, "test_collection", 1L, Seq(0.1, 0.2, 0.3, 0.4, 0.5), """{"k": 1}""")
+      val found = jobsOf(put(1L, 200))
+      assert(found.size <= most, s"$found")
+      assert(Collection.open(spark, s"$root/test_collection").getDocument(1L).map(_._2)
+        .contains("""{"k":2}"""))
+      insert(api, "test_collection", 2L, Seq(0.5, 0.4, 0.3, 0.2, 0.1), "{}")
+      def commits = new java.io.File(s"$root/test_collection._log").list().toSet
+      val before = commits
+      val missing = jobsOf(put(99L, 404))
+      assert(missing.size <= most, s"$missing")
+      assert(commits == before)
     }
+
+  /** Sends `request` after a write, and returns the jobs it ran. */
+  private def jobsAfterAWrite(request: Api => ApiResponse, status: Int): Seq[SparkSpec.Job] = {
+    val api = newApi()
+    mkCollection(api)
     insert(api, "test_collection", 1L, Seq(0.1, 0.2, 0.3, 0.4, 0.5), """{"k": 1}""")
-    val found = jobsOf(put(1L, 200))
-    assert(found.size <= 4, s"$found")
-    assert(Collection.open(spark, s"$root/test_collection").getDocument(1L).map(_._2)
-      .contains("""{"k":2}"""))
+    assert(api.handle("GET", "/api/v1/collections/test_collection/ids").status == 200)
     insert(api, "test_collection", 2L, Seq(0.5, 0.4, 0.3, 0.2, 0.1), "{}")
-    def commits = new java.io.File(s"$root/test_collection._log").list().toSet
-    val before = commits
-    val missing = jobsOf(put(99L, 404))
-    assert(missing.size <= 4, s"$missing")
-    assert(commits == before)
+    var r: ApiResponse = null
+    val jobs = jobsOf { r = request(api) }
+    assert(r.status == status, r.body)
+    jobs
+  }
+
+  private def described(jobs: Seq[SparkSpec.Job]): Seq[String] =
+    jobs.map(_.description.getOrElse("none").takeWhile(_ != ' '))
+
+  test("PUT metadata after a write: the snapshot build and the write, 3 jobs") {
+    val put = (id: Long) => (api: Api) => api.handle("PUT",
+      s"/api/v1/collections/test_collection/records/$id/metadata", """{"metadata": {"k": 2}}""")
+    assert(described(jobsAfterAWrite(put(1L), 200)) ==
+      Seq("Collection.snapshot", "Collection.snapshot", "Collection.write"))
+    // a 404 builds the snapshot and writes nothing
+    assert(described(jobsAfterAWrite(put(99L), 404)) ==
+      Seq("Collection.snapshot", "Collection.snapshot"))
+  }
+
+  test("DELETE a record after a write: the snapshot build and the write, 3 jobs") {
+    val delete = (id: Long) => (api: Api) =>
+      api.handle("DELETE", s"/api/v1/collections/test_collection/records/$id")
+    assert(described(jobsAfterAWrite(delete(2L), 200)) ==
+      Seq("Collection.snapshot", "Collection.snapshot", "Collection.write"))
+    assert(described(jobsAfterAWrite(delete(99L), 404)) ==
+      Seq("Collection.snapshot", "Collection.snapshot"))
+  }
+
+  test("every Collection job an Api request runs carries a job description") {
+    val api = newApi()
+    val c = "/api/v1/collections/test_collection"
+    val requests = Seq[(String, String, String)](
+      ("POST", "/api/v1/collections",
+        """{"name": "test_collection", "vector_size": 5, "distance_function": "cosine"}"""),
+      ("POST", s"$c/records", """[{"id": 1, "vector": [0.1, 0.2, 0.3, 0.4, 0.5], "metadata": {"t": "a"}},
+        | {"id": 2, "text": "some words", "metadata": {"t": "b"}}]""".stripMargin),
+      ("GET", "/api/v1/collections", ""),
+      ("GET", c, ""),
+      ("GET", s"$c/ids", ""),
+      ("POST", s"$c/search", """{"vector": [0.1, 0.2, 0.3, 0.4, 0.5], "k": 1, "precision": "exact"}"""),
+      ("POST", s"$c/search", """{"vector": [0.1, 0.2, 0.3, 0.4, 0.5], "k": 1}"""),
+      ("POST", s"$c/search", """{"vector": [0.1, 0.2, 0.3, 0.4, 0.5], "radius": 0.5}"""),
+      ("POST", s"$c/search", """{"text": "some words", "k": 1, "filter": "t == \"b\""}"""),
+      ("POST", s"$c/search", """{"limit": 1, "offset": 1}"""),
+      ("PUT", s"$c/records/1/metadata", """{"metadata": {"t": "c"}}"""),
+      ("DELETE", s"$c/records/2", ""),
+      ("POST", s"$c/compact", ""),
+      ("DELETE", c, ""))
+    val ran = requests.map { case (method, path, body) =>
+      var r: ApiResponse = null
+      val jobs = jobsOf { r = api.handle(method, path, body) }
+      assert(r.status < 300, s"$method $path: ${r.body}")
+      val bare = jobs.filterNot(_.description.exists(_.startsWith("Collection.")))
+      assert(bare.isEmpty, s"$method $path ran jobs without a description: $bare")
+      jobs.size
+    }
+    // builds, writes, stats and the compaction ran jobs
+    assert(ran.sum > 0)
   }
 
   test("delete record tombstones it; missing record 404s (rest_test.go:452)") {
@@ -290,7 +360,7 @@ class ApiSpec extends SparkSpec {
   }
 
   test("text embeds on the driver: stored bits equal the reference, no embedding job") {
-    val root = java.nio.file.Files.createTempDirectory("graft-api-emb").toString
+    val root = tempDir("api").toString
     val api = new Api(spark, root)
     val r = api.handle("POST", "/api/v1/collections",
       """{"name": "emb", "vector_size": 16, "distance_function": "euclidean"}""")
@@ -371,7 +441,7 @@ class ApiSpec extends SparkSpec {
   }
 
   test("registry reopens persisted collections from disk") {
-    val root = java.nio.file.Files.createTempDirectory("graft-api").toString
+    val root = tempDir("api").toString
     val api = new Api(spark, root)
     val r = api.handle("POST", "/api/v1/collections",
       """{"name": "persisted", "vector_size": 3,
@@ -387,7 +457,7 @@ class ApiSpec extends SparkSpec {
   }
 
   test("search with both text and vector: the text embedding wins (rest.go:441-449)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-api").toString
+    val root = tempDir("api").toString
     val api = new Api(spark, root)
     mkCollection(api, dim = 16)
     val r = api.handle("POST", "/api/v1/collections/test_collection/records",
@@ -471,7 +541,7 @@ class ApiSpec extends SparkSpec {
   }
 
   test("forest collection percent_searched matches AnnLsh.percentSearchedForest") {
-    val root = java.nio.file.Files.createTempDirectory("graft-api").toString
+    val root = tempDir("api").toString
     // a forest collection (lshTables > 1) created through the library,
     // reopened by the Api's startup scan — the serving path must report
     // the same probed-bucket mass as the operator it delegates to
@@ -534,7 +604,7 @@ class ApiSpec extends SparkSpec {
   }
 
   test("one collection's data path is safe under concurrent mixed insert/search (collection.go mutex discipline)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-api").toString
+    val root = tempDir("api").toString
     val api = new Api(spark, root)
     mkCollection(api, "shared", dim = 4)
     import java.util.concurrent.Executors

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.core.{Collection, CollectionOptions, SearchArgs}
 import graft.operators.{AnnLsh, Knn}
@@ -9,14 +10,18 @@ import graft.operators.{AnnLsh, Knn}
 class CollectionSpec extends SparkSpec {
   import spark.implicits._
 
-  private def newCollection(quantization: Int = 64): Collection = {
-    val dir = Files.createTempDirectory("graft-coll").toFile
-    dir.delete()
-    Collection.create(spark,
-      CollectionOptions("test", dimensionCount = 4,
-        distanceMethod = Knn.Euclidean, quantization = quantization),
-      dir.getAbsolutePath)
+  /** A collection at `<a private directory>/<name>`: nothing else is
+    * listed beside it. `heldBytes` is its held-snapshot bound. */
+  private def newCollectionAt(name: String, heldBytes: Long = Collection.HeldBytes,
+                              quantization: Int = 64): (Collection, String) = {
+    val path = tempDir(name).resolve(name).toString
+    (Collection.create(spark, CollectionOptions(name, dimensionCount = 4,
+      distanceMethod = Knn.Euclidean, quantization = quantization), path, heldBytes), path)
   }
+
+  private def newCollection(quantization: Int = 64,
+                            heldBytes: Long = Collection.HeldBytes): Collection =
+    newCollectionAt("test", heldBytes, quantization)._1
 
   private def docs3 = Seq(
     (1L, Seq(0.0, 0.0, 0.0, 0.0), """{"tag": "a"}"""),
@@ -24,17 +29,20 @@ class CollectionSpec extends SparkSpec {
     (3L, Seq(0.0, 5.0, 0.0, 0.0), """{"tag": "a"}""")
   ).toDF("id", "vector", "metadata")
 
-  private def builds(jobs: Seq[Seq[String]]): Int =
-    jobs.count(_.exists(_.startsWith("localCheckpoint")))
+  /** The snapshot builds among `jobs`, on either path. */
+  private def builds(jobs: Seq[SparkSpec.Job]): Int =
+    jobs.count(_.description.exists(_.startsWith("Collection.snapshot ")))
 
-  /** A collection at a path the test can list. */
-  private def newCollectionAt(name: String): (Collection, String) = {
-    val dir = Files.createTempDirectory(s"graft-coll-$name").toFile
-    dir.delete()
-    val path = dir.getAbsolutePath
-    (Collection.create(spark,
-      CollectionOptions(name, dimensionCount = 4, distanceMethod = Knn.Euclidean), path), path)
-  }
+  /** The stages of snapshot builds among `jobs` whose names do not
+    * start with `site`. */
+  private def buildStagesNot(site: String, jobs: Seq[SparkSpec.Job]): Int =
+    jobs.filter(_.description.exists(_.startsWith("Collection.snapshot ")))
+      .flatMap(_.stages).count(!_.startsWith(site))
+
+  /** Both sides of the held-snapshot bound, as a test-name suffix and a
+    * bound: the default, below which these small collections are held
+    * on the driver, and 0, at which every snapshot is checkpointed. */
+  private val bothPaths = Seq("" -> Collection.HeldBytes, " (checkpointed)" -> 0L)
 
   /** (path, length, modification time) of each parquet file under `dir`. */
   private def parquetFiles(dir: String): Set[(String, Long, Long)] =
@@ -73,8 +81,7 @@ class CollectionSpec extends SparkSpec {
     val c = newCollection(quantization = 32)
     c.addDocuments(docs3)
     c.removeDocuments(Seq(2L)) // the dump is the CURRENT view
-    val f = Files.createTempDirectory("graft-dump").toFile
-      .getAbsolutePath + "/coll.jsonl"
+    val f = tempDir("dump").toString + "/coll.jsonl"
     c.dumpFile(f)
     // deterministic shape: line 1 is the options header, then one
     // record line per live id, in id order
@@ -90,9 +97,7 @@ class CollectionSpec extends SparkSpec {
       scala.io.Source.fromFile(f, "UTF-8").mkString)
     // the import twin needs NO options argument: the dump describes
     // itself, and the restored collection serves the same view
-    val dir2 = Files.createTempDirectory("graft-imp").toFile
-    dir2.delete()
-    val c2 = Collection.importDumpFile(spark, dir2.getAbsolutePath, f)
+    val c2 = Collection.importDumpFile(spark, tempDir("imp").toString + "/c", f)
     assert(c2.options.quantization == 32 &&
       c2.options.distanceMethod == Knn.Euclidean)
     assert(c2.getAllIds() == Seq(1L, 3L))
@@ -110,9 +115,7 @@ class CollectionSpec extends SparkSpec {
     c.removeDocuments(Seq(1L, 3L))
     val f3 = f + ".empty"
     c.dumpFile(f3)
-    val dir3 = Files.createTempDirectory("graft-imp-e").toFile
-    dir3.delete()
-    val c3 = Collection.importDumpFile(spark, dir3.getAbsolutePath, f3)
+    val c3 = Collection.importDumpFile(spark, tempDir("imp-e").toString + "/c", f3)
     assert(c3.documentCount() == 0 && c3.options.quantization == 32)
   }
 
@@ -210,10 +213,8 @@ class CollectionSpec extends SparkSpec {
     val bucket = records.map { case (i, v) => i -> refBucket(v) }.toMap
     val n = records.size.toDouble
 
-    val dir = Files.createTempDirectory("graft-coll-onetable").toFile
-    dir.delete()
     val c = Collection.create(spark, CollectionOptions("one", dimensionCount = dim,
-      distanceMethod = Knn.Euclidean, lshPlanes = numPlanes), dir.getAbsolutePath)
+      distanceMethod = Knn.Euclidean, lshPlanes = numPlanes), tempDir("onetable").toString + "/one")
     c.addDocuments(records.map { case (i, v) => (i, v, "{}") }.toDF("id", "vector", "metadata"))
 
     assert(c.current().select(col("id"), AnnLsh.bucketCol(col("vector"), numPlanes, dim))
@@ -245,7 +246,7 @@ class CollectionSpec extends SparkSpec {
   }
 
   test("registry: list finds created collections, drop removes them (rest.go:67)") {
-    val root = Files.createTempDirectory("graft-registry").toFile.getAbsolutePath
+    val root = tempDir("registry").toString
     val c1 = Collection.create(spark, CollectionOptions("alpha", 4), s"$root/alpha")
     Collection.create(spark, CollectionOptions("beta", 4), s"$root/beta")
     c1.addDocuments(docs3)
@@ -257,8 +258,7 @@ class CollectionSpec extends SparkSpec {
   }
 
   test("open() restores a created collection from persisted options") {
-    val dir = Files.createTempDirectory("graft-open").toFile
-    dir.delete()
+    val dir = new java.io.File(tempDir("open").toFile, "reopen-me")
     val c = Collection.create(spark,
       CollectionOptions("reopen-me", 4, Knn.Euclidean, quantization = 8),
       dir.getAbsolutePath)
@@ -304,9 +304,7 @@ class CollectionSpec extends SparkSpec {
   }
 
   test("precision medium searches the LSH forest when lshTables > 1") {
-    val dir = Files.createTempDirectory("graft-coll-forest").toFile
-    dir.delete()
-    val path = dir.getAbsolutePath
+    val path = tempDir("forest").toString + "/forest"
     val c = Collection.create(spark,
       CollectionOptions("forest", dimensionCount = 4, distanceMethod = Knn.Cosine,
         lshPlanes = 3, lshTables = 6), path)
@@ -331,9 +329,7 @@ class CollectionSpec extends SparkSpec {
   }
 
   test("compact is crash-safe: no step leaves current() without data") {
-    val dir = Files.createTempDirectory("graft-coll-crash").toFile
-    dir.delete()
-    val path = dir.getAbsolutePath
+    val path = tempDir("crash").toString + "/cr"
     val c = Collection.create(spark,
       CollectionOptions("cr", dimensionCount = 4, distanceMethod = Knn.Euclidean), path)
     c.addDocuments(docs3)
@@ -399,48 +395,46 @@ class CollectionSpec extends SparkSpec {
     assert(c.getAllIds() == Seq(1L, 3L))
   }
 
-  test("snapshot: reads with no write between them build the view once") {
-    val c = newCollection()
-    c.addDocuments(docs3)
-    val first = jobsOf(assert(c.getAllIds() == Seq(1L, 2L, 3L)))
-    val second = jobsOf(assert(c.getAllIds() == Seq(1L, 2L, 3L)))
-    assert(builds(first) >= 1, s"first read built no view: $first")
-    assert(builds(second) == 0, s"second read rebuilt the view: $second")
-    assert(second.size < first.size)
-    // the row count is memoized on the snapshot
-    jobsOf(assert(c.documentCount() == 3))
-    assert(jobsOf(assert(c.documentCount() == 3)).isEmpty)
-    assert(jobsOf(assert(c.stats()._1 == 3)).isEmpty)
-    // an exact search runs its own jobs only: no build, no count
-    val q = SearchArgs(vector = Some(Seq(0.0, 0.0, 0.0, 0.0)), k = 2, precision = "exact")
-    val exact = jobsOf(assert(c.searchWithStats(q).percentSearched == 100.0))
-    assert(exact.isEmpty, s"percentSearched ran jobs: $exact")
-  }
+  for ((side, heldBytes) <- bothPaths) {
+    test(s"snapshot: reads with no write between them build the view once$side") {
+      val c = newCollection(heldBytes = heldBytes)
+      c.addDocuments(docs3)
+      val first = jobsOf(assert(c.getAllIds() == Seq(1L, 2L, 3L)))
+      val second = jobsOf(assert(c.getAllIds() == Seq(1L, 2L, 3L)))
+      assert(builds(first) >= 1, s"first read built no view: $first")
+      assert(builds(second) == 0, s"second read rebuilt the view: $second")
+      assert(second.size < first.size)
+      // the row count is memoized on the snapshot
+      jobsOf(assert(c.documentCount() == 3))
+      assert(jobsOf(assert(c.documentCount() == 3)).isEmpty)
+      assert(jobsOf(assert(c.stats()._1 == 3)).isEmpty)
+      // an exact search runs its own jobs only: no build, no count
+      val q = SearchArgs(vector = Some(Seq(0.0, 0.0, 0.0, 0.0)), k = 2, precision = "exact")
+      val exact = jobsOf(assert(c.searchWithStats(q).percentSearched == 100.0))
+      assert(exact.isEmpty, s"percentSearched ran jobs: $exact")
+    }
 
-  test("snapshot: every kind of write is visible to the next read") {
-    val dir = Files.createTempDirectory("graft-coll-inval").toFile
-    dir.delete()
-    val path = dir.getAbsolutePath
-    val c = Collection.create(spark,
-      CollectionOptions("inval", dimensionCount = 4, distanceMethod = Knn.Euclidean), path)
-    assert(c.documentCount() == 0 && c.getAllIds().isEmpty)
-    c.addDocuments(docs3)
-    assert(c.documentCount() == 3 && c.getAllIds() == Seq(1L, 2L, 3L))
-    c.removeDocuments(Seq(2L))
-    assert(c.documentCount() == 2 && c.getAllIds() == Seq(1L, 3L))
-    c.updateMetadata(3L, """{"tag": "m"}""")
-    assert(c.getDocument(3L).map(_._2).contains("""{"tag": "m"}"""))
-    c.compact()
-    assert(c.getAllIds() == Seq(1L, 3L))
-    c.addDocuments(Seq((4L, Seq(1.0, 1.0, 1.0, 1.0), "{}")).toDF("id", "vector", "metadata"))
-    assert(c.getAllIds() == Seq(1L, 3L, 4L))
-    // a second instance on the same path writes; the first one sees it
-    Collection.open(spark, path)
-      .addDocuments(Seq((5L, Seq(2.0, 2.0, 2.0, 2.0), "{}")).toDF("id", "vector", "metadata"))
-    assert(c.documentCount() == 4 && c.getAllIds() == Seq(1L, 3L, 4L, 5L))
-    val hits = c.search(SearchArgs(vector = Some(Seq(2.0, 2.0, 2.0, 2.0)), k = 1,
-      precision = "exact")).select("id").as[Long].collect().toSeq
-    assert(hits == Seq(5L))
+    test(s"snapshot: every kind of write is visible to the next read$side") {
+      val (c, path) = newCollectionAt("inval", heldBytes)
+      assert(c.documentCount() == 0 && c.getAllIds().isEmpty)
+      c.addDocuments(docs3)
+      assert(c.documentCount() == 3 && c.getAllIds() == Seq(1L, 2L, 3L))
+      c.removeDocuments(Seq(2L))
+      assert(c.documentCount() == 2 && c.getAllIds() == Seq(1L, 3L))
+      c.updateMetadata(3L, """{"tag": "m"}""")
+      assert(c.getDocument(3L).map(_._2).contains("""{"tag": "m"}"""))
+      c.compact()
+      assert(c.getAllIds() == Seq(1L, 3L))
+      c.addDocuments(Seq((4L, Seq(1.0, 1.0, 1.0, 1.0), "{}")).toDF("id", "vector", "metadata"))
+      assert(c.getAllIds() == Seq(1L, 3L, 4L))
+      // a second instance on the same path writes; the first one sees it
+      Collection.open(spark, path)
+        .addDocuments(Seq((5L, Seq(2.0, 2.0, 2.0, 2.0), "{}")).toDF("id", "vector", "metadata"))
+      assert(c.documentCount() == 4 && c.getAllIds() == Seq(1L, 3L, 4L, 5L))
+      val hits = c.search(SearchArgs(vector = Some(Seq(2.0, 2.0, 2.0, 2.0)), k = 1,
+        precision = "exact")).select("id").as[Long].collect().toSeq
+      assert(hits == Seq(5L))
+    }
   }
 
   test("a parquet file that no commit names is never read") {
@@ -449,7 +443,7 @@ class CollectionSpec extends SparkSpec {
     // a file in the data directory that no commit names, as a writer
     // that died before its commit leaves it, with a version above
     // every commit: a newer row for id 1 and a new id 7
-    val src = Files.createTempDirectory("graft-coll-stray").toFile.getPath + "/out"
+    val src = tempDir("stray").toString + "/out"
     Seq((1L, Seq(9.0, 9.0, 9.0, 9.0), """{"tag": "stray"}""", 99L, false),
         (7L, Seq(7.0, 7.0, 7.0, 7.0), """{"tag": "stray"}""", 99L, false))
       .toDF("id", "vector", "metadata", "version", "deleted").coalesce(1).write.parquet(src)
@@ -466,7 +460,7 @@ class CollectionSpec extends SparkSpec {
   }
 
   test("snapshot: superseded snapshots are reclaimed without unpersist") {
-    val c = newCollection()
+    val c = newCollection(heldBytes = 0L)
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     (0 until 20).foreach { i =>
@@ -483,6 +477,40 @@ class CollectionSpec extends SparkSpec {
     }
     assert(held <= 2, s"$held snapshots still persisted after 20 writes")
     assert(c.getAllIds() == (0L until 20L))
+  }
+
+  test("snapshot: superseded held snapshots are reclaimed by the GC; results outlive them") {
+    val c = newCollection()
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet
+    def add(i: Int) = {
+      c.addDocuments(Seq((i.toLong, Seq(i.toDouble, 0.0, 0.0, 0.0), "{}"))
+        .toDF("id", "vector", "metadata"))
+      assert(c.documentCount() == i + 1)
+    }
+    // a weak reference to a row of each snapshot's held view, which
+    // `current()` shares: the collection keeps no superseded snapshot
+    val rows = (0 until 20).map { i =>
+      add(i)
+      val held = c.current().queryExecution.analyzed.collectFirst { case l: LocalRelation => l.data.head }
+      new java.lang.ref.WeakReference(held.get)
+    }
+    def live = rows.count(_.get != null)
+    val deadline = System.nanoTime() + 60000000000L
+    while (live > 1 && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    assert(live <= 1, s"$live held snapshots still reachable after 20 writes")
+    assert(sc.getPersistentRDDs.keySet == persisted, "a held snapshot persisted an RDD")
+    // a plan over a result still reads after its snapshot is superseded
+    val plans = (20 until 30).map { i =>
+      add(i)
+      c.search(SearchArgs(limit = 100)).select("id")
+    }
+    c.compact()
+    plans.zipWithIndex.foreach { case (p, i) => assert(p.as[Long].collect().toSeq == (0L to 20L + i)) }
+    assert(c.getAllIds() == (0L until 30L))
   }
 
   /** Two writers and four readers on `instances` of one collection
@@ -577,8 +605,7 @@ class CollectionSpec extends SparkSpec {
   }
 
   test("a log without commits is adopted once; the next write wins") {
-    val tmp = Files.createTempDirectory("graft-coll-adopt").toFile
-    val path = tmp.getAbsolutePath + "/coll"
+    val path = tempDir("adopt").toString + "/coll"
     Collection.create(spark,
       CollectionOptions("adopt", dimensionCount = 4, distanceMethod = Knn.Euclidean), path)
     def rows(rs: (Long, String, Long, Boolean)*) =
@@ -619,7 +646,7 @@ class CollectionSpec extends SparkSpec {
   }
 
   test("snapshot: the first count after a write runs one job besides the build") {
-    val c = newCollection()
+    val c = newCollection(heldBytes = 0L)
     def add(id: Long) =
       c.addDocuments(Seq((id, Seq(id.toDouble, 0.0, 0.0, 0.0), "{}")).toDF("id", "vector", "metadata"))
     add(1L)
@@ -634,14 +661,15 @@ class CollectionSpec extends SparkSpec {
   }
 
   test("a snapshot build names all its jobs' stages and restores the caller's call site") {
-    val c = newCollection()
+    val c = newCollection(heldBytes = 0L)
     c.addDocuments(docs3)
     val read = jobsOf(assert(c.documentCount() == 3))
     // AQE's shuffle-map job runs on another thread; unlabelled, its
     // stage is named after that thread's frame
-    assert(!read.flatten.exists(_.contains("withThreadLocalCaptured")), s"$read")
-    // every job but the count is the build's
+    assert(!read.flatMap(_.stages).exists(_.contains("withThreadLocalCaptured")), s"$read")
+    // every job but the count is the build's, and names its stages
     assert(builds(read) == read.size - 1, s"$read")
+    assert(buildStagesNot("localCheckpoint", read) == 0, s"$read")
     c.removeDocuments(Seq(3L))
     val sc = spark.sparkContext
     sc.setCallSite("caller site")
@@ -649,6 +677,16 @@ class CollectionSpec extends SparkSpec {
       assert(c.documentCount() == 2)
       assert(sc.getLocalProperty("callSite.short") == "caller site")
     } finally sc.clearCallSite()
+  }
+
+  test("a held snapshot build names all its jobs' stages") {
+    val c = newCollection()
+    c.addDocuments(docs3)
+    val read = jobsOf(assert(c.documentCount() == 3))
+    assert(!read.flatMap(_.stages).exists(_.contains("withThreadLocalCaptured")), s"$read")
+    // every job is the build's: the count is the held row count
+    assert(read.nonEmpty && builds(read) == read.size, s"$read")
+    assert(buildStagesNot("executeCollect", read) == 0, s"$read")
   }
 
   test("empty writes append nothing and keep the snapshot") {
