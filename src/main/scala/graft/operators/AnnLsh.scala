@@ -368,7 +368,8 @@ object AnnLsh {
     * Canonicalize-first (round 8): d exact copies of a vector share
     * every bucket, so a raw member-level self-join grows candidate
     * pairs O(d^2) — a corpus where every vector has 10 copies ran
-    * ~240x slower, not 10x (measured, TextScaleProbe). The reference's
+    * ~240x slower, not 10x (measured before this change; the
+    * canonicalized ratio is recorded in TEXTSCALE_PROBE.json). The reference's
     * adaptive tree handles this by splitting overfull leaves
     * (lshtree.go:88-180) — fixed planes cannot split identical
     * vectors, so the scan-native answer is built in: exact-duplicate

@@ -187,8 +187,8 @@ object Bpe {
     * candidate window and commits the provably-safe disjoint prefix
     * ([[selectBatch]]) — identical merges to `batchSize = 1`, at a
     * per-round instead of per-merge driver round-trip + checkpoint
-    * cost. The batch-compression factor is corpus geometry, measured
-    * by BpeBatchProbe (VERDICT r14 #4): 1.09 merges/round on the
+    * cost. The batch-compression factor is corpus geometry, recorded
+    * in BPE_PROBE.json (VERDICT r14 #4): 1.09 merges/round on the
     * graded corpus (31 distinct words — tie/conflict-bound, batching
     * buys nothing and costs nothing), 1.0 on an adversarial two-letter
     * tie corpus (the floor: never worse than sequential), 3.46 on an
@@ -198,7 +198,7 @@ object Bpe {
     * `onRound` observes each committed round's merge count (the
     * batch-compression diagnostic: merges ÷ rounds is the job-count
     * win over sequential training — VERDICT r14 #4 asked for a
-    * measured floor on tie-heavy corpora; BpeBatchProbe reports it).
+    * measured floor on tie-heavy corpora; BPE_PROBE.json records it).
     * Purely observational — it cannot alter training.
     *
     * `windowMult` sizes the candidate window (`windowMult*want + 4`).
@@ -206,7 +206,7 @@ object Bpe {
     * more candidates before tripping, and the saturated-window
     * stopCount fallback holds at any size — so it trades one larger
     * TakeOrdered collect against (potentially) more merges per
-    * round. BpeBatchProbe sweeps it (VERDICT r15 #2): 4 → 8/16/32 on
+    * round. BPE_PROBE.json records a sweep (VERDICT r15 #2): 4 → 8/16/32 on
     * the rich-vocab probe leaves the factor at exactly 3.46 with
     * bit-identical merges — the window does NOT bind; the
     * strict-count trim does (count ties at the selection tail are

@@ -72,22 +72,17 @@ object IndexMaintenance {
     if (!fs.exists(new Path(tombstonePath(indexPath)))) return
     val cleaned = dropTombstoned(spark, indexPath,
       spark.read.parquet(indexPath), idCol)
-    // the build-config sidecar must survive compaction: read it to the
-    // driver (a handful of rows) before the root is deleted, restore
-    // it after the swap — compaction changes the file layout, never
-    // the parameters the index was built with
-    val cfgSrc = new Path(Dedup.indexConfigPath(indexPath))
-    val cfg: Option[Seq[(String, Long)]] =
-      if (fs.exists(cfgSrc))
-        Some(spark.read.parquet(cfgSrc.toString).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toSeq)
-      else None
+    // the build-config sidecar must survive compaction: hold its bytes
+    // on the driver before the root is deleted, restore them after the
+    // swap — compaction changes the file layout, never the parameters
+    // the index was built with
+    val cfg = Dedup.indexConfigBytes(fs, indexPath)
     val tmp = new Path(indexPath + "._compact")
     val w = cleaned.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(tmp.toString)
     fs.delete(root, true)
     fs.rename(tmp, root)
-    cfg.foreach(Dedup.writeIndexConfig(spark, indexPath, _))
+    cfg.foreach(Dedup.putIndexConfig(fs, indexPath, _))
   }
 }

@@ -153,7 +153,7 @@ object CrawlQueries {
       // stage 1: canonical-url fetch dedup; keep_id is always the
       // lowest-id spelling, so joining keep_id back onto the crawl
       // frame recovers (text, url) of exactly the first fetches.
-      // (r19 measured the pretrainV3Stages materialize rule here —
+      // (r19 measured the pretrainV3Stages cut rule here —
       // cutting kept/gated — and REJECTED it: 2.8 → 3.8 s at sf0.1.
       // Unlike the v3 spine, this chain's consumers prune to
       // different narrow column sets and share their exchanges, so

@@ -380,7 +380,7 @@ object DedupQueries {
       val sets = Dedup.shingleSets(corpus, "text", "doc_id", 3)
         .localCheckpoint()
       // localCheckpoint the shared truth frame (the pretrainV3Stages
-      // materialize rule): three sweep arms each join against it, and
+      // cut rule): three sweep arms each join against it, and
       // ReuseExchange dedupes only identical exchanges — as a plain
       // plan the expensive exact-ngram pair chain re-derived per arm.
       // EAGER cut inside the timed builder, unlike the deferred

@@ -239,7 +239,7 @@ object Fixtures {
     * lived session that mutates the corpus under the SAME path — what
     * upsert_crud/compact model — must re-train, not serve a stale model
     * forever. It is re-derived on every [[of]] (one FS listing per
-    * table, no Spark job — the Dedup `_config` sidecar convention).
+    * table, no Spark job).
     *
     * The listing is RECURSIVE: a PARTITIONED layout rewritten in place
     * changes neither the partition subdir's (name, length) nor — on

@@ -101,7 +101,7 @@ object PipelineQueries {
       // Proves the round-12 operators COMPOSE, as curate_v2 does for
       // round 11's. Every stage is the §2-verified operator reading
       // the previous frame; shared subtrees dedupe via ReuseExchange.
-      pretrainV3Stages(s, dir, materialize = true).mixed
+      pretrainV3Stages(s, dir).mixed
     },
       // the composition of the funnel fragment (over the dedup
       // corpus), the bloom position-set membership, the keep-best
@@ -118,13 +118,13 @@ object PipelineQueries {
       // dedup, the epoch mixture, and the final split sizes. Each
       // stage count is a single-row agg over the shared chain
       // (ReuseExchange dedupes the common subtrees in the one plan)
-      // materialize = true cuts the spine frames so the two arms read
+      // pretrainV3Stages cuts the spine frames, so the two arms read
       // checkpointed stage outputs instead of re-deriving the chain
       // (VERDICT r14 #5) — the cuts execute INSIDE the timed builder,
       // so the bench line stays honest
-      val st = pretrainV3Stages(s, dir, materialize = true)
+      val st = pretrainV3Stages(s, dir)
       // TWO aggregation arms, not one per stage: the early stages are
-      // nested prefixes of one chain — and with materialize = true
+      // nested prefixes of one chain — and since they are cut,
       // they are CHECKPOINTED prefixes, so each stage count is one
       // partial-aggregated count over its own cut frame, crossJoined
       // into the single row (r20, guide §1.2): the doc-spine shape
@@ -178,7 +178,7 @@ object PipelineQueries {
       // new operators COMPOSE, like pipeline_curate does for round 7's
       val corpus = kbCorpus(s, dir)
       // localCheckpoint the multi-reader stages (the pretrainV3Stages
-      // materialize rule, VERDICT r14 #5): `gated` feeds the minhash
+      // cut rule, VERDICT r14 #5): `gated` feeds the minhash
       // pair chain AND the score frame AND keep-best AND the final
       // pred_lang join — ReuseExchange dedupes only identical
       // exchanges, so as a plain plan the funnel+NB chain re-executed
@@ -269,8 +269,8 @@ object PipelineQueries {
                                     clean: DataFrame, survivors: DataFrame,
                                     mixed: DataFrame)
 
-  /** `materialize = true` localCheckpoints the three spine frames
-    * (funnel output, decontaminated corpus, dedup survivors) — the
+  /** The three spine frames (funnel output, decontaminated corpus,
+    * dedup survivors) are localCheckpointed — the
     * pagerank `cut` rule for MULTI-READER stages (VERDICT r14 #5):
     * `clean` feeds the minhash pair chain AND the score frame AND
     * keep-best's survivor join, and ReuseExchange only dedupes
@@ -278,24 +278,20 @@ object PipelineQueries {
     * re-executed per reader. Same rows, same hash — only where the
     * plan is cut changes; the cuts run inside the timed query
     * builder, so bench lines stay honest. Measured at sf0.1:
-    * pipeline_report 8.7 → 3.6 s, pipeline_pretrain_v3 8.8 → 3.5 s.
-    * Default false for callers that want the pure lazy plan. */
-  private def pretrainV3Stages(s: SparkSession, dir: String,
-                               materialize: Boolean = false): PretrainStages = {
-    def cut(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint() else df
+    * pipeline_report 8.7 → 3.6 s, pipeline_pretrain_v3 8.8 → 3.5 s. */
+  private def pretrainV3Stages(s: SparkSession, dir: String): PretrainStages = {
     val docs = Tables.documents(s, dir)
     val corpus = dedupCorpus(s, dir)
-    val kept = cut(TextAnalysis.filterFunnel(corpus, "text",
+    val kept = TextAnalysis.filterFunnel(corpus, "text",
         minTokens = 20, maxTokens = 90, keepLangs = Seq("en"), minStop = 0.02)
       .filter(col("verdict") === "kept")
-      .select(col("doc_id"), col("text")))
+      .select(col("doc_id"), col("text")).localCheckpoint()
     val flags = Dedup.decontaminateBloom(kept, "text", "doc_id",
       docs.filter(col("source") === "src0"), "text",
       n = 3, minHits = 3, mBits = 1 << 22)
-    val clean = cut(kept.join(
+    val clean = kept.join(
       flags.filter(col("contaminated")).select(col("doc_id")),
-      Seq("doc_id"), "left_anti"))
+      Seq("doc_id"), "left_anti").localCheckpoint()
     val pairs = Dedup.minhashPairs(clean, "text", "doc_id",
       numHashes = 16, bands = 4, shingleN = 3, threshold = 0.5)
     val scores = clean.select(col("doc_id"),
@@ -304,10 +300,10 @@ object PipelineQueries {
     val best = Dedup.dedupKeepBest(clean, "doc_id", pairs, scores, "n_tokens")
     // copies carry +100000/+200000 id offsets; the base id recovers
     // the source stratum for the mixture
-    val survivors = cut(best.filter(col("keep"))
+    val survivors = best.filter(col("keep"))
       .join(docs.select(col("doc_id").as("_base"), col("source")),
         pmod(col("doc_id"), lit(100000L)) === col("_base"))
-      .select(col("doc_id"), col("source"), col("n_tokens")))
+      .select(col("doc_id"), col("source"), col("n_tokens")).localCheckpoint()
     val mixed = Sampling.epochMix(survivors, "doc_id", col("source"),
         Map("src1" -> 0.5, "src2" -> 0.3, "src3" -> 0.2), budgetDocs = 120L)
       .select(col("doc_id"), col("source"), col("n_tokens"), col("epoch"),

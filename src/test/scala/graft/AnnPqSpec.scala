@@ -104,7 +104,7 @@ class AnnPqSpec extends SparkSpec {
 
   test("ivfpq index probe prunes cell partitions and never stores vectors") {
     import graft.operators.AnnIvf
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toFile
+    val dir = tempDir("graft-ivfpq").toFile
     dir.delete()
     val centroids = AnnIvf.seedCentroids(emb, "embedding", "vec_id", 0L to 7L)
     AnnPq.writeIvfPqIndex(emb, "embedding", "vec_id", centroids, Knn.Cosine,
@@ -139,7 +139,7 @@ class AnnPqSpec extends SparkSpec {
 
   test("residual IVFPQ: per-cell pruned probe; residual codes cut distortion") {
     import graft.operators.AnnIvf
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpqres").toFile
+    val dir = tempDir("graft-ivfpqres").toFile
     dir.delete()
     val centroids = AnnIvf.seedCentroids(emb, "embedding", "vec_id", 0L to 7L)
     val resModel = AnnPq.seedResidualCodebook(emb, "embedding", "vec_id",

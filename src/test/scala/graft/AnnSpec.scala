@@ -124,7 +124,8 @@ class AnnSpec extends SparkSpec {
     // unioning per-tree candidates (lshtree.go:88,283-336); the
     // scan-native forest must hold >=0.8 on UNIFORM embeddings (LSH's
     // worst case — no cluster structure) while probing a strict
-    // minority of the corpus. Measured frontier on this data (LshSweep):
+    // minority of the corpus. Measured frontier on this data (a one-off
+    // (bits, tables) sweep, recorded only here):
     // (8,80)=0.80@27%, (8,100)=0.86@32%, (9,180)=0.78@31%,
     // (10,260)=0.80@24.8%, (10,320)=0.82@30%. The <=25%-probed point
     // exists at (10,260) but sits exactly on the 0.8 floor with 3.25x
@@ -148,7 +149,7 @@ class AnnSpec extends SparkSpec {
 
   test("forest index probe prunes key partitions and matches in-memory forest") {
     val (tables, bits) = (6, 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-forest").toFile
+    val dir = tempDir("graft-forest").toFile
     dir.delete()
     AnnLsh.writeForestIndex(emb, "embedding", "vec_id", tables, bits, 64,
       dir.getAbsolutePath)
@@ -187,7 +188,7 @@ class AnnSpec extends SparkSpec {
 
   test("indexed batch forest probe matches the in-memory batch") {
     val (tables, bits) = (6, 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-fbatch").toFile
+    val dir = tempDir("graft-fbatch").toFile
     dir.delete()
     AnnLsh.writeForestIndex(emb, "embedding", "vec_id", tables, bits, 64,
       dir.getAbsolutePath)
@@ -232,7 +233,7 @@ class AnnSpec extends SparkSpec {
 
   test("indexed batch forest multiprobe preserves non-Long qids and skips null qvecs") {
     val (tables, bits) = (6, 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-fbatch-mp").toFile
+    val dir = tempDir("graft-fbatch-mp").toFile
     dir.delete()
     AnnLsh.writeForestIndex(emb, "embedding", "vec_id", tables, bits, 64,
       dir.getAbsolutePath)
@@ -385,7 +386,7 @@ class AnnSpec extends SparkSpec {
 
   test("ivf indexed probe prunes cell partitions and matches in-memory knn") {
     val cent = AnnIvf.seedCentroids(emb, "embedding", "vec_id", 0L to 7L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toFile
+    val dir = tempDir("graft-ivf").toFile
     dir.delete()
     AnnIvf.writeIndexed(emb, "embedding", "vec_id", cent, Knn.Cosine, dir.getAbsolutePath)
     val res = AnnIvf.knnIndexed(spark, dir.getAbsolutePath, "embedding",

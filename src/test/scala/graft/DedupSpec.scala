@@ -308,7 +308,7 @@ class DedupSpec extends SparkSpec {
       (101L, "the quick brown fox jumps over the lazy dog tonight"),
       (102L, "violets are red roses are blue and this text is novel prose")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-mhidx").toFile.getAbsolutePath
+    val dir = tempDir("graft-mhidx").toFile.getAbsolutePath
     Dedup.writeMinhashIndex(corpus, "text", "doc_id", s"$dir/idx")
     val mem = Dedup.incrementalNearDup(corpus, delta, "text", "doc_id")
       .as[(Long, String, Long, Option[Double])].collect().toSet
@@ -323,7 +323,7 @@ class DedupSpec extends SparkSpec {
       .toDF("id_a", "id_b")
     val local = Dedup.connectedComponents(pairs)
       .as[(Long, Long)].collect().toMap
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-ck").toFile.getAbsolutePath
+    val ckDir = tempDir("graft-ck").toFile.getAbsolutePath
     // reliable checkpoints (df.checkpoint to a shared dir) survive
     // executor loss on a real cluster; results must be identical.
     // localThreshold = 0 forces the distributed loop — the fast path
@@ -337,7 +337,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("embedWithCache serves repeats from the cache and matches embedDense") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ecache").toFile.getAbsolutePath
+    val dir = tempDir("graft-ecache").toFile.getAbsolutePath
     val batch1 = Seq((1L, "alpha beta gamma"), (2L, "delta epsilon")).toDF("doc_id", "text")
     val r1 = Embed.embedWithCache(spark, batch1, "text", "doc_id", 8, s"$dir/cache")
       .collect().map(r => r.getLong(0) -> ((r.getSeq[Double](1), r.getBoolean(2)))).toMap
@@ -355,7 +355,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("embedWithCache runs the embedder once: serve path reads cache, no re-embed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ecache1").toFile.getAbsolutePath
+    val dir = tempDir("graft-ecache1").toFile.getAbsolutePath
     val batch = Seq((1L, "alpha beta gamma"), (2L, "delta epsilon")).toDF("doc_id", "text")
     val res = Embed.embedWithCache(spark, batch, "text", "doc_id", 8, s"$dir/cache")
     // the embedder is the graft_hash_embed expression; the RETURNED
@@ -378,7 +378,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("corrupted cache file surfaces an error, not a silent full recompute") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ecache2").toFile
+    val dir = tempDir("graft-ecache2").toFile
     val cacheDir = new java.io.File(dir, "cache")
     cacheDir.mkdirs()
     java.nio.file.Files.write(
@@ -549,7 +549,7 @@ class DedupSpec extends SparkSpec {
       (1L, "alpha beta the shared run of six words gamma delta"),
       (2L, "other corpus content that nobody quotes anywhere at all")
     ).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("graft-subidx").toString + "/idx"
+    val path = tempDir("graft-subidx").toString + "/idx"
     Dedup.writeSubstringIndex(corpus, "text", "doc_id", path, minLen = 4,
       numBuckets = 8)
     // index stores bucket-partitioned bare hashes
@@ -702,8 +702,7 @@ class DedupSpec extends SparkSpec {
       Dedup.duplicatedSpansKeepFirst(corpus.unionByName(delta),
         "text", "doc_id", minLen)
         .filter(col("doc_id") >= 10L))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-inc-keep").toString + "/idx"
+    val path = tempDir("graft-inc-keep").toString + "/idx"
     Dedup.writeSubstringIndex(corpus, "text", "doc_id", path, minLen,
       numBuckets = 8)
     val probe = covered(Dedup.probeSubstringSpans(spark, path, delta, "text",

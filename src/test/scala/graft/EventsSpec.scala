@@ -140,7 +140,7 @@ class EventsSpec extends SparkSpec {
       (col("id") % 3).as("user_id"),
       when(col("id") % 2 === 0, "click").otherwise("view").as("event_type"),
       col("id").cast("double").as("value"), lit("{}").as("props"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-gen").toString
+    val tmp = tempDir("graft-gen").toString
     base.withColumnRenamed("ts_ns", "ts")
       .write.mode("overwrite").parquet(s"$tmp/old/events.parquet")
     base.select(col("event_id"),

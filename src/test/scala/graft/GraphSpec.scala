@@ -93,7 +93,7 @@ class GraphSpec extends SparkSpec {
     // The reliable-dir escape hatch must change only durability,
     // never the integer arithmetic.
     val edges = rawEdges.toDF("src", "dst")
-    val dir = java.nio.file.Files.createTempDirectory("graft-pr-ckpt")
+    val dir = tempDir("graft-pr-ckpt")
       .toString
     val reliable = Graph.pagerank(edges, "src", "dst", 12,
         checkpointEvery = 3, checkpointDir = Some(dir))

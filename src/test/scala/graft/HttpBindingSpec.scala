@@ -20,7 +20,7 @@ class HttpBindingSpec extends SparkSpec {
   private def withServer(f: (HttpClient, Int) => Unit): Unit = {
     val binding = new HttpBinding(
       new Api(spark,
-        java.nio.file.Files.createTempDirectory("graft-http").toString),
+        tempDir("graft-http").toString),
       port = 0)
     try f(HttpClient.newHttpClient(), binding.boundPort)
     finally binding.stop()
@@ -153,7 +153,7 @@ class HttpBindingSpec extends SparkSpec {
   test("oversized request bodies 413 instead of OOMing (VERDICT r16 #4)") {
     val binding = new HttpBinding(
       new Api(spark,
-        java.nio.file.Files.createTempDirectory("graft-cap").toString),
+        tempDir("graft-cap").toString),
       port = 0, maxBodyBytes = 1024)
     try {
       val c = HttpClient.newHttpClient()
@@ -186,7 +186,7 @@ class HttpBindingSpec extends SparkSpec {
       "(VERDICT r17 #7: pin the documented no-drain behavior)") {
     val binding = new HttpBinding(
       new Api(spark,
-        java.nio.file.Files.createTempDirectory("graft-nodrain").toString),
+        tempDir("graft-nodrain").toString),
       port = 0, maxBodyBytes = 1024)
     try {
       val port = binding.boundPort
@@ -273,7 +273,7 @@ class HttpBindingSpec extends SparkSpec {
   }
 
   test("Serve.boot is the runnable entry end-to-end (VERDICT r16 #7)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-serve")
+    val dir = tempDir("graft-serve")
       .resolve("data").toString // boot must create the missing folder
     val binding = Serve.boot(spark, dir, 0)
     try {

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.operators.{AnnIvf, AnnLsh, AnnPq, Dedup, IndexMaintenance, Knn, Search}
@@ -18,9 +19,12 @@ class IndexMaintenanceSpec extends SparkSpec {
     .select(col("embedding").as("qvec"))
 
   private def tmp(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    val d = tempDir(prefix).toFile
     d.delete(); d.getAbsolutePath
   }
+  private def writeSidecar(index: String, json: String): Unit =
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(Dedup.indexConfigPath(index)), json)
   private def rm(path: String): Unit = {
     def go(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(go)); f.delete(); ()
@@ -162,8 +166,9 @@ class IndexMaintenanceSpec extends SparkSpec {
         minLen = 10, numBuckets = 16)
     }
     assert(e3.getMessage.contains("min_len"), e3.getMessage)
-    val stored = spark.read.parquet(Dedup.indexConfigPath(ss))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val stored = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(Dedup.indexConfigPath(ss)))
+      .fields().asScala.map(e => e.getKey -> e.getValue.asLong).toMap
     assert(stored == Map("min_len" -> 8L, "num_buckets" -> 16L), stored.toString)
     rm(ss)
     // sidecar-survives-compaction is covered by the forest test above:
@@ -171,22 +176,19 @@ class IndexMaintenanceSpec extends SparkSpec {
     // post-compaction appendForestIndex there validates against it
   }
 
-  test("config sidecar memo revalidates after a foreign rebuild (mtime guard)") {
+  test("config sidecar revalidates after a foreign rebuild") {
     val docs = Tables.documents(spark, sf0001).select(col("doc_id"), col("text"))
     val delta = docs.filter(col("doc_id") % 97 === 0)
     val mh = tmp("graft-cfg-mtime")
     Dedup.writeMinhashIndex(docs, "text", "doc_id", mh,
       numHashes = 16, bands = 4, shingleN = 3)
-    // probe once with matching params — memoizes the sidecar contents
     Dedup.incrementalNearDupIndexed(spark, mh, delta, "text", "doc_id",
       numHashes = 16, bands = 4, shingleN = 3).queryExecution.toRdd.count()
     // a FOREIGN writer rebuilds with different bands: overwrite the
-    // sidecar directly, NOT via writeIndexConfig — the writing JVM's
-    // cache refresh never runs, exactly the cross-process scenario
-    // the raw-path memo validated stale (VERDICT r13 #3 / ADVICE r13)
-    Seq(("num_hashes", 16L), ("bands", 8L), ("shingle_n", 3L))
-      .toDF("key", "value").coalesce(1)
-      .write.mode("overwrite").parquet(Dedup.indexConfigPath(mh))
+    // sidecar directly, NOT via writeIndexConfig — the cross-process
+    // scenario a memo of the sidecar once validated stale (VERDICT r13
+    // #3 / ADVICE r13)
+    writeSidecar(mh, """{"num_hashes": 16, "bands": 8, "shingle_n": 3}""")
     val e = intercept[IllegalArgumentException] {
       Dedup.incrementalNearDupIndexed(spark, mh, delta, "text", "doc_id",
         numHashes = 16, bands = 4, shingleN = 3)
@@ -199,14 +201,25 @@ class IndexMaintenanceSpec extends SparkSpec {
     rm(Dedup.indexConfigPath(mh))
     Dedup.incrementalNearDupIndexed(spark, mh, delta, "text", "doc_id",
       numHashes = 16, bands = 4, shingleN = 3).queryExecution.toRdd.count()
-    Seq(("num_hashes", 16L), ("bands", 16L), ("shingle_n", 3L))
-      .toDF("key", "value").coalesce(1)
-      .write.mode("overwrite").parquet(Dedup.indexConfigPath(mh))
+    writeSidecar(mh, """{"num_hashes": 16, "bands": 16, "shingle_n": 3}""")
     val e2 = intercept[IllegalArgumentException] {
       Dedup.incrementalNearDupIndexed(spark, mh, delta, "text", "doc_id",
         numHashes = 16, bands = 4, shingleN = 3)
     }
     assert(e2.getMessage.contains("bands"), e2.getMessage)
+
+    // an older build's parquet sidecar is a directory: the probe fails
+    // by path, it never skips validation
+    rm(Dedup.indexConfigPath(mh))
+    Seq(("num_hashes", 16L), ("bands", 4L), ("shingle_n", 3L))
+      .toDF("key", "value").coalesce(1)
+      .write.mode("overwrite").parquet(Dedup.indexConfigPath(mh))
+    val e3 = intercept[IllegalArgumentException] {
+      Dedup.incrementalNearDupIndexed(spark, mh, delta, "text", "doc_id",
+        numHashes = 16, bands = 4, shingleN = 3)
+    }
+    assert(e3.getMessage.contains(Dedup.indexConfigPath(mh)) &&
+      e3.getMessage.contains("rebuild the index"), e3.getMessage)
     rm(mh)
   }
 }

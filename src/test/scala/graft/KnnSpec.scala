@@ -73,7 +73,7 @@ class KnnSpec extends SparkSpec {
     // materially narrower than the raw float vectors
     def dirSize(d: java.io.File): Long =
       d.listFiles().filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-    val tmp = java.nio.file.Files.createTempDirectory("graft-quant").toFile
+    val tmp = tempDir("graft-quant").toFile
     emb.select(col("vec_id"), col("embedding"))
       .write.mode("overwrite").parquet(s"$tmp/raw")
     stored.write.mode("overwrite").parquet(s"$tmp/codes")

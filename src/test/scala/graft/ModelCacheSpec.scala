@@ -9,7 +9,7 @@ import graft.registry.Fixtures
   * forever. A directory's fixture set carries the tableToken of its
   * source tables, each folding the parquet directory's (name, length,
   * mtime) listing, re-derived on every lookup (one FS listing, no
-  * Spark job — the Dedup `_config` sidecar convention). */
+  * Spark job). */
 class ModelCacheSpec extends SparkSpec {
 
   private def writeDocs(dir: String, rows: Seq[(Long, String)]): Unit = {
@@ -19,7 +19,7 @@ class ModelCacheSpec extends SparkSpec {
   }
 
   test("token is stable on identical content, shifts on rewrite") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tok").toString
+    val dir = tempDir("graft-tok").toString
     // missing table: a well-defined (empty-listing) token, no throw
     val absent = Fixtures.tableToken(spark, dir, "documents")
     writeDocs(dir, Seq((1L, "hello world")))
@@ -34,7 +34,7 @@ class ModelCacheSpec extends SparkSpec {
 
   test("a corpus mutated under one path re-trains the gate " +
       "(VERDICT r16 #3)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mc").toString
+    val dir = tempDir("graft-mc").toString
     // >=30 words with stopwords -> y=1 under the graded label rule
     val good = Seq.fill(5)("the is a and of to in it you that").mkString(" ")
     val bad = "qq ww"
@@ -52,7 +52,7 @@ class ModelCacheSpec extends SparkSpec {
 
   test("a rewritten corpus replaces its fixture set and reclaims the " +
       "old set's index files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fx").toString
+    val dir = tempDir("graft-fx").toString
     writeDocs(dir, Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta")))
     val f1 = Fixtures.of(spark, dir)
     val idx = new java.io.File(f1.bm25Index)
@@ -68,7 +68,7 @@ class ModelCacheSpec extends SparkSpec {
   test("token sees a rewrite INSIDE a partition subdir " +
       "(VERDICT r17 what's-wrong #3: recursive listing)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part").toString
     def writePartitioned(text: String): Unit =
       Seq((1L, text, "en"), (2L, text, "de")).toDF("doc_id", "text", "lang")
         .write.mode(SaveMode.Overwrite).partitionBy("lang")

@@ -26,7 +26,7 @@ class ObservabilitySpec extends SparkSpec {
   }
 
   test("phraseIndexed == phraseSearch over the positional index; pruned probe") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-phrase").toFile
+    val dir = tempDir("graft-phrase").toFile
     dir.delete()
     val path = dir.getAbsolutePath
     Search.writeTextIndex(docs, "text", "doc_id", path, numBuckets = 16,

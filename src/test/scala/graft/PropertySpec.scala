@@ -402,8 +402,7 @@ class PropertySpec extends SparkSpec {
       val full = covered(Dedup.duplicatedSpansKeepFirst(
           corpus.unionByName(delta), "text", "doc_id", minLen)
         .filter(col("doc_id") >= 100L))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-inc-prop").toString + "/idx"
+      val path = tempDir("graft-inc-prop").toString + "/idx"
       Dedup.writeSubstringIndex(corpus, "text", "doc_id", path, minLen,
         numBuckets = 8)
       val inc =

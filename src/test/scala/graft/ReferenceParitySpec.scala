@@ -177,7 +177,7 @@ class ReferenceParitySpec extends SparkSpec {
   test("update document metadata (collection_test.go:196 TestUpdateDocument)") {
     import graft.core.{Collection, CollectionOptions}
     import graft.operators.Knn
-    val dir = java.nio.file.Files.createTempDirectory("graft-refupd").toFile
+    val dir = tempDir("graft-refupd").toFile
     dir.delete()
     val c = Collection.create(spark,
       CollectionOptions("upd", 3, Knn.Euclidean), dir.getAbsolutePath)
@@ -190,7 +190,7 @@ class ReferenceParitySpec extends SparkSpec {
   test("remove document keeps all others (collection_test.go:231 TestRemoveDocument)") {
     import graft.core.{Collection, CollectionOptions}
     import graft.operators.Knn
-    val dir = java.nio.file.Files.createTempDirectory("graft-refrm").toFile
+    val dir = tempDir("graft-refrm").toFile
     dir.delete()
     val c = Collection.create(spark,
       CollectionOptions("rm", 10, Knn.Euclidean, quantization = 64),
@@ -210,7 +210,7 @@ class ReferenceParitySpec extends SparkSpec {
   test("add, delete all, reopen, re-add, retrieve (collection_test.go:459)") {
     import graft.core.{Collection, CollectionOptions}
     import graft.operators.Knn
-    val dir = java.nio.file.Files.createTempDirectory("graft-refadr").toFile
+    val dir = tempDir("graft-refadr").toFile
     dir.delete()
     val path = dir.getAbsolutePath
     val c = Collection.create(spark,
@@ -233,7 +233,7 @@ class ReferenceParitySpec extends SparkSpec {
   test("sampled average distance is positive (collection_test.go:105)") {
     import graft.core.{Collection, CollectionOptions}
     import graft.operators.Knn
-    val dir = java.nio.file.Files.createTempDirectory("graft-refavg").toFile
+    val dir = tempDir("graft-refavg").toFile
     dir.delete()
     val c = Collection.create(spark,
       CollectionOptions("avg", 3, Knn.Euclidean), dir.getAbsolutePath)
@@ -256,7 +256,7 @@ class ReferenceParitySpec extends SparkSpec {
   test("exhaustive exact search returns every doc at PercentSearched 100 (collection_test.go:549)") {
     import graft.core.{Collection, CollectionOptions, SearchArgs}
     import graft.operators.Knn
-    val dir = java.nio.file.Files.createTempDirectory("graft-refx").toFile
+    val dir = tempDir("graft-refx").toFile
     dir.delete()
     val c = Collection.create(spark,
       CollectionOptions("exhaustive", 3, Knn.Euclidean), dir.getAbsolutePath)
@@ -273,7 +273,7 @@ class ReferenceParitySpec extends SparkSpec {
   test("4-bit quantized collections still search (collection_test.go:614)") {
     import graft.core.{Collection, CollectionOptions, SearchArgs}
     import graft.operators.Knn
-    val dir = java.nio.file.Files.createTempDirectory("graft-ref4b").toFile
+    val dir = tempDir("graft-ref4b").toFile
     dir.delete()
     val c = Collection.create(spark,
       CollectionOptions("4bit", 3, Knn.Euclidean, quantization = 4),
@@ -297,7 +297,7 @@ class ReferenceParitySpec extends SparkSpec {
   test("exact vs medium cosine search agree within the reference's bound (collection_test.go:23)") {
     import graft.core.{Collection, CollectionOptions, SearchArgs}
     import graft.operators.Knn
-    val dir = java.nio.file.Files.createTempDirectory("graft-refprec").toFile
+    val dir = tempDir("graft-refprec").toFile
     dir.delete()
     // the reference builds a Cosine collection of random [0,1) vectors
     // and asserts: same result count, per-rank relative distance gap

@@ -13,7 +13,7 @@ class RunSpec extends SparkSpec {
   private val names = Seq("knn_cosine", "q1_agg")
   private val boom: Run.Builder = (_, _) => throw new IllegalStateException("planted")
 
-  private def tmp(tag: String): String = Files.createTempDirectory(s"run-$tag").toString
+  private def tmp(tag: String): String = tempDir(s"run-$tag").toString
 
   /** `body`'s result and everything it printed to stdout and stderr. */
   private def captured[T](body: => T): (T, String) = {

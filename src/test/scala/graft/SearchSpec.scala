@@ -64,7 +64,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("bm25Indexed probes pruned postings partitions, matches the from-scratch scores") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25idx").toFile
+    val dir = tempDir("graft-bm25idx").toFile
     dir.delete()
     val path = dir.getAbsolutePath
     Search.writeTextIndex(docs, "text", "doc_id", path, numBuckets = 16)
@@ -179,7 +179,7 @@ class SearchSpec extends SparkSpec {
         seeds.select("doc_id"), k = 4, minJaccard = 0.1)
       .select("qid", "rank", "doc_id", "jaccard")
       .as[(Long, Int, Long, Double)].collect().toSet
-    val path = java.nio.file.Files.createTempDirectory("graft-mlt").toString + "/idx"
+    val path = tempDir("graft-mlt").toString + "/idx"
     Dedup.writeMinhashIndex(corpus, "text", "doc_id", path)
     val indexed = Search.moreLikeThisIndexed(spark, path, seeds,
         "text", "doc_id", k = 4, minJaccard = 0.1)

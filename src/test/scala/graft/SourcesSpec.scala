@@ -10,7 +10,7 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   test("jsonRecords ingests vector and text records; text gets embedded") {
-    val dir = Files.createTempDirectory("graft-src")
+    val dir = tempDir("graft-src")
     Files.writeString(dir.resolve("records.json"),
       """{"id": 1, "vector": [0.1, 0.2], "metadata": "{\"k\":1}"}
         |{"id": 2, "text": "hello world hello", "metadata": "{\"k\":2}"}
@@ -24,7 +24,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("jsonRecords emits one row per input row when a vector and a text record share an id") {
-    val dir = Files.createTempDirectory("graft-src-dup")
+    val dir = tempDir("graft-src-dup")
     Files.writeString(dir.resolve("records.json"),
       """{"id": 7, "vector": [0.1, 0.2], "metadata": "{\"k\":1}"}
         |{"id": 7, "text": "hello world", "metadata": "{\"k\":2}"}
@@ -40,12 +40,12 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("collection round-trip: ingest -> search -> dump") {
-    val src = Files.createTempDirectory("graft-src2")
+    val src = tempDir("graft-src2")
     Files.writeString(src.resolve("r.json"),
       """{"id": 1, "vector": [1.0, 0.0], "metadata": "{\"tag\":\"a\"}"}
         |{"id": 2, "vector": [0.0, 1.0], "metadata": "{\"tag\":\"b\"}"}
         |""".stripMargin)
-    val cdir = Files.createTempDirectory("graft-coll2").toFile
+    val cdir = tempDir("graft-coll2").toFile
     cdir.delete()
     val c = Collection.create(spark,
       CollectionOptions("rt", 2, Knn.Euclidean), cdir.getAbsolutePath)
@@ -56,14 +56,14 @@ class SourcesSpec extends SparkSpec {
     val hit = c.search(SearchArgs(vector = Some(Seq(0.9, 0.1)), k = 1, precision = "exact"))
       .select("id").as[Long].head()
     assert(hit == 1L)
-    val out = Files.createTempDirectory("graft-dump").toFile
+    val out = tempDir("graft-dump").toFile
     out.delete()
     c.dump(out.getAbsolutePath)
     assert(spark.read.json(out.getAbsolutePath).count() == 2)
   }
 
   test("dump -> importDump restores an identical collection (dump.go:138)") {
-    val cdir = Files.createTempDirectory("graft-imp-src").toFile
+    val cdir = tempDir("graft-imp-src").toFile
     cdir.delete()
     val c = Collection.create(spark,
       CollectionOptions("backup-me", 3, Knn.Cosine), cdir.getAbsolutePath)
@@ -73,11 +73,11 @@ class SourcesSpec extends SparkSpec {
       (3L, Seq(0.3, 0.3, 0.3), """{"tag":"c"}""")
     ).toDF("id", "vector", "metadata"))
     c.removeDocuments(Seq(2L)) // dump captures the current view only
-    val dumpDir = Files.createTempDirectory("graft-imp-dump").toFile
+    val dumpDir = tempDir("graft-imp-dump").toFile
     dumpDir.delete()
     c.dump(dumpDir.getAbsolutePath)
 
-    val rdir = Files.createTempDirectory("graft-imp-dst").toFile
+    val rdir = tempDir("graft-imp-dst").toFile
     rdir.delete()
     val restored = Collection.importDump(spark,
       CollectionOptions("restored", 3, Knn.Cosine),
@@ -91,7 +91,7 @@ class SourcesSpec extends SparkSpec {
 
   test("writeTrainingShards lays out loader-ready shards in shuffle order") {
     val docs = (0L until 400L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft-shards").toFile
+    val dir = tempDir("graft-shards").toFile
     dir.deleteOnExit()
     Sources.writeTrainingShards(docs, "doc_id", "s1", 4, dir.getAbsolutePath)
     // shard=N partition dirs exist
@@ -115,7 +115,7 @@ class SourcesSpec extends SparkSpec {
 
   test("co-bucketed tables join without the join-side shuffles") {
     import graft.sources.Sources
-    val dirb = java.nio.file.Files.createTempDirectory("graft-bk").toFile.getAbsolutePath
+    val dirb = tempDir("graft-bk").toFile.getAbsolutePath
     val ord = graft.core.Tables.orders(spark, sf0001)
     val li = graft.core.Tables.lineitem(spark, sf0001)
     Sources.writeBucketed(ord, "bk_ord_spec", s"$dirb/ord", "o_orderkey", 4)

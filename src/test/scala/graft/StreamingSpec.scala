@@ -397,7 +397,7 @@ class StreamingSpec extends SparkSpec {
       (1L, "the quick brown fox jumps over the lazy dog tonight again"),
       (2L, "completely different words appear in this one here today now")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-smhidx").toFile.getAbsolutePath
+    val dir = tempDir("graft-smhidx").toFile.getAbsolutePath
     Dedup.writeMinhashIndex(corpus, "text", "doc_id", s"$dir/idx")
     val mem = MemoryStream[(Long, Timestamp, String)]
     val df = mem.toDF().toDF("doc_id", "ts", "text")
@@ -431,7 +431,7 @@ class StreamingSpec extends SparkSpec {
 
   test("textIndexStream builds a postings index bm25Indexed probes, scores == batch") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-textidx").toFile
+    val dir = tempDir("graft-textidx").toFile
     dir.delete()
     val path = dir.getAbsolutePath + "/idx"
     val mem = MemoryStream[(Long, String)]
@@ -468,7 +468,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.{AnnLsh, Knn}
     val (tables, bits) = (6, 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-fsidx").toFile.getAbsolutePath
+    val dir = tempDir("graft-fsidx").toFile.getAbsolutePath
     val mem = MemoryStream[(Long, Seq[Double])]
     val emb = graft.core.Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
@@ -780,7 +780,7 @@ class StreamingSpec extends SparkSpec {
       (1L, "alpha beta the shared run of six words gamma delta"),
       (2L, "other corpus content that nobody quotes anywhere at all")
     ).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("graft-subgate")
+    val path = tempDir("graft-subgate")
       .toString + "/idx"
     Dedup.writeSubstringIndex(corpus, "text", "doc_id", path, minLen = 4,
       numBuckets = 8)

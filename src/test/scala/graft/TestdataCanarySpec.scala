@@ -49,7 +49,7 @@ class TestdataCanarySpec extends SparkSpec {
       concat(lit("e"), col("id")).as("event_type"),
       col("id").cast("double").as("value"),
       lit("{}").as("props"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-canary").toString
+    val tmp = tempDir("graft-canary").toString
     base.withColumnRenamed("ts_ns", "ts")
       .write.mode("overwrite").parquet(s"$tmp/old/events.parquet")
     base.select(col("event_id"),
@@ -64,7 +64,7 @@ class TestdataCanarySpec extends SparkSpec {
 
   test("Verify fails loudly: a broken query lands in errors.json, good ones still dump") {
     import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files.createTempDirectory("graft-verify").toString
+    val out = tempDir("graft-verify").toString
     val queries = Map[String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame](
       "ok_query" -> ((s, _) => s.range(3).select(col("id"))),
