@@ -306,7 +306,8 @@ final class Collection private[graft] (spark: SparkSession, val options: Collect
       files.iterator.map(r => f.getFileStatus(resolve(r)).getLen).sum <
         heldBytes / (64 / options.quantization)
     }
-    private def plan = Crud.currentView(read(files), "id", "version", "deleted")
+    /** The view's plan over the files the commits name. */
+    def plan: DataFrame = Crud.currentView(read(files), "id", "version", "deleted")
       .select(col("id"), col("vector"), col("metadata"))
     /** Below the bound: the view's rows, held on the driver. */
     lazy val held: HeldView = build("executeCollect")(HeldView.collect(plan))
@@ -584,16 +585,16 @@ final class Collection private[graft] (spark: SparkSession, val options: Collect
 
   /** Writes the current view as the next generation and publishes its
     * base commit; if another writer took the number, the next attempt
-    * compacts again (and overwrites the directory). A held view lands
-    * as one file, as a driver-held write does. Returns the generation. */
+    * compacts again (and overwrites the directory). The generation is
+    * written from the snapshot's plan over its files on both paths, so
+    * no write task carries the held rows. Returns the generation. */
   @annotation.tailrec
   private def compacted(): Int = {
     val snap = snapshot()
     val (v, gen) = (snap.head + 1, snap.generation + 1)
     val dir = generationName(name, gen)
-    val view = if (snap.isHeld) snap.held.frame(spark).coalesce(1) else snap.view
     // mode=overwrite clears any partial dir a crashed attempt left
-    view.select(col("id"), col("vector"), col("metadata"),
+    snap.plan.select(col("id"), col("vector"), col("metadata"),
         lit(v).as("version"), lit(false).as("deleted"))
       .write.mode("overwrite").parquet(resolve(dir).toString)
     if (publish(Commit(v, Some(gen), parquetIn(dir)))) gen else compacted()

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Document deduplication for large-scale training-data pipelines:
   * exact (hash groupBy), MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -140,7 +139,8 @@ object Dedup {
 
   /** Per-doc distinct shingle-hash sets: (sid, shs array<long>). The
     * shared input of candidate generation AND verification — compute it
-    * once and persist so neither stage re-shingles the raw text.
+    * once and cut it (`localCheckpoint`) so neither stage re-shingles
+    * the raw text.
     * Hashing runs in the fused [[graft.functions.SketchExprs
     * .shingleHashes]] kernel (byte-joined words → hash60 → first-
     * occurrence dedup, one tight loop per doc) — bit-identical to the
@@ -183,16 +183,11 @@ object Dedup {
   }
 
   /** As [[verifyJaccardSets]] but recomputing the shingle sets from raw
-    * text (standalone use; the pipelines pass a cached set frame). */
+    * text (standalone use; the pipelines pass a checkpointed set frame). */
   def verifyJaccard(df: DataFrame, textCol: String, idCol: String, shingleN: Int,
                     candidates: DataFrame): DataFrame =
     verifyJaccardSets(shingleSets(df, textCol, idCol, shingleN), candidates)
 
-  /** Full MinHash+LSH near-dup pipeline → verified pairs above τ.
-    *
-    * The shingle sets are computed ONCE and persisted (memory+disk,
-    * spills at scale): signatures, banding, and verification all read
-    * the cache instead of re-running the split+md5 pipeline per stage. */
   /** The minhash pair chain over PRE-MATERIALIZED shingle sets and
     * signatures — the SWEEP shape (VERDICT r14 #5 family): the
     * (numHashes, bands) tuning arms share ONE shingle-set frame and
@@ -299,13 +294,17 @@ object Dedup {
             (col("precision") + col("recall"))).otherwise(lit(0.0)))
   }
 
+  /** Full MinHash+LSH near-dup pipeline → verified pairs above τ.
+    *
+    * The shingle sets are computed ONCE, cut eagerly with
+    * `localCheckpoint`: signatures, banding, and verification all read
+    * the cut instead of re-running the split+md5 pipeline per stage. */
   def minhashPairs(df: DataFrame, textCol: String, idCol: String,
                    numHashes: Int = 16, bands: Int = 4, shingleN: Int = 3,
                    threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val (as, bs) = minhashConsts(numHashes)
-    val sets = shingleSets(df, textCol, idCol, shingleN)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sets = shingleSets(df, textCol, idCol, shingleN).localCheckpoint()
     // sig_j = min over the doc's shingle hashes of (a_j*(h%M)+b_j)%M —
     // duplicates can't change a min, so reducing the raw 60-bit hashes
     // mod M inline is signature-equivalent to hashing distinct strings
@@ -422,20 +421,20 @@ object Dedup {
                         shingleN: Int = 3): Unit = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val (as, bs) = minhashConsts(numHashes)
-    val sets = shingleSets(df, textCol, idCol, shingleN)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      sets.write.mode("overwrite").parquet(s"$path/sets")
-      val sigs = sets.filter(size(col("shs")) > 0)
-        .select(col("sid").as(idCol),
-          graft.functions.SketchExprs.minhashSig(
-            col("shs"), as, bs, MINHASH_M).as("sig"))
-      bandKeys(sigs, idCol, idCol, bands, numHashes / bands)
-        .write.mode("overwrite").parquet(s"$path/bands")
-      writeIndexConfig(df.sparkSession, path,
-        Seq("num_hashes" -> numHashes.toLong, "bands" -> bands.toLong,
-          "shingle_n" -> shingleN.toLong))
-    } finally sets.unpersist(blocking = false)
+    shingleSets(df, textCol, idCol, shingleN)
+      .write.mode("overwrite").parquet(s"$path/sets")
+    // the band keys derive from the sets just written: the corpus text
+    // is shingled once
+    val sigs = df.sparkSession.read.parquet(s"$path/sets")
+      .filter(size(col("shs")) > 0)
+      .select(col("sid").as(idCol),
+        graft.functions.SketchExprs.minhashSig(
+          col("shs"), as, bs, MINHASH_M).as("sig"))
+    bandKeys(sigs, idCol, idCol, bands, numHashes / bands)
+      .write.mode("overwrite").parquet(s"$path/bands")
+    writeIndexConfig(df.sparkSession, path,
+      Seq("num_hashes" -> numHashes.toLong, "bands" -> bands.toLong,
+        "shingle_n" -> shingleN.toLong))
   }
 
   /** Incremental near-dedup: a new `delta` batch against an existing
@@ -472,21 +471,16 @@ object Dedup {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val (as, bs) = minhashConsts(numHashes)
     // computed ONCE, read by band-key derivation AND verification —
-    // unpersisted, the corpus text would be re-shingled per consumer
-    // (the [[minhashPairs]] pattern; the indexed variant reads parquet
-    // instead and needs no cache)
-    val corpusSets = shingleSets(corpus, textCol, idCol, shingleN)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // uncut, the corpus text would be re-shingled per consumer (the
+    // [[minhashPairs]] pattern; the indexed variant reads parquet
+    // instead and needs no cut)
+    val corpusSets = shingleSets(corpus, textCol, idCol, shingleN).localCheckpoint()
     val corpusSigs = corpusSets.filter(size(col("shs")) > 0)
       .select(col("sid").as("cid"),
         graft.functions.SketchExprs.minhashSig(
           col("shs"), as, bs, MINHASH_M).as("sig"))
-    // incrementalCore eagerly materializes its (delta-sized) result, so
-    // the corpus cache can be released here — repeated per-batch calls
-    // must not accumulate corpus-sized cached RDDs until LRU eviction
-    try incrementalCore(bandKeys(corpusSigs, "cid", "cid", bands, numHashes / bands),
+    incrementalCore(bandKeys(corpusSigs, "cid", "cid", bands, numHashes / bands),
       corpusSets, delta, textCol, idCol, numHashes, bands, shingleN, threshold)
-    finally corpusSets.unpersist()
   }
 
   /** [[incrementalNearDup]] against a [[writeMinhashIndex]] table: the
@@ -519,14 +513,13 @@ object Dedup {
                               numHashes: Int, bands: Int, shingleN: Int,
                               threshold: Double): DataFrame = {
     val (as, bs) = minhashConsts(numHashes)
-    val deltaSets = shingleSets(delta, textCol, idCol, shingleN)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val deltaSets = shingleSets(delta, textCol, idCol, shingleN).localCheckpoint()
     val deltaSigs = deltaSets.filter(size(col("shs")) > 0)
       .select(col("sid").as("did"),
         graft.functions.SketchExprs.minhashSig(
           col("shs"), as, bs, MINHASH_M).as("sig"))
     val deltaBands = bandKeys(deltaSigs, "did", "did", bands, numHashes / bands)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     // corpus × delta candidates: the corpus frame is the big side,
     // the delta band keys broadcast onto it
     val xcand = corpusBands
@@ -576,11 +569,11 @@ object Dedup {
           .otherwise(lit("kept")).as("verdict"),
         coalesce(col("cid"), col("_lbl"), col(idCol)).as("canonical_id"),
         col("cjac").as("jaccard"))
-    // the result is delta-sized: materialize it eagerly (localCheckpoint)
-    // so the per-batch caches above can be released in finally instead of
-    // accumulating across the repeated calls this operator exists for
-    try out.localCheckpoint()
-    finally { deltaSets.unpersist(); deltaBands.unpersist() }
+    // the result is delta-sized: materialize it eagerly, so the
+    // returned plan reads one cut instead of the chain above. The cuts
+    // are freed once nothing references them, so the repeated calls
+    // this operator exists for accumulate nothing
+    out.localCheckpoint()
   }
 
   // ---------- SimHash ----------
@@ -660,7 +653,7 @@ object Dedup {
     * 21-times-duplicated document at scale).
     *
     * Plan shape (the scale-critical part):
-    *  1. shingle sets computed once, persisted — no re-shingling.
+    *  1. shingle sets computed once, cut eagerly — no re-shingling.
     *  2. candidate generation AGGREGATES the inverted index:
     *     `groupBy(id_a, id_b).count()` over exploded rare-shingle
     *     co-occurrences. Map-side partial aggregation collapses the
@@ -671,13 +664,13 @@ object Dedup {
     *     min(|A|-rareA, |B|-rareB) (shingles shared beyond the rare
     *     index are non-rare in both docs). Only pairs whose bound
     *     clears the threshold reach the exact `array_intersect`
-    *     verify, which reads the cached sets.
+    *     verify, which reads the cut sets.
     */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                         n: Int = 3, threshold: Double = 0.6,
                         maxDf: Int = 100, maxDfFrac: Double = 0.005): DataFrame =
     ngramJaccardPairsFromSets(
-      shingleSets(df, textCol, idCol, n).persist(StorageLevel.MEMORY_AND_DISK),
+      shingleSets(df, textCol, idCol, n).localCheckpoint(),
       threshold, maxDf, maxDfFrac)
 
   /** The exact-Jaccard pair chain over a PRE-MATERIALIZED shingle-set
@@ -686,12 +679,59 @@ object Dedup {
     * and shingle width — dedup_eval's sketch-vs-truth comparison, the
     * band sweep's truth arm — shares ONE shingle frame instead of
     * paying the split+md5 corpus pass per chain. `sets` must already
-    * be materialized (persisted or checkpointed): the chain reads it
-    * three times (df counts, inverted index, verification). Same
-    * rows as [[ngramJaccardPairs]] by construction — this IS its
-    * body. */
+    * be materialized (`localCheckpoint`): the chain reads it three
+    * times (df counts, inverted index, verification). Same rows as
+    * [[ngramJaccardPairs]] by construction — this IS its body. */
   def ngramJaccardPairsFromSets(sets: DataFrame, threshold: Double,
-                                maxDf: Int, maxDfFrac: Double): DataFrame = {
+                                maxDf: Int, maxDfFrac: Double): DataFrame =
+    verifyJaccardSets(sets,
+        rareShingleCandidates(sets, threshold, maxDf, maxDfFrac,
+          (na, nb, ub) => na + nb - ub))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+
+  /** Asymmetric CONTAINMENT near-dup pairs: C = |A∩B| / min(|A|,|B|)
+    * — flags "the small doc lives inside the big one", which
+    * symmetric Jaccard misses by construction (a 15-word excerpt
+    * quoted verbatim inside a 300-word doc has J ≈ 0.04 but
+    * containment 1.0). The dedup family's directional member: run it
+    * after [[ngramJaccardPairs]] to catch subset-duplicates that
+    * threshold-J dedup leaves in the corpus.
+    *
+    * Plan shape = [[ngramJaccardPairs]]'s (the same
+    * [[rareShingleCandidates]] chain, never all-pairs); only the
+    * prefilter bound and the verified statistic divide by the SMALLER
+    * set instead of the union. Both `containment` and `jaccard` are
+    * emitted for each surviving pair. */
+  def containmentPairs(df: DataFrame, textCol: String, idCol: String,
+                       n: Int = 3, threshold: Double = 0.8,
+                       maxDf: Int = 100, maxDfFrac: Double = 0.005): DataFrame = {
+    val sets = shingleSets(df, textCol, idCol, n).localCheckpoint()
+    rareShingleCandidates(sets, threshold, maxDf, maxDfFrac,
+        (na, nb, _) => least(na, nb))
+      .join(sets.select(col("sid").as("id_a"), col("shs").as("sa")), "id_a")
+      .join(sets.select(col("sid").as("id_b"), col("shs").as("sb")), "id_b")
+      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
+      .withColumn("containment", col("inter").cast("double") /
+        least(size(col("sa")), size(col("sb"))))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (size(col("sa")) + size(col("sb")) - col("inter")))
+      .filter(col("containment") >= threshold)
+      .select(col("id_a"), col("id_b"), col("containment"), col("jaccard"))
+  }
+
+  /** The candidate chain of [[ngramJaccardPairsFromSets]] and
+    * [[containmentPairs]]: (id_a, id_b) pairs that share a rare
+    * shingle (document frequency within the corpus-relative cap) and
+    * whose intersection upper bound `ub`, divided by
+    * `denominator(|A|, |B|, ub)`, clears `threshold`. The bound is
+    * rare_inter + min(|A|-rareA, |B|-rareB): shingles shared beyond
+    * the rare index are non-rare in both docs. `sets` is read twice
+    * (df counts, inverted index); the rare-shingle rows are cut once,
+    * since the per-doc stats and both self-join legs read them. */
+  private def rareShingleCandidates(sets: DataFrame, threshold: Double,
+                                    maxDf: Int, maxDfFrac: Double,
+                                    denominator: (Column, Column, Column) => Column): DataFrame = {
     val nDocs = sets.agg(count(lit(1)).as("_n_docs"))
     val inverted = sets.select(col("sid"), size(col("shs")).as("n_sh"),
       explode(col("shs")).as("sh"))
@@ -700,8 +740,7 @@ object Dedup {
       .filter(col("df_count") <=
         greatest(lit(maxDf.toLong), ceil(col("_n_docs") * maxDfFrac)))
       .select(col("sh"))
-    val filtered = inverted.join(rare, "sh")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val filtered = inverted.join(rare, "sh").localCheckpoint()
     // rare-shingle count per doc, for the intersection upper bound
     val docStats = filtered.groupBy(col("sid"))
       .agg(first(col("n_sh")).as("n_sh"), count(lit(1)).as("n_rare"))
@@ -714,74 +753,14 @@ object Dedup {
       .filter(col("l.sid") < col("r.sid"))
       .groupBy(col("l.sid").as("id_a"), col("r.sid").as("id_b"))
       .agg(count(lit(1)).as("rare_inter"))
-    val survivors = pairCounts
+    pairCounts
       .join(docStats.select(col("sid").as("id_a"), col("n_sh").as("na"), col("n_rare").as("ra")), "id_a")
       .join(docStats.select(col("sid").as("id_b"), col("n_sh").as("nb"), col("n_rare").as("rb")), "id_b")
       .withColumn("_ub",
         col("rare_inter") + least(col("na") - col("ra"), col("nb") - col("rb")))
-      .filter(col("_ub").cast("double") / (col("na") + col("nb") - col("_ub")) >= threshold)
+      .filter(col("_ub").cast("double") /
+        denominator(col("na"), col("nb"), col("_ub")) >= threshold)
       .select("id_a", "id_b")
-    verifyJaccardSets(sets, survivors)
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
-
-  /** Asymmetric CONTAINMENT near-dup pairs: C = |A∩B| / min(|A|,|B|)
-    * — flags "the small doc lives inside the big one", which
-    * symmetric Jaccard misses by construction (a 15-word excerpt
-    * quoted verbatim inside a 300-word doc has J ≈ 0.04 but
-    * containment 1.0). The dedup family's directional member: run it
-    * after [[ngramJaccardPairs]] to catch subset-duplicates that
-    * threshold-J dedup leaves in the corpus.
-    *
-    * Plan shape = [[ngramJaccardPairs]]'s (same aggregated
-    * rare-shingle inverted index, same df cap, bounded-fanout
-    * equi-join, never all-pairs); only the prefilter bound and the
-    * verified statistic divide by the SMALLER set instead of the
-    * union. Both `containment` and `jaccard` are emitted for each
-    * surviving pair. */
-  def containmentPairs(df: DataFrame, textCol: String, idCol: String,
-                       n: Int = 3, threshold: Double = 0.8,
-                       maxDf: Int = 100, maxDfFrac: Double = 0.005): DataFrame = {
-    val sets = shingleSets(df, textCol, idCol, n)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nDocs = sets.agg(count(lit(1)).as("_n_docs"))
-    val inverted = sets.select(col("sid"), size(col("shs")).as("n_sh"),
-      explode(col("shs")).as("sh"))
-    val rare = inverted.groupBy(col("sh")).agg(count(lit(1)).as("df_count"))
-      .crossJoin(broadcast(nDocs))
-      .filter(col("df_count") <=
-        greatest(lit(maxDf.toLong), ceil(col("_n_docs") * maxDfFrac)))
-      .select(col("sh"))
-    val filtered = inverted.join(rare, "sh")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val docStats = filtered.groupBy(col("sid"))
-      .agg(first(col("n_sh")).as("n_sh"), count(lit(1)).as("n_rare"))
-    // identical-leg self-join (the lshCandidates r20 rule, see
-    // ngramJaccardPairsFromSets)
-    val fx = filtered.select(col("sh"), col("sid"))
-    val pairCounts = fx.as("l").join(fx.as("r"), col("l.sh") === col("r.sh"))
-      .filter(col("l.sid") < col("r.sid"))
-      .groupBy(col("l.sid").as("id_a"), col("r.sid").as("id_b"))
-      .agg(count(lit(1)).as("rare_inter"))
-    val survivors = pairCounts
-      .join(docStats.select(col("sid").as("id_a"), col("n_sh").as("na"), col("n_rare").as("ra")), "id_a")
-      .join(docStats.select(col("sid").as("id_b"), col("n_sh").as("nb"), col("n_rare").as("rb")), "id_b")
-      .withColumn("_ub",
-        col("rare_inter") + least(col("na") - col("ra"), col("nb") - col("rb")))
-      // the intersection bound over the SMALLER set bounds containment
-      .filter(col("_ub").cast("double") / least(col("na"), col("nb")) >= threshold)
-      .select("id_a", "id_b")
-    survivors
-      .join(sets.select(col("sid").as("id_a"), col("shs").as("sa")), "id_a")
-      .join(sets.select(col("sid").as("id_b"), col("shs").as("sb")), "id_b")
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
-      .withColumn("containment", col("inter").cast("double") /
-        least(size(col("sa")), size(col("sb"))))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("sa")) + size(col("sb")) - col("inter")))
-      .filter(col("containment") >= threshold)
-      .select(col("id_a"), col("id_b"), col("containment"), col("jaccard"))
   }
 
   // ---------- canonical composition (exact-first near-dup) ----------
@@ -1407,17 +1386,21 @@ object Dedup {
     // ONE collect — identical output (min-label is the same
     // fixpoint). The distributed pointer-jumping loop below remains
     // for genuinely huge graphs; pass localThreshold = 0 to force it.
+    require(localThreshold < Int.MaxValue,
+      s"localThreshold must be below ${Int.MaxValue}, got $localThreshold")
     val spark = pairs.sparkSession
-    // normalized single-direction pair list, persisted (NOT
-    // checkpointed: the fast path must not write to the reliable
-    // checkpoint dir just to count-and-collect)
+    // normalized single-direction pair list
     val norm = pairs
       .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (localThreshold > 0 && norm.count() <= localThreshold) {
+    // one bounded collect decides the path and, under the threshold,
+    // is the fast path's input: at most localThreshold + 1 pairs reach
+    // the driver
+    val local = Option.when(localThreshold > 0)(norm.limit(localThreshold.toInt + 1).collect())
+      .filter(_.length <= localThreshold)
+    local match {
+      case Some(rows) =>
         // union-find needs each pair once, not the doubled edge list
-        val es = norm.collect().map(r => (r.getLong(0), r.getLong(1)))
+        val es = rows.map(r => (r.getLong(0), r.getLong(1)))
         val parent = scala.collection.mutable.HashMap.empty[Long, Long]
         def find(x: Long): Long = {
           var r = x
@@ -1435,13 +1418,12 @@ object Dedup {
         }
         val out = parent.keys.toSeq.sorted.map(id => (id, find(id)))
         // parallelize, don't embed a LocalRelation in the plan
-        return spark.createDataFrame(
+        spark.createDataFrame(
           spark.sparkContext.parallelize(out,
             math.max(1, spark.sparkContext.defaultParallelism)))
           .toDF("doc_id", "cluster_id")
-      }
-      distributedComponents(norm, maxIters, checkpointDir)
-    } finally norm.unpersist(blocking = false)
+      case None => distributedComponents(norm, maxIters, checkpointDir)
+    }
   }
 
   /** The iterative min-label + pointer-jumping loop over a normalized

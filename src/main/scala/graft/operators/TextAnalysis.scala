@@ -384,11 +384,13 @@ object TextAnalysis {
     // bucket id must be bit-exact in every engine
     // the cells frame (langs × buckets rows, driver-tiny) is
     // referenced twice — once for the output, once for the share
-    // denominator; persisting it pins the corpus scan to ONE pass
+    // denominator. The denominator prunes total_tokens, so the two
+    // references plan different exchanges and no exchange is reused:
+    // an eager cut pins the corpus scan to ONE pass
     val cells = scored.groupBy(col("lang_pred").as("lang"),
         least(expr(s"_n div $bucketWidth"), lit(maxBucket.toLong)).cast("int").as("len_bucket"))
       .agg(count(lit(1)).as("n_docs"), sum(col("_n")).as("total_tokens"))
-      .persist()
+      .localCheckpoint()
     val total = cells.agg(sum(col("n_docs")).as("_total"))
     cells.crossJoin(total)
       .withColumn("share", col("n_docs").cast("double") / col("_total"))
@@ -438,13 +440,14 @@ object TextAnalysis {
                     vocabSize: Int): DataFrame = {
     require(vocabSize > 0, s"vocabSize must be positive, got $vocabSize")
     // (word, group) counts: the one corpus-scan agg everything reuses;
-    // word-cardinality-sized, so persisting it is executor-cheap and
-    // pins the scan to one pass
+    // word-cardinality-sized, so an eager cut is executor-cheap and
+    // pins the scan to one pass (the vocab join's inferred null filter
+    // gives one reader its own exchange, so exchange reuse would not)
     val wg = df.select(groupCol.as("grp"),
         explode(Dedup.words(coalesce(col(textCol), lit("")))).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word"), col("grp")).agg(count(lit(1)).as("n"))
-      .persist()
+      .localCheckpoint()
     val vocab = wg.groupBy(col("word")).agg(sum(col("n")).as("total"))
       .orderBy(col("total").desc, col("word").asc).limit(vocabSize)
       .select(col("word"))
@@ -654,11 +657,14 @@ object TextAnalysis {
     val sided = df.withColumn("_side",
         when(groupCol === sideA, "a").when(groupCol === sideB, "b"))
       .filter(col("_side").isNotNull)
+    // (word, side) counts, read by the totals and the per-word rates,
+    // which plan different exchanges over it: an eager cut pins the
+    // corpus scan to one pass
     val wc = sided.select(col("_side"),
         explode(Dedup.words(coalesce(col(textCol), lit("")))).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word"), col("_side")).agg(count(lit(1)).as("n"))
-      .persist()
+      .localCheckpoint()
     val totals = wc.groupBy(col("_side")).agg(sum(col("n")).as("tot"))
     val perWord = wc.groupBy(col("word")).agg(
       sum(when(col("_side") === "a", col("n")).otherwise(0L)).as("cnt_a"),

@@ -174,13 +174,15 @@ object CrawlQueries {
         .join(broadcast(prof.filter(col("n_dup") * 4 < col("n_docs") &&
             col("chars_per_doc") >= 150).select(col("domain"))),
           "domain")
-      // stage 3: the quality funnel (row 45's thresholds)
+      // stage 3: the quality funnel (row 45's thresholds); survivors
+      // feed the pair chain, the split and the domain join, so they
+      // are cut eagerly (the pretrainV3Stages rule)
       val survivors = gated.join(
         TextAnalysis.filterFunnel(gated.select(col("doc_id"), col("text")),
             "text", minTokens = 20, maxTokens = 90,
             keepLangs = Seq("en"), minStop = 0.02)
           .filter(col("verdict") === "kept").select(col("doc_id")),
-        "doc_id").persist()
+        "doc_id").localCheckpoint()
       // stages 4+5: near-dup pair graph feeds the leakage-safe split
       val pairs = Dedup.minhashPairs(
         survivors.select(col("doc_id"), col("text")), "text", "doc_id",

@@ -26,25 +26,20 @@ object PipelineQueries {
         .select(col("doc_id"), col("text"))
       // ded feeds decontamination AND the survivor join; clean feeds
       // the pair job (twice: signatures + shingle sets) and the split.
-      // Persisting both pins the upstream funnel/dedup/decon chain to
-      // one execution — exactly what a production pipeline does with
-      // its stage outputs (or writes them out)
-      val ded = Dedup.exactDedup(kept, "text", "doc_id").persist()
+      // Both are cut eagerly (the pretrainV3Stages rule), so the
+      // upstream funnel/dedup/decon chain runs once — exactly what a
+      // production pipeline does with its stage outputs (or writes
+      // them out)
+      val ded = Dedup.exactDedup(kept, "text", "doc_id").localCheckpoint()
       val flags = Dedup.decontaminate(ded, "text", "doc_id", bench, "text",
         n = 3, minHits = 3)
       val clean = ded.join(
         flags.filter(col("contaminated")).select(col("doc_id")),
-        Seq("doc_id"), "left_anti").persist()
+        Seq("doc_id"), "left_anti").localCheckpoint()
       val pairs = Dedup.minhashPairs(clean, "text", "doc_id",
         numHashes = 16, bands = 4, shingleN = 3, threshold = 0.5)
-      // leakageSafeSplit materializes the pair graph (its components
-      // run eagerly), which fills clean's cache — ded's blocks are no
-      // longer needed after that, so release them here; clean stays
-      // pinned for the returned plan's survivor join
-      val split = Sampling.leakageSafeSplit(clean.select(col("doc_id")), "doc_id",
+      Sampling.leakageSafeSplit(clean.select(col("doc_id")), "doc_id",
         pairs, evalFrac = 0.1, seed = "cur0")
-      ded.unpersist(blocking = false)
-      split
     },
       // the composition of the funnel, exact-dedup, decontaminate and
       // split_safe oracle fragments, each stage reading the previous

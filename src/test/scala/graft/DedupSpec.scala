@@ -767,6 +767,23 @@ class DedupSpec extends SparkSpec {
     assert(byCfg((16L, 8L))._3 >= byCfg((16L, 4L))._3)
   }
 
+  test("repeated pipeline builds leave no persisted RDD behind") {
+    // eager cuts are freed by the ContextCleaner once nothing references
+    // them; a `persist` would stay in the session's cache for good, one
+    // entry per build of a plan over fresh checkpoints
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    for (q <- Seq("pipeline_report", "dedup_minhash_sweep"); _ <- 0 until 5)
+      SparkEntry.queries(q)(spark, sf0001).queryExecution.toRdd.count()
+    def held = sc.getPersistentRDDs.keySet.diff(before).size
+    val deadline = System.nanoTime() + 60000000000L
+    while (held > 2 && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    assert(held <= 2, s"$held RDDs still persisted after 10 builds")
+  }
+
   test("minhashSweepQuality == per-arm minhashPairsFromSigs + pairQuality (r19)") {
     // the r19 fused sweep must reproduce the un-fused reduce exactly:
     // same tp/fp/fn integers, same guarded ratio doubles — including

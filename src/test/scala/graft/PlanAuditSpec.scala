@@ -8,10 +8,28 @@ package graft
   */
 class PlanAuditSpec extends SparkSpec {
 
-  private lazy val plans: Map[String, String] =
-    SparkEntry.queries.map { case (name, fn) =>
-      name -> fn(spark, sf0001).queryExecution.executedPlan.toString
+  /** Each declared query's pre-execution physical plan, and the
+    * builders after which the session's cache held a plan. `persist`
+    * registers its plan when it is called, so building is enough; the
+    * cache is cleared first, and after each builder that registered
+    * one, so each entry is attributed to the builder that made it. */
+  private lazy val (plans, caching) = {
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val built = SparkEntry.queries.toSeq.map { case (name, fn) =>
+      val plan = fn(spark, sf0001).queryExecution.executedPlan.toString
+      val cached = !cache.isEmpty
+      if (cached) spark.catalog.clearCache()
+      (name, plan, cached)
     }
+    (built.map { case (n, p, _) => n -> p }.toMap,
+      built.collect { case (n, _, true) => n }.sorted)
+  }
+
+  test("building every declared query leaves the session cache empty") {
+    assert(caching.isEmpty,
+      s"builders that registered a cached plan: ${caching.mkString(", ")}")
+  }
 
   test("no query plans a cartesian product") {
     val offenders = plans.filter { case (name, p) =>
@@ -84,24 +102,29 @@ class PlanAuditSpec extends SparkSpec {
       s"kernel scoring must ride the scan with no shuffle or join:\n$p")
   }
 
+  /** The root path of every file scan in `df`'s physical plan. The
+    * plan's text abbreviates long locations, so it is not read here. */
+  private def scanRoots(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.queryExecution.sparkPlan.collectWithSubqueries {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.toString)
+    }.flatten
+
   test("indexed more-like-this reads index files only on the corpus side") {
     import spark.implicits._
     import graft.operators.Dedup
     val corpus = graft.core.Tables.documents(spark, sf0001)
       .select(org.apache.spark.sql.functions.col("doc_id"),
         org.apache.spark.sql.functions.col("text"))
-    val path = java.nio.file.Files.createTempDirectory("graft-mlt-audit")
-      .toString + "/idx"
+    val path = tempDir("mlt-audit").toString + "/idx"
     Dedup.writeMinhashIndex(corpus, "text", "doc_id", path)
     // seeds arrive as an in-memory frame: every FileScan in the probe
     // plan must then point at the INDEX, never at a corpus table —
     // the "zero corpus text scans" contract
     val seeds = Seq((3L, "some seed words here")).toDF("doc_id", "text")
-    val p = graft.operators.Search.moreLikeThisIndexed(spark, path, seeds,
-        "text", "doc_id", k = 3)
-      .queryExecution.executedPlan.toString
-    val scans = p.linesIterator.filter(_.contains("FileScan")).toSeq
-    assert(scans.nonEmpty && scans.forall(_.contains("/idx")),
+    val scans = scanRoots(graft.operators.Search.moreLikeThisIndexed(spark, path, seeds,
+        "text", "doc_id", k = 3))
+    assert(scans.nonEmpty && scans.forall(_.contains(path)),
       s"probe must scan only index files:\n${scans.mkString("\n")}")
   }
 
@@ -112,19 +135,16 @@ class PlanAuditSpec extends SparkSpec {
     val docs = graft.core.Tables.documents(spark, sf0001)
     val archive = docs.filter(col("source") === "src1")
       .select(col("doc_id"), col("text"))
-    val path = java.nio.file.Files.createTempDirectory("graft-ov-audit")
-      .toString + "/idx"
+    val path = tempDir("ov-audit").toString + "/idx"
     Dedup.writeMinhashIndex(archive, "text", "doc_id", path)
     // the crawl arrives as an in-memory frame: every FileScan in the
     // report plan must then point at the INDEX — the archive is never
     // re-signed (zero corpus text scans, the recurring-report contract)
     val crawl = Seq((900001L, "entirely novel crawl words"))
       .toDF("doc_id", "text")
-    val p = Dedup.corpusOverlapIndexed(spark, path, "doc_id",
-        crawl, "text", "doc_id")
-      .queryExecution.executedPlan.toString
-    val scans = p.linesIterator.filter(_.contains("FileScan")).toSeq
-    assert(scans.nonEmpty && scans.forall(_.contains("/idx")),
+    val scans = scanRoots(Dedup.corpusOverlapIndexed(spark, path, "doc_id",
+        crawl, "text", "doc_id"))
+    assert(scans.nonEmpty && scans.forall(_.contains(path)),
       s"report must scan only index files:\n${scans.mkString("\n")}")
     // and the report itself matches the scan path on a real overlap
     val crawl2 = archive.filter(col("doc_id") % 7 === 0)

@@ -31,8 +31,9 @@ object Sf1Replica {
         // parquet — the r11 cross-era band widening for the forest lines
         // traced to a replica rebuild changing file layout (row-group
         // boundaries move scan/shuffle granularity), which made eras
-        // incomparable. The md5 manifest below makes any future layout
-        // change loud instead of silent.
+        // incomparable. The md5 manifest below makes any change of the
+        // rows, or of which part file holds them in what order, loud
+        // instead of silent.
         val docs = spark.read.parquet(s"$src/documents.parquet")
         (0 until 10).map { n =>
           if (n == 0) docs
@@ -81,29 +82,30 @@ object Sf1Replica {
             .write.mode("overwrite").parquet(s"$dst/$t.parquet")
       }
 
-      // Byte-level manifest over the replicated tables: md5 of every
-      // data file, combined in sorted-name order. First build writes
-      // it; every later run verifies, so a replica whose BYTES differ
-      // from the era being compared against can never masquerade as
-      // the same dataset (VERDICT r11 #2 / SURVEY round-12 note).
-      def md5File(f: java.io.File): String = {
-        val d = java.security.MessageDigest.getInstance("MD5")
-        val in = new java.io.FileInputStream(f)
-        try {
-          val buf = new Array[Byte](1 << 20)
-          var n = in.read(buf)
-          while (n >= 0) { d.update(buf, 0, n); n = in.read(buf) }
-        } finally in.close()
-        d.digest().map("%02x".format(_)).mkString
-      }
+      // Row-level manifest over the replicated tables: each table's part
+      // files in part-number order, each file's rows in file order,
+      // every row as its JSON text. It hashes neither file names (they
+      // carry a per-write UUID) nor footer bytes (parquet-mr writes
+      // each column's encoding list in a per-JVM order), so two builds
+      // of the same rows write the same hash. First build writes it;
+      // every later run verifies, so a replica whose ROWS differ from
+      // the era being compared against can never masquerade as the same
+      // dataset (VERDICT r11 #2 / SURVEY round-12 note).
       val combined = java.security.MessageDigest.getInstance("MD5")
+      val partNo = "^part-(\\d+)-".r
       for (t <- Seq("documents", "embeddings", "events")) {
         val files = new java.io.File(s"$dst/$t.parquet").listFiles()
           .filter(f => f.getName.endsWith(".parquet") &&
             !f.getName.startsWith("_") && !f.getName.startsWith("."))
-          .sortBy(_.getName)
-        files.foreach(f => combined.update(
-          (f.getName + ":" + md5File(f)).getBytes("UTF-8")))
+          .sortBy(f => partNo.findFirstMatchIn(f.getName).map(_.group(1).toInt)
+            .getOrElse(sys.error(s"unexpected data file name: $f")))
+        files.foreach { f =>
+          spark.read.parquet(f.toString).select(to_json(struct(col("*"))))
+            .toLocalIterator().forEachRemaining { r =>
+              combined.update(r.getString(0).getBytes("UTF-8"))
+              combined.update('\n'.toByte)
+            }
+        }
       }
       val hash = combined.digest().map("%02x".format(_)).mkString
       val manifest = java.nio.file.Paths.get(s"$dst/_replica.md5")
@@ -111,11 +113,11 @@ object Sf1Replica {
         val stored = new String(java.nio.file.Files.readAllBytes(manifest),
           "UTF-8").trim
         if (stored == hash)
-          println(s"[sf1replica] replica bytes verified: $hash")
+          println(s"[sf1replica] replica rows verified: $hash")
         else
-          println(s"[sf1replica] WARNING replica bytes CHANGED: " +
+          println(s"[sf1replica] WARNING replica rows CHANGED: " +
             s"stored=$stored now=$hash — ratios are NOT comparable to " +
-            "eras measured on the old bytes")
+            "eras measured on the old rows")
       } else {
         java.nio.file.Files.write(manifest, hash.getBytes("UTF-8"))
         println(s"[sf1replica] replica manifest written: $hash")
