@@ -75,14 +75,9 @@ object Bench {
                                  slowestFirst: Seq[(String, Double)],
                                  geomean: Option[Double], nErrors: Int,
                                  maxChars: Int = 1850): String = {
-    def r3(v: Double): String =
-      if (v < 0) "-1" else BigDecimal(v).setScale(3,
-        BigDecimal.RoundingMode.HALF_UP).toString
-    val geoStr = geomean.map(g => BigDecimal(g).setScale(2,
-      BigDecimal.RoundingMode.HALF_UP).toString).getOrElse("null")
     val head = s"""{"metric":"total","value":$totalStr,"unit":"sec",""" +
       s""""sf":"$sfDir","compact":true,"lines":${slowestFirst.size},""" +
-      s""""geomean_vs_local":$geoStr,"errors_n":$nErrors,"queries":{"""
+      s""""geomean_vs_local":${optJson(geomean)},"errors_n":$nErrors,"queries":{"""
     val close = "}}"
     require(head.length + close.length <= maxChars,
       s"compact line header is ${head.length + close.length} chars, over $maxChars")
@@ -109,35 +104,29 @@ object Bench {
     * EMPTY history, replace a history for another sf, or replace a
     * base that is itself contaminated (or predates the flag — the
     * pre-r16 file IS the loaded r15 pass): self-labeled files only
-    * protect themselves via the literal `"contaminated":false`.
-    *
-    * History is kept per core count too: a pass with a known `cpus`
-    * never replaces a base that records a different one, clean or not
-    * (an 8-core pass once overwrote the 32-core history). A base that
-    * records no core count predates the field and stays replaceable. */
+    * protect themselves via the literal `"contaminated":false`. */
   private[graft] def shouldPersist(contaminated: Boolean,
                                    prevRaw: Option[String],
-                                   sfDir: String,
-                                   cpus: Option[Int] = None): Boolean = {
-    val otherCores = cpus.exists(c => prevRaw.flatMap(recordedCpus).exists(_ != c))
-    !otherCores && (!contaminated || !prevRaw.exists { raw =>
+                                   sfDir: String): Boolean =
+    !contaminated || !prevRaw.exists { raw =>
       raw.contains("\"sf\":\"" + sfDir + "\"") &&
         raw.contains("\"contaminated\":false")
-    })
-  }
+    }
+
+  /** The local history file of a `cpus`-core pass, relative to the
+    * working directory: one file per core count, so an 8-core pass
+    * never replaces or compares with the 32-core history. */
+  private[graft] def historyFile(cpus: Int): String = s"BENCH_LOCAL_c$cpus.json"
 
   /** The core count a history file or bench artifact records, if any
     * (`"cpus":32` in a history file, `"cpus": 32` in an artifact). */
   private[graft] def recordedCpus(raw: String): Option[Int] =
     "\"cpus\":\\s*(\\d+)".r.findFirstMatchIn(raw).map(_.group(1).toInt)
 
-  /** Whether the local history file is a fair vs_prev base: same scale
-    * factor AND the same recorded core count. A file that records no
-    * core count could be either, so it is never compared. */
-  private[graft] def comparableHistory(raw: String, sfDir: String,
-                                       cpus: Int): Boolean =
-    "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(raw).exists(_.group(1) == sfDir) &&
-      recordedCpus(raw).contains(cpus)
+  /** Whether the local history file is a fair vs_prev base: the same
+    * scale factor. Its name already carries the core count. */
+  private[graft] def comparableHistory(raw: String, sfDir: String): Boolean =
+    "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(raw).exists(_.group(1) == sfDir)
 
   /** Busy (non-idle, non-iowait) jiffies from the aggregate `cpu `
     * line of /proc/stat: user + nice + system + irq + softirq +
@@ -298,17 +287,21 @@ object Bench {
     if (wallSec <= 0) 0.0
     else math.max(0.0, (dBusy - dSelf) / 100.0 / wallSec)
 
-  private def optJson(v: Option[Double]): String =
-    v.map(x => BigDecimal(x).setScale(2,
-      BigDecimal.RoundingMode.HALF_UP).toString).getOrElse("null")
+  /** `v` rounded half up to 2 places; `r3` to 3, or -1 for a query
+    * with no successful sample. */
+  private def r2(v: Double): String =
+    BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
+  private def r3(v: Double): String =
+    if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+  private def optJson(v: Option[Double]): String = v.map(r2).getOrElse("null")
+  private def loadJson(loadAvgs: Seq[Double]): String = loadAvgs.map(r2).mkString("[", ",", "]")
 
   /** One full measured pass (warm pass + 3 interleaved timed passes)
     * rolled up with its own three-channel self-label, so a retried
     * run can publish BOTH attempts' labels (VERDICT r17 #1: the
     * artifact must show the retry, not hide the dirty first pass). */
   private[graft] final case class Pass(
-      samples: Map[String, Vector[Double]],
-      errors: Map[String, String],
+      timings: Map[String, Run.Timing],
       loadAvgs: Vector[Double],
       extCores: Option[Double], extMax: Option[Double],
       ioCores: Option[Double], ioMax: Option[Double],
@@ -323,9 +316,7 @@ object Bench {
         s""""io_cores":${optJson(ioCores)},"io_max":${optJson(ioMax)},""" +
         s""""dq_depth":${optJson(dqDepth)},"dq_max":${optJson(dqMax)},""" +
         s""""noisy_lines":$noisyLines,"contaminated":$contaminated,""" +
-        s""""loadavg":${loadAvgs.map(v => BigDecimal(v).setScale(2,
-          BigDecimal.RoundingMode.HALF_UP).toString)
-          .mkString("[", ",", "]")}}"""
+        s""""loadavg":${loadJson(loadAvgs)}}"""
   }
 
   /** The self-healing decision (VERDICT r17 next-round #1): a full
@@ -373,7 +364,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Run.cpus
     val spark = Run.session()
-    def run(fn: Run.Builder, dir: String): Unit = Run.execute(fn(spark, dir))
     // Failures the bench survives never pass silently: each prints to
     // stderr and reaches the vs_prev line as "<stage> <query>: <class>".
     val warnings = collection.mutable.ArrayBuffer[String]()
@@ -381,19 +371,14 @@ object Bench {
       warnings += s"$what: ${e.getClass.getSimpleName}"
       System.err.println(s"[bench] $what failed: ${e.getClass.getName}: ${e.getMessage}")
     }
-    // label every query's jobs (guide §1.5) so a listener / event log
-    // can attribute stages; a thread-local string, free in the timing
-    def labeled(name: String)(body: => Unit): Unit = {
-      spark.sparkContext.setJobDescription(name)
-      try body finally spark.sparkContext.setJobDescription(null)
-    }
     // External-CPU window opens BEFORE any Spark work: everything the
     // bench itself burns from here on is `self` and subtracts out.
+    // A missing file (no /proc) reads as None, the loadavg fallback.
     def procRead(p: String): Option[String] =
       try Some(new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(p)),
         java.nio.charset.StandardCharsets.UTF_8))
-      catch { case _: Throwable => None }
+      catch { case _: java.io.IOException => None }
     def cpuSample(): Option[(Long, Long, Long)] =
       for (st <- procRead("/proc/stat"); self <- procRead("/proc/self/stat"))
         yield {
@@ -416,35 +401,30 @@ object Bench {
       .map(Run.select(SparkEntry.queries, _).toSet)
     val queries = SparkEntry.queries.filter { case (k, _) =>
       only.forall(_.contains(k)) }
+    val names = queries.keys.toSeq
     // JIT/codegen warm-up: run every query once at the tiny sf so the
     // timed runs measure steady-state throughput, not first-run
     // interpreter/compile cost (measured 4-5x on string-heavy paths).
     // Once per JVM — a retried pass is already JIT-warm.
     queries.foreach { case (name, fn) =>
-      try labeled(s"warmup: $name")(run(fn, "/root/testdata/sf0.001"))
+      try Run.once(spark, "/root/testdata/sf0.001", name, s"$name (warm)", fn)
       catch { case e: Throwable => warn(s"warm-up $name", e) }
     }
-    // median of 3 timed runs per query. Round 4 was an A/A control on
-    // a byte-identical binary and min-of-2 still moved single queries
-    // by ±2-4 s (GC / page-cache contention between queries sharing
-    // cached inputs) — below that noise floor a 2x per-query change is
-    // invisible. The median tolerates one bad run out of three; one
-    // full-size warm pass first absorbs tail JIT of the hottest loops.
-    //
-    // The 3 samples are INTERLEAVED (3 round-robin passes over all
-    // queries), not back-to-back: the round-5 driver run showed a
-    // multi-minute host-contention era can cover one query's entire
-    // back-to-back triple (doc_fingerprint 0.7 -> 13 s median on an
-    // identical binary), while spread samples put at most one bad era
-    // in any query's triple and the median discards it.
+    // median of 3 timed runs per query, timed by Run.time. Round 4 was
+    // an A/A control on a byte-identical binary and min-of-2 still
+    // moved single queries by ±2-4 s (GC / page-cache contention
+    // between queries sharing cached inputs) — below that noise floor
+    // a 2x per-query change is invisible. The median tolerates one bad
+    // run out of three; one full-size warm pass first absorbs tail JIT
+    // of the hottest loops. The samples are interleaved: the round-5
+    // driver run showed a multi-minute host-contention era can cover
+    // one query's entire back-to-back triple.
     // Failures must never masquerade as fast lines: a swallowed
     // Throwable here once logged a crashed family as 0.05 s "wins"
-    // for two rounds (VERDICT r9). Record the error and emit -1.
-    // Errors are recorded ONLY from the timed passes, and a query's
-    // result is the median of its SUCCESSFUL timed samples — a
-    // transient failure in the untimed warm pass (or in one of three
-    // timed runs) must not permanently brand a query -1 when the timed
-    // runs produced a valid median (ADVICE r10). -1 stays reserved for
+    // for two rounds (VERDICT r9). Errors are recorded ONLY from the
+    // timed passes, and a query's result is the median of its
+    // SUCCESSFUL timed samples: a failed warm run or one failed timed
+    // run must not brand a query -1 (ADVICE r10); -1 stays reserved for
     // queries with zero successful timed samples.
     //
     // The whole measured pass — full-size warm pass, 3 interleaved
@@ -459,11 +439,6 @@ object Bench {
       val cpu0 = cpuSample()
       val disk0 = diskSample()
       val wall0 = System.nanoTime()
-      val errors = collection.mutable.LinkedHashMap[String, String]()
-      queries.foreach { case (name, fn) =>
-        try labeled(s"prepass: $name")(run(fn, sfDir))
-        catch { case e: Throwable => warn(s"pre-pass $name", e) }
-      }
       // Host-contention self-identification (VERDICT r13 perf note):
       // the r13 artifact's uniform +50-110% drift on untouched queries
       // was a box-wide era, invisible in the artifact itself. Sample
@@ -472,32 +447,25 @@ object Bench {
       val loadAvgs = collection.mutable.ArrayBuffer[Double]()
       def sampleLoad(): Unit = loadAvgs += java.lang.management
         .ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
-      val samples = collection.mutable.LinkedHashMap[String, Vector[Double]]()
       // Per-query /proc slices (ADVICE r16): bracketing every timed
       // run gives the burst-window and iowait signals their
       // granularity — six tiny /proc reads per query, ~1 ms against
-      // 100 ms+ queries.
+      // 100 ms+ queries. A timed pass starts at the first name.
       val segs = collection.mutable.ArrayBuffer[Seg]()
-      for (_ <- 1 to 3) {
-        sampleLoad()
-        queries.foreach { case (name, fn) =>
-          val s0 = cpuSample()
-          val d0 = diskSample()
-          val t0 = System.nanoTime()
-          val okRun = try { labeled(name)(run(fn, sfDir)); true }
-          catch { case e: Throwable =>
-            errors(name) = s"${e.getClass.getSimpleName}: ${e.getMessage}"
-            false
-          }
+      val bracket: Run.Around = (name, run) => {
+        if (name == names.head) sampleLoad()
+        val s0 = cpuSample()
+        val d0 = diskSample()
+        val t0 = System.nanoTime()
+        try run finally {
           val wall = (System.nanoTime() - t0) / 1e9
           val dWq = diskDeltaMs(d0, diskSample())
           for ((b0, i0, f0) <- s0; (b1, i1, f1) <- cpuSample())
             segs += Seg(b1 - b0, i1 - i0, f1 - f0, dWq, wall)
-          if (okRun) {
-            samples(name) = samples.getOrElse(name, Vector.empty) :+ wall
-          }
         }
       }
+      val timings = Run.time(spark, sfDir, names, queries, bracket).toMap
+      timings.foreach { case (name, t) => t.warm.foreach(warn(s"pre-pass $name", _)) }
       sampleLoad()
       // Contamination (VERDICT r16 #1 + ADVICE r16, isContaminated):
       // whole-run external-CPU average above the cap, OR any coalesced
@@ -531,9 +499,8 @@ object Bench {
       val dqMax: Option[Double] =
         if (windows.isEmpty || dqDepth.isEmpty) None
         else Some(windows.map(w => w.dWq / 1000.0 / w.wall).max)
-      val noisyLines = samples.values.count { ts =>
-        ts.size >= 2 && spreadRatio(ts) > 3.0 &&
-          ts.sorted.apply(ts.size / 2) > 0.05
+      val noisyLines = timings.values.count { t =>
+        t.samples.size >= 2 && spreadRatio(t.samples.map(_.wall)) > 3.0 && t.median() > 0.05
       }
       val contaminated = extCores match {
         case Some(x) => isContaminated(x, extMax.getOrElse(0.0),
@@ -547,7 +514,7 @@ object Bench {
         case None => (loadAvgs.nonEmpty && loadAvgs.head > LoadMax) ||
           dqDepth.exists(_ > DqMax) || dqMax.exists(_ > DqMax)
       }
-      Pass(samples.toMap, errors.toMap, loadAvgs.toVector,
+      Pass(timings, loadAvgs.toVector,
         extCores, extMax, ioCores, ioMax, dqDepth, dqMax,
         noisyLines, contaminated)
     }
@@ -588,10 +555,12 @@ object Bench {
       case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
     } + "\""
-    val results = queries.keys.map { name =>
-      val ts = pub.samples.getOrElse(name, Vector.empty)
-      name -> (if (ts.isEmpty) -1.0 else ts.sorted.apply(ts.size / 2))
+    val results = pub.timings.map { case (name, t) =>
+      name -> (if (t.samples.isEmpty) -1.0 else t.median())
     }.toSeq
+    // a query with no successful timed sample, and its last exception
+    val failed = pub.timings.flatMap { case (name, t) =>
+      if (t.samples.isEmpty) t.errors.lastOption.map(name -> _) else None }
     // ms precision, sorted cheapest-FIRST: the driver's artifact keeps
     // only the output's last ~3.3 KB (the TAIL), so the queries map
     // goes LAST in the JSON with the slowest lines at the very end —
@@ -599,16 +568,12 @@ object Bench {
     // drops the cheap lines and the front matter, never the expensive
     // lines a reader wants first (VERDICT r11 #1; r10's fix sorted
     // the wrong way and lost the ~30 slowest lines).
-    def r3(v: Double): String =
-      if (v < 0) "-1" else BigDecimal(v).setScale(3,
-        BigDecimal.RoundingMode.HALF_UP).toString
     val qs = results.sortBy(_._2)
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val errJson = pub.errors
-      .filter { case (k, _) => pub.samples.getOrElse(k, Vector.empty).isEmpty }
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
+    val errJson = failed
+      .map { case (k, e) => s"${jstr(k)}:${jstr(s"${e.getClass.getSimpleName}: ${e.getMessage}")}" }
       .mkString("{", ",", "}")
     // Era-drift self-identification (VERDICT r11 #8): compare against
     // the newest BENCH_r{N}.json already in the repo and emit the
@@ -621,12 +586,13 @@ object Bench {
     // The comparison base prefers the repo-side FULL history file
     // (VERDICT r14 #3): the driver's artifact keeps only the ~3.3 KB
     // stdout tail, which caps vs_prev at ~77 of 154 lines and loses
-    // half the per-query history every round. BENCH_LOCAL.json — the
+    // half the per-query history every round. BENCH_LOCAL_c<cpus>.json — the
     // complete medians map of the previous run, committed per round —
     // covers every line; the truncated artifact stays as fallback for
-    // a fresh checkout. Only a same-sf, same-cores local file is
-    // comparable, and only a same-cores artifact.
-    val localHist = new java.io.File("/root/repo/BENCH_LOCAL.json")
+    // a fresh checkout. Only a same-sf local file of this core count is
+    // comparable, and only a same-cores artifact. Both are resolved
+    // against the working directory, the project root under sbt.
+    val localHist = new java.io.File(historyFile(cpus))
     // the geomean escapes the vs_prev block so the compact final line
     // (see compactLine) can carry it inside the driver's tail window
     var geoOpt: Option[Double] = None
@@ -635,14 +601,13 @@ object Bench {
         if (!localHist.exists()) None else {
           val raw = new String(java.nio.file.Files.readAllBytes(
             localHist.toPath), java.nio.charset.StandardCharsets.UTF_8)
-          if (comparableHistory(raw, sfDir, cpus))
+          if (comparableHistory(raw, sfDir))
             Some(("\"source\":\"BENCH_LOCAL\"", parsePrevQueryTimes(raw)))
           else None
         }
       val fromArtifact: Option[(String, Map[String, Double])] = {
         val benchRe = "BENCH_r(\\d+)\\.json".r
-        val repo = new java.io.File("/root/repo")
-        val prevFiles = Option(repo.listFiles()).getOrElse(Array.empty)
+        val prevFiles = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
           .flatMap { f => f.getName match {
             case benchRe(n) =>
               val raw = new String(java.nio.file.Files.readAllBytes(
@@ -666,8 +631,6 @@ object Bench {
           if (ratios.isEmpty) "null" else {
             val geo = math.exp(ratios.map(r => math.log(r._2)).sum / ratios.size)
             geoOpt = Some(geo)
-            def r2(v: Double) = BigDecimal(v).setScale(2,
-              BigDecimal.RoundingMode.HALF_UP).toString
             // capped at the 30 largest shifts (VERDICT r19 #1): a
             // contaminated pass can push 60+ lines over 1.2x, and an
             // uncapped map blows the whole vs_prev line past the
@@ -690,8 +653,7 @@ object Bench {
     // artifact that hides a dirty first attempt would read as an
     // idle box when it wasn't one). `retry` records the decision:
     // publish_first | no_retry | skip_busy | retry.
-    val loadJson = pub.loadAvgs.map(v => BigDecimal(v).setScale(2,
-      BigDecimal.RoundingMode.HALF_UP).toString).mkString("[", ",", "]")
+    val pubLoad = loadJson(pub.loadAvgs)
     val attemptsJson =
       (Seq(p1) ++ p2).map(_.labelJson).mkString("[", ",", "]")
     val selfLabel = s""""ext_cores":${optJson(pub.extCores)},"ext_max":${optJson(pub.extMax)},"io_cores":${optJson(pub.ioCores)},"io_max":${optJson(pub.ioMax)},"dq_depth":${optJson(pub.dqDepth)},"dq_max":${optJson(pub.dqMax)},"noisy_lines":${pub.noisyLines},"contaminated":${pub.contaminated},"retry":"$decision","attempts":$attemptsJson"""
@@ -704,8 +666,8 @@ object Bench {
         else Some(new String(java.nio.file.Files.readAllBytes(
           localHist.toPath), java.nio.charset.StandardCharsets.UTF_8))
       if (only.isEmpty &&
-          shouldPersist(pub.contaminated, prevRaw, sfDir, Some(cpus))) {
-        val full = s"""{"sf":"$sfDir","cpus":$cpus,"loadavg":$loadJson,$selfLabel,"errors":$errJson,"queries":$qs}\n"""
+          shouldPersist(pub.contaminated, prevRaw, sfDir)) {
+        val full = s"""{"sf":"$sfDir","cpus":$cpus,"loadavg":$pubLoad,$selfLabel,"errors":$errJson,"queries":$qs}\n"""
         java.nio.file.Files.write(localHist.toPath,
           full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
@@ -716,16 +678,14 @@ object Bench {
     // that must survive capture has to come after the queries map —
     // r12 computed the era comparison but embedded it before the map,
     // and the tail window truncated it away.
-    println(s"""{"metric":"vs_prev","value":$vsPrev,"loadavg":$loadJson,$selfLabel,""" +
+    println(s"""{"metric":"vs_prev","value":$vsPrev,"loadavg":$pubLoad,$selfLabel,""" +
       s""""warnings_n":${warnings.size},"warnings":${warnings.take(10).map(jstr).mkString("[", ",", "]")}}""")
     // the COMPACT line prints LAST (VERDICT r19 #1): the only line
     // guaranteed to sit whole inside the driver's 2000-char tail, so
     // the driver's per-query parse and the c8/c32 scaling comparison
     // finally have data. Same total, same medians — a re-emission of
     // the slowest prefix, never a different measurement.
-    println(compactLine(r3(total), sfDir, results.sortBy(-_._2), geoOpt,
-      pub.errors.count { case (k, _) =>
-        pub.samples.getOrElse(k, Vector.empty).isEmpty }))
+    println(compactLine(r3(total), sfDir, results.sortBy(-_._2), geoOpt, failed.size))
     spark.stop()
   }
 }

@@ -267,7 +267,7 @@ object AnnIvf {
                    path: String): Unit = {
     assign(df, vecCol, idCol, centroids, metric)
       .write.mode("overwrite").partitionBy("cell").parquet(path)
-    Dedup.writeIndexConfig(df.sparkSession, path,
+    IndexConfig.writeIndexConfig(df.sparkSession, path,
       Seq("nlist" -> centroids.count(), "metric" -> Knn.metricCode(metric)))
   }
 
@@ -279,7 +279,7 @@ object AnnIvf {
                  vecCol: String, query: DataFrame, k: Int,
                  centroids: DataFrame, nprobe: Int, metric: Knn.Metric,
                  idCol: String): DataFrame = {
-    Dedup.validateIndexConfig(spark, path,
+    IndexConfig.validateIndexConfig(spark, path,
       Seq("nlist" -> centroids.count(), "metric" -> Knn.metricCode(metric)))
     val probeCells = rankCells(centroids, query, nprobe, metric)
     IndexMaintenance.dropTombstoned(spark, path,

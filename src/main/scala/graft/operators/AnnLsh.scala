@@ -225,7 +225,7 @@ object AnnLsh {
     indexForest(df, vecCol, numTables, bitsPerTable, dim)
       .select(col(idCol), explode(col("fkeys")).as("fkey"))
       .write.mode("overwrite").partitionBy("fkey").parquet(path)
-    Dedup.writeIndexConfig(df.sparkSession, path, forestConfig(
+    IndexConfig.writeIndexConfig(df.sparkSession, path, forestConfig(
       numTables, bitsPerTable, dim))
   }
 
@@ -244,7 +244,7 @@ object AnnLsh {
     // appending rows hashed under DIFFERENT parameters would corrupt
     // the index silently (mixed key spaces in one table) — the worst
     // of the mismatch family, so it fails fast too (ADVICE r11)
-    Dedup.validateIndexConfig(df.sparkSession, path, forestConfig(
+    IndexConfig.validateIndexConfig(df.sparkSession, path, forestConfig(
       numTables, bitsPerTable, dim))
     indexForest(df, vecCol, numTables, bitsPerTable, dim)
       .select(col(idCol), explode(col("fkeys")).as("fkey"))
@@ -260,7 +260,7 @@ object AnnLsh {
                        df: DataFrame, vecCol: String, query: DataFrame, k: Int,
                        numTables: Int, bitsPerTable: Int, dim: Int,
                        metric: Knn.Metric, idCol: String, probes: Int = 1): DataFrame = {
-    Dedup.validateIndexConfig(spark, indexPath, forestConfig(
+    IndexConfig.validateIndexConfig(spark, indexPath, forestConfig(
       numTables, bitsPerTable, dim))
     // multiprobe against the same persisted index: the extra keys are
     // just more pruned partitions to read — the index (L longs/row)
@@ -310,7 +310,7 @@ object AnnLsh {
                             queries: DataFrame, k: Int, numTables: Int,
                             bitsPerTable: Int, dim: Int, metric: Knn.Metric,
                             idCol: String, probes: Int = 1): DataFrame = {
-    Dedup.validateIndexConfig(spark, indexPath, forestConfig(
+    IndexConfig.validateIndexConfig(spark, indexPath, forestConfig(
       numTables, bitsPerTable, dim))
     val queryKeys =
       if (probes == 1)

@@ -169,7 +169,7 @@ object AnnPq {
     AnnIvf.assign(df, vecCol, idCol, centroids, metric)
       .select(cols: _*)
       .write.mode("overwrite").partitionBy("cell").parquet(path)
-    Dedup.writeIndexConfig(df.sparkSession, path, pqConfig(model, residual = false))
+    IndexConfig.writeIndexConfig(df.sparkSession, path, pqConfig(model, residual = false))
   }
 
   /** Sidecar params for a PQ index: codes packed under a different
@@ -188,7 +188,7 @@ object AnnPq {
   def knnIvfPq(spark: org.apache.spark.sql.SparkSession, path: String,
                query: DataFrame, k: Int, centroids: DataFrame, nprobe: Int,
                metric: Knn.Metric, model: Model, idCol: String): DataFrame = {
-    Dedup.validateIndexConfig(spark, path, pqConfig(model, residual = false))
+    IndexConfig.validateIndexConfig(spark, path, pqConfig(model, residual = false))
     val probeCells = AnnIvf.rankCells(centroids, query, nprobe, metric)
     val lut = lookupTable(queryVector(query), model)
     val bits = bitsFor(model.k)
@@ -258,7 +258,7 @@ object AnnPq {
         encodeCol(col("_rv"), model), bits).as("pq_packed"))
     assigned.select(cols: _*)
       .write.mode("overwrite").partitionBy("cell").parquet(path)
-    Dedup.writeIndexConfig(df.sparkSession, path, pqConfig(model, residual = true))
+    IndexConfig.writeIndexConfig(df.sparkSession, path, pqConfig(model, residual = true))
   }
 
   /** Probe a [[writeIvfPqResidualIndex]] table: ranks cells on the
@@ -272,7 +272,7 @@ object AnnPq {
                        query: DataFrame, k: Int, centroids: DataFrame,
                        nprobe: Int, metric: Knn.Metric, model: Model,
                        idCol: String): DataFrame = {
-    Dedup.validateIndexConfig(spark, path, pqConfig(model, residual = true))
+    IndexConfig.validateIndexConfig(spark, path, pqConfig(model, residual = true))
     val qv = queryVector(query)
     val probeCells = AnnIvf.rankCells(centroids, query, nprobe, metric)
     val centMap = centroids

@@ -182,12 +182,6 @@ object Dedup {
       .drop("sa", "sb")
   }
 
-  /** As [[verifyJaccardSets]] but recomputing the shingle sets from raw
-    * text (standalone use; the pipelines pass a checkpointed set frame). */
-  def verifyJaccard(df: DataFrame, textCol: String, idCol: String, shingleN: Int,
-                    candidates: DataFrame): DataFrame =
-    verifyJaccardSets(shingleSets(df, textCol, idCol, shingleN), candidates)
-
   /** The minhash pair chain over PRE-MATERIALIZED shingle sets and
     * signatures — the SWEEP shape (VERDICT r14 #5 family): the
     * (numHashes, bands) tuning arms share ONE shingle-set frame and
@@ -320,91 +314,6 @@ object Dedup {
 
   // ---------- incremental (delta-vs-corpus) ----------
 
-  /** Build-parameter sidecar location for a persisted index
-    * (underscore-prefixed, so Spark's file listing ignores it when
-    * the index root itself is read as parquet — the `_tombstones`
-    * convention). */
-  def indexConfigPath(path: String): String = s"$path/_config"
-
-  /** Persist the build parameters next to an index. An index probed
-    * with parameters different from those it was built with computes
-    * different band arithmetic / bucket layout and silently returns
-    * wrong candidates — so every writer records its config and every
-    * probe fails fast on mismatch (ADVICE r11). The sidecar is one JSON
-    * object of integer fields, written on the driver. */
-  private[graft] def writeIndexConfig(spark: org.apache.spark.sql.SparkSession,
-                                      path: String,
-                                      params: Seq[(String, Long)]): Unit = {
-    val json = params.map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
-    putIndexConfig(new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration), path,
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
-
-  /** Writes `json` as the `_config` sidecar of the index at `path`: in
-    * full to a temp file, then renamed into place, so a reader sees the
-    * old sidecar or the new one, never a torn one. */
-  private[graft] def putIndexConfig(hfs: org.apache.hadoop.fs.FileSystem,
-                                    path: String, json: Array[Byte]): Unit = {
-    val fs = unchecksummed(hfs)
-    val cfg = new org.apache.hadoop.fs.Path(indexConfigPath(path))
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$path/._config.${java.util.UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(json) finally out.close()
-    fs.delete(cfg, true)
-    require(fs.rename(tmp, cfg), s"rename $tmp -> $cfg failed")
-  }
-
-  /** The `_config` sidecar's bytes, or None for an index written
-    * before the sidecar convention. A `_config` directory is the
-    * parquet sidecar of an older build: it fails by path, since
-    * skipping it would probe unvalidated. */
-  private[graft] def indexConfigBytes(hfs: org.apache.hadoop.fs.FileSystem,
-                                      path: String): Option[Array[Byte]] = {
-    val fs = unchecksummed(hfs)
-    val cfg = new org.apache.hadoop.fs.Path(indexConfigPath(path))
-    val st = try Some(fs.getFileStatus(cfg)) catch {
-      case _: java.io.FileNotFoundException => None
-    }
-    st.map { s =>
-      require(!s.isDirectory, s"$cfg is a directory, the build-parameter " +
-        "sidecar of an older build — rebuild the index")
-      val in = fs.open(cfg)
-      try in.readAllBytes() finally in.close()
-    }
-  }
-
-  /** The sidecar is read and written without `.crc` companions: a
-    * stale checksum left by one writer must not fail a read of what
-    * another (e.g. a plain file write) put there. */
-  private def unchecksummed(fs: org.apache.hadoop.fs.FileSystem) = fs match {
-    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-    case f => f
-  }
-
-  /** Fail fast when a probe's parameters disagree with the stored
-    * build config. A missing sidecar (index written before the config
-    * convention) is tolerated; unknown stored keys are ignored so the
-    * config can grow fields without breaking old probes. The sidecar
-    * is read on every call: one small file, no Spark job. */
-  private[graft] def validateIndexConfig(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      expected: Seq[(String, Long)]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    indexConfigBytes(fs, path).foreach { json =>
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-      val bad = expected.flatMap { case (k, v) =>
-        Option(node.get(k)).map(_.asLong).filter(_ != v)
-          .map(sv => s"$k: built=$sv probed=$v") }
-      require(bad.isEmpty,
-        s"index at $path probed with parameters it was not built with " +
-          s"(${bad.mkString(", ")}) — rebuild the index or probe with " +
-          "the stored build parameters")
-    }
-  }
-
   /** Persist a MinHash probe index for [[incrementalNearDupIndexed]]:
     * `path/bands` holds one (band, key, idCol) row per band per doc
     * and `path/sets` the distinct shingle-hash arrays (sid, shs). The
@@ -432,7 +341,7 @@ object Dedup {
           col("shs"), as, bs, MINHASH_M).as("sig"))
     bandKeys(sigs, idCol, idCol, bands, numHashes / bands)
       .write.mode("overwrite").parquet(s"$path/bands")
-    writeIndexConfig(df.sparkSession, path,
+    IndexConfig.writeIndexConfig(df.sparkSession, path,
       Seq("num_hashes" -> numHashes.toLong, "bands" -> bands.toLong,
         "shingle_n" -> shingleN.toLong))
   }
@@ -492,7 +401,7 @@ object Dedup {
                                 numHashes: Int = 16, bands: Int = 4,
                                 shingleN: Int = 3,
                                 threshold: Double = 0.5): DataFrame = {
-    validateIndexConfig(spark, indexPath,
+    IndexConfig.validateIndexConfig(spark, indexPath,
       Seq("num_hashes" -> numHashes.toLong, "bands" -> bands.toLong,
         "shingle_n" -> shingleN.toLong))
     // deleted corpus docs must not claim delta docs as their dups:
@@ -1021,7 +930,7 @@ object Dedup {
                            shingleN: Int = 3,
                            minJaccard: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    validateIndexConfig(spark, indexPath,
+    IndexConfig.validateIndexConfig(spark, indexPath,
       Seq("num_hashes" -> numHashes.toLong, "bands" -> bands.toLong,
         "shingle_n" -> shingleN.toLong))
     val corpusBands = IndexMaintenance.dropTombstoned(spark, indexPath,
@@ -1267,7 +1176,7 @@ object Dedup {
       .select(col("h")).distinct()
       .withColumn("bucket", pmod(col("h"), lit(numBuckets.toLong)))
       .write.partitionBy("bucket").mode("overwrite").parquet(path)
-    writeIndexConfig(df.sparkSession, path,
+    IndexConfig.writeIndexConfig(df.sparkSession, path,
       Seq("min_len" -> minLen.toLong, "num_buckets" -> numBuckets.toLong))
   }
 
@@ -1283,7 +1192,7 @@ object Dedup {
                           indexPath: String, delta: DataFrame,
                           textCol: String, idCol: String, minLen: Int = 8,
                           numBuckets: Int = 64): DataFrame = {
-    validateIndexConfig(spark, indexPath,
+    IndexConfig.validateIndexConfig(spark, indexPath,
       Seq("min_len" -> minLen.toLong, "num_buckets" -> numBuckets.toLong))
     val winRows = windowHashRows(delta, textCol, idCol, minLen)
       .withColumn("bucket", pmod(col("h"), lit(numBuckets.toLong)))

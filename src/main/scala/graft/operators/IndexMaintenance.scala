@@ -42,12 +42,6 @@ object IndexMaintenance {
       .write.mode("append").parquet(tombstonePath(indexPath))
   }
 
-  /** Frame variant of [[appendTombstones]] for bulk deletes. */
-  def appendTombstonesDf(indexPath: String, ids: DataFrame,
-                         idCol: String): Unit =
-    ids.select(col(idCol).cast("long").as("id")).distinct()
-      .write.mode("append").parquet(tombstonePath(indexPath))
-
   /** Anti-join `df` against the index's tombstone set (no-op when no
     * tombstone file exists — the common case pays one driver-side
     * existence check and nothing else). */
@@ -76,13 +70,13 @@ object IndexMaintenance {
     // on the driver before the root is deleted, restore them after the
     // swap — compaction changes the file layout, never the parameters
     // the index was built with
-    val cfg = Dedup.indexConfigBytes(fs, indexPath)
+    val cfg = IndexConfig.indexConfigBytes(fs, indexPath)
     val tmp = new Path(indexPath + "._compact")
     val w = cleaned.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(tmp.toString)
     fs.delete(root, true)
     fs.rename(tmp, root)
-    cfg.foreach(Dedup.putIndexConfig(fs, indexPath, _))
+    cfg.foreach(IndexConfig.putIndexConfig(fs, indexPath, _))
   }
 }

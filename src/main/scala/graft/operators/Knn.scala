@@ -99,20 +99,6 @@ object Knn {
     }
   }
 
-  /** Keyset pagination — the scale-correct cursor API: global numeric
-    * offsets need a single-ordered-window pass over the corpus, while
-    * "id > lastSeen limit n" is a pushed-down range predicate on the
-    * scan. Page through with the last id of the previous page. */
-  def listRecordsAfter(data: DataFrame, idCol: String, filter: Option[Column],
-                       afterId: Option[Long], limit: Int): DataFrame = {
-    val filtered = filter.map(data.filter).getOrElse(data)
-    val cursored = afterId match {
-      case Some(a) => filtered.filter(col(idCol) > a)
-      case None => filtered
-    }
-    cursored.orderBy(col(idCol).asc).limit(limit)
-  }
-
   /** k-NN label propagation — the weak-supervision labeling step a
     * curation pipeline runs when a small labeled seed set must fan its
     * labels out to an unlabeled pool (semi-supervised corpus tagging):

@@ -166,7 +166,7 @@ object Search {
     withW.agg(count(lit(1)).as("n_docs"),
         sum(size(col("_w")).cast("long")).as("sum_dl"))
       .write.mode("overwrite").parquet(path + "_stats")
-    Dedup.writeIndexConfig(df.sparkSession, path,
+    IndexConfig.writeIndexConfig(df.sparkSession, path,
       Seq("num_buckets" -> numBuckets.toLong,
         "positions" -> (if (positions) 1L else 0L)))
   }
@@ -193,7 +193,7 @@ object Search {
       "query terms must be non-empty and distinct")
     // a numBuckets mismatch silently prunes to the WRONG partitions
     // (terms look absent) — fail fast against the stored build config
-    Dedup.validateIndexConfig(spark, path,
+    IndexConfig.validateIndexConfig(spark, path,
       Seq("num_buckets" -> numBuckets.toLong))
     // statsFromDocs: aggregate the streaming build's append-only
     // (id, dl) table — two longs per doc, one narrow scan — instead
@@ -276,7 +276,7 @@ object Search {
                     idCol: String, phrase: Seq[String], k: Int,
                     numBuckets: Int = 64): DataFrame = {
     require(phrase.size >= 2, "a phrase needs at least two words")
-    Dedup.validateIndexConfig(spark, path,
+    IndexConfig.validateIndexConfig(spark, path,
       Seq("num_buckets" -> numBuckets.toLong, "positions" -> 1L))
     val buckets = phrase.distinct.map(t => hash64Local(t) % numBuckets).distinct
     val postings = IndexMaintenance.dropTombstoned(spark, path,
@@ -504,7 +504,7 @@ object Search {
     require(numHashes % bands == 0, "numHashes must divide evenly into bands")
     // probing with parameters the index was not built with would
     // silently produce wrong candidates/ranks — fail fast instead
-    Dedup.validateIndexConfig(spark, indexPath,
+    IndexConfig.validateIndexConfig(spark, indexPath,
       Seq("num_hashes" -> numHashes.toLong, "bands" -> bands.toLong,
         "shingle_n" -> shingleN.toLong))
     val corpusBands = IndexMaintenance.dropTombstoned(spark, indexPath,

@@ -31,15 +31,6 @@ object Sources {
   def jsonRecords(spark: SparkSession, path: String, embedDim: Int = 16): DataFrame =
     canonical(spark.read.schema(recordSchema).json(path), embedDim)
 
-  /** CSV with headers id,text,metadata (vector-less ingestion). */
-  def csvRecords(spark: SparkSession, path: String, embedDim: Int = 16): DataFrame = {
-    val raw = spark.read.option("header", "true").csv(path)
-      .select(col("id").cast("long"),
-        lit(null).cast(ArrayType(DoubleType)).as("vector"),
-        col("text"), col("metadata"))
-    canonical(raw, embedDim)
-  }
-
   /** Read a [[graft.core.Collection#dump]] backup directory back into
     * the canonical (id, vector, metadata) record frame — graft's
     * inverse of the reference's ImportJSON (dump.go:138). The dump is
@@ -52,11 +43,6 @@ object Sources {
         StructField("metadata", StringType))))
       .json(path)
       .select(col("id"), col("vector"), col("metadata"))
-
-  /** Streaming json-lines records for continuous ingest
-    * (graft.streaming.Ingest consumes this). */
-  def jsonRecordStream(spark: SparkSession, path: String): DataFrame =
-    spark.readStream.schema(recordSchema).json(path)
 
   /** Write a training export: the deterministic shuffle + sharding of
     * [[graft.operators.Sampling.shuffleShards]], laid out as parquet

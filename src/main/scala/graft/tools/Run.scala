@@ -9,16 +9,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import scala.collection.mutable
-import scala.util.{Failure, Try}
+import scala.util.{Failure, Success, Try}
 
 /** The measurement harness over the declared queries, one mode per
   * run. `names` is `all` or a comma list; an unknown name fails before
   * any work, listing every unknown one.
   *
-  *  - `time <sfDir> <names>`: one warm run, then 3 timed runs of each
-  *    query (build + execute). Prints the median and every sample, the
-  *    per-rep job, stage, task and run/cpu/gc-ms totals, and the
-  *    slowest stages.
+  *  - `time <sfDir> <names>`: one warm pass over the names, then 3
+  *    interleaved timed passes (see [[time]]). Prints each query's
+  *    median, min, max, sample count and median per layer (construct,
+  *    plan, execute), every sample, the per-rep job, stage, task and
+  *    run/cpu/gc-ms totals, and the slowest stages. `Bench` times its
+  *    passes with it.
   *  - `plan <sfDir> <names> <outDir>`: executes each query and writes
   *    its final adaptive plan (formatted) to `outDir/<name>.txt`. Only
   *    an executed plan shows exchange reuse, so the summary line counts
@@ -28,8 +30,9 @@ import scala.util.{Failure, Try}
   *    SQL and `errors.json`, as `Verify` writes them, so
   *    `tools/check.py <sfDir> <outDir>` re-checks just those queries.
   *
-  * A query that throws is reported with its name and exception class
-  * after the others have run, and the exit status is non-zero.
+  * A query that throws, in any of its runs, is reported with its name
+  * and exception class after the others have run, and the exit status
+  * is non-zero.
   * Run: `sbt "runMain graft.tools.Run time <sfDir> q1_agg,q3_join"`. */
 object Run extends AdaptiveSparkPlanHelper {
   type Builder = (SparkSession, String) => DataFrame
@@ -74,11 +77,28 @@ object Run extends AdaptiveSparkPlanHelper {
                          runMs: Long, cpuMs: Long, gcMs: Long, inBytes: Long,
                          shuffleRead: Long, shuffleWrite: Long)
 
-  /** One query's timed runs: wall seconds per run, and the jobs and
-    * completed stages of all of them together. */
-  final case class Timing(samples: Seq[Double], jobs: Int, stages: Seq[Stage]) {
-    def median: Double = samples.sorted.apply(samples.size / 2)
+  /** One run's layers, in seconds: the builder call (construct),
+    * `executedPlan` (plan) and `toRdd.count()` (execute, which holds
+    * any adaptive re-planning). They are read back to back, so their
+    * sum is the run's wall time. */
+  final case class Sample(construct: Double, plan: Double, execute: Double) {
+    def wall: Double = construct + plan + execute
   }
+
+  /** One query's timed runs: the samples of the runs that succeeded,
+    * the exceptions of those that threw, the warm run's exception, and
+    * the jobs and completed stages of all timed runs together. */
+  final case class Timing(samples: Seq[Sample], errors: Seq[Throwable],
+                          warm: Option[Throwable], jobs: Int, stages: Seq[Stage]) {
+    /** The upper median of `layer` over the successful samples. */
+    def median(layer: Sample => Double = _.wall): Double =
+      samples.map(layer).sorted.apply(samples.size / 2)
+  }
+
+  /** Wraps one timed run of the named query. `Bench` brackets each run
+    * with its `/proc` samples. */
+  type Around = (String, => Sample) => Sample
+  private val direct: Around = (_, run) => run
 
   final case class PlanSummary(exchanges: Int, reused: Int, flags: Seq[String])
 
@@ -121,48 +141,73 @@ object Run extends AdaptiveSparkPlanHelper {
     }
   }
 
-  /** Runs `body` for each name in order; a query that throws does not
-    * stop the others. */
-  private def each[T](names: Seq[String])(body: String => T): Seq[(String, Try[T])] =
-    names.map(name => name -> Try(body(name)))
+  /** One run of `name`: its jobs carry job group `group` and the name
+    * as their description. */
+  def once(spark: SparkSession, dir: String, name: String, group: String,
+           build: Builder, around: Around = direct): Sample = around(name, {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, name)
+    try {
+      val t0 = System.nanoTime()
+      val df = build(spark, dir)
+      val t1 = System.nanoTime()
+      df.queryExecution.executedPlan
+      val t2 = System.nanoTime()
+      execute(df)
+      val t3 = System.nanoTime()
+      Sample((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9)
+    } finally sc.clearJobGroup()
+  })
 
+  /** One warm run of every name, then [[Reps]] round-robin passes over
+    * all of them: a burst of host load as long as one query's runs
+    * lands in at most one of its samples. `around` wraps each timed
+    * run. A run that throws does not stop the others; its exception is
+    * kept under its query. */
   def time(spark: SparkSession, dir: String, names: Seq[String],
-           queries: Map[String, Builder]): Seq[(String, Try[Timing])] = {
+           queries: Map[String, Builder], around: Around = direct): Seq[(String, Timing)] = {
     val sc = spark.sparkContext
     val rec = new Recorder
     sc.addSparkListener(rec)
-    try each(names) { name =>
-      // every job carries the query's name; the group keeps the warm
-      // run's jobs out of the timed runs' counts
-      def once(group: String): Double = {
-        sc.setJobGroup(group, name)
-        val t0 = System.nanoTime()
-        try execute(queries(name)(spark, dir)) finally sc.clearJobGroup()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once(s"$name (warm)")
-      val samples = Seq.fill(Reps)(once(name))
+    try {
+      // the group keeps the warm runs' jobs out of the timed runs' counts
+      val warm = names.map(n =>
+        n -> Try(once(spark, dir, n, s"$n (warm)", queries(n))).failed.toOption).toMap
+      val runs = Seq.fill(Reps)(names.map(n =>
+        n -> Try(once(spark, dir, n, n, queries(n), around)))).flatten
       rec.drain(sc)
-      val t = rec.synchronized(Timing(samples, rec.jobs(name), rec.stages(name)))
-      val st = t.stages
-      println(f"[time] $name median=${t.median}%.3f all=${samples.map(s => f"$s%.3f").mkString(",")}")
-      println(f"[time] $name per-rep jobs=${t.jobs.toDouble / Reps}%.1f " +
-        f"stages=${st.size.toDouble / Reps}%.1f tasks=${st.map(_.tasks).sum / Reps} " +
-        f"runMs=${st.map(_.runMs).sum / Reps} cpuMs=${st.map(_.cpuMs).sum / Reps} " +
-        f"gcMs=${st.map(_.gcMs).sum / Reps}")
-      st.sortBy(-_.runMs).take(12).foreach { s =>
-        println(f"[stage] id=${s.id}%-5d wall=${s.wallMs}%6dms run=${s.runMs}%6d " +
-          f"cpu=${s.cpuMs}%6d gc=${s.gcMs}%5d tasks=${s.tasks}%4d in=${s.inBytes}%10d " +
-          f"sr=${s.shuffleRead}%10d sw=${s.shuffleWrite}%10d  ${s.name}")
+      names.map { name =>
+        val mine = runs.collect { case (`name`, r) => r }
+        val t = rec.synchronized(Timing(mine.collect { case Success(s) => s },
+          mine.collect { case Failure(e) => e }, warm(name), rec.jobs(name), rec.stages(name)))
+        if (t.samples.nonEmpty) report(name, t)
+        name -> t
       }
-      t
     } finally sc.removeSparkListener(rec)
+  }
+
+  private def report(name: String, t: Timing): Unit = {
+    val walls = t.samples.map(_.wall)
+    val st = t.stages
+    println(f"[time] $name median=${t.median()}%.3f min=${walls.min}%.3f max=${walls.max}%.3f " +
+      f"n=${walls.size} construct=${t.median(_.construct)}%.3f plan=${t.median(_.plan)}%.3f " +
+      f"execute=${t.median(_.execute)}%.3f all=${walls.map(s => f"$s%.3f").mkString(",")}")
+    println(f"[time] $name per-rep jobs=${t.jobs.toDouble / Reps}%.1f " +
+      f"stages=${st.size.toDouble / Reps}%.1f tasks=${st.map(_.tasks).sum / Reps} " +
+      f"runMs=${st.map(_.runMs).sum / Reps} cpuMs=${st.map(_.cpuMs).sum / Reps} " +
+      f"gcMs=${st.map(_.gcMs).sum / Reps}")
+    st.sortBy(-_.runMs).take(12).foreach { s =>
+      println(f"[stage] id=${s.id}%-5d wall=${s.wallMs}%6dms run=${s.runMs}%6d " +
+        f"cpu=${s.cpuMs}%6d gc=${s.gcMs}%5d tasks=${s.tasks}%4d in=${s.inBytes}%10d " +
+        f"sr=${s.shuffleRead}%10d sw=${s.shuffleWrite}%10d  ${s.name}")
+    }
   }
 
   def plan(spark: SparkSession, dir: String, names: Seq[String], outDir: String,
            queries: Map[String, Builder]): Seq[(String, Try[PlanSummary])] = {
     val out = Files.createDirectories(Paths.get(outDir))
-    each(names) { name =>
+    // a query that throws does not stop the others
+    names.map { name => name -> Try {
       spark.sparkContext.setJobDescription(name)
       val qe = try {
         val df = queries(name)(spark, dir)
@@ -175,7 +220,7 @@ object Run extends AdaptiveSparkPlanHelper {
       println(s"[plan] $name exchanges=${s.exchanges} reusedExchange=${s.reused} " +
         s"flags=[${s.flags.mkString(",")}]")
       s
-    }
+    }}
   }
 
   /** Counts and flags over the whole executed plan, query stages and
@@ -204,10 +249,13 @@ object Run extends AdaptiveSparkPlanHelper {
   /** Runs the mode `args` names over `queries`; returns the exit status. */
   def run(spark: SparkSession, args: Seq[String],
           queries: Map[String, Builder] = SparkEntry.queries): Int = {
+    def describe(e: Throwable): String = s"${e.getClass.getName}: ${e.getMessage}"
     def failed[T](rs: Seq[(String, Try[T])]): Seq[(String, String)] =
-      rs.collect { case (n, Failure(e)) => n -> s"${e.getClass.getName}: ${e.getMessage}" }
+      rs.collect { case (n, Failure(e)) => n -> describe(e) }
     val failures = args match {
-      case Seq("time", dir, names) => failed(time(spark, dir, select(queries, names), queries))
+      case Seq("time", dir, names) =>
+        time(spark, dir, select(queries, names), queries).flatMap { case (n, t) =>
+          (t.errors ++ t.warm).headOption.map(e => n -> describe(e)) }
       case Seq("plan", dir, names, out) => failed(plan(spark, dir, select(queries, names), out, queries))
       case Seq("dump", dir, out, names) => dump(spark, dir, out, select(queries, names), queries).toSeq
       case _ => throw new IllegalArgumentException(Usage)

@@ -137,27 +137,24 @@ class BenchSpec extends AnyFunSuite {
 
   test("history is kept per core count: a pass never replaces or " +
       "compares with a base of another core count") {
+    // each core count has its own file
+    assert(Bench.historyFile(8) == "BENCH_LOCAL_c8.json")
+    assert(Bench.historyFile(32) == "BENCH_LOCAL_c32.json")
     val sf = "/root/testdata/sf0.1"
     val c32 = s"""{"sf":"$sf","cpus":32,"contaminated":false,"queries":{"q1_agg":0.5}}"""
     val c32dirty = c32.replace("\"contaminated\":false", "\"contaminated\":true")
     val legacy = s"""{"sf":"$sf","contaminated":false,"queries":{"q1_agg":0.5}}"""
-    // another core count: never replaced, clean pass or dirty base
-    assert(!Bench.shouldPersist(contaminated = false, Some(c32), sf, Some(8)))
-    assert(!Bench.shouldPersist(contaminated = false, Some(c32dirty), sf, Some(8)))
-    assert(!Bench.shouldPersist(contaminated = false,
-      Some(c32.replace("sf0.1", "sf0.01")), sf, Some(8)))
-    // the same core count: the sf/contamination table applies
-    assert(Bench.shouldPersist(contaminated = false, Some(c32), sf, Some(32)))
-    assert(!Bench.shouldPersist(contaminated = true, Some(c32), sf, Some(32)))
-    assert(Bench.shouldPersist(contaminated = true, Some(c32dirty), sf, Some(32)))
-    // a base that records no core count predates the field
-    assert(Bench.shouldPersist(contaminated = false, Some(legacy), sf, Some(8)))
-    assert(Bench.shouldPersist(contaminated = true, None, sf, Some(8)))
-    // comparison needs the same sf AND a recorded, equal core count
-    assert(Bench.comparableHistory(c32, sf, 32))
-    assert(!Bench.comparableHistory(c32, sf, 8))
-    assert(!Bench.comparableHistory(c32, "/root/testdata/sf0.01", 32))
-    assert(!Bench.comparableHistory(legacy, sf, 32))
+    // within one file the sf/contamination table applies
+    assert(Bench.shouldPersist(contaminated = false, Some(c32), sf))
+    assert(!Bench.shouldPersist(contaminated = true, Some(c32), sf))
+    assert(Bench.shouldPersist(contaminated = true, Some(c32dirty), sf))
+    assert(Bench.shouldPersist(contaminated = false, Some(legacy), sf))
+    assert(Bench.shouldPersist(contaminated = true, None, sf))
+    // comparison needs the same sf; a file that records no core count
+    // is compared too, since its name carries the count
+    assert(Bench.comparableHistory(c32, sf))
+    assert(!Bench.comparableHistory(c32, "/root/testdata/sf0.01"))
+    assert(Bench.comparableHistory(legacy, sf))
     // the artifact wrapper spells it with a space
     assert(Bench.recordedCpus("""{"n": 20, "cpus": 8, "tail": "x"}""").contains(8))
     // and the recorded count never parses as a query time
@@ -338,10 +335,10 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("published label keeps both attempts visible (artifact shape)") {
-    val dirty = Bench.Pass(Map("q" -> Vector(1.0)), Map.empty,
+    val dirty = Bench.Pass(Map.empty,
       Vector(9.0), Some(4.2), Some(4.66), Some(0.1), Some(0.2),
       Some(0.4), Some(2.1), 22, contaminated = true)
-    val clean = Bench.Pass(Map("q" -> Vector(1.0)), Map.empty,
+    val clean = Bench.Pass(Map.empty,
       Vector(1.0), Some(0.1), Some(0.3), Some(0.0), Some(0.1),
       Some(0.1), Some(0.9), 0, contaminated = false)
     assert(dirty.labelJson.contains("\"contaminated\":true"))

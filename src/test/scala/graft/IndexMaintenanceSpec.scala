@@ -3,7 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.operators.{AnnIvf, AnnLsh, AnnPq, Dedup, IndexMaintenance, Knn, Search}
+import graft.operators.{AnnIvf, AnnLsh, AnnPq, Dedup, IndexConfig, IndexMaintenance, Knn, Search}
 
 /** Delete/upsert maintenance over the persisted indexes: tombstoned ids
   * must never surface from any indexed probe (the reference removes
@@ -24,7 +24,7 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
   private def writeSidecar(index: String, json: String): Unit =
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(Dedup.indexConfigPath(index)), json)
+      java.nio.file.Paths.get(IndexConfig.indexConfigPath(index)), json)
   private def rm(path: String): Unit = {
     def go(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(go)); f.delete(); ()
@@ -167,7 +167,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     }
     assert(e3.getMessage.contains("min_len"), e3.getMessage)
     val stored = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(new java.io.File(Dedup.indexConfigPath(ss)))
+      .readTree(new java.io.File(IndexConfig.indexConfigPath(ss)))
       .fields().asScala.map(e => e.getKey -> e.getValue.asLong).toMap
     assert(stored == Map("min_len" -> 8L, "num_buckets" -> 16L), stored.toString)
     rm(ss)
@@ -198,7 +198,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // the cached-"no sidecar" hole: a pre-convention index (sidecar
     // deleted) probes fine, but once a sidecar APPEARS at that path
     // the next probe must validate against it, not skip forever
-    rm(Dedup.indexConfigPath(mh))
+    rm(IndexConfig.indexConfigPath(mh))
     Dedup.incrementalNearDupIndexed(spark, mh, delta, "text", "doc_id",
       numHashes = 16, bands = 4, shingleN = 3).queryExecution.toRdd.count()
     writeSidecar(mh, """{"num_hashes": 16, "bands": 16, "shingle_n": 3}""")
@@ -210,15 +210,15 @@ class IndexMaintenanceSpec extends SparkSpec {
 
     // an older build's parquet sidecar is a directory: the probe fails
     // by path, it never skips validation
-    rm(Dedup.indexConfigPath(mh))
+    rm(IndexConfig.indexConfigPath(mh))
     Seq(("num_hashes", 16L), ("bands", 4L), ("shingle_n", 3L))
       .toDF("key", "value").coalesce(1)
-      .write.mode("overwrite").parquet(Dedup.indexConfigPath(mh))
+      .write.mode("overwrite").parquet(IndexConfig.indexConfigPath(mh))
     val e3 = intercept[IllegalArgumentException] {
       Dedup.incrementalNearDupIndexed(spark, mh, delta, "text", "doc_id",
         numHashes = 16, bands = 4, shingleN = 3)
     }
-    assert(e3.getMessage.contains(Dedup.indexConfigPath(mh)) &&
+    assert(e3.getMessage.contains(IndexConfig.indexConfigPath(mh)) &&
       e3.getMessage.contains("rebuild the index"), e3.getMessage)
     rm(mh)
   }

@@ -4,6 +4,7 @@ import java.io.{ByteArrayOutputStream, File}
 import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.tools.Run
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 /** `graft.tools.Run`'s three modes on two cheap queries at sf0.001,
@@ -14,6 +15,11 @@ class RunSpec extends SparkSpec {
   private val boom: Run.Builder = (_, _) => throw new IllegalStateException("planted")
 
   private def tmp(tag: String): String = tempDir(s"run-$tag").toString
+
+  /** The job group a builder is called under: `<name> (warm)` for the
+    * warm run, the name for a timed one. */
+  private def group(s: org.apache.spark.sql.SparkSession): String =
+    s.sparkContext.getLocalProperty("spark.jobGroup.id")
 
   /** `body`'s result and everything it printed to stdout and stderr. */
   private def captured[T](body: => T): (T, String) = {
@@ -50,9 +56,69 @@ class RunSpec extends SparkSpec {
     val (res, text) = captured(Run.time(spark, sf0001, names, SparkEntry.queries))
     assert(res.map(_._1) == names)
     res.foreach { case (n, t) =>
-      assert(t.get.samples.size == 3 && t.get.samples.forall(_ > 0), n)
-      assert(t.get.jobs >= 3 && t.get.stages.nonEmpty, s"$n: ${t.get}")
+      assert(t.samples.size == 3 && t.samples.forall(_.wall > 0), n)
+      assert(t.jobs >= 3 && t.stages.nonEmpty, s"$n: $t")
       assert(text.contains(s"[time] $n median="), text)
+      assert(s"\\[time\\] $n median=\\S+ min=\\S+ max=\\S+ n=3 construct=\\S+ plan=\\S+ execute=".r
+        .findFirstIn(text).nonEmpty, text)
+    }
+  }
+
+  test("time warms every name once, then runs three round-robin timed passes") {
+    val calls = ArrayBuffer[String]()
+    def recording(n: String): Run.Builder = (s, dir) => {
+      calls += group(s)
+      SparkEntry.queries(n)(s, dir)
+    }
+    val queries = Map("a" -> recording("q1_agg"), "b" -> recording("knn_cosine"))
+    captured(Run.time(spark, sf0001, Seq("a", "b"), queries))
+    assert(calls == Seq("a (warm)", "b (warm)") ++ Seq.fill(3)(Seq("a", "b")).flatten)
+  }
+
+  test("a sample that throws is kept out of the median and fails the run by name") {
+    def flaky(): Run.Builder = {
+      var timed = 0
+      (s, dir) => {
+        if (group(s) == "q1_agg") {
+          timed += 1
+          if (timed == 2) throw new IllegalStateException("second timed run")
+        }
+        SparkEntry.queries("q1_agg")(s, dir)
+      }
+    }
+    val (res, _) = captured(Run.time(spark, sf0001, names, SparkEntry.queries + ("q1_agg" -> flaky())))
+    val t = res.toMap
+    assert(t("q1_agg").samples.size == 2 && t("q1_agg").warm.isEmpty)
+    assert(t("q1_agg").errors.map(_.getClass) == Seq(classOf[IllegalStateException]))
+    assert(t("q1_agg").median() == t("q1_agg").samples.map(_.wall).max)
+    assert(t("knn_cosine").samples.size == 3 && t("knn_cosine").errors.isEmpty)
+
+    val queries = SparkEntry.queries + ("q1_agg" -> flaky())
+    val (status, text) = captured(Run.run(spark, Seq("time", sf0001, names.mkString(",")), queries))
+    assert(status == 1, text)
+    val report = text.linesIterator.filter(_.startsWith("[run] q1_agg FAILED")).toSeq
+    assert(report.size == 1 && report.head.contains("IllegalStateException"), text)
+    assert(!text.contains("knn_cosine FAILED"), text)
+    assert(text.contains(" n=2 ") && text.linesIterator.exists(l =>
+      l.startsWith("[time] knn_cosine median=") && l.contains(" n=3 ")), text)
+  }
+
+  test("each sample's construct, plan and execute readings sum to the sample") {
+    val outer = ArrayBuffer[(Double, Run.Sample)]()
+    val around: Run.Around = (_, run) => {
+      val t0 = System.nanoTime()
+      val s = run
+      outer += ((System.nanoTime() - t0) / 1e9 -> s)
+      s
+    }
+    val (res, _) = captured(Run.time(spark, sf0001, names, SparkEntry.queries, around))
+    assert(outer.size == 6 && res.flatMap(_._2.samples).toSet == outer.map(_._2).toSet)
+    outer.foreach { case (wall, s) =>
+      assert(s.construct > 0 && s.plan >= 0 && s.execute > 0, s)
+      assert(math.abs(s.construct + s.plan + s.execute - s.wall) < 1e-9, s)
+      // the readings are taken back to back: only the job-group calls
+      // around them fall outside the sum
+      assert(s.wall <= wall && s.wall > 0.75 * wall, s"$s in $wall s")
     }
   }
 
